@@ -41,6 +41,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pdf_etl_ocr_inference_spark.scratch import (
+    atomic_write_json,
+    new_build_id,
+)
+
 GRAPH_SCHEMA = T.StructType(
     [
         T.StructField("shard", T.IntegerType()),
@@ -299,6 +304,7 @@ def build_nsw_index(
             "m_neighbors": m_neighbors,
             "ef_construction": ef_construction,
             "last_version": 0,
+            "build_id": new_build_id(),
         },
     )
     return path
@@ -311,10 +317,7 @@ def _meta_path(path: str) -> str:
 
 
 def _write_meta(path: str, meta: dict) -> None:
-    import json
-
-    with open(_meta_path(path), "w") as f:
-        json.dump(meta, f)
+    atomic_write_json(_meta_path(path), meta)
 
 
 def _read_meta(path: str) -> dict:

@@ -44,6 +44,10 @@ from pdf_etl_ocr_inference_spark.operators.graph_ann import (
     VecStore,
     _greedy_search,
 )
+from pdf_etl_ocr_inference_spark.scratch import (
+    atomic_write_json,
+    new_build_id,
+)
 
 HNSW_SCHEMA = T.StructType(
     [
@@ -212,6 +216,7 @@ def build_hnsw_index(
             "m_neighbors": m_neighbors,
             "ef_construction": ef_construction,
             "last_version": 0,
+            "build_id": new_build_id(),
         },
     )
     return path
@@ -224,10 +229,7 @@ def _meta_path(path: str) -> str:
 
 
 def _write_meta(path: str, meta: dict) -> None:
-    import json
-
-    with open(_meta_path(path), "w") as f:
-        json.dump(meta, f)
+    atomic_write_json(_meta_path(path), meta)
 
 
 def _read_meta(path: str) -> dict:

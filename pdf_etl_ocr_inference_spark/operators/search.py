@@ -29,11 +29,21 @@ so engines that differ in the last float ulp still rank identically.
 
 from __future__ import annotations
 
+from collections import OrderedDict
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pdf_etl_ocr_inference_spark.operators.shard_server import (
+    _load_shard,
+    dispatch,
+    merge_topk,
+    publish_meta,
+    read_meta,
+    shard_token,
+)
 
 K1 = 1.2
 B = 0.75
@@ -74,7 +84,11 @@ def bm25_scores(
     term made one task buffer (and spill) the whole posting list at
     100 TB; this shape has no per-term partition anywhere — df is
     map-side-combined into one row — and adds zero exchanges, zero
-    extra passes, zero joins."""
+    extra passes, zero joins.
+
+    A repeated query term counts once (set semantics, like
+    ``bm25_topk_indexed`` and ``serve_bm25``)."""
+    query_terms = list(dict.fromkeys(query_terms))
     toks = F.split(F.trim(F.col(text_col)), r"\s+")
     docs = df.select(F.col(id_col).alias("id"), toks.alias("_toks"))
     stats = docs.agg(
@@ -319,8 +333,32 @@ def rerank_topk(
 # ------------------------------------------------------------------ #
 
 _POSTINGS_PB = 64
-_POSTINGS_META = "_postings_meta.json"
-_PB_CACHE: dict[tuple, list[int]] = {}
+_PB_MEMO: OrderedDict[str, int] = OrderedDict()
+_PB_MEMO_MAX = 4096  # terms whose bucket is remembered
+
+
+def _term_buckets(spark, terms: list[str]) -> dict[str, int]:
+    """term -> ``_pb`` bucket, ``pmod(xxhash64(term), 64)`` as the
+    postings layout computes it.  Memoised per term in a bounded LRU;
+    only terms not seen before cost a (one-row-per-term) job."""
+    new = sorted({t for t in terms if t not in _PB_MEMO})
+    if new:
+        for r in (
+            spark.createDataFrame([(t,) for t in new], "term string")
+            .select(
+                "term",
+                F.pmod(F.xxhash64("term"), F.lit(_POSTINGS_PB)).alias("_pb"),
+            )
+            .collect()
+        ):
+            _PB_MEMO[r["term"]] = int(r["_pb"])
+    out = {}
+    for t in terms:
+        out[t] = _PB_MEMO[t]
+        _PB_MEMO.move_to_end(t)
+    while len(_PB_MEMO) > _PB_MEMO_MAX:
+        _PB_MEMO.popitem(last=False)
+    return out
 
 
 def _postings_rows(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -341,12 +379,7 @@ def build_postings_index(
     """Materialize (term, id, dl, tf) postings partitioned by the
     term-hash bucket, plus corpus stats in the meta.  One combinable
     shuffle over the corpus, written once."""
-    import os
-
-    from pdf_etl_ocr_inference_spark.scratch import (
-        atomic_write_json,
-        new_build_id,
-    )
+    from pdf_etl_ocr_inference_spark.scratch import new_build_id
 
     rows = _postings_rows(df, text_col, id_col).withColumn("v", F.lit(0))
     (
@@ -360,8 +393,9 @@ def build_postings_index(
     stats = df.select(F.size(toks).alias("dl")).agg(
         F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sum_dl")
     ).first()
-    atomic_write_json(
-        os.path.join(path, _POSTINGS_META),
+    publish_meta(
+        path,
+        "postings",
         {
             "n_docs": int(stats["n"]),
             "sum_dl": int(stats["sum_dl"]),
@@ -383,13 +417,10 @@ def refresh_postings_index(
     meta.  Idempotent per version: the watermark skips re-applied
     commits AND a retry clears its own version dir first, so a crash
     between the append and the meta bump cannot double-count."""
-    import json
     import os
     import shutil
 
-    mp = os.path.join(path, _POSTINGS_META)
-    with open(mp) as f:
-        meta = json.load(f)
+    meta = read_meta(path, "postings")
     if version <= meta["last_version"]:
         return
     shutil.rmtree(os.path.join(path, f"v={version}"), ignore_errors=True)
@@ -410,9 +441,7 @@ def refresh_postings_index(
     meta["n_docs"] += int(stats["n"] or 0)
     meta["sum_dl"] += int(stats["sum_dl"] or 0)
     meta["last_version"] = version
-    from pdf_etl_ocr_inference_spark.scratch import atomic_write_json
-
-    atomic_write_json(mp, meta)
+    publish_meta(path, "postings", meta)
 
 
 def bm25_topk_indexed(
@@ -426,11 +455,7 @@ def bm25_topk_indexed(
     pass, no full-index scan.  Scores are identical to the batch
     ``bm25_topk`` by construction (same formula, same stats) —
     asserted in tests and by the catalog oracle."""
-    import json
-    import os
-
-    with open(os.path.join(path, _POSTINGS_META)) as f:
-        meta = json.load(f)
+    meta = read_meta(path, "postings")
     n_docs = meta["n_docs"]
     avgdl = meta["sum_dl"] / max(n_docs, 1)
     # STATIC partition pruning: resolve the query terms' _pb buckets
@@ -438,26 +463,8 @@ def bm25_topk_indexed(
     # scan's PartitionFilters unconditionally.  (A broadcast join on
     # (_pb, term) was tried — dynamic partition pruning did not
     # engage for the tiny local-relation side, so the scan read every
-    # directory.)  The bucket of a term is a pure function, so the
-    # one-row derivation job memoizes per term set.
-    key = tuple(sorted(query_terms))
-    pbs = _PB_CACHE.get(key)
-    if pbs is None:
-        pbs = sorted(
-            {
-                r["_pb"]
-                for r in spark.createDataFrame(
-                    [(t,) for t in query_terms], "term string"
-                )
-                .select(
-                    F.pmod(
-                        F.xxhash64("term"), F.lit(_POSTINGS_PB)
-                    ).alias("_pb")
-                )
-                .collect()
-            }
-        )
-        _PB_CACHE[key] = pbs
+    # directory.)
+    pbs = sorted(set(_term_buckets(spark, query_terms).values()))
     post = (
         spark.read.parquet(path)
         .filter(F.col("_pb").isin(pbs))
@@ -494,60 +501,13 @@ def bm25_topk_indexed(
 
 # ------------------------------------------------------------------ #
 # Pinned lexical serving: the search-engine sharding (postings       #
-# sharded BY TERM bucket, pinned in executor memory) applied to the  #
-# BM25 index — the lexical twin of serving.serve_topk.  A term's     #
-# postings live wholly inside one _pb shard, so each shard task can  #
-# compute COMPLETE per-term score contributions locally (df is the   #
-# shard-local posting count); the global merge is a per-query sum +  #
-# top-k over candidate rows only.                                    #
+# sharded BY TERM bucket, pinned in worker memory by the shard       #
+# server) applied to the BM25 index — the lexical twin of            #
+# serving.serve_topk.  A term's postings live wholly inside one _pb  #
+# bucket, so each bucket task computes COMPLETE per-term score       #
+# contributions locally (df is the bucket-local posting count); the  #
+# driver merge sums them per (qid, doc) and takes per-qid top-k.     #
 # ------------------------------------------------------------------ #
-
-_POSTINGS_CACHE: dict = {}
-_POSTINGS_CACHE_MAX = 64
-
-
-def _load_postings_shard(path: str, pb: int, token):
-    """Parse one _pb shard's postings into {term: (ids, dls, tfs)}
-    numpy arrays, cached per worker process keyed by (path, pb,
-    token) where token is ``"<build_id>:<last_version>"`` — a refresh
-    bumps the version and a REBUILD at the same path changes the
-    build nonce, so both invalidate (same contract as
-    serving._load_shard)."""
-    import glob as _glob
-
-    import numpy as np
-    import pyarrow.dataset as ds
-
-    key = (path, int(pb), str(token))
-    hit = _POSTINGS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    files = _glob.glob(f"{path}/v=*/_pb={int(pb)}/*.parquet")
-    by_term: dict = {}
-    if files:
-        tbl = ds.dataset(files, format="parquet").to_table(
-            columns=["term", "id", "dl", "tf"]
-        )
-        terms = tbl["term"].to_pylist()
-        ids = tbl["id"].to_numpy(zero_copy_only=False)
-        dls = tbl["dl"].to_numpy(zero_copy_only=False)
-        tfs = tbl["tf"].to_numpy(zero_copy_only=False)
-        order = np.argsort(np.asarray(terms, dtype=object), kind="stable")
-        sorted_terms = [terms[i] for i in order]
-        ids, dls, tfs = ids[order], dls[order], tfs[order]
-        start = 0
-        for i in range(1, len(sorted_terms) + 1):
-            if i == len(sorted_terms) or sorted_terms[i] != sorted_terms[start]:
-                by_term[sorted_terms[start]] = (
-                    ids[start:i],
-                    dls[start:i],
-                    tfs[start:i],
-                )
-                start = i
-    _POSTINGS_CACHE[key] = by_term
-    if len(_POSTINGS_CACHE) > _POSTINGS_CACHE_MAX:
-        _POSTINGS_CACHE.pop(next(iter(_POSTINGS_CACHE)))
-    return by_term
 
 
 def serve_bm25(
@@ -557,95 +517,42 @@ def serve_bm25(
     k: int = 10,
 ) -> DataFrame:
     """Top-k BM25 for a BATCH of (qid, terms) queries against the
-    pinned postings index: tasks are scheduled ONLY for the queried
-    terms' _pb shards, each task answers from its worker-cached
-    postings dict (query 2..n never touches parquet), and the merge
-    sums per-(qid, doc) contributions then takes per-qid top-k.
-    Output (qid, id, score); scores match ``bm25_topk_indexed``
-    (same formula, same meta stats)."""
-    import json
+    pinned postings index: one Spark job with tasks ONLY for the
+    queried terms' _pb buckets, each answering from its worker-cached
+    postings (query 2..n never touches parquet).  The job runs when
+    this is called; the result ``(qid, id, score)`` is local, in rank
+    order (score rounded HALF_UP to 6 decimals, then id), with scores
+    equal to ``bm25_topk_indexed`` (same formula, same meta stats).  A
+    repeated query term counts once."""
     import math
-    import os
 
-    from pyspark.sql import Window
-    from pyspark.sql import types as T
-
-    with open(os.path.join(path, _POSTINGS_META)) as f:
-        meta = json.load(f)
+    meta = read_meta(path, "postings")
     n_docs = meta["n_docs"]
     avgdl = meta["sum_dl"] / max(n_docs, 1)
-    token = f"{meta.get('build_id', '')}:{meta.get('last_version', 0)}"
+    token = shard_token(meta)
+    bucket = _term_buckets(spark, [t for _, ts in queries for t in ts])
+    plan: dict[int, list] = {}
+    for qid, terms in queries:
+        for t in dict.fromkeys(terms):  # a repeated term counts once
+            plan.setdefault(bucket[t], []).append((int(qid), t))
 
-    all_terms = sorted({t for _, ts in queries for t in ts})
-    key = tuple(all_terms)
-    pbs_by_term = _PB_CACHE.get(("serve", key))
-    if pbs_by_term is None:
-        rows = (
-            spark.createDataFrame([(t,) for t in all_terms], "term string")
-            .select(
-                "term",
-                F.pmod(F.xxhash64("term"), F.lit(_POSTINGS_PB)).alias("_pb"),
+    def answer(pb, todo):
+        post = _load_shard(path, pb, "postings", token) or {}
+        rows = []
+        for qid, term in todo:
+            if term not in post:
+                continue
+            ids, dls, tfs = post[term]
+            df_t = len(ids)
+            idf = math.log(1.0 + (n_docs - df_t + 0.5) / (df_t + 0.5))
+            s = (
+                idf
+                * tfs
+                * (K1 + 1.0)
+                / (tfs + K1 * (1.0 - B + B * dls / avgdl))
             )
-            .collect()
-        )
-        pbs_by_term = {r["term"]: int(r["_pb"]) for r in rows}
-        _PB_CACHE[("serve", key)] = pbs_by_term
-    task_shards = sorted({pb for pb in pbs_by_term.values()})
-    qnorm = [(int(qid), list(ts)) for qid, ts in queries]
+            rows.extend((qid, int(i), float(v)) for i, v in zip(ids, s))
+        return rows
 
-    out_schema = T.StructType(
-        [
-            T.StructField("qid", T.LongType()),
-            T.StructField("id", T.LongType()),
-            T.StructField("_s", T.DoubleType()),
-        ]
-    )
-
-    def _answer(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for idx in pdf["shard"]:
-                pb = task_shards[int(idx)]
-                post = _load_postings_shard(path, pb, token)
-                for qid, terms in qnorm:
-                    for term in terms:
-                        if pbs_by_term.get(term) != pb:
-                            continue
-                        hit = post.get(term)
-                        if hit is None:
-                            continue
-                        ids, dls, tfs = hit
-                        df_t = len(ids)
-                        idf = math.log(
-                            1.0 + (n_docs - df_t + 0.5) / (df_t + 0.5)
-                        )
-                        s = (
-                            idf
-                            * tfs
-                            * (K1 + 1.0)
-                            / (tfs + K1 * (1.0 - B + B * dls / avgdl))
-                        )
-                        rows.extend(
-                            (qid, int(i), float(v))
-                            for i, v in zip(ids, s)
-                        )
-            yield pd.DataFrame(rows, columns=["qid", "id", "_s"])
-
-    n_tasks = max(len(task_shards), 1)
-    shards = spark.range(0, len(task_shards), 1, n_tasks).select(
-        F.col("id").cast("int").alias("shard")
-    )
-    local = shards.mapInPandas(_answer, out_schema)
-    w = Window.partitionBy("qid").orderBy(
-        F.round("_score", 6).desc(), F.asc("id")
-    )
-    return (
-        local.repartition(1)
-        .groupBy("qid", "id")
-        .agg(F.sum("_s").alias("_score"))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("qid", "id", F.round("_score", 4).alias("score"))
-    )
+    rows = dispatch(spark, plan, answer, "id")
+    return merge_topk(spark, [rows], k, "id", sum_per_id=True)

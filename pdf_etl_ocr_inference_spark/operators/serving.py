@@ -1,200 +1,55 @@
-"""Pinned-index serving for the graph ANN families (NSW / HNSW).
+"""Pinned-index vector serving: ``serve_topk`` over five index kinds.
 
-The batch query paths (``topk_nsw`` / ``topk_hnsw``) re-read their
-shard parquet on every query — fine for analytics, wrong for the
-reference's ONLINE similarity call (``ocr-tesseract-unstructured.py:
-167-170``, a managed-index query endpoint).  This module pins parsed
-per-shard graphs in EXECUTOR memory across queries:
+The batch query paths (``topk_nsw``, ``topk_hnsw``, ``topk_pq``,
+``topk_ivf``) re-read their parquet on every query, which suits
+analytics but not the reference's ONLINE similarity call
+(``ocr-tesseract-unstructured.py:166-172``, a managed-index query
+endpoint).  This module builds serving layouts (parquet partitioned
+by shard, parameters in a meta file) and answers top-k batches from
+state pinned in Python worker memory:
 
-- the query job iterates a tiny shard-id DataFrame (``range(n_shards)``
-  pre-split one row per partition, so each task owns one shard with
-  no shuffle), NOT the graph table — Spark schedules no parquet scan
-  at all;
-- each task calls ``_load_shard(path, shard, version)``, which parses
-  the shard's parquet into (vectors, adjacency) dicts ONCE per worker
-  process and caches it module-level.  Spark's Python workers are
-  reused across tasks/jobs (``spark.python.worker.reuse``, default
-  on), so query 2..n hit the cache and pay only the walk;
-- the cache key includes the index VERSION (``last_version`` from the
-  index meta, bumped by ``refresh_nsw_index``), so a refresh
-  invalidates pinned state by construction — stale entries age out of
-  the bounded LRU rather than being served.
+- ``nsw`` / ``hnsw``: sharded graphs, one greedy walk per shard;
+- ``pq``: ADC scan over pinned codes + exact re-rank;
+- ``ivf``: cells are the shards; an exact scan of each query's
+  ``n_probe`` nearest cells, and tasks run only for probed cells;
+- ``ivfpq``: IVF cells holding residual PQ codes.
 
-This is the standard sharded-serving split: layout/build stays the
-batch engine's job; serving pins the derived structure.  On a real
-cluster the same code pins one shard per executor; local[32] shares
-one machine's workers, which is exactly the single-node serving
-shape the reference's endpoint runs.
+Loading, dispatch and the merge are the shared shard server
+(``operators.shard_server``): one worker-side cache, one Spark job
+per lookup, and a per-qid top-k merge in the driver.  This module
+adds one answer function per kind (``_ANSWERS``) and the IVF probe
+rounds.  A lookup runs its job when called and returns a DataFrame
+over the merged rows; collecting it runs no further job.
+
+Builds and refreshes stay batch jobs.  Every meta carries a
+``build_id`` and a ``last_version`` that a refresh bumps; together
+they key the worker cache, so a refresh or a rebuild at the same path
+is never answered from stale pinned state.
 """
 
 from __future__ import annotations
 
-from collections import OrderedDict
+from collections import Counter
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-_CACHE_MAX = 64  # shard entries per worker process (bounded memory)
-_shard_cache: OrderedDict[tuple, tuple] = OrderedDict()
-
-
-def _load_shard(path: str, shard: int, version: int, kind: str):
-    """Parse one shard's graph parquet into in-memory search state,
-    cached per (path, shard, version, kind) in this worker process."""
-    import numpy as np
-    import pyarrow.dataset as ds
-
-    from pdf_etl_ocr_inference_spark.operators.graph_ann import VecStore
-
-    key = (path, int(shard), int(version), kind)
-    hit = _shard_cache.get(key)
-    if hit is not None:
-        _shard_cache.move_to_end(key)
-        return hit
-    import os
-
-    shard_dir = f"{path}/shard={int(shard)}"
-    if not os.path.isdir(shard_dir):  # empty shard/cell: no members
-        novecs = VecStore([], np.empty((0, 0), dtype="float64"))
-        empty = {
-            "nsw": (novecs, {}, []),
-            "hnsw": (novecs, [], {}, []),
-            "pq": (
-                np.empty(0, dtype="int64"),
-                np.empty((0, 0)),
-                np.empty((0, 0), dtype="int64"),
-                [],
-                None,
-            ),
-            "ivf": (np.empty(0, dtype="int64"), np.empty((0, 0))),
-            "ivfpq": (
-                np.empty(0, dtype="int64"),
-                np.empty((0, 0)),
-                np.empty((0, 0), dtype="int64"),
-                [],
-            ),
-        }[kind]
-        _shard_cache[key] = empty
-        return empty
-    tbl = ds.dataset(shard_dir, format="parquet").to_table()
-    ids = tbl["vec_id"].to_numpy(zero_copy_only=False)
-    if kind == "ivf":
-        embcol = tbl["embedding"].combine_chunks()
-        flat = (
-            embcol.flatten().to_numpy(zero_copy_only=False).astype("float64")
-        )
-        dim = len(flat) // max(len(ids), 1)
-        m = flat.reshape(len(ids), dim) if len(ids) else flat.reshape(0, 0)
-        norms = np.sqrt((m * m).sum(axis=1))
-        norms[norms == 0] = 1.0
-        m = m / norms[:, None]
-        state = (ids.astype("int64"), m)
-        _shard_cache[key] = state
-        if len(_shard_cache) > _CACHE_MAX:
-            _shard_cache.popitem(last=False)
-        return state
-    if kind == "ivfpq":
-        import json
-        import os
-
-        embcol = tbl["embedding"].combine_chunks()
-        flat = (
-            embcol.flatten().to_numpy(zero_copy_only=False).astype("float64")
-        )
-        dim = len(flat) // max(len(ids), 1)
-        m = flat.reshape(len(ids), dim) if len(ids) else flat.reshape(0, 0)
-        norms = np.sqrt((m * m).sum(axis=1))
-        norms[norms == 0] = 1.0
-        m = m / norms[:, None]
-        codecol = tbl["pq_codes"].combine_chunks()
-        cflat = codecol.flatten().to_numpy(zero_copy_only=False)
-        nsub = len(cflat) // max(len(ids), 1)
-        codes = (
-            cflat.reshape(len(ids), nsub) if len(ids) else cflat.reshape(0, 0)
-        )
-        with open(os.path.join(path, "_ivfpqserve_meta.json")) as f:
-            meta = json.load(f)
-        books = [np.asarray(b, dtype="float64") for b in meta["codebooks"]]
-        state = (ids.astype("int64"), m, codes, books)
-        _shard_cache[key] = state
-        if len(_shard_cache) > _CACHE_MAX:
-            _shard_cache.popitem(last=False)
-        return state
-    if kind == "pq":
-        import json
-        import os
-
-        embcol = tbl["embedding"].combine_chunks()
-        flat = (
-            embcol.flatten().to_numpy(zero_copy_only=False).astype("float64")
-        )
-        dim = len(flat) // max(len(ids), 1)
-        m = flat.reshape(len(ids), dim) if len(ids) else flat.reshape(0, 0)
-        norms = np.sqrt((m * m).sum(axis=1))
-        norms[norms == 0] = 1.0
-        m = m / norms[:, None]
-        codecol = tbl["pq_codes"].combine_chunks()
-        cflat = codecol.flatten().to_numpy(zero_copy_only=False)
-        nsub = len(cflat) // max(len(ids), 1)
-        codes = (
-            cflat.reshape(len(ids), nsub) if len(ids) else cflat.reshape(0, 0)
-        )
-        with open(os.path.join(path, "_pqserve_meta.json")) as f:
-            meta = json.load(f)
-        books = [np.asarray(b, dtype="float64") for b in meta["codebooks"]]
-        rot = (
-            None
-            if meta.get("rotation") is None
-            else np.asarray(meta["rotation"], dtype="float64")
-        )
-        state = (ids.astype("int64"), m, codes, books, rot)
-        _shard_cache[key] = state
-        if len(_shard_cache) > _CACHE_MAX:
-            _shard_cache.popitem(last=False)
-        return state
-    # vectorized embedding parse: one flatten + reshape + row-normalize
-    # instead of a python loop building 10^5 tiny arrays (the parse was
-    # the cold-load bottleneck)
-    embcol = tbl["embedding"].combine_chunks()
-    flat = embcol.flatten().to_numpy(zero_copy_only=False).astype("float64")
-    dim = len(flat) // max(len(ids), 1)
-    m = flat.reshape(len(ids), dim) if len(ids) else flat.reshape(0, 0)
-    norms = np.sqrt((m * m).sum(axis=1))
-    norms[norms == 0] = 1.0
-    m = m / norms[:, None]
-    # contiguous VecStore (not a dict of row views): the greedy walk
-    # scores whole adjacency lists in one vectorized call
-    mat = VecStore(ids, m)
-    nbcol = "neighbors" if kind == "nsw" else "layers"
-    d = tbl.select(["vec_id", nbcol]).to_pydict()
-    if kind == "nsw":
-        adj = {int(i): list(nb) for i, nb in zip(d["vec_id"], d["neighbors"])}
-        state = (mat, adj, sorted(mat))
-    else:  # hnsw
-        levels = {
-            int(i): len(ls) - 1 for i, ls in zip(d["vec_id"], d["layers"])
-        }
-        layered: list[dict] = [
-            {} for _ in range(max(levels.values(), default=0) + 1)
-        ]
-        for i, ls in zip(d["vec_id"], d["layers"]):
-            for lv, nb in enumerate(ls):
-                layered[lv][int(i)] = list(nb)
-        state = (mat, layered, levels, sorted(mat))
-    _shard_cache[key] = state
-    if len(_shard_cache) > _CACHE_MAX:
-        _shard_cache.popitem(last=False)
-    return state
-
-
-_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("qid", T.LongType()),
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("score", T.DoubleType()),
-    ]
+from pdf_etl_ocr_inference_spark.operators.graph_ann import (
+    _greedy_search,
+    derive_n_shards,
+    refresh_nsw_index,
+    refresh_sharded_graph,
 )
+from pdf_etl_ocr_inference_spark.operators.shard_server import (
+    _load_shard,
+    dispatch,
+    merge_topk,
+    publish_meta,
+    read_meta,
+    shard_token,
+)
+from pdf_etl_ocr_inference_spark.scratch import new_build_id
 
 
 # ------------------------------------------------------------------
@@ -233,12 +88,6 @@ def build_pq_serving_index(
     HNSW graphs, sharding here is RESULT-NEUTRAL — the ADC scan +
     exact re-rank merge per-shard top-k exactly — so the explicit
     default stays for the serving-matrix entries."""
-    import json
-    import os
-
-    from pdf_etl_ocr_inference_spark.operators.graph_ann import (
-        derive_n_shards,
-    )
     from pdf_etl_ocr_inference_spark.operators.pq import pq_encode
 
     if n_shards is None:
@@ -263,16 +112,17 @@ def build_pq_serving_index(
         .partitionBy("shard")
         .parquet(path)
     )
-    with open(os.path.join(path, "_pqserve_meta.json"), "w") as f:
-        json.dump(
-            {
-                "n_shards": n_shards,
-                "codebooks": codebooks,
-                "rotation": rotation,
-                "last_version": 0,
-            },
-            f,
-        )
+    publish_meta(
+        path,
+        "pq",
+        {
+            "n_shards": n_shards,
+            "codebooks": codebooks,
+            "rotation": rotation,
+            "last_version": 0,
+            "build_id": new_build_id(),
+        },
+    )
     return path
 
 
@@ -290,20 +140,7 @@ def refresh_pq_serving_index(
     same crash-safe swap + version watermark as the graph families
     (``graph_ann.refresh_sharded_graph``), so the serving cache
     invalidates by key."""
-    import json
-    import os
-
-    from pdf_etl_ocr_inference_spark.operators.graph_ann import (
-        refresh_sharded_graph,
-    )
-
-    mp = os.path.join(path, "_pqserve_meta.json")
-    with open(mp) as f:
-        meta = json.load(f)
-
-    def _write(m):
-        with open(mp, "w") as f:
-            json.dump(m, f)
+    meta = read_meta(path, "pq")
 
     def _rebuild(members, tmp):
         build_pq_serving_index(
@@ -317,7 +154,7 @@ def refresh_pq_serving_index(
 
     return refresh_sharded_graph(
         spark, path, changes, version, id_col, embedding_col,
-        meta, _write, _rebuild,
+        meta, lambda m: publish_meta(path, "pq", m), _rebuild,
     )
 
 
@@ -360,9 +197,6 @@ def build_ivf_serving_index(
     meta.  A query then schedules tasks ONLY for its ``n_probe``
     nearest cells — the serving twin of ``topk_ivf``'s partition-
     pruned scan."""
-    import json
-    import os
-
     from pdf_etl_ocr_inference_spark.operators.similarity import ivf_assign
 
     assigned = ivf_assign(
@@ -382,15 +216,16 @@ def build_ivf_serving_index(
         .partitionBy("shard")
         .parquet(path)
     )
-    with open(os.path.join(path, "_ivfserve_meta.json"), "w") as f:
-        json.dump(
-            {
-                "n_shards": len(centroids),
-                "centroids": centroids,
-                "last_version": 0,
-            },
-            f,
-        )
+    publish_meta(
+        path,
+        "ivf",
+        {
+            "n_shards": len(centroids),
+            "centroids": centroids,
+            "last_version": 0,
+            "build_id": new_build_id(),
+        },
+    )
     return path
 
 
@@ -407,28 +242,15 @@ def refresh_ivf_serving_index(
     between cells touches BOTH (preimage rows carry the old
     embedding); same atomic swap + version watermark as the other
     families."""
-    import json
-    import os
-
-    from pdf_etl_ocr_inference_spark.operators.graph_ann import (
-        refresh_sharded_graph,
-    )
-
-    mp = os.path.join(path, "_ivfserve_meta.json")
-    with open(mp) as f:
-        meta = json.load(f)
+    meta = read_meta(path, "ivf")
     cents = meta["centroids"]
-
-    def _write(m):
-        with open(mp, "w") as f:
-            json.dump(m, f)
 
     def _rebuild(members, tmp):
         build_ivf_serving_index(spark, members, tmp, centroids=cents)
 
     return refresh_sharded_graph(
         spark, path, changes, version, id_col, embedding_col,
-        meta, _write, _rebuild,
+        meta, lambda m: publish_meta(path, "ivf", m), _rebuild,
         shard_col=lambda df: _ivf_shard_col(cents),
     )
 
@@ -448,9 +270,6 @@ def build_ivfpq_serving_index(
     meta.  A query schedules tasks only for its probed cells, and
     each task's ADC runs against that cell's residual LUT on pinned
     arrays — IVFADC end to end with no parquet scan per query."""
-    import json
-    import os
-
     from pdf_etl_ocr_inference_spark.operators.pq import ivfpq_encode
     from pdf_etl_ocr_inference_spark.operators.similarity import ivf_assign
 
@@ -477,16 +296,17 @@ def build_ivfpq_serving_index(
         .partitionBy("shard")
         .parquet(path)
     )
-    with open(os.path.join(path, "_ivfpqserve_meta.json"), "w") as f:
-        json.dump(
-            {
-                "n_shards": len(centroids),
-                "centroids": centroids,
-                "codebooks": codebooks,
-                "last_version": 0,
-            },
-            f,
-        )
+    publish_meta(
+        path,
+        "ivfpq",
+        {
+            "n_shards": len(centroids),
+            "centroids": centroids,
+            "codebooks": codebooks,
+            "last_version": 0,
+            "build_id": new_build_id(),
+        },
+    )
     return path
 
 
@@ -504,22 +324,9 @@ def refresh_ivfpq_serving_index(
     cross-cell moves touch both cells via the centroid-argmax shard
     column; same crash-safe swap + version watermark as the other
     serving families."""
-    import json
-    import os
-
-    from pdf_etl_ocr_inference_spark.operators.graph_ann import (
-        refresh_sharded_graph,
-    )
-
-    mp = os.path.join(path, "_ivfpqserve_meta.json")
-    with open(mp) as f:
-        meta = json.load(f)
+    meta = read_meta(path, "ivfpq")
     cents = meta["centroids"]
     books = meta["codebooks"]
-
-    def _write(m):
-        with open(mp, "w") as f:
-            json.dump(m, f)
 
     def _rebuild(members, tmp):
         build_ivfpq_serving_index(
@@ -528,95 +335,113 @@ def refresh_ivfpq_serving_index(
 
     return refresh_sharded_graph(
         spark, path, changes, version, id_col, embedding_col,
-        meta, _write, _rebuild,
+        meta, lambda m: publish_meta(path, "ivfpq", m), _rebuild,
         shard_col=lambda df: _ivf_shard_col(cents),
     )
 
 
-def _ivfpq_answer(state, qu, cell_centroid, k, rerank, excl, pred=None):
-    """Residual ADC + exact re-rank within one pinned cell: the LUT
-    target is ``q − c_cell`` (IVFADC), everything else mirrors
-    ``_pq_answer`` — including the predicate's PRE-filter rerank
-    widening (the ADC LUT is computed once; only the window grows)."""
-    import numpy as np
-
-    ids, emb, codes, books = state
-    if len(ids) == 0:
-        return []
-    qr = qu - cell_centroid
-    m = len(books)
-    sub = books[0].shape[1]
-    adc = np.zeros(len(ids), dtype="float64")
-    for j in range(m):
-        lut = ((books[j] - qr[j * sub : (j + 1) * sub]) ** 2).sum(axis=1)
-        adc += lut[codes[:, j]]
-    window = max(rerank, k + len(excl))
-    full = np.lexsort((ids, adc))
-    while True:
-        order = full[:window]
-        scores = emb[order] @ qu
-        rows = [
-            (int(ids[i]), float(s))
-            for i, s in zip(order, scores)
-            if int(ids[i]) not in excl
-            and (pred is None or pred(int(ids[i])))
-        ]
-        if len(rows) >= k or window >= len(ids):
-            break
-        window = min(window * 2, len(ids))
-    rows.sort(key=lambda t: (-t[1], t[0]))
-    return rows[:k]
+# ------------------------------------------------------------------
+# Per-kind answers: answer(state, qu, k, ef, rerank, excl, pred) ->
+# [(id, score)] top-k of one pinned shard, ties by id
+# ------------------------------------------------------------------
 
 
-def _ivf_answer(state, qu, k, excl, pred=None):
-    """Exact cosine top-k within one pinned cell (the predicate needs
-    no widening here — the whole cell is scanned exactly)."""
+def _select(ids, scores, k, excl, pred):
+    """Top-k of ``(id, score)`` rows by ``(-score, id)`` among the ids
+    that are not excluded and pass the predicate."""
+    keep = np.ones(len(ids), dtype=bool)
+    if excl:
+        keep &= ~np.isin(ids, list(excl))
+    if pred is not None:
+        keep &= np.fromiter((pred(int(i)) for i in ids), bool, len(ids))
+    idx = np.flatnonzero(keep)
+    top = idx[np.lexsort((ids[idx], -scores[idx]))][:k]
+    return [(int(ids[i]), float(scores[i])) for i in top]
+
+
+def _ivf_answer(state, qu, k, ef, rerank, excl, pred):
+    """Exact cosine top-k of one pinned cell (the whole cell is
+    scanned, so a predicate needs no widening)."""
     ids, m = state
-    if len(ids) == 0:
-        return []
-    scores = m @ qu
-    rows = [
-        (int(i), float(s))
-        for i, s in zip(ids, scores)
-        if int(i) not in excl and (pred is None or pred(int(i)))
-    ]
-    rows.sort(key=lambda t: (-t[1], t[0]))
-    return rows[:k]
+    return _select(ids, m @ qu, k, excl, pred)
 
 
-def _pq_answer(state, qu, k, rerank, excl, pred=None):
-    """ADC scan + exact re-rank on pinned arrays, deterministic ties
-    by (distance, id) like ``operators.pq.topk_pq``."""
-    import numpy as np
-
-    ids, emb, codes, books, rot = state
-    if len(ids) == 0:
-        return []
-    qr = qu @ rot if rot is not None else qu
-    m = len(books)
+def _adc_answer(state, qu, k, ef, rerank, excl, pred):
+    """ADC scan + exact re-rank on pinned arrays, for ``pq`` and
+    ``ivfpq``.  The two differ only in the LUT target: ``q @ R`` under
+    a PQ rotation, ``q − c_cell`` for IVF-PQ residual codes.  The
+    candidate window starts at ``max(rerank, k + |excl|)`` in (ADC
+    distance, id) order and doubles until k candidates survive the
+    exclusions and the predicate (PRE-filter: the LUT is computed
+    once; only the window grows)."""
+    ids, emb, codes, books, rot, centroid = state
+    qr = qu if rot is None else qu @ rot
+    if centroid is not None:
+        qr = qr - centroid
     sub = books[0].shape[1]
-    # LUT[j][c] = squared distance of the query's j-th subvector to
+    # LUT[j][c] = squared distance of the target's j-th subvector to
     # centroid c; ADC = sum over subspaces of LUT lookups
     adc = np.zeros(len(ids), dtype="float64")
-    for j in range(m):
-        lut = ((books[j] - qr[j * sub : (j + 1) * sub]) ** 2).sum(axis=1)
+    for j, book in enumerate(books):
+        lut = ((book - qr[j * sub : (j + 1) * sub]) ** 2).sum(axis=1)
         adc += lut[codes[:, j]]
-    window = max(rerank, k + len(excl))
     full = np.lexsort((ids, adc))
+    window = max(rerank, k + len(excl))
     while True:
         cand = full[:window]
-        scores = emb[cand] @ qu
-        rows = [
-            (int(ids[i]), float(s))
-            for i, s in zip(cand, scores)
-            if int(ids[i]) not in excl
-            and (pred is None or pred(int(ids[i])))
-        ]
-        if len(rows) >= k or window >= len(ids):
-            break
+        got = _select(ids[cand], emb[cand] @ qu, k, excl, pred)
+        if len(got) >= k or window >= len(ids):
+            return got
         window = min(window * 2, len(ids))
+
+
+def _beam(mat, adj, ids_sorted, qu, k, ef, excl, pred, entry=None):
+    """Layer-0 beam of a graph walk.  With a predicate the beam WIDENS
+    (ef doubling, up to the shard size) until k survivors pass; the
+    walk stays on the unfiltered graph (filtering edges would
+    disconnect it) and filters at collection.  Without one it walks
+    exactly once."""
+    eff = ef
+    while True:
+        near = _greedy_search(mat, adj, ids_sorted, qu, eff, entry=entry)
+        rows = [
+            (i, float(np.dot(qu, mat[i])))
+            for _, i in near
+            if i not in excl and (pred is None or pred(i))
+        ]
+        if pred is None or len(rows) >= k or eff >= len(ids_sorted):
+            break
+        eff = min(eff * 2, len(ids_sorted))
     rows.sort(key=lambda t: (-t[1], t[0]))
     return rows[:k]
+
+
+def _nsw_walk(state, qu, k, ef, rerank, excl, pred):
+    """Greedy walk of one pinned NSW shard from its lowest id."""
+    mat, adj, ids_sorted = state
+    return _beam(mat, adj, ids_sorted, qu, k, ef, excl, pred)
+
+
+def _hnsw_walk(state, qu, k, ef, rerank, excl, pred):
+    """Layered descent + layer-0 beam on pre-parsed state (the cached
+    twin of ``hnsw._search_shard``, which parses pandas rows)."""
+    mat, layered, levels, ids_sorted = state
+    ep = min(mat, key=lambda i: (-levels[i], i))
+    cur = ep
+    for lv in range(levels[ep], 0, -1):
+        near = _greedy_search(mat, layered[lv], ids_sorted, qu, 1, entry=cur)
+        if near:
+            cur = near[0][1]
+    return _beam(mat, layered[0], ids_sorted, qu, k, ef, excl, pred, entry=cur)
+
+
+_ANSWERS = {
+    "nsw": _nsw_walk,
+    "hnsw": _hnsw_walk,
+    "pq": _adc_answer,
+    "ivf": _ivf_answer,
+    "ivfpq": _adc_answer,
+}
 
 
 def serve_topk(
@@ -633,11 +458,13 @@ def serve_topk(
 ) -> DataFrame:
     """Top-k for a BATCH of (qid, vector) queries against the pinned
     sharded index (``kind``: ``nsw``/``hnsw`` graph walk, ``pq`` ADC
-    scan + exact re-rank with pinned codebooks, or ``ivf`` exact scan
-    of the ``n_probe`` nearest pinned cells).  One job: every shard
-    task answers every query from its cached state (IVF tasks run
-    only for probed cells); global per-qid merge.  Output
-    ``(qid, vec_id, score)`` — ``score`` is exact cosine.
+    scan + exact re-rank with pinned codebooks, ``ivf`` exact scan of
+    the ``n_probe`` nearest pinned cells, ``ivfpq`` ADC within them).
+    One Spark job: every shard task answers its queries from cached
+    state (IVF kinds run tasks only for probed cells); the per-qid
+    merge runs in the driver.  The job runs when this is called;
+    the returned ``(qid, vec_id, score)`` DataFrame is local, in rank
+    order, and ``score`` is exact cosine rounded to 4 decimals.
 
     ``predicate`` (``Callable[[int], bool]``, optional) is a metadata
     filter resolved to id level by the caller (tenant = id mod T, a
@@ -656,248 +483,74 @@ def serve_topk(
     sized query-side DataFrame here; for corpus-scale two-table top-k
     use ``optimizer.knn_join``.
     """
-    import json
-    import os
-
-    metas = {
-        "nsw": "_nsw_meta.json",
-        "hnsw": "_hnsw_meta.json",
-        "pq": "_pqserve_meta.json",
-        "ivf": "_ivfserve_meta.json",
-        "ivfpq": "_ivfpqserve_meta.json",
-    }
-    if kind not in metas:
+    if kind not in _ANSWERS:
         raise ValueError(
             f"kind must be nsw|hnsw|pq|ivf|ivfpq, got {kind!r}"
         )
-    with open(os.path.join(path, metas[kind])) as f:
-        meta = json.load(f)
-    n_shards = meta["n_shards"]
-    version = meta.get("last_version", 0)
+    meta = read_meta(path, kind)
+    token = shard_token(meta)
     excl = set(exclude_ids or [])
     ef = max(ef_search, k + len(excl))
-
-    import numpy as np
-
+    kind_answer = _ANSWERS[kind]
     qnorm = []
     for qid, vec in queries:
         q = np.asarray(vec, dtype="float64")
         n = float(np.sqrt(np.dot(q, q)))
-        qnorm.append((int(qid), (q / n if n > 0 else q).tolist()))
+        qnorm.append((int(qid), q / n if n > 0 else q))
 
-    # IVF: the cells ARE the shards — compute each query's n_probe
-    # nearest cells driver-side from the pinned centroids (tiny) and
-    # schedule tasks ONLY for the probed union; per cell, answer only
-    # the queries that probed it.
-    probes: dict[int, set] = {}
-    cents_np = None
-    if kind in ("ivf", "ivfpq"):
-        cents_np = np.asarray(meta["centroids"], dtype="float64")
-        if predicate is not None:
-            # filtered cell kinds take the multi-round widening path:
-            # each round probes only the NEW cells of still-starved
-            # queries, so the no-filter fast path below stays a
-            # single job
-            return _serve_cells_prefiltered(
-                spark, path, version, kind, qnorm, cents_np,
-                k, rerank, excl, predicate, n_probe,
-            )
-        for qid, qv in qnorm:
-            dots = cents_np @ np.asarray(qv, dtype="float64")
-            top = sorted(
-                range(len(cents_np)), key=lambda ci: (-dots[ci], ci)
-            )[:n_probe]
-            probes[qid] = set(top)
-        task_shards = sorted(set().union(*probes.values())) if probes else []
-    else:
-        task_shards = list(range(n_shards))
-
-    from pdf_etl_ocr_inference_spark.operators.graph_ann import (
-        _greedy_search,
-    )
-
-    def _answer(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for idx in pdf["shard"]:
-                sh = task_shards[int(idx)]
-                state = _load_shard(path, int(sh), version, kind)
-                for qid, qv in qnorm:
-                    qu = np.asarray(qv, dtype="float64")
-                    if kind == "nsw":
-                        mat, adj, ids_sorted = state
-                        eff = ef
-                        while True:
-                            near = _greedy_search(
-                                mat, adj, ids_sorted, qu, eff
-                            )
-                            local = []
-                            for _, i in near:
-                                if i in excl or (
-                                    predicate is not None
-                                    and not predicate(i)
-                                ):
-                                    continue
-                                local.append(
-                                    (qid, i, float(np.dot(qu, mat[i])))
-                                )
-                            if (
-                                predicate is None
-                                or len(local) >= k
-                                or eff >= len(ids_sorted)
-                            ):
-                                break
-                            eff = min(eff * 2, len(ids_sorted))
-                        local.sort(key=lambda t: (-t[2], t[1]))
-                        rows.extend(local[:k])
-                    elif kind == "pq":
-                        got = _pq_answer(
-                            state, qu, k, rerank, excl, pred=predicate
-                        )
-                        rows.extend((qid, i, s) for i, s in got)
-                    elif kind == "ivf":
-                        if sh not in probes.get(qid, ()):
-                            continue
-                        got = _ivf_answer(state, qu, k, excl)
-                        rows.extend((qid, i, s) for i, s in got)
-                    elif kind == "ivfpq":
-                        if sh not in probes.get(qid, ()):
-                            continue
-                        got = _ivfpq_answer(
-                            state, qu, cents_np[sh], k, rerank, excl
-                        )
-                        rows.extend((qid, i, s) for i, s in got)
-                    else:
-                        mat, layered, levels, ids_sorted = state
-                        got = _hnsw_walk(
-                            mat, layered, levels, ids_sorted, qu, k, ef,
-                            excl, pred=predicate,
-                        )
-                        rows.extend((qid, i, s) for i, s in got)
-            yield pd.DataFrame(rows, columns=["qid", "vec_id", "score"])
-
-    # one shard per partition WITHOUT a shuffle: range(n) split into
-    # n partitions puts row i in partition i; the task maps the index
-    # through task_shards (for IVF, only the probed cells get tasks).
-    # The query job is a single python stage + the k-row merge (every
-    # job stage is fixed overhead on an online path).
-    n_tasks = max(len(task_shards), 1)
-    shards = spark.range(0, len(task_shards), 1, n_tasks).select(
-        F.col("id").cast("int").alias("shard")
-    )
-    local = shards.mapInPandas(_answer, _OUT_SCHEMA)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("vec_id"))
-    # ≤ n_shards·k rows per query survive the shard merge — collapse
-    # to one partition (repartition, NOT coalesce: coalesce would
-    # serialize the shard tasks themselves) so the per-qid window
-    # doesn't pay a shuffle.partitions-wide exchange on control data
-    return (
-        local.repartition(1)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("qid", "vec_id", F.round("score", 4).alias("score"))
-    )
-
-
-def _serve_cells_prefiltered(
-    spark, path, version, kind, qnorm, cents_np,
-    k, rerank, excl, predicate, n_probe,
-):
-    """Multi-round probe widening for filtered IVF/IVFPQ serving:
-    round 1 probes each query's ``n_probe`` nearest cells with the
-    predicate applied IN-CELL (pre-filter); any query with fewer
-    than k survivors doubles its probed-cell prefix and the next
-    round dispatches tasks ONLY for the newly probed cells.  At most
-    ``log2(n_cells)`` extra jobs, each smaller than the first — a
-    tight filter reads more cells instead of starving, and the
-    result is deterministic (cell ranking by (-dot, cell), exact
-    per-cell answers, per-qid (-score, id) merge)."""
-    import numpy as np
-
-    n_cells = len(cents_np)
-    qids = [qid for qid, _ in qnorm]
-    rank_by_q: dict[int, list[int]] = {}
-    for qid, qv in qnorm:
-        dots = cents_np @ np.asarray(qv, dtype="float64")
-        rank_by_q[qid] = sorted(
-            range(n_cells), key=lambda ci: (-dots[ci], ci)
-        )
-    probed: dict[int, set] = {qid: set() for qid in qids}
-    acc: dict[int, list] = {qid: [] for qid in qids}
-    cur = {qid: max(min(n_probe, n_cells), 1) for qid in qids}
-
-    while True:
-        round_probes = {}
-        for qid in qids:
-            new = [
-                c
-                for c in rank_by_q[qid][: cur[qid]]
-                if c not in probed[qid]
-            ]
-            if new:
-                round_probes[qid] = set(new)
-        if not round_probes:
-            break
-        cells = sorted(set().union(*round_probes.values()))
-
-        def _answer(batches, _cells=cells, _rp=round_probes):
-            import pandas as pd
-
-            for pdf in batches:
-                rows = []
-                for idx in pdf["shard"]:
-                    sh = _cells[int(idx)]
-                    state = _load_shard(path, sh, version, kind)
-                    for qid, qv in qnorm:
-                        if sh not in _rp.get(qid, ()):
-                            continue
-                        qu = np.asarray(qv, dtype="float64")
-                        if kind == "ivf":
-                            got = _ivf_answer(
-                                state, qu, k, excl, pred=predicate
-                            )
-                        else:
-                            got = _ivfpq_answer(
-                                state, qu, cents_np[sh], k, rerank,
-                                excl, pred=predicate,
-                            )
-                        rows.extend((qid, i, s) for i, s in got)
-                yield pd.DataFrame(
-                    rows, columns=["qid", "vec_id", "score"]
-                )
-
-        n_tasks = max(len(cells), 1)
-        shards = spark.range(0, len(cells), 1, n_tasks).select(
-            F.col("id").cast("int").alias("shard")
-        )
-        for r in shards.mapInPandas(_answer, _OUT_SCHEMA).collect():
-            acc[int(r["qid"])].append((int(r["vec_id"]), float(r["score"])))
-        for qid, cs in round_probes.items():
-            probed[qid].update(cs)
-        starved = [
-            qid
-            for qid in qids
-            if len(acc[qid]) < k and cur[qid] < n_cells
+    def answer(shard, todo):
+        state = _load_shard(path, shard, kind, token)
+        if state is None:
+            return []
+        return [
+            (qid, i, s)
+            for qid, qu in todo
+            for i, s in kind_answer(state, qu, k, ef, rerank, excl, predicate)
         ]
-        if not starved:
-            break
-        for qid in starved:
-            cur[qid] = min(cur[qid] * 2, n_cells)
 
-    final = []
-    for qid in qids:
-        best = sorted(acc[qid], key=lambda t: (-t[1], t[0]))[:k]
-        final.extend((qid, i, s) for i, s in best)
-    # F.round (HALF_UP), not Python round (half-even): the same
-    # (query, vector) pair must report the same score with and
-    # without a predicate (review-r12)
-    return spark.createDataFrame(final, _OUT_SCHEMA).select(
-        "qid", "vec_id", F.round("score", 4).alias("score")
-    )
+    if kind in ("ivf", "ivfpq"):
+        frames = _probe_cells(
+            spark, np.asarray(meta["centroids"], dtype="float64"), qnorm,
+            answer, k, n_probe, widen=predicate is not None,
+        )
+    else:  # every shard answers every query
+        plan = dict.fromkeys(range(meta["n_shards"]), qnorm)
+        frames = [dispatch(spark, plan, answer, "vec_id")]
+    return merge_topk(spark, frames, k, "vec_id")
+
+
+def _probe_cells(spark, cents, qnorm, answer, k, n_probe, widen):
+    """IVF kinds: the cells ARE the shards.  Each query ranks the cells
+    by (-dot, cell) and probes its ``n_probe`` nearest; a cell's task
+    answers only the queries that probed it.  With ``widen`` (a
+    predicate is set), any query left with fewer than k rows doubles
+    its probed prefix and the next round — one more job — dispatches
+    only the newly probed cells: at most ``log2(n_cells)`` extra
+    jobs, each smaller than the first.  Returns each round's rows."""
+    n_cells = len(cents)
+    ranked = {
+        qid: np.lexsort((np.arange(n_cells), -(cents @ qu)))
+        for qid, qu in qnorm
+    }
+    cur = {qid: max(min(n_probe, n_cells), 1) for qid, _ in qnorm}
+    done = dict.fromkeys(cur, 0)
+    found: Counter = Counter()
+    frames = []
+    while True:
+        plan: dict[int, list] = {}
+        for qid, qu in qnorm:
+            for c in ranked[qid][done[qid] : cur[qid]]:
+                plan.setdefault(int(c), []).append((qid, qu))
+            done[qid] = cur[qid]
+        if not plan:
+            return frames
+        frames.append(dispatch(spark, plan, answer, "vec_id"))
+        found.update(frames[-1]["qid"].tolist())
+        starved = [q for q in cur if found[q] < k and cur[q] < n_cells]
+        if not widen or not starved:
+            return frames
+        for q in starved:
+            cur[q] = min(cur[q] * 2, n_cells)
 
 
 def serving_refresh_fn(path: str, kind: str):
@@ -908,9 +561,6 @@ def serving_refresh_fn(path: str, kind: str):
     at-least-once ingestion with idempotent folds), pointed at the
     pinned-serving layouts.  Each fold bumps ``last_version``, so
     executor caches invalidate as commits land."""
-    from pdf_etl_ocr_inference_spark.operators.graph_ann import (
-        refresh_nsw_index,
-    )
     from pdf_etl_ocr_inference_spark.operators.hnsw import (
         refresh_hnsw_index,
     )
@@ -930,44 +580,3 @@ def serving_refresh_fn(path: str, kind: str):
         refresh(spark, path, changes, version)
 
     return fn
-
-
-def _hnsw_walk(mat, layered, levels, ids_sorted, qu, k, ef, excl, pred=None):
-    """Layered descent + layer-0 beam on pre-parsed state (the cached
-    twin of ``hnsw._search_shard``, which parses pandas rows).  With a
-    ``pred``icate the layer-0 beam WIDENS (ef doubling, up to the
-    shard size) until k survivors pass — filtered-HNSW walks the
-    unfiltered graph (filtering edges would disconnect it) and
-    filters at collection."""
-    import numpy as np
-
-    from pdf_etl_ocr_inference_spark.operators.graph_ann import (
-        _greedy_search,
-    )
-
-    if not ids_sorted:
-        return []
-    ep = min(mat, key=lambda i: (-levels[i], i))
-    cur = ep
-    for lv in range(levels[ep], 0, -1):
-        near = _greedy_search(mat, layered[lv], ids_sorted, qu, 1, entry=cur)
-        if near:
-            cur = near[0][1]
-    eff = ef
-    while True:
-        near = _greedy_search(
-            mat, layered[0], ids_sorted, qu, eff, entry=cur
-        )
-        rows = []
-        for _, i in near:
-            if i in excl or (pred is not None and not pred(i)):
-                continue
-            rows.append((i, float(np.dot(qu, mat[i]))))
-        # pred=None must walk exactly once — the pre-predicate
-        # behavior (review-r12: a thin beam on a degenerate shard
-        # would otherwise re-walk and could return different rows)
-        if pred is None or len(rows) >= k or eff >= len(ids_sorted):
-            break
-        eff = min(eff * 2, len(ids_sorted))
-    rows.sort(key=lambda t: (-t[1], t[0]))
-    return rows[:k]

@@ -55,6 +55,7 @@ BM25_HINT_KEY = "spark_graft.bm25_hint"
 # on one machine get private index trees instead of racing on a
 # fixed path.  Indexes persist across SparkSessions WITHIN a process.
 from pdf_etl_ocr_inference_spark.scratch import SCRATCH_ROOT as _SR
+from pdf_etl_ocr_inference_spark.scratch import atomic_write_json
 
 _DEFAULT_INDEX_ROOT = os.path.join(_SR, "ann_indexes")
 
@@ -91,8 +92,7 @@ class IndexCatalog:
     def register(self, table_key: str, meta: dict) -> None:
         d = _index_dir(self.root, table_key)
         os.makedirs(d, exist_ok=True)
-        with open(os.path.join(d, "meta.json"), "w") as f:
-            json.dump(meta, f)
+        atomic_write_json(os.path.join(d, "meta.json"), meta)
 
     def drop(self, table_key: str) -> None:
         import shutil
