@@ -74,8 +74,8 @@ def init_centroids(
 ) -> list[list[float]]:
     """No-RNG init: the vectors of the ``k`` smallest ids.
 
-    The single definition of the init rule — ``kmeans_fit``, the
-    catalog entries, and the bench all call this, and the
+    The single definition of the init rule — ``kmeans_fit`` and the
+    catalog entries call this, and the
     ``ann_kmeans_assign`` oracle's ``WHERE vec_id < k`` assumes it.
     """
     rows = df.select(id_col, vec_col).orderBy(id_col).limit(k).collect()

@@ -64,6 +64,10 @@ GRAPH_SCHEMA = T.StructType(
 # pin in ~4 MB of worker memory.
 GRAPH_SHARD_TARGET_ROWS = 4096
 
+# Candidates each insert's greedy search keeps while building a shard
+# graph (NSW and HNSW alike).
+EF_CONSTRUCTION = 32
+
 
 def derive_n_shards(
     n_rows: int, target: int = GRAPH_SHARD_TARGET_ROWS
@@ -250,7 +254,6 @@ def build_nsw_index(
     embedding_col: str = "embedding",
     n_shards: int | None = None,
     m_neighbors: int = 8,
-    ef_construction: int = 32,
 ) -> str:
     """Build the sharded NSW graph and write it partitioned by shard.
 
@@ -268,13 +271,12 @@ def build_nsw_index(
 
     if n_shards is None:
         n_shards = derive_n_shards(corpus.count())
-    m, efc = m_neighbors, ef_construction
 
     def _build(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("vec_id")  # arrival order is arbitrary
         ids = pdf["vec_id"].tolist()
         mat = VecStore.unit(ids, pdf["embedding"])
-        adj = build_shard_adjacency(ids, mat, m, efc)
+        adj = build_shard_adjacency(ids, mat, m_neighbors, EF_CONSTRUCTION)
         out = pd.DataFrame(
             {
                 "shard": pdf["shard"].tolist(),
@@ -302,7 +304,6 @@ def build_nsw_index(
         {
             "n_shards": n_shards,
             "m_neighbors": m_neighbors,
-            "ef_construction": ef_construction,
             "last_version": 0,
             "build_id": new_build_id(),
         },
@@ -426,7 +427,6 @@ def refresh_nsw_index(
             tmp,
             n_shards=meta["n_shards"],
             m_neighbors=meta["m_neighbors"],
-            ef_construction=meta["ef_construction"],
         )
 
     return refresh_sharded_graph(

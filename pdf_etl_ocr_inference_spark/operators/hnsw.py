@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pdf_etl_ocr_inference_spark.operators.graph_ann import (
+    EF_CONSTRUCTION,
     VecStore,
     _greedy_search,
 )
@@ -154,7 +155,6 @@ def build_hnsw_index(
     embedding_col: str = "embedding",
     n_shards: int | None = None,
     m_neighbors: int = 8,
-    ef_construction: int = 32,
 ) -> str:
     """Build the sharded HNSW graph, partitioned by shard.
 
@@ -166,7 +166,7 @@ def build_hnsw_index(
     Per shard (one sequential ``applyInPandas`` task, ascending id
     order): each insert descends from the entry point through layers
     above its level with ef=1 greedy walks, then at each layer ≤ its
-    level searches ef_construction candidates, links the closest M
+    level searches EF_CONSTRUCTION candidates, links the closest M
     bidirectionally (2M at layer 0, per the paper), and prunes any
     over-full adjacency back to the closest allowed (ties by id).
     """
@@ -178,13 +178,12 @@ def build_hnsw_index(
 
     if n_shards is None:
         n_shards = derive_n_shards(corpus.count())
-    m, efc = m_neighbors, ef_construction
 
     def _build(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("vec_id")
         ids = pdf["vec_id"].tolist()
         mat = VecStore.unit(ids, pdf["embedding"])
-        levels, adj = build_shard_layers(ids, mat, m, efc)
+        levels, adj = build_shard_layers(ids, mat, m_neighbors, EF_CONSTRUCTION)
         out = pd.DataFrame(
             {
                 "shard": pdf["shard"].tolist(),
@@ -214,7 +213,6 @@ def build_hnsw_index(
         {
             "n_shards": n_shards,
             "m_neighbors": m_neighbors,
-            "ef_construction": ef_construction,
             "last_version": 0,
             "build_id": new_build_id(),
         },
@@ -273,7 +271,6 @@ def refresh_hnsw_index(
             tmp,
             n_shards=meta["n_shards"],
             m_neighbors=meta["m_neighbors"],
-            ef_construction=meta["ef_construction"],
         )
 
     return refresh_sharded_graph(

@@ -1064,24 +1064,28 @@ def _bloom_positions(vals, k: int, m: int):
     return ((h1[:, None] + j[None, :] * h2[:, None]) % np.uint64(m)).ravel()
 
 
-def build_file_bloom(
-    spark, path: str, col: str, fpp: float = 0.01
-) -> str:
+# Target false-positive rate of a per-file Bloom filter, per (file,
+# probed value): ~9.6 bits per row.
+BLOOM_FPP = 0.01
+
+
+def build_file_bloom(spark, path: str, col: str) -> str:
     """Per-FILE Bloom-filter sidecar over an integer column — the
     point-lookup complement of :func:`collect_file_stats`: min/max
     ranges prune RANGE predicates on clustered columns, but for a
     point lookup on a column the layout does NOT cluster (e.g. find
     5 order ids in a table laid out by customer) every file's range
     covers the probe and nothing skips.  A per-file Bloom answers
-    "might this file contain value v" in O(k) bit probes with ~fpp
-    false positives — the file-skipping index Delta/Iceberg attach to
-    parquet, rebuilt here for a plain directory.
+    "might this file contain value v" in O(k) bit probes with
+    ~``BLOOM_FPP`` false positives — the file-skipping index
+    Delta/Iceberg attach to parquet, rebuilt here for a plain
+    directory.
 
     Distributed one-column scan: each task reads ONLY ``col`` of its
     files (columnar projection — payload columns untouched) and sets
     k bits per value in an m-bit array sized from the file's row count
-    and ``fpp``.  The sidecar lands under ``{path}/_bloom_{col}`` (the
-    ``_`` prefix hides it from Spark's table listing).  Cost ∝ the
+    and ``BLOOM_FPP``.  The sidecar lands under ``{path}/_bloom_{col}``
+    (the ``_`` prefix hides it from Spark's table listing).  Cost ∝ the
     one column's bytes; at 100 TB that is the same shape as a stats
     collection pass and embarrassingly parallel.
     """
@@ -1111,7 +1115,10 @@ def build_file_bloom(
                 arr = _pq.read_table(fpath, columns=[col])[col]
                 vals = arr.to_numpy(zero_copy_only=False).astype("int64")
                 n = max(len(vals), 1)
-                m = max(64, int(math.ceil(-n * math.log(fpp) / (math.log(2) ** 2))))
+                m = max(
+                    64,
+                    int(math.ceil(-n * math.log(BLOOM_FPP) / (math.log(2) ** 2))),
+                )
                 k = max(1, round(m / n * math.log(2)))
                 bits = _np.zeros(m, dtype=bool)
                 if len(vals):

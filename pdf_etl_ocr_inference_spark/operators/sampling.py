@@ -137,34 +137,25 @@ def temperature_mix(
     long as thresholds sit away from integers — verify per corpus
     (both catalog entries do, ≥0.08 at all three SFs).
     """
-    # r13 (guide §5): the quota branch and the ranked branch both
-    # reference the input — Spark re-evaluates the whole upstream
-    # subtree per reference, and for pipeline_curated_mix that
-    # subtree is the entire dedup pipeline (minhash pairs → CC →
-    # argmax collapse → anti-join).  Persist the narrow (id, group)
-    # projection once (lazy, MEMORY_AND_DISK, two fixed-width-ish
-    # columns) so both branches are cache reads.
-    base = df.select(id_col, group_col).persist()
-    quotas = (
-        base.groupBy(group_col)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .withColumn("w", F.pow(F.col("n"), F.lit(alpha)))
-    )
-    # Global normalizer over the handful of group rows: an
-    # unpartitioned window on a group-count-sized frame, not the data.
-    quotas = quotas.withColumn(
-        "tot", F.sum("w").over(Window.partitionBy())
-    ).select(
-        group_col,
-        (F.lit(budget) * F.col("w") / F.col("tot")).alias("quota"),
-    )
+    # The quotas come from one small driver collect (a row per
+    # group) and ride in the plan as literals, so the returned frame
+    # references the input once and nothing is left persisted.  The
+    # normalizer sums every group, NULL included; a NULL group gets
+    # no quota and selects nothing, as in the oracle's JOIN USING.
+    counts = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("n")).collect()
+    w = {r[group_col]: float(r["n"]) ** alpha for r in counts}
+    tot = sum(w.values())
+    quota = F.lit(None)
+    for g, wg in sorted((g, wg) for g, wg in w.items() if g is not None):
+        quota = F.when(
+            F.col(group_col) == F.lit(g), F.lit(budget * wg / tot)
+        ).otherwise(quota)
     rk = Window.partitionBy(group_col).orderBy(
         F.md5(F.col(id_col).cast("string"))
     )
     return (
-        base
+        df.select(id_col, group_col)
         .withColumn("rk", F.row_number().over(rk))
-        .join(F.broadcast(quotas), group_col)
-        .filter(F.col("rk") <= F.col("quota"))
+        .filter(F.col("rk") <= quota)
         .select(id_col, group_col)
     )

@@ -216,10 +216,10 @@ def dup_span_intervals_both(
     (∝ duplicated occurrences, result-sized) feeds the two island
     merges, then is unpersisted before returning — so no cached plan
     outlives the call (r11 advisory: the returned-lazy idiom left
-    the persist alive for the whole session, accumulating per bench
-    rep).  ``stage_tag`` keys the staging dirs: callers with a
+    the persist alive for the whole session, accumulating per
+    call).  ``stage_tag`` keys the staging dirs: callers with a
     natural key (the attrition entry passes the sf tag) get
-    rep-stable overwritten paths; the default per-call uuid dirs are
+    rerun-stable overwritten paths; the default per-call uuid dirs are
     GC'd with the process scratch root."""
     import os
     import uuid

@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 HINT_KEY = "spark_graft.similarity_hint"
 BM25_HINT_KEY = "spark_graft.bm25_hint"
 
-# Per-process root (see scratch.py): concurrent gate/bench sessions
+# Per-process root (see scratch.py): concurrent gate/test sessions
 # on one machine get private index trees instead of racing on a
 # fixed path.  Indexes persist across SparkSessions WITHIN a process.
 from pdf_etl_ocr_inference_spark.scratch import SCRATCH_ROOT as _SR
@@ -1135,10 +1135,10 @@ def _match_scan_filter(df: DataFrame):
 # Below this many bytes of estimated SAVED scan (pruned-away layout
 # file sizes), the rewrite declines to fire: the fixed rewrite
 # overhead (~120-180 ms of plan match + keep-list + reader setup,
-# measured in bench.py's layout_rewrite_served block) beats the scan
-# time it saves on small tables, where Spark's own row-group pruning
-# already makes the brute scan cheap.  256 MiB ≈ the overhead at the
-# local scan throughput the bench measures (~1 GB/s) with 2x margin;
+# measured at 4 M rows on a 32-core host) beats the scan time it
+# saves on small tables, where Spark's own row-group pruning already
+# makes the brute scan cheap.  256 MiB ≈ the overhead at the local
+# scan throughput measured there (~1 GB/s) with 2x margin;
 # at 100 TB any selective predicate saves TBs, so the gate only ever
 # suppresses the regime where the rewrite was a measured LOSS
 # (r4: warm_speedup_vs_brute 0.8 at 4 M rows).  Pass

@@ -14,9 +14,8 @@
   ``*_bylabel_xx`` entries run explicit xxhash64 against the planted
   fixture (whose pair set is hash-family-independent), the
   real-corpus xx≡md5 pair-set equality is pinned by
-  tests/test_hash_family_parity.py, and bench.py's
-  ``minhash_family_premium`` block publishes the production wall
-  next to the gate wall.
+  tests/test_hash_family_parity.py.  The md5 family was measured at
+  ~1.23× the xxhash64 wall (r8).
 """
 
 from __future__ import annotations

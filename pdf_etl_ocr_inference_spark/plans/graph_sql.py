@@ -37,9 +37,9 @@ _DEFAULT_SF = "/root/testdata/sf0.01"
 # pinned to the registered entries' parameters; the shard count is
 # NOT pinned — both the entries and these oracles derive it from the
 # corpus size via the SAME graph_ann.derive_n_shards rule (r10,
-# verdict #2), so the replay cannot drift from the engine's sharding
+# verdict #2), so the replay cannot drift from the engine's sharding;
+# the build's candidate width is the engine's EF_CONSTRUCTION
 _M = 8
-_EFC = 32
 _K = 5
 _EF_SEARCH = 32
 _EXCLUDE = (0,)  # the query vector's own id
@@ -91,6 +91,7 @@ def nsw_topk_oracle() -> str:
     import pandas as pd
 
     from pdf_etl_ocr_inference_spark.operators.graph_ann import (
+        EF_CONSTRUCTION,
         VecStore,
         build_shard_adjacency,
         derive_n_shards,
@@ -112,7 +113,7 @@ def nsw_topk_oracle() -> str:
         mat = VecStore.unit(
             sids, pd.Series([embs[pos[i]] for i in sids])
         )
-        adj = build_shard_adjacency(sids, mat, _M, _EFC)
+        adj = build_shard_adjacency(sids, mat, _M, EF_CONSTRUCTION)
         rows = search_shard_nsw(sids, mat, adj, qu, _K, ef, excl)
         cand.extend(i for i, _ in rows)
     return _topk_sql(cand, _K)
@@ -124,6 +125,7 @@ def hnsw_topk_oracle() -> str:
     import pandas as pd
 
     from pdf_etl_ocr_inference_spark.operators.graph_ann import (
+        EF_CONSTRUCTION,
         VecStore,
         derive_n_shards,
     )
@@ -147,7 +149,7 @@ def hnsw_topk_oracle() -> str:
         mat = VecStore.unit(
             sids, pd.Series([embs[pos[i]] for i in sids])
         )
-        levels, adj = build_shard_layers(sids, mat, _M, _EFC)
+        levels, adj = build_shard_layers(sids, mat, _M, EF_CONSTRUCTION)
         pdf = pd.DataFrame(
             {
                 "vec_id": sids,

@@ -522,7 +522,7 @@ def op48_json_extract(spark: SparkSession, sf: str) -> DataFrame:
 
 
 # ------------------------------------------------------------------
-# Headline TPC-H-style pipelines (bench queries)
+# Headline TPC-H-style pipelines
 # ------------------------------------------------------------------
 
 

@@ -1029,8 +1029,8 @@ def op70f_partitioned_layout(spark: SparkSession, sf: str) -> DataFrame:
     safe = sf.strip("/").replace("/", "_").replace(".", "_")
     # wipe=False: the default wipe would delete and re-copy the source
     # on every call, drifting its mtimes away from the registered
-    # inventory so the rewrite (correctly) declines — bench runs each
-    # entry three passes and hit exactly that on pass 2
+    # inventory so the rewrite (correctly) declines on a rerun in the
+    # same process (tests/test_idempotence.py calls it three times)
     src = f"{scratch_dir(f'partsrc_{safe}', wipe=False)}/orders"
     if not os.path.isdir(src):
         (
@@ -1116,7 +1116,7 @@ def op70g_multiaxis_partitioned_layout(
     from pdf_etl_ocr_inference_spark.scratch import scratch_dir
 
     safe = sf.strip("/").replace("/", "_").replace(".", "_")
-    # wipe=False + idempotent copy: see op70f (bench repeat passes)
+    # wipe=False + idempotent copy: see op70f (reruns in one process)
     src = f"{scratch_dir(f'partsrc2_{safe}', wipe=False)}/orders"
     if not os.path.isdir(src):
         (

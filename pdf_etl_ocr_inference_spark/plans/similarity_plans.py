@@ -942,7 +942,7 @@ def ann_hnsw_topk(spark: SparkSession, sf: str) -> DataFrame:
     "2..n pay only the graph walk. A refresh bumps the version and "
     "invalidates the cache by key. Batched requests amortize job "
     "overhead: 20 queries/job ran 32ms/query vs 1.57s/query "
-    "unpinned at 100k x 128 (bench pinned_serving_latency).",
+    "unpinned at 100k x 128 on a 32-core host.",
 )
 def ann_served_topk(spark: SparkSession, sf: str) -> DataFrame:
     from pdf_etl_ocr_inference_spark.operators.graph_ann import (

@@ -2,15 +2,16 @@
 
 Catalog fixtures (change feeds, streaming checkpoints, ANN indexes)
 need on-disk scratch.  A FIXED path wiped on entry races when two
-sessions share one machine (e.g. the correctness gate and the bench
-running in parallel): one wipes the other's live feed/checkpoint
+sessions share one machine (e.g. the correctness gate and the
+benchmark running in parallel): one wipes the other's live feed/checkpoint
 mid-run.  Keying the root by PID makes every process's scratch
 private while staying deterministic WITHIN a process (repeated calls
 reuse/wipe the same dirs, which the idempotence tests rely on).
 
 Stale roots from crashed/finished processes are garbage-collected
 opportunistically (any ``spark_graft_scratch*`` sibling untouched
-for 2 h), so repeated gate/bench runs do not accumulate /tmp debris.
+for 2 h), so repeated gate/benchmark runs do not accumulate /tmp
+debris.
 """
 
 from __future__ import annotations

@@ -28,8 +28,8 @@ from pyspark.sql import types as T
 
 
 # One wrapper dir per resolved source file, created lazily and reused
-# for the process lifetime — repeated catalog/bench/gate passes must
-# not leak a fresh mkdtemp per call.
+# for the process lifetime — repeated catalog/gate passes must not
+# leak a fresh mkdtemp per call.
 _STREAM_DIR_CACHE: dict = {}
 
 
@@ -290,7 +290,6 @@ def run_available_now(
     streaming_df: DataFrame,
     output_mode: str = "complete",
     timeout_s: int = 120,
-    checkpoint_dir: str | None = None,
     state_partitions: int | None = None,
 ) -> DataFrame:
     """OP-46: run a streaming plan to completion on currently-available
@@ -300,39 +299,34 @@ def run_available_now(
     ``complete`` mode emits every window regardless of watermark
     position — the right semantics for a catch-up batch refresh.
 
-    ``checkpoint_dir`` overrides the checkpoint location (bench
-    attribution uses it to A/B the checkpoint/state-store
-    filesystem).  When unset, the run-to-completion checkpoint +
-    state store go on tmpfs (``/dev/shm``) — LOCAL MASTERS ONLY,
-    via a user-scoped mkdtemp, and only when tmpfs has headroom
-    (see :func:`_tmpfs_checkpoint_dir`) — falling back to the
+    The run-to-completion checkpoint + state store go on tmpfs
+    (``/dev/shm``) — LOCAL MASTERS ONLY, via a user-scoped mkdtemp,
+    and only when tmpfs has headroom (see
+    :func:`_tmpfs_checkpoint_dir`) — falling back to the
     engine-managed /tmp temp dir otherwise: this checkpoint is
     DISCARDED at the end of the call (one-shot catch-up into a
     memory sink — recovery durability buys nothing), and /tmp IO is
-    the headline set's most contention-sensitive surface (r10
-    verdict #1: op45 2.06× on byte-unchanged code under fs
-    contention; the r11 attribution block measured the shm variant
-    23% faster even at its calm baseline).  Incremental-ingestion
-    checkpoints that must SURVIVE across calls (the *_stream_sync
-    at-least-once watermarks) pass their own durable directory and
-    are untouched by this default.
+    the most contention-sensitive surface of the streaming entries
+    (r10 verdict #1: op45 2.06× on byte-unchanged code under fs
+    contention; an r11 A/B measured the shm variant 23% faster even
+    at its calm baseline).  Incremental-ingestion checkpoints that
+    must SURVIVE across calls (the *_stream_sync at-least-once
+    watermarks) live in their own durable directories and do not
+    run through this function.
     """
     import shutil
 
     spark = streaming_df.sparkSession
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    tmp_ckpt = None
-    if checkpoint_dir is None:
-        tmp_ckpt = _tmpfs_checkpoint_dir(spark, name)
-        checkpoint_dir = tmp_ckpt
+    tmp_ckpt = _tmpfs_checkpoint_dir(spark, name)
     writer = (
         streaming_df.writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
         .trigger(availableNow=True)
     )
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
+    if tmp_ckpt is not None:
+        writer = writer.option("checkpointLocation", tmp_ckpt)
     # r13 (verdict-r12 #3, guide §5): ``state_partitions`` (callers
     # derive it from input size via derived_state_partitions) is
     # applied through spark.sql.shuffle.partitions EXACTLY around

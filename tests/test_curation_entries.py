@@ -6,6 +6,7 @@ language's own count (UniMax one-epoch saturation)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from pdf_etl_ocr_inference_spark.functions.text import quality_score
@@ -517,6 +518,41 @@ def test_span_intervals_both_leaves_no_persisted_frames(spark):
     )
     assert cov(iv) >= cov(iv_kf)
     leaked = _ids() - before
+    assert not leaked, leaked
+
+
+@pytest.mark.parametrize(
+    "name", ["train_temperature_mix", "pipeline_curated_mix"]
+)
+def test_temperature_mix_leaves_no_persisted_frames(spark, name):
+    """temperature_mix (ADVICE.md, sampling.py) must not leave a
+    cached frame in the session.
+
+    Compares persisted-RDD ID sets, as above, restricted to cached
+    frames: the localCheckpoint RDDs connected_components truncates
+    lineage with are checkpoints, dropped by the ContextCleaner once
+    unreferenced.  The near-dup stage of pipeline_curated_mix caches
+    its clique-group frame once per input (a separate leak), so that
+    stage is run before the snapshot; the cache is cleared first so
+    an earlier test's cached projection cannot hide a new one."""
+    from pdf_etl_ocr_inference_spark.plans.dedup_plans import (
+        quality_cluster_members,
+    )
+
+    def _cached_ids():
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        return {
+            int(k)
+            for k in jmap.keySet().toArray()
+            if not jmap.get(k).isCheckpointed()
+        }
+
+    spark.catalog.clearCache()
+    if name == "pipeline_curated_mix":
+        quality_cluster_members(spark, SF).collect()
+    before = _cached_ids()
+    assert _SPECS[name].fn(spark, SF).collect()
+    leaked = _cached_ids() - before
     assert not leaked, leaked
 
 

@@ -1,5 +1,5 @@
 """xxhash64 (production) vs md5 (gate) hash-family parity (r9,
-verdict #2): the headline bench/gate entries pin md5 purely for
+verdict #2): the headline gate entries pin md5 purely for
 DuckDB value-replay, while library callers get the faster xxhash64
 default — these tests pin exactly how much of the ANSWER is
 family-independent, so the md5 premium stays a replay artifact and

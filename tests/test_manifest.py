@@ -711,8 +711,8 @@ def test_bloom_rebuild_is_swap_by_pointer(spark, tmp_path, monkeypatch):
     gen1_chunks = L._sidecar_chunks(gen1)
     assert gen1_chunks
 
-    # rebuild (e.g. after fpp retune): old generation must survive
-    L.build_file_bloom(spark, d, "id", fpp=0.001)
+    # rebuild: old generation must survive
+    L.build_file_bloom(spark, d, "id")
     gen2 = L._sidecar_phys_dir(d, "_bloom_id")
     assert gen2 is not None and gen2 != gen1
     for c in gen1_chunks:
