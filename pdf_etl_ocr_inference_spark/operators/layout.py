@@ -20,6 +20,14 @@ construction.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
+
+from pdf_etl_ocr_inference_spark.operators.shard_server import (
+    MISS,
+    WORKER_CACHE,
+    PinCache,
+    dispatch,
+)
 
 
 def ensure_min_parallelism(
@@ -694,7 +702,13 @@ def stamp_manifest_verified(path: str, live_before: dict):
     return _write_manifest_docs(path, probe, live_now)
 
 
-_MANIFEST_SUMMARY_CACHE: dict = {}  # path -> (probe, doc); tiny docs
+# Every driver pin of O(files) state (the inventory doc, a layout's
+# live map, its stats rows and Bloom bit arrays) gets this budget.
+_DRIVER_PIN_BYTES = 64 << 20
+# path -> summary doc under the directory probe; the docs are ~100
+# bytes, so this cache counts entries
+_SUMMARY_PINS = 256
+_MANIFEST_SUMMARY_CACHE = PinCache(_SUMMARY_PINS)
 
 
 def fresh_manifest_summary(path: str):
@@ -707,11 +721,9 @@ def fresh_manifest_summary(path: str):
         probe = _dir_probe(path)
     except OSError:
         return None
-    hit = _MANIFEST_SUMMARY_CACHE.get(path)
-    if hit is not None and hit[0] == probe:
-        _MANIFEST_SUMMARY_CACHE[path] = _MANIFEST_SUMMARY_CACHE.pop(path)
-        return hit[1]
-    _MANIFEST_SUMMARY_CACHE.pop(path, None)
+    doc = _MANIFEST_SUMMARY_CACHE.get(path, probe)
+    if doc is not MISS:
+        return doc
     doc = _read_manifest_doc(path, "inventory_summary")
     if doc is None:  # pre-summary manifest: derive once (O(files))
         full = fresh_manifest_doc(path)
@@ -725,26 +737,18 @@ def fresh_manifest_summary(path: str):
         }
     if doc.get("format") != 1 or doc.get("probe") != probe:
         return None
-    while len(_MANIFEST_SUMMARY_CACHE) > 256:
-        _MANIFEST_SUMMARY_CACHE.pop(next(iter(_MANIFEST_SUMMARY_CACHE)))
-    _MANIFEST_SUMMARY_CACHE[path] = (probe, doc)
+    _MANIFEST_SUMMARY_CACHE.put(path, probe, doc, 1)
     return doc
 
 
-# path -> (inventory-file (size, mtime_ns), doc, nbytes); LRU.  Keyed
-# by the MANIFEST FILE's stat fingerprint, not the directory probe:
-# the doc's freshness can flip per call (any data mutation moves the
+# path -> doc under the inventory file's (size, mtime_ns).  Keyed by
+# the MANIFEST FILE's stat fingerprint, not the directory probe: the
+# doc's freshness can flip per call (any data mutation moves the
 # probe) but the doc's CONTENT only changes when the file is
 # re-stamped — so a stale doc is decided from the cached copy too,
-# never re-parsed per call.
-_MANIFEST_DOC_CACHE: dict = {}
-_MANIFEST_DOC_BUDGET_BYTES: int = 64 << 20
-# Running byte total of the cache (r11, advice): the eviction loop
-# used to re-sum the whole dict per popped entry — O(entries) per
-# pop, O(entries²) when a large doc evicts many.  Self-healing: an
-# external ``.clear()`` (tests do this) is detected by the
-# empty-dict reset at the top of fresh_manifest_doc.
-_MANIFEST_DOC_CACHE_BYTES: int = 0
+# never re-parsed per call.  An oversized doc is kept alone (see
+# fresh_manifest_doc).
+_MANIFEST_DOC_CACHE = PinCache(_DRIVER_PIN_BYTES, keep_oversized=True)
 # Contract counter (tests/test_manifest.py): full-inventory JSON
 # parses.  The staleness machinery must parse the O(files) doc at
 # most ONCE per inventory-file VERSION — including docs past the
@@ -768,23 +772,15 @@ def fresh_manifest_doc(path: str):
     stat map every consumer of this doc materializes anyway."""
     import os as _os
 
-    global MANIFEST_DOC_PARSES, _MANIFEST_DOC_CACHE_BYTES
-    if not _MANIFEST_DOC_CACHE:
-        _MANIFEST_DOC_CACHE_BYTES = 0  # heal external .clear()
+    global MANIFEST_DOC_PARSES
     try:
         probe = _dir_probe(path)
         ist = _os.stat(_os.path.join(_manifest_dir(path), "inventory.json"))
     except OSError:
         return None
     inv_fp = (ist.st_size, ist.st_mtime_ns)
-    hit = _MANIFEST_DOC_CACHE.get(path)
-    if hit is not None and hit[0] == inv_fp:
-        _MANIFEST_DOC_CACHE[path] = _MANIFEST_DOC_CACHE.pop(path)
-        doc = hit[1]
-    else:
-        old = _MANIFEST_DOC_CACHE.pop(path, None)
-        if old is not None:
-            _MANIFEST_DOC_CACHE_BYTES -= old[2]
+    doc = _MANIFEST_DOC_CACHE.get(path, inv_fp)
+    if doc is MISS:
         raw = _read_manifest_doc(path, "inventory")
         MANIFEST_DOC_PARSES += 1
         # validate BEFORE sizing/caching: a future-format stamp, a
@@ -806,15 +802,7 @@ def fresh_manifest_doc(path: str):
             sum(len(f) + 64 for f in doc["files"]) if doc is not None
             else 64
         )
-        while (
-            _MANIFEST_DOC_CACHE
-            and _MANIFEST_DOC_CACHE_BYTES + nbytes
-            > _MANIFEST_DOC_BUDGET_BYTES
-        ):
-            ev = _MANIFEST_DOC_CACHE.pop(next(iter(_MANIFEST_DOC_CACHE)))
-            _MANIFEST_DOC_CACHE_BYTES -= ev[2]
-        _MANIFEST_DOC_CACHE[path] = (inv_fp, doc, nbytes)
-        _MANIFEST_DOC_CACHE_BYTES += nbytes
+        _MANIFEST_DOC_CACHE.put(path, inv_fp, doc, nbytes)
     if doc is None or doc.get("probe") != probe:
         return None
     return doc
@@ -832,7 +820,7 @@ def manifest_stat_map(path: str) -> dict:
 
 
 # (path, inventory digest, canonical range box) -> (keep list,
-# n_files, nbytes); byte-budgeted LRU.  The keep verdict is a pure
+# n_files); byte-budgeted LRU.  The keep verdict is a pure
 # function of (live files' footer stats, box), and the digest pins
 # the live files + fresh fingerprints — any append/delete/replace
 # re-stamps a new digest, so a stale hit is impossible through the
@@ -841,9 +829,8 @@ def manifest_stat_map(path: str) -> dict:
 # executor-probe mapInPandas job PER QUERY even for a repeat
 # (digest, box); at sf0.1 file counts that fixed task was the whole
 # +0.14 s on op70d/op70f.  Repeat boxes now skip the job entirely.
-_STATS_KEEP_CACHE: dict = {}
-_STATS_KEEP_BUDGET_BYTES: int = 32 << 20
-_STATS_KEEP_CACHE_BYTES: int = 0  # running total (advice-r11 pattern)
+_KEEP_VERDICT_BYTES = 32 << 20
+_STATS_KEEP_CACHE = PinCache(_KEEP_VERDICT_BYTES)
 
 
 def _manifest_stats_keep(spark, path: str, ranges: dict):
@@ -855,7 +842,7 @@ def _manifest_stats_keep(spark, path: str, ranges: dict):
     the live files with fresh fingerprints and a row for every
     queried column — so no listing runs, no reconciliation rows move,
     and the driver collects only the passing (file, col) rows
-    (:func:`_stats_hits_executor_pinned`); a repeat (digest, box)
+    (:func:`_stats_chunk_probe`); a repeat (digest, box)
     answers from the driver keep-verdict cache without any job."""
     doc = fresh_manifest_summary(path)  # constant-size: never the
     # O(files) file map — the fast path must stay flat in file count
@@ -873,39 +860,29 @@ def _manifest_stats_keep(spark, path: str, ranges: dict):
     )
     key = (path, doc["digest"], box)
     hit = _STATS_KEEP_CACHE.get(key)
-    if hit is not None:
-        _STATS_KEEP_CACHE[key] = _STATS_KEEP_CACHE.pop(key)  # LRU touch
+    if hit is not MISS:
         return list(hit[0]), hit[1]
     phys = _stats_phys_dir(path)
     if phys is None:
         return None
-    keep = _stats_hits_executor_pinned(
-        spark, phys, f"manifest:{doc['digest']}", ranges
+    found = _stats_chunk_probe(
+        spark, phys, f"manifest:{doc['digest']}", ranges, hits_only=True
     )
-    if keep is None:
+    if found is None:
         # marker outlived its sidecar parquet (deletions inside the
         # ``_``-prefixed dir don't bump the root probe) — fall through
         # to the slow path's loud read, never a silent full keep
         return None
-    global _STATS_KEEP_CACHE_BYTES
-    if not _STATS_KEEP_CACHE:
-        _STATS_KEEP_CACHE_BYTES = 0  # heal external .clear()
-    files = sorted(keep)
-    nbytes = sum(len(f) + 16 for f in files) + 256
-    if nbytes > _STATS_KEEP_BUDGET_BYTES:
-        # an over-budget verdict is served one-shot, NOT cached — and
-        # must not evict everyone else first (review-r11: a broad box
-        # keeping ~10⁶ files would wipe the cache and then skip the
-        # insert, re-opening the per-query probe for every other box)
-        return files, int(doc["n_files"])
-    while (
-        _STATS_KEEP_CACHE
-        and _STATS_KEEP_CACHE_BYTES + nbytes > _STATS_KEEP_BUDGET_BYTES
-    ):
-        ev = _STATS_KEEP_CACHE.pop(next(iter(_STATS_KEEP_CACHE)))
-        _STATS_KEEP_CACHE_BYTES -= ev[2]
-    _STATS_KEEP_CACHE[key] = (tuple(files), int(doc["n_files"]), nbytes)
-    _STATS_KEEP_CACHE_BYTES += nbytes
+    files = sorted(found[0])
+    # an over-budget verdict is served one-shot, NOT cached, and evicts
+    # nothing (review-r11: a broad box keeping ~10⁶ files must not wipe
+    # the cache, re-opening the per-query probe for every other box)
+    _STATS_KEEP_CACHE.put(
+        key,
+        None,
+        (tuple(files), int(doc["n_files"])),
+        sum(len(f) + 16 for f in files) + 256,
+    )
     return files, int(doc["n_files"])
 
 
@@ -1064,6 +1041,21 @@ def _bloom_positions(vals, k: int, m: int):
     return ((h1[:, None] + j[None, :] * h2[:, None]) % np.uint64(m)).ravel()
 
 
+def _bloom_may_hold(bits, m: int, k: int, probe) -> bool:
+    """The one Bloom membership test: may the ``m``-bit filter with
+    ``k`` hashes, stored packed (``numpy.packbits`` order, so bit
+    ``p`` is ``(byte[p >> 3] >> (7 - p % 8)) & 1``), hold ANY value of
+    ``probe`` (an int64 array)?  Indexes the packed bytes directly:
+    no per-query unpack of the m-bit array."""
+    import numpy as np
+
+    m, k = int(m), int(k)
+    packed = np.frombuffer(bits, dtype="uint8")
+    pos = _bloom_positions(probe, k, m)
+    hit = (packed[pos >> 3] >> (7 - (pos & 7))) & 1
+    return bool(hit.astype(bool).reshape(len(probe), k).all(axis=1).any())
+
+
 # Target false-positive rate of a per-file Bloom filter, per (file,
 # probed value): ~9.6 bits per row.
 BLOOM_FPP = 0.01
@@ -1209,17 +1201,18 @@ def scan_point_lookup(
     if doc is not None and bloom_phys is not None:
         marker = _read_manifest_doc(path, f"bloom_{col}")
         if marker is not None and marker.get("digest") == doc["digest"]:
-            hits = _bloom_hits_executor_pinned(
+            found = _bloom_chunk_probe(
                 spark,
                 bloom_phys,
                 f"manifest:{doc['digest']}",
                 probe_vals,
+                hits_only=True,
             )
-            # hits is None when the sidecar has no chunks (marker
+            # found is None when the sidecar has no chunks (marker
             # outlived its parquet) — fall through to the slow
             # path's loud read instead of a silent zero-row answer
-            if hits is not None:
-                files = sorted(hits)
+            if found is not None:
+                files = sorted(found[0])
                 total = int(doc["n_files"])
                 if not files:
                     empty = spark.read.parquet(path).limit(0)
@@ -1240,20 +1233,10 @@ def scan_point_lookup(
 
         probe = _np.asarray(probe_vals, dtype="int64")
         for pdf in batches:
-            hits = []
-            for m, k, bits_bytes in zip(pdf["m"], pdf["k"], pdf["bits"]):
-                m, k = int(m), int(k)
-                packed = _np.frombuffer(bits_bytes, dtype="uint8")
-                pos = _bloom_positions(probe, k, m)
-                bits = (packed[pos >> 3] >> (7 - (pos & 7))) & 1
-                hits.append(
-                    bool(
-                        bits.astype(bool)
-                        .reshape(len(probe), k)
-                        .all(axis=1)
-                        .any()
-                    )
-                )
+            hits = [
+                _bloom_may_hold(bits, m, k, probe)
+                for m, k, bits in zip(pdf["m"], pdf["k"], pdf["bits"])
+            ]
             yield _pd.DataFrame(
                 {
                     "file": pdf["file"],
@@ -1794,26 +1777,24 @@ def refresh_clustered_layout(spark, source_path: str, catalog=None):
 
 
 # ------------------------------------------------------------------
-# Pinned sidecar serving: repeated queries skip the sidecar re-read
+# Driver-pinned sidecar serving: repeated queries skip the re-read
 # ------------------------------------------------------------------
 
-# In-process caches keyed by layout path, fingerprinted by the SOURCE
-# inventory the optimizer rule already verified fresh — the same
-# pinned-store shape as the ANN/BM25 served paths. A refresh/rebuild
-# changes the inventory, so a stale hit is impossible by construction.
-#
-# BOTH pins are LRUs with a BYTE budget (verdict-r5 #5: the r5 min/max
-# pin was unbounded — rows ∝ files × cols is MBs at 100k files but
-# driver heap again at the ~10⁶ files of a 100 TB table).  Bloom BIT
-# ARRAYS are rows-per-file-sized (~1.2 MB per 10 M-row file at 1%
-# fpp), so they hit the budget first.  A sidecar that does not fit is
-# probed DISTRIBUTED (executors evaluate range/membership, the driver
-# collects only file names) — the cold path never materializes
-# sidecar payloads driver-side.
-_SIDECAR_CACHE: dict = {}  # OrderedDict-like: pop+reinsert = LRU touch
-_BLOOM_CACHE: "dict" = {}
-_BLOOM_PIN_BUDGET_BYTES: int = 64 << 20  # 64 MiB of pinned bit arrays
-_STATS_PIN_BUDGET_BYTES: int = 64 << 20  # 64 MiB of pinned stats rows
+# Driver pins keyed by layout path under the layout fingerprint
+# (:func:`_inventory_fp`, which the optimizer rule already verified
+# fresh) — the same pinned-store shape as the ANN/BM25 served paths.
+# A refresh/rebuild changes the fingerprint, so a stale hit is
+# impossible by construction.  Each pin is a ``shard_server.PinCache``
+# with a BYTE budget (verdict-r5 #5: rows ∝ files × cols is MBs at
+# 100k files but driver heap again at the ~10⁶ files of a 100 TB
+# table).  Bloom BIT ARRAYS are rows-per-file-sized (~1.2 MB per
+# 10 M-row file at 1% fpp), so they hit the budget first.  A sidecar
+# that does not fit is probed DISTRIBUTED (next section: executors
+# evaluate range/membership, the driver collects only file names) —
+# the cold path never materializes sidecar payloads driver-side.
+_SIDECAR_CACHE = PinCache(_DRIVER_PIN_BYTES)  # path -> stats rows
+_BLOOM_CACHE = PinCache(_DRIVER_PIN_BYTES)  # (path, col) -> bit arrays
+_LIVEMAP_CACHE = PinCache(_DRIVER_PIN_BYTES)  # path -> live-file map
 
 
 def _inventory_fp(meta: dict) -> str:
@@ -1830,12 +1811,14 @@ def _inventory_fp(meta: dict) -> str:
     return f"{fp}:{meta.get('layout_build', '')}"
 
 
-def _stats_pinned_bytes() -> int:
-    return sum(e[2] for e in _SIDECAR_CACHE.values())
+def _parquet_bytes(side_dir: str) -> int:
+    import os as _os
 
-
-_LIVEMAP_CACHE: dict = {}  # layout_path -> (digest, map, nbytes); LRU
-_LIVEMAP_PIN_BUDGET_BYTES: int = 64 << 20
+    return sum(
+        e.stat().st_size
+        for e in _os.scandir(side_dir)
+        if e.name.endswith(".parquet")
+    )
 
 
 def cached_live_stat_map(meta: dict) -> dict:
@@ -1844,27 +1827,16 @@ def cached_live_stat_map(meta: dict) -> dict:
     digest, so a stale hit is impossible through the engine's own
     APIs (layout files are engine-owned derived data — nothing else
     writes them).  Turns the remaining per-routed-query listing walk
-    into an O(1) dict hit; same byte-budgeted-LRU shape as the
-    sidecar pins."""
+    into an O(1) dict hit; same byte-budgeted LRU as the sidecar
+    pins."""
     key = meta["layout_path"]
     if meta.get("layout_build") is None:
         return _live_stat_map(key)  # pre-nonce meta: never pin
     fp = _inventory_fp(meta)
-    hit = _LIVEMAP_CACHE.get(key)
-    if hit is not None and hit[0] == fp:
-        _LIVEMAP_CACHE[key] = _LIVEMAP_CACHE.pop(key)  # LRU touch
-        return hit[1]
-    _LIVEMAP_CACHE.pop(key, None)
-    live = _live_stat_map(key)
-    nbytes = sum(len(f) + 64 for f in live)
-    while (
-        _LIVEMAP_CACHE
-        and sum(e[2] for e in _LIVEMAP_CACHE.values()) + nbytes
-        > _LIVEMAP_PIN_BUDGET_BYTES
-    ):
-        _LIVEMAP_CACHE.pop(next(iter(_LIVEMAP_CACHE)))
-    if nbytes <= _LIVEMAP_PIN_BUDGET_BYTES:
-        _LIVEMAP_CACHE[key] = (fp, live, nbytes)
+    live = _LIVEMAP_CACHE.get(key, fp)
+    if live is MISS:
+        live = _live_stat_map(key)
+        _LIVEMAP_CACHE.put(key, fp, live, sum(len(f) + 64 for f in live))
     return live
 
 
@@ -1875,24 +1847,15 @@ def cached_stats_rows(spark, meta: dict):
     Returns ``None`` when the sidecar exceeds the budget; callers
     fall through to :func:`_stats_keep_executor_pinned` (never
     collect the rows themselves)."""
-    import os as _os
-
     global DRIVER_SIDECAR_READS
     key = meta["layout_path"]
     fp = _inventory_fp(meta)
-    hit = _SIDECAR_CACHE.get(key)
-    if hit is not None and hit[0] == fp:
-        _SIDECAR_CACHE[key] = _SIDECAR_CACHE.pop(key)  # LRU touch
-        return hit[1]
-    _SIDECAR_CACHE.pop(key, None)  # stale fingerprint
+    rows = _SIDECAR_CACHE.get(key, fp)
+    if rows is not MISS:
+        return rows
     stats = load_or_refresh_file_stats(spark, key, meta["cols"])
     side_dir = _stats_phys_dir(key) or f"{key}/_stats"
-    est = sum(
-        e.stat().st_size
-        for e in _os.scandir(side_dir)
-        if e.name.endswith(".parquet")
-    )
-    if est > _STATS_PIN_BUDGET_BYTES:
+    if _parquet_bytes(side_dir) > _SIDECAR_CACHE.budget:
         # over budget: serve distributed, pin nothing — no payload
         # rows reached the driver, so the contract counter must NOT
         # move (the warm executor-pinned path asserts it stays 0)
@@ -1904,170 +1867,120 @@ def cached_stats_rows(spark, meta: dict):
     ]
     # python-side footprint: two interned-ish strings + two doubles
     # per row, tuple overhead folded into the per-row constant
-    nbytes = sum(len(r[0]) + len(r[1]) + 96 for r in rows)
-    while (
-        _SIDECAR_CACHE
-        and _stats_pinned_bytes() + nbytes > _STATS_PIN_BUDGET_BYTES
-    ):
-        _SIDECAR_CACHE.pop(next(iter(_SIDECAR_CACHE)))  # evict coldest
-    if nbytes <= _STATS_PIN_BUDGET_BYTES:
-        _SIDECAR_CACHE[key] = (fp, rows, nbytes)
-        return rows
-    return rows  # one-shot use, not pinned (degenerate tiny budget)
-
-
-def _bloom_pinned_bytes() -> int:
-    return sum(e[2] for e in _BLOOM_CACHE.values())
+    _SIDECAR_CACHE.put(
+        key, fp, rows, sum(len(r[0]) + len(r[1]) + 96 for r in rows)
+    )
+    return rows
 
 
 def cached_bloom_rows(spark, meta: dict, col: str):
     """Bloom sidecar rows ``(file, m, k, bits)`` from the byte-capped
-    LRU pin, or ``None`` when the sidecar exceeds the remaining budget
-    even after evicting every colder entry — callers must then use
-    :func:`_bloom_keep_executor_pinned` (never collect bits
-    themselves)."""
-    import os as _os
-
+    LRU pin, or ``None`` when the sidecar exceeds the budget — callers
+    must then use :func:`_bloom_keep_executor_pinned` (never collect
+    bits themselves)."""
     global DRIVER_SIDECAR_READS
     key = (meta["layout_path"], col)
     fp = _inventory_fp(meta)
-    hit = _BLOOM_CACHE.get(key)
-    if hit is not None and hit[0] == fp:
-        # LRU touch: re-insert as most-recent
-        _BLOOM_CACHE[key] = _BLOOM_CACHE.pop(key)
-        return hit[1]
-    _BLOOM_CACHE.pop(key, None)  # stale fingerprint
+    rows = _BLOOM_CACHE.get(key, fp)
+    if rows is not MISS:
+        return rows
     side_dir = (
         _sidecar_phys_dir(meta["layout_path"], f"_bloom_{col}")
         or f"{meta['layout_path']}/_bloom_{col}"
     )
-    est = sum(
-        e.stat().st_size
-        for e in _os.scandir(side_dir)
-        if e.name.endswith(".parquet")
-    )
-    if est > _BLOOM_PIN_BUDGET_BYTES:
+    if _parquet_bytes(side_dir) > _BLOOM_CACHE.budget:
         # over budget: no payload reached the driver — counter must
         # NOT move (see cached_stats_rows)
         return None
-    while _BLOOM_CACHE and _bloom_pinned_bytes() + est > _BLOOM_PIN_BUDGET_BYTES:
-        _BLOOM_CACHE.pop(next(iter(_BLOOM_CACHE)))  # evict coldest
     DRIVER_SIDECAR_READS += 1  # bit arrays actually collected below
-    side = spark.read.parquet(side_dir)
     rows = [
         (r["file"], int(r["m"]), int(r["k"]), r["bits"])
-        for r in side.collect()
+        for r in spark.read.parquet(side_dir).collect()
     ]
-    nbytes = sum(len(r[3]) for r in rows)
-    while _BLOOM_CACHE and _bloom_pinned_bytes() + nbytes > _BLOOM_PIN_BUDGET_BYTES:
-        _BLOOM_CACHE.pop(next(iter(_BLOOM_CACHE)))
-    if nbytes <= _BLOOM_PIN_BUDGET_BYTES:
-        _BLOOM_CACHE[key] = (fp, rows, nbytes)
-        return rows
-    return rows  # one-shot use, not pinned (degenerate tiny budget)
-
-
-def _live_files(path: str) -> set:
-    return set(_live_stat_map(path))
+    _BLOOM_CACHE.put(key, fp, rows, sum(len(r[3]) for r in rows))
+    return rows
 
 
 # ------------------------------------------------------------------
 # Executor-pinned sidecar serving (r8): the scale path for sidecars
-# ABOVE the driver pin budget.  The pre-r8 fallback was a stateless
-# distributed probe that RE-SCANNED the sidecar parquet on every
-# query — correct, but at 10⁶ files a per-query sidecar scan is the
-# control-plane cost this module exists to avoid.  These probes
-# instead iterate a tiny chunk-path frame (one sidecar parquet file
-# per row, hash-repartitioned so a chunk maps to a stable partition)
-# and each task parses its chunk ONCE per (chunk, layout-version)
-# into a module-level LRU in the Python WORKER process — the exact
-# pinned-shard pattern operators/serving.py proves for ANN/BM25.
-# Worker reuse (spark.python.worker.reuse, default on) keeps the pin
-# across queries; a refresh/rebuild changes the fingerprint, so
-# stale chunks age out of the bounded LRU instead of being served.
-# Driver traffic is file names in BOTH directions — the driver never
-# touches sidecar payload bytes on this path, cold or warm.
+# ABOVE the driver pin budget.  A per-query sidecar re-scan would be
+# the control-plane cost this module exists to avoid at 10⁶ files, so
+# each probe is one ``shard_server.dispatch`` job over the sorted
+# chunk list (one sidecar parquet file per chunk), and each task
+# parses its chunks ONCE per layout version into
+# ``shard_server.WORKER_CACHE`` — the same worker pin that holds the
+# served ANN/BM25 shards, keyed ``(kind, chunk)`` under the layout
+# fingerprint.  Worker reuse (spark.python.worker.reuse, default on)
+# keeps the pin across queries; a refresh/rebuild changes the
+# fingerprint, so the next probe drops the stale chunk instead of
+# serving it.  Driver traffic is file names in BOTH directions — the
+# driver never touches sidecar payload bytes on this path, cold or
+# warm.
 # ------------------------------------------------------------------
-
-_WORKER_SIDECAR_CACHE: dict = {}  # key -> (value, nbytes); OrderedDict-ish
-# Byte budget, not entry count (r9, advice): a Bloom chunk holds up
-# to 256 bit arrays that are MBs EACH at scale, so 64 entries could
-# be tens of GB — evict by accumulated payload bytes, mirroring the
-# driver LRU's byte budget.
-_WORKER_SIDECAR_BUDGET_BYTES = 256 << 20  # per worker process
 
 # Bench/test observability: driver-side sidecar PAYLOAD reads (pin
 # loads).  The executor-pinned probes never increment it.
 DRIVER_SIDECAR_READS = 0
 
-
-def _worker_cache_put(key, value, nbytes: int) -> None:
-    _WORKER_SIDECAR_CACHE[key] = (value, nbytes)
-    total = sum(e[1] for e in _WORKER_SIDECAR_CACHE.values())
-    # evict coldest-first until under budget; the entry just
-    # inserted always stays (a single over-budget chunk is used
-    # once rather than thrash-evicted)
-    while total > _WORKER_SIDECAR_BUDGET_BYTES:
-        cold = next(iter(_WORKER_SIDECAR_CACHE))
-        if cold == key:
-            break
-        _, nb = _WORKER_SIDECAR_CACHE.pop(cold)
-        total -= nb
+_STATS_ROWS = T.StructType(
+    [
+        T.StructField("file", T.StringType()),
+        T.StructField("col", T.StringType()),
+        T.StructField("hit", T.BooleanType()),
+    ]
+)
+_BLOOM_ROWS = T.StructType(
+    [
+        T.StructField("file", T.StringType()),
+        T.StructField("hit", T.BooleanType()),
+    ]
+)
 
 
 def _load_stats_chunk(chunk_path: str, fp: str) -> dict:
     """``{file: {col: (vmin, vmax)}}`` parsed from ONE stats-sidecar
-    parquet chunk, cached per (chunk, layout fingerprint) in this
+    parquet chunk, pinned under the layout fingerprint in this
     worker process."""
     import pyarrow.parquet as _pq
 
-    key = ("stats", chunk_path, fp)
-    hit = _WORKER_SIDECAR_CACHE.get(key)
-    if hit is not None:
-        _WORKER_SIDECAR_CACHE[key] = _WORKER_SIDECAR_CACHE.pop(key)
-        return hit[0]
-    t = _pq.read_table(
-        chunk_path, columns=["file", "col", "vmin", "vmax"]
-    )
-    per_file: dict = {}
-    nbytes = 0
-    for f, c, lo, hi in zip(
-        t["file"].to_pylist(),
-        t["col"].to_pylist(),
-        t["vmin"].to_pylist(),
-        t["vmax"].to_pylist(),
-    ):
-        per_file.setdefault(f, {})[c] = (lo, hi)
-        nbytes += len(f) + len(c) + 96
-    _worker_cache_put(key, per_file, nbytes)
+    key = ("stats", chunk_path)
+    per_file = WORKER_CACHE.get(key, fp)
+    if per_file is MISS:
+        t = _pq.read_table(
+            chunk_path, columns=["file", "col", "vmin", "vmax"]
+        )
+        per_file = {}
+        for f, c, lo, hi in zip(
+            t["file"].to_pylist(),
+            t["col"].to_pylist(),
+            t["vmin"].to_pylist(),
+            t["vmax"].to_pylist(),
+        ):
+            per_file.setdefault(f, {})[c] = (lo, hi)
+        WORKER_CACHE.put(key, fp, per_file, t.nbytes)
     return per_file
 
 
 def _load_bloom_chunk(chunk_path: str, fp: str) -> list:
-    """``[(file, m, k, packed-bits uint8 array)]`` from ONE Bloom
-    sidecar chunk, cached per (chunk, fingerprint) in this worker.
-    Bits stay PACKED (8× smaller pin); probes index packed bytes
-    directly instead of unpacking the whole array per query."""
-    import numpy as _np
+    """``[(file, m, k, packed bits)]`` from ONE Bloom sidecar chunk,
+    pinned under the layout fingerprint in this worker.  Bits stay
+    PACKED (8× smaller pin; :func:`_bloom_may_hold` indexes them
+    directly)."""
     import pyarrow.parquet as _pq
 
-    key = ("bloom", chunk_path, fp)
-    hit = _WORKER_SIDECAR_CACHE.get(key)
-    if hit is not None:
-        _WORKER_SIDECAR_CACHE[key] = _WORKER_SIDECAR_CACHE.pop(key)
-        return hit[0]
-    t = _pq.read_table(chunk_path, columns=["file", "m", "k", "bits"])
-    rows = [
-        (f, int(m), int(k), _np.frombuffer(b, dtype="uint8"))
-        for f, m, k, b in zip(
-            t["file"].to_pylist(),
-            t["m"].to_pylist(),
-            t["k"].to_pylist(),
-            t["bits"].to_pylist(),
+    key = ("bloom", chunk_path)
+    rows = WORKER_CACHE.get(key, fp)
+    if rows is MISS:
+        t = _pq.read_table(chunk_path, columns=["file", "m", "k", "bits"])
+        rows = list(
+            zip(
+                t["file"].to_pylist(),
+                t["m"].to_pylist(),
+                t["k"].to_pylist(),
+                t["bits"].to_pylist(),
+            )
         )
-    ]
-    nbytes = sum(len(r[0]) + r[3].nbytes + 64 for r in rows)
-    _worker_cache_put(key, rows, nbytes)
+        WORKER_CACHE.put(key, fp, rows, t.nbytes)
     return rows
 
 
@@ -2083,211 +1996,131 @@ def _sidecar_chunks(side_dir: str) -> list:
     )
 
 
-def _chunk_frame(spark, chunks: list):
-    # one partition per chunk UP TO the cluster's parallelism: a
-    # probe over 10⁶ files is ~4k chunks, and 4k near-no-op Python
-    # tasks is pure scheduling overhead (measured 4 s at 64k files
-    # locally).  parallelize slices the SORTED chunk list
-    # contiguously — deterministic chunk→partition assignment (the
-    # worker pins stay valid across queries) with NO per-query
-    # shuffle stage (the previous hash repartition paid an exchange
-    # of the chunk paths every call).
+def _chunk_dispatch(spark, chunks: list, answer, schema):
+    """Run ``answer(i, chunk slice)`` over the sorted chunk list in one
+    ``shard_server.dispatch`` job and return its rows as pandas.
+
+    One task per contiguous slice, up to the cluster's parallelism: a
+    probe over 10⁶ files is ~4k chunks, and 4k near-no-op Python
+    tasks is pure scheduling overhead (measured 4 s at 64k files
+    locally).  Contiguous slices of the SORTED list make the
+    chunk → task assignment deterministic with no shuffle stage."""
     n = max(1, min(len(chunks), spark.sparkContext.defaultParallelism))
-    rdd = spark.sparkContext.parallelize([(c,) for c in chunks], n)
-    return spark.createDataFrame(rdd, "chunk string")
+    plan = {
+        i: chunks[i * len(chunks) // n : (i + 1) * len(chunks) // n]
+        for i in range(n)
+    }
+    return dispatch(spark, plan, answer, schema)
 
 
-def _stats_hits_executor_pinned(spark, side_dir: str, fp: str, ranges: dict):
-    """PASSING files only — for callers that proved (by
-    manifest-digest equality against the ``stats`` marker) the
-    sidecar covers exactly the live files with a row for every
-    queried column, so no covered-set reconciliation is needed and
-    the driver collect is O(passing (file, col) rows), never
-    O(files) — the stats twin of :func:`_bloom_hits_executor_pinned`.
+def _stats_chunk_probe(
+    spark, side_dir: str, fp: str, ranges: dict, hits_only: bool
+):
+    """``(keep, covered)`` file sets for a range box from the
+    worker-pinned stats chunks, or ``None`` (NOT empty sets) when the
+    sidecar has no chunks: a marker that outlived its parquet files —
+    deletions inside the ``_``-prefixed sidecar dir don't bump the
+    root probe — must fall through to the slow path's loud read, not
+    become a silent zero-row answer (r9 review).
 
-    Executors emit a (file, col) row ONLY when that column's
-    [vmin, vmax] intersects the box; the driver keeps a file iff its
-    passing-column set covers the queried set.  The rule is applied
-    driver-side over ALL chunks (not per chunk), so a sidecar that
-    splits or duplicates a file's rows across chunks can only err
-    CONSERVATIVE (extra reads — duplicates collapse in the set;
-    a column failing in one duplicate but passing in another is
-    OR-kept), never drop rows.  Returns ``None`` (NOT an empty set)
-    when the sidecar has no chunks: a marker that outlived its
-    parquet must fall through to the slow path's loud read."""
+    A file is kept iff EVERY queried column has a sidecar row whose
+    [vmin, vmax] intersects the box — a missing or out-of-range
+    column drops it, exactly the driver-pinned path's rule.  Tasks
+    emit one (file, col, hit) row per queried column a chunk holds
+    for a file, and the rule is applied DRIVER-side over all chunks
+    (r9, advice): a sidecar that splits or duplicates a file's rows
+    across chunks can only err CONSERVATIVE (duplicates are OR-kept:
+    extra reads, never lost rows).  ``hits_only`` drops the failing
+    rows EXECUTOR-side, for callers that proved (by manifest-digest
+    equality against the ``stats`` marker) the sidecar covers exactly
+    the live files with a row for every queried column: the driver
+    collect is then O(passing (file, col) rows), never O(files), and
+    ``covered`` is meaningless."""
     rng = {c: (float(lo), float(hi)) for c, (lo, hi) in ranges.items()}
     chunks = _sidecar_chunks(side_dir)
     if not chunks:
         return None
 
-    def _probe(batches):
-        import pandas as _pd
+    def answer(_, part):
+        rows = []
+        for chunk in part:
+            for fname, stats in _load_stats_chunk(chunk, fp).items():
+                for c, (lo, hi) in rng.items():
+                    st = stats.get(c)
+                    if st is None:
+                        continue  # col not in this chunk's rows
+                    hit = not (st[1] < lo or st[0] > hi)
+                    if hit or not hits_only:
+                        rows.append((fname, c, hit))
+        return rows
 
-        for pdf in batches:
-            files, colnames = [], []
-            for chunk in pdf["chunk"]:
-                for fname, stats in _load_stats_chunk(chunk, fp).items():
-                    for c, (lo, hi) in rng.items():
-                        st = stats.get(c)
-                        if st is None or st[1] < lo or st[0] > hi:
-                            continue
-                        files.append(fname)
-                        colnames.append(c)
-            yield _pd.DataFrame({"file": files, "col": colnames})
-
-    out = _chunk_frame(spark, chunks).mapInPandas(
-        _probe, schema="file string, col string"
-    ).collect()
-    passing: dict = {}
-    for r in out:
-        passing.setdefault(r["file"], set()).add(r["col"])
-    want = set(rng)
-    return {f for f, cols in passing.items() if cols >= want}
-
-
-def _stats_keep_executor_pinned(spark, meta: dict, ranges: dict):
-    """Range keep-list against EXECUTOR-pinned sidecar chunks: the
-    driver ships (chunk paths, the range box) and collects file
-    names; payload parse happens once per worker per layout version,
-    not once per query.  A file is kept iff EVERY queried column has
-    a sidecar row whose [vmin, vmax] intersects the query box — a
-    missing or out-of-range column drops it, exactly the
-    driver-pinned path's rule."""
-    rng = {c: (float(lo), float(hi)) for c, (lo, hi) in ranges.items()}
-    fp = _inventory_fp(meta)
-    phys = _stats_phys_dir(meta["layout_path"])
-    chunks = _sidecar_chunks(phys) if phys is not None else []
-    if not chunks:
-        return set(), set()
-
-    # The probe emits one (file, col, ok) row per QUERIED column the
-    # chunk holds for the file, and the every-queried-column keep
-    # rule is applied DRIVER-side over all chunks (r9, advice): the
-    # old per-chunk all-columns test silently required every
-    # (file, col) row of a file to land in ONE chunk — true for the
-    # file-repartitioned writer today, but a manually compacted or
-    # third-party sidecar that splits a file's rows across chunks
-    # would make both halves emit hit=false and VANISH the file.
-    # Control-data volume is files × queried-cols — the same order
-    # as the old per-file rows for the ≤4-col range boxes this
-    # engine serves.
-
-    def _probe(batches):
-        import pandas as _pd
-
-        for pdf in batches:
-            files, colnames, oks = [], [], []
-            for chunk in pdf["chunk"]:
-                for fname, stats in _load_stats_chunk(chunk, fp).items():
-                    for c, (lo, hi) in rng.items():
-                        st = stats.get(c)
-                        if st is None:
-                            continue  # col not in this chunk's rows
-                        files.append(fname)
-                        colnames.append(c)
-                        oks.append(not (st[1] < lo or st[0] > hi))
-            yield _pd.DataFrame(
-                {"file": files, "col": colnames, "hit": oks}
-            )
-
-    out = _chunk_frame(spark, chunks).mapInPandas(
-        _probe, schema="file string, col string, hit boolean"
-    ).collect()
+    out = _chunk_dispatch(spark, chunks, answer, _STATS_ROWS)
     per_file: dict = {}
-    for r in out:
-        cols_seen = per_file.setdefault(r["file"], {})
-        # normally exactly one row per (file, col); if a degenerate
-        # sidecar carries duplicates, OR them — keeping a file on
-        # ANY intersecting row is the conservative direction (extra
-        # reads, never lost rows)
-        cols_seen[r["col"]] = cols_seen.get(r["col"], False) or r["hit"]
+    for f, c, hit in zip(out["file"], out["col"], out["hit"]):
+        seen = per_file.setdefault(f, {})
+        seen[c] = seen.get(c, False) or bool(hit)
     keep = {
         f
         for f, seen in per_file.items()
-        if set(seen) == set(rng) and all(seen.values())
+        if seen.keys() == rng.keys() and all(seen.values())
     }
-    covered = set(per_file)
-    return keep, covered
+    return keep, set(per_file)
+
+
+def _stats_keep_executor_pinned(spark, meta: dict, ranges: dict):
+    """Range ``(keep, covered)`` against EXECUTOR-pinned sidecar
+    chunks: the driver ships (chunk paths, the range box) and
+    collects file names; payload parse happens once per worker per
+    layout version, not once per query."""
+    phys = _stats_phys_dir(meta["layout_path"])
+    found = None
+    if phys is not None:
+        found = _stats_chunk_probe(
+            spark, phys, _inventory_fp(meta), ranges, hits_only=False
+        )
+    return (set(), set()) if found is None else found
 
 
 def _bloom_chunk_probe(
     spark, side_dir: str, fp: str, values: list, hits_only: bool
 ):
-    """``(file, hit)`` rows from the worker-pinned Bloom chunk probe
-    (packed-bits indexing, no per-query unpack); ``hits_only`` drops
-    non-hit rows EXECUTOR-side so the driver transfer is O(hits),
-    not O(files) — the manifest fast path's collect.  Returns None
-    when the sidecar has no chunks."""
+    """``(keep, covered)`` file sets from the worker-pinned Bloom chunk
+    probe, or ``None`` when the sidecar has no chunks (see
+    :func:`_stats_chunk_probe`).  ``hits_only`` drops non-hit rows
+    EXECUTOR-side so the driver transfer is O(hits), not O(files) —
+    the manifest fast path's collect."""
     probe_vals = sorted(set(int(v) for v in values))
     chunks = _sidecar_chunks(side_dir)
     if not chunks:
         return None
 
-    def _probe(batches):
+    def answer(_, part):
         import numpy as _np
-        import pandas as _pd
 
         probe = _np.asarray(probe_vals, dtype="int64")
-        for pdf in batches:
-            files, hits = [], []
-            for chunk in pdf["chunk"]:
-                for fname, m, k, packed in _load_bloom_chunk(chunk, fp):
-                    pos = _bloom_positions(probe, k, m)
-                    bits = (packed[pos >> 3] >> (7 - (pos & 7))) & 1
-                    hit = bool(
-                        bits.astype(bool)
-                        .reshape(len(probe), k)
-                        .all(axis=1)
-                        .any()
-                    )
-                    if hits_only and not hit:
-                        continue
-                    files.append(fname)
-                    hits.append(hit)
-            yield _pd.DataFrame({"file": files, "hit": hits})
+        rows = []
+        for chunk in part:
+            for fname, m, k, bits in _load_bloom_chunk(chunk, fp):
+                hit = _bloom_may_hold(bits, m, k, probe)
+                if hit or not hits_only:
+                    rows.append((fname, hit))
+        return rows
 
-    return _chunk_frame(spark, chunks).mapInPandas(
-        _probe, schema="file string, hit boolean"
-    ).collect()
-
-
-def _bloom_hits_executor_pinned(
-    spark, side_dir: str, fp: str, values: list
-):
-    """HIT files only — for callers that proved (by manifest-digest
-    equality) the sidecar covers exactly the live files, so no
-    covered-set reconciliation is needed and the driver collect is
-    O(hits).  Returns ``None`` (NOT an empty set) when the sidecar
-    has no chunks: a marker that outlived its parquet files —
-    deletions inside the ``_``-prefixed sidecar dir don't bump the
-    root probe — must fall through to the slow path's loud read, not
-    become a silent zero-row answer (r9 review)."""
-    out = _bloom_chunk_probe(spark, side_dir, fp, values, hits_only=True)
-    if out is None:
-        return None
-    return {r["file"] for r in out}
+    out = _chunk_dispatch(spark, chunks, answer, _BLOOM_ROWS)
+    keep = {f for f, hit in zip(out["file"], out["hit"]) if hit}
+    return keep, set(out["file"])
 
 
 def _bloom_keep_executor_pinned(spark, meta: dict, col: str, values: list):
-    """Membership keep-list against EXECUTOR-pinned Bloom chunks —
-    same shape as :func:`_stats_keep_executor_pinned`; the probe
-    indexes the PACKED bit arrays ((byte >> (7 - pos%8)) & 1, numpy
-    packbits bit order) so no per-query unpack of m-bit arrays."""
+    """Membership ``(keep, covered)`` against EXECUTOR-pinned Bloom
+    chunks — same shape as :func:`_stats_keep_executor_pinned`."""
     phys = _sidecar_phys_dir(meta["layout_path"], f"_bloom_{col}")
-    if phys is None:
-        return set(), set()
-    out = _bloom_chunk_probe(
-        spark,
-        phys,
-        _inventory_fp(meta),
-        values,
-        hits_only=False,
-    )
-    if out is None:
-        return set(), set()
-    keep = {r["file"] for r in out if r["hit"]}
-    covered = {r["file"] for r in out}
-    return keep, covered
+    found = None
+    if phys is not None:
+        found = _bloom_chunk_probe(
+            spark, phys, _inventory_fp(meta), values, hits_only=False
+        )
+    return (set(), set()) if found is None else found
 
 
 def stats_keep_files(spark, meta: dict, ranges: dict):
@@ -2326,20 +2159,8 @@ def bloom_keep_files(spark, meta: dict, col: str, values: list):
     if rows is None:
         return _bloom_keep_executor_pinned(spark, meta, col, values)
     probe = _np.asarray(sorted(set(int(v) for v in values)), dtype="int64")
-    keep, covered = set(), set()
-    for fname, m, k, bits_bytes in rows:
-        covered.add(fname)
-        bits = _np.unpackbits(
-            _np.frombuffer(bits_bytes, dtype="uint8"), count=m
-        ).astype(bool)
-        if (
-            bits[_bloom_positions(probe, k, m)]
-            .reshape(len(probe), k)
-            .all(axis=1)
-            .any()
-        ):
-            keep.add(fname)
-    return keep, covered
+    keep = {f for f, m, k, bits in rows if _bloom_may_hold(bits, m, k, probe)}
+    return keep, {r[0] for r in rows}
 
 
 def _pruned_scan(spark, meta: dict, files: list, total: int):

@@ -29,7 +29,6 @@ so engines that differ in the last float ulp still rank identically.
 
 from __future__ import annotations
 
-from collections import OrderedDict
 from collections.abc import Iterator
 
 import pandas as pd
@@ -37,11 +36,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pdf_etl_ocr_inference_spark.operators.shard_server import (
+    MISS,
+    PinCache,
     _load_shard,
     dispatch,
     merge_topk,
     publish_meta,
     read_meta,
+    rows_schema,
     shard_token,
 )
 
@@ -333,15 +335,16 @@ def rerank_topk(
 # ------------------------------------------------------------------ #
 
 _POSTINGS_PB = 64
-_PB_MEMO: OrderedDict[str, int] = OrderedDict()
-_PB_MEMO_MAX = 4096  # terms whose bucket is remembered
+_PB_MEMO_TERMS = 4096  # terms whose bucket is remembered
+_PB_MEMO = PinCache(_PB_MEMO_TERMS)  # term -> bucket; counts terms
 
 
 def _term_buckets(spark, terms: list[str]) -> dict[str, int]:
     """term -> ``_pb`` bucket, ``pmod(xxhash64(term), 64)`` as the
     postings layout computes it.  Memoised per term in a bounded LRU;
     only terms not seen before cost a (one-row-per-term) job."""
-    new = sorted({t for t in terms if t not in _PB_MEMO})
+    out = {t: _PB_MEMO.get(t) for t in terms}
+    new = sorted(t for t, pb in out.items() if pb is MISS)
     if new:
         for r in (
             spark.createDataFrame([(t,) for t in new], "term string")
@@ -351,13 +354,8 @@ def _term_buckets(spark, terms: list[str]) -> dict[str, int]:
             )
             .collect()
         ):
-            _PB_MEMO[r["term"]] = int(r["_pb"])
-    out = {}
-    for t in terms:
-        out[t] = _PB_MEMO[t]
-        _PB_MEMO.move_to_end(t)
-    while len(_PB_MEMO) > _PB_MEMO_MAX:
-        _PB_MEMO.popitem(last=False)
+            out[r["term"]] = int(r["_pb"])
+            _PB_MEMO.put(r["term"], None, out[r["term"]], 1)
     return out
 
 
@@ -554,5 +552,5 @@ def serve_bm25(
             rows.extend((qid, int(i), float(v)) for i, v in zip(ids, s))
         return rows
 
-    rows = dispatch(spark, plan, answer, "id")
+    rows = dispatch(spark, plan, answer, rows_schema("id"))
     return merge_topk(spark, [rows], k, "id", sum_per_id=True)

@@ -47,6 +47,7 @@ from pdf_etl_ocr_inference_spark.operators.shard_server import (
     merge_topk,
     publish_meta,
     read_meta,
+    rows_schema,
     shard_token,
 )
 from pdf_etl_ocr_inference_spark.scratch import new_build_id
@@ -515,7 +516,7 @@ def serve_topk(
         )
     else:  # every shard answers every query
         plan = dict.fromkeys(range(meta["n_shards"]), qnorm)
-        frames = [dispatch(spark, plan, answer, "vec_id")]
+        frames = [dispatch(spark, plan, answer, rows_schema("vec_id"))]
     return merge_topk(spark, frames, k, "vec_id")
 
 
@@ -544,7 +545,7 @@ def _probe_cells(spark, cents, qnorm, answer, k, n_probe, widen):
             done[qid] = cur[qid]
         if not plan:
             return frames
-        frames.append(dispatch(spark, plan, answer, "vec_id"))
+        frames.append(dispatch(spark, plan, answer, rows_schema("vec_id")))
         found.update(frames[-1]["qid"].tolist())
         starved = [q for q in cur if found[q] < k and cur[q] < n_cells]
         if not widen or not starved:

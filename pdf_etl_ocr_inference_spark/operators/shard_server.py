@@ -5,22 +5,27 @@ kinds (nsw, hnsw, pq, ivf, ivfpq) and ``search.serve_bm25`` over the
 BM25 postings — runs the same three steps, all of them here:
 
 1. **Load** (worker side).  :func:`_load_shard` parses one shard's
-   parquet into numpy state once per Python worker process and keeps
-   it in one bounded LRU, keyed ``(path, shard, kind, token)``.  The
-   token is ``"<build_id>:<last_version>"`` from the index meta: a
-   refresh bumps the version and a rebuild at the same path draws a
-   new build id, so either one misses.  A shard keeps one token at a
-   time, so the miss also drops the stale state.  Spark reuses Python
-   workers across jobs (``spark.python.worker.reuse``, on by default),
-   so warm lookups never touch parquet.
+   parquet into numpy state once per Python worker process and pins
+   it in :data:`WORKER_CACHE`, keyed ``(path, shard, kind)`` under a
+   token.  The token is ``"<build_id>:<last_version>"`` from the
+   index meta: a refresh bumps the version and a rebuild at the same
+   path draws a new build id, so either one misses, and the miss
+   drops the stale state.  Spark reuses Python workers across jobs
+   (``spark.python.worker.reuse``, on by default), so warm lookups
+   never touch parquet.  ``layout``'s sidecar chunks share the same
+   worker cache.
 2. **Dispatch** (one Spark job).  :func:`dispatch` runs
    ``spark.range(n, numSlices=n)`` → ``mapInPandas`` → Arrow
    ``toPandas()``: one task per shard, no scan, no shuffle.  Each task
-   hands its shard id and its share of the queries to the caller's
+   hands its shard id and its share of the work to the caller's
    ``answer`` function, which holds all per-kind logic.
 3. **Merge** (driver).  :func:`merge_topk` ranks the candidate rows
    per query with numpy and returns them as a local relation, so
    collecting the result runs no second job.
+
+:class:`PinCache` is the one LRU cache in the package: the worker
+cache above, and every driver-side pin (``layout``'s sidecar, live
+map and manifest caches, ``search``'s term → bucket memo).
 
 Builds and refreshes stay batch jobs in ``serving``, ``search``,
 ``graph_ann`` and ``hnsw``; every one publishes its meta file through
@@ -73,13 +78,66 @@ def shard_token(meta: dict) -> str:
 
 
 # ------------------------------------------------------------------
-# Load: one worker-side cache, one parser per kind
+# Pin: the one LRU cache, and the worker-side instance
 # ------------------------------------------------------------------
 
-# shards pinned per worker process: the two 64-entry caches this one
-# replaced (vector shards, postings buckets) fit side by side
-_CACHE_MAX = 128
-_cache: OrderedDict[tuple, tuple] = OrderedDict()
+MISS = object()  # what PinCache.get returns when it holds no fresh value
+
+
+class PinCache:
+    """The engine's one LRU cache of pinned state, bounded by bytes.
+
+    Each entry is ``key -> (token, value, nbytes)``.  ``get`` serves a
+    value only under the token it was stored with; a stale token drops
+    the entry and frees its bytes.  ``put`` evicts the coldest entries
+    until the new one fits ``budget``.  Count-bounded caches pass
+    ``nbytes=1``.  An entry larger than the whole budget is either
+    kept alone, evicting everything else (``keep_oversized``: a
+    payload that must never be parsed twice), or served once without
+    evicting anything (the default: a cache that a huge entry would
+    otherwise empty).  ``nbytes`` is the running total of ``entries``;
+    tests read it and shrink ``budget``."""
+
+    def __init__(self, budget: int, keep_oversized: bool = False):
+        self.budget = budget
+        self.keep_oversized = keep_oversized
+        self.nbytes = 0
+        self.entries: OrderedDict = OrderedDict()
+
+    def get(self, key, token=None):
+        hit = self.entries.get(key)
+        if hit is None:
+            return MISS
+        if hit[0] != token:
+            self.pop(key)
+            return MISS
+        self.entries.move_to_end(key)
+        return hit[1]
+
+    def put(self, key, token, value, nbytes: int) -> None:
+        self.pop(key)
+        if nbytes > self.budget and not self.keep_oversized:
+            return
+        while self.entries and self.nbytes + nbytes > self.budget:
+            self.nbytes -= self.entries.popitem(last=False)[1][2]
+        self.entries[key] = (token, value, nbytes)
+        self.nbytes += nbytes
+
+    def pop(self, key) -> None:
+        hit = self.entries.pop(key, None)
+        if hit is not None:
+            self.nbytes -= hit[2]
+
+    def clear(self) -> None:
+        self.entries.clear()
+        self.nbytes = 0
+
+
+# State pinned per Python worker process: shards of every served
+# index and layout's sidecar chunks, each sized by the Arrow table it
+# was parsed from.
+WORKER_PIN_BYTES = 256 << 20
+WORKER_CACHE = PinCache(WORKER_PIN_BYTES, keep_oversized=True)
 
 
 def _unit_rows(tbl):
@@ -175,10 +233,9 @@ def _load_shard(path: str, shard: int, kind: str, token: str):
     """This worker's parsed state for one shard, or ``None`` when the
     shard holds no rows (an empty cell or bucket)."""
     key = (path, int(shard), kind)
-    hit = _cache.get(key)
-    if hit is not None and hit[0] == token:
-        _cache.move_to_end(key)
-        return hit[1]
+    state = WORKER_CACHE.get(key, token)
+    if state is not MISS:
+        return state
     files = glob.glob(
         glob.escape(path) + _FILES[kind].format(shard=int(shard))
     )
@@ -186,10 +243,7 @@ def _load_shard(path: str, shard: int, kind: str, token: str):
     state = None
     if tbl is not None and tbl.num_rows:
         state = _PARSE[kind](tbl, path, int(shard), kind)
-    _cache[key] = (token, state)
-    _cache.move_to_end(key)
-    while len(_cache) > _CACHE_MAX:
-        _cache.popitem(last=False)
+    WORKER_CACHE.put(key, token, state, 0 if tbl is None else tbl.nbytes)
     return state
 
 
@@ -211,7 +265,7 @@ def rows_schema(id_col: str) -> T.StructType:
 
 
 def dispatch(
-    spark: SparkSession, plan: dict, answer, id_col: str
+    spark: SparkSession, plan: dict, answer, schema: T.StructType
 ) -> pd.DataFrame:
     """Run ``answer(shard, plan[shard])`` for every shard of ``plan`` in
     one Spark job and return the rows it produced.
@@ -219,9 +273,9 @@ def dispatch(
     ``range(n)`` split into n partitions puts row i in partition i, so
     each task owns one shard with no shuffle; the job is one Python
     stage and its rows come back through Arrow.  ``answer`` runs in
-    the worker and returns ``(qid, id, score)`` rows."""
+    the worker and returns rows of ``schema``."""
     shards = sorted(plan)
-    cols = rows_schema(id_col).fieldNames()
+    cols = schema.fieldNames()
 
     def _tasks(batches):
         for pdf in batches:
@@ -232,7 +286,7 @@ def dispatch(
     return (
         spark.range(0, len(shards), 1, max(len(shards), 1))
         .select(F.col("id").cast("int").alias("shard"))
-        .mapInPandas(_tasks, rows_schema(id_col))
+        .mapInPandas(_tasks, schema)
         .toPandas()
     )
 

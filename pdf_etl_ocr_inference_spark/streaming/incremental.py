@@ -249,16 +249,11 @@ def _tmpfs_checkpoint_dir(spark, name: str) -> str | None:
 # the checkpoint.  So derive the count from INPUT SIZE the way AQE
 # would — one state partition per ~32 MB of source input, floored at
 # 8 (parallelism for tiny fixtures) and capped at 2048 (state-store
-# file-count sanity at 100 TB).  Overridable for deployments via
-# $SPARK_GRAFT_STATE_PART_TARGET_BYTES; measured locally (sf0.1
-# events, 32 cores): 32 state partitions → 8 cut the whole op45
-# entry 1.4 → 0.87 s, all of it addBatch (state-store init + commit
-# of 4× more stores than groups warrant).
-_STATE_PART_TARGET_BYTES = int(
-    os.environ.get(
-        "SPARK_GRAFT_STATE_PART_TARGET_BYTES", str(32 * 1024 * 1024)
-    )
-)
+# file-count sanity at 100 TB).  Measured on a 32-core host (sf0.1
+# events): 32 state partitions → 8 cut the whole op45 entry
+# 1.4 → 0.87 s, all of it addBatch (state-store init + commit of 4×
+# more stores than groups warrant).
+_STATE_PART_TARGET_BYTES = 32 << 20
 _STATE_PART_MIN = 8
 _STATE_PART_MAX = 2048
 

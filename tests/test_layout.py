@@ -52,30 +52,33 @@ def test_worker_sidecar_cache_evicts_by_bytes():
     evict once accumulated payload bytes exceed the budget; the
     entry just inserted always survives (a single over-budget chunk
     is used once, not thrash-evicted)."""
-    import pdf_etl_ocr_inference_spark.operators.layout as L
+    from pdf_etl_ocr_inference_spark.operators.shard_server import (
+        WORKER_CACHE as C,
+    )
 
-    saved_cache = dict(L._WORKER_SIDECAR_CACHE)
-    saved_budget = L._WORKER_SIDECAR_BUDGET_BYTES
+    saved_entries = dict(C.entries)
+    saved_budget = C.budget
     try:
-        L._WORKER_SIDECAR_CACHE.clear()
-        L._WORKER_SIDECAR_BUDGET_BYTES = 100
-        L._worker_cache_put("a", "va", 40)
-        L._worker_cache_put("b", "vb", 40)
-        L._worker_cache_put("c", "vc", 40)  # 120 > 100: evict "a"
-        assert set(L._WORKER_SIDECAR_CACHE) == {"b", "c"}
+        C.clear()
+        C.budget = 100
+        C.put("a", None, "va", 40)
+        C.put("b", None, "vb", 40)
+        C.put("c", None, "vc", 40)  # 120 > 100: evict "a"
+        assert set(C.entries) == {"b", "c"}
         # an entry larger than the whole budget still lands (used
         # once) and evicts everything colder
-        L._worker_cache_put("big", "vbig", 500)
-        assert "big" in L._WORKER_SIDECAR_CACHE
-        assert set(L._WORKER_SIDECAR_CACHE) == {"big"}
+        C.put("big", None, "vbig", 500)
+        assert "big" in C.entries
+        assert set(C.entries) == {"big"}
         # LRU touch on hit: reinsertion order decides eviction
-        L._WORKER_SIDECAR_CACHE.clear()
-        L._worker_cache_put("x", "vx", 40)
-        L._worker_cache_put("y", "vy", 40)
-        L._WORKER_SIDECAR_CACHE["x"] = L._WORKER_SIDECAR_CACHE.pop("x")
-        L._worker_cache_put("z", "vz", 40)  # evicts "y", not "x"
-        assert set(L._WORKER_SIDECAR_CACHE) == {"x", "z"}
+        C.clear()
+        C.put("x", None, "vx", 40)
+        C.put("y", None, "vy", 40)
+        assert C.get("x") == "vx"
+        C.put("z", None, "vz", 40)  # evicts "y", not "x"
+        assert set(C.entries) == {"x", "z"}
     finally:
-        L._WORKER_SIDECAR_CACHE.clear()
-        L._WORKER_SIDECAR_CACHE.update(saved_cache)
-        L._WORKER_SIDECAR_BUDGET_BYTES = saved_budget
+        C.clear()
+        C.budget = saved_budget
+        for key, (token, value, nbytes) in saved_entries.items():
+            C.put(key, token, value, nbytes)

@@ -185,3 +185,43 @@ def test_coverage_md_counts_match_registry():
             assert f"`{name}`" in text, (
                 f"rows-only entry {name} missing from COVERAGE.md"
             )
+
+
+# ---------------------------------------------------------------------------
+# One pin cache.  Every LRU in the package is a ``shard_server.PinCache``;
+# a hand-rolled eviction loop (``d.popitem(...)`` or
+# ``d.pop(next(iter(d)))`` on an ordered dict) outside that class is a
+# second cache implementation with its own byte bookkeeping.
+# ---------------------------------------------------------------------------
+
+
+def _eviction_sites(path: pathlib.Path) -> list[str]:
+    tree = ast.parse(path.read_text(), filename=str(path))
+    inside_pin_cache = {
+        id(n)
+        for cls in ast.walk(tree)
+        if isinstance(cls, ast.ClassDef) and cls.name == "PinCache"
+        for n in ast.walk(cls)
+    }
+    rel = path.relative_to(PKG).as_posix()
+    out = []
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call) or id(node) in inside_pin_cache:
+            continue
+        if _call_name(node) == "popitem" or (
+            isinstance(node.func, ast.Name)
+            and node.func.id == "next"
+            and node.args
+            and isinstance(node.args[0], ast.Call)
+            and _call_name(node.args[0]) == "iter"
+        ):
+            out.append((node.lineno, f"{rel}:{node.lineno}"))
+    return [site for _, site in sorted(out)]
+
+
+def test_one_lru_implementation():
+    sites = [s for p in sorted(PKG.rglob("*.py")) for s in _eviction_sites(p)]
+    assert not sites, (
+        "hand-rolled LRU eviction outside shard_server.PinCache — make "
+        "the cache a PinCache:\n" + "\n".join(sites)
+    )

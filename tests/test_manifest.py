@@ -323,7 +323,7 @@ def test_oversized_manifest_doc_parsed_once(spark, tmp_path, monkeypatch):
     d = str(tmp_path / "tbl")
     _write_ranged(spark, 100, d, parts=2)
     L.write_inventory_manifest(d)
-    monkeypatch.setattr(L, "_MANIFEST_DOC_BUDGET_BYTES", 1)
+    monkeypatch.setattr(L._MANIFEST_DOC_CACHE, "budget", 1)
     L._MANIFEST_DOC_CACHE.clear()
 
     before = L.MANIFEST_DOC_PARSES
@@ -406,7 +406,7 @@ def test_malformed_manifest_falls_back_conservatively(spark, tmp_path):
     for bad in ({"format": 2, "probe": [], "files": {}}, {"oops": 1}):
         with open(f"{mdir}/inventory.json", "w") as f:
             json.dump(bad, f)
-        L._MANIFEST_DOC_CACHE.pop(d, None)
+        L._MANIFEST_DOC_CACHE.pop(d)
         before = L.MANIFEST_DOC_PARSES
         assert L.fresh_manifest_doc(d) is None
         assert L.manifest_stat_map(d) == live
@@ -558,16 +558,16 @@ def test_manifest_doc_cache_byte_counter_consistent(spark, tmp_path):
         L.write_inventory_manifest(d)
         assert L.fresh_manifest_doc(d) is not None
         assert L.fresh_manifest_doc(d) is not None  # warm hit
-    assert L._MANIFEST_DOC_CACHE_BYTES == sum(
-        e[2] for e in L._MANIFEST_DOC_CACHE.values()
+    assert L._MANIFEST_DOC_CACHE.nbytes == sum(
+        e[2] for e in L._MANIFEST_DOC_CACHE.entries.values()
     )
     # re-stamp one path: the old entry's bytes must be released
     d0 = str(tmp_path / "tbl0")
     _write(spark, 80, d0)
     L.write_inventory_manifest(d0)
     assert L.fresh_manifest_doc(d0) is not None
-    assert L._MANIFEST_DOC_CACHE_BYTES == sum(
-        e[2] for e in L._MANIFEST_DOC_CACHE.values()
+    assert L._MANIFEST_DOC_CACHE.nbytes == sum(
+        e[2] for e in L._MANIFEST_DOC_CACHE.entries.values()
     )
 
 def test_warm_keep_verdict_cached_per_digest_and_box(
@@ -588,13 +588,13 @@ def test_warm_keep_verdict_cached_per_digest_and_box(
     L._STATS_KEEP_CACHE.clear()
 
     calls = {"n": 0}
-    real = L._stats_hits_executor_pinned
+    real = L._stats_chunk_probe
 
     def counting(*a, **k):
         calls["n"] += 1
         return real(*a, **k)
 
-    monkeypatch.setattr(L, "_stats_hits_executor_pinned", counting)
+    monkeypatch.setattr(L, "_stats_chunk_probe", counting)
     box = {"id": (0.0, 10.0)}
     df1, r1, t1 = L.scan_with_skipping(spark, d, box)
     assert calls["n"] == 1 and 0 < r1 < t1
@@ -606,8 +606,8 @@ def test_warm_keep_verdict_cached_per_digest_and_box(
     L.scan_with_skipping(spark, d, {"id": (500.0, 510.0)})
     L.scan_with_skipping(spark, d, {"id": (500.0, 510.0)})
     assert calls["n"] == 2
-    assert L._STATS_KEEP_CACHE_BYTES == sum(
-        e[2] for e in L._STATS_KEEP_CACHE.values()
+    assert L._STATS_KEEP_CACHE.nbytes == sum(
+        e[2] for e in L._STATS_KEEP_CACHE.entries.values()
     )
 
     # mutation: append a file -> digest flips -> fresh probe, fresh
@@ -638,16 +638,16 @@ def test_oversized_keep_verdict_served_oneshot_without_eviction(
     L.load_or_refresh_file_stats(spark, d, ["id"])
     L._STATS_KEEP_CACHE.clear()
     df, r1, t1 = L.scan_with_skipping(spark, d, {"id": (0.0, 10.0)})
-    assert len(L._STATS_KEEP_CACHE) == 1
-    cached_key = next(iter(L._STATS_KEEP_CACHE))
+    assert len(L._STATS_KEEP_CACHE.entries) == 1
+    cached_key = next(iter(L._STATS_KEEP_CACHE.entries))
     # every verdict is now oversized: served correctly, not cached,
     # and the existing entry SURVIVES
-    monkeypatch.setattr(L, "_STATS_KEEP_BUDGET_BYTES", 1)
+    monkeypatch.setattr(L._STATS_KEEP_CACHE, "budget", 1)
     df2, r2, t2 = L.scan_with_skipping(spark, d, {"id": (900.0, 950.0)})
     assert df2.filter(
         (F.col("id") >= 900) & (F.col("id") <= 950)
     ).count() == 51
-    assert list(L._STATS_KEEP_CACHE) == [cached_key]
+    assert list(L._STATS_KEEP_CACHE.entries) == [cached_key]
 
 
 def test_gc_spares_inflight_tmp_write(spark, tmp_path, monkeypatch):

@@ -11,6 +11,7 @@ import uuid
 from contextlib import contextmanager
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -26,10 +27,13 @@ from pdf_etl_ocr_inference_spark.operators.serving import (
     refresh_ivf_serving_index,
     serve_topk,
 )
+from pdf_etl_ocr_inference_spark.operators import serving
 from pdf_etl_ocr_inference_spark.operators.shard_server import (
-    _cache,
+    WORKER_CACHE,
     _load_shard,
+    read_meta,
     round_half_up,
+    shard_token,
 )
 
 DOCS = [
@@ -227,7 +231,53 @@ def test_shard_keeps_one_token(tmp_path, spark):
     _load_shard(path, 0, "ivf", "a:0")
     ids, _ = _load_shard(path, 0, "ivf", "a:1")
     assert sorted(ids.tolist()) == [0, 1, 2, 3, 4]
-    assert [v[0] for k, v in _cache.items() if k[0] == path] == ["a:1"]
+    assert [
+        v[0] for k, v in WORKER_CACHE.entries.items() if k[0] == path
+    ] == ["a:1"]
+
+
+def test_worker_cache_stays_within_budget_in_a_long_session(
+    spark, tmp_path, monkeypatch
+):
+    """Memory stays bounded in a long-lived serving session: loading
+    more IVF cells than the worker budget holds evicts the coldest,
+    the pinned total never passes the budget, and lookups answer the
+    same after evicted cells reload.  The lookups run their shard
+    tasks in this process (a local dispatch), so they use the cache
+    this test shrinks."""
+    path = str(tmp_path / "ivf")
+    build_ivf_serving_index(spark, _cell_corpus(spark), path, CENTS)
+    queries = [(c, CENTS[c]) for c in range(4)]
+    want = serve_topk(spark, path, queries, k=3, kind="ivf", n_probe=2)
+    want = want.collect()
+    assert len(want) == 12
+
+    def local_dispatch(spark, plan, answer, schema):
+        rows = [r for sh in sorted(plan) for r in answer(sh, plan[sh])]
+        return pd.DataFrame(rows, columns=schema.fieldNames())
+
+    monkeypatch.setattr(serving, "dispatch", local_dispatch)
+    token = shard_token(read_meta(path, "ivf"))
+    WORKER_CACHE.clear()
+    for c in range(4):
+        _load_shard(path, c, "ivf", token)
+    cell = max(e[2] for e in WORKER_CACHE.entries.values())
+    monkeypatch.setattr(WORKER_CACHE, "budget", 2 * cell)
+    WORKER_CACHE.clear()
+    try:
+        for _ in range(3):
+            for c in range(4):
+                _load_shard(path, c, "ivf", token)
+                assert WORKER_CACHE.nbytes <= WORKER_CACHE.budget
+            assert len(WORKER_CACHE.entries) < 4  # cells were evicted
+            got = serve_topk(spark, path, queries, k=3, kind="ivf", n_probe=2)
+            assert got.collect() == want
+            assert WORKER_CACHE.nbytes <= WORKER_CACHE.budget
+            assert WORKER_CACHE.nbytes == sum(
+                e[2] for e in WORKER_CACHE.entries.values()
+            )
+    finally:
+        WORKER_CACHE.clear()
 
 
 def test_round_half_up_matches_spark_round(spark):

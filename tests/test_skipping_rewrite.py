@@ -356,8 +356,8 @@ def test_served_sidecar_pinning(spark, src_dir):
 
     df = spark.read.parquet(src_dir).filter(_box())
     first = _rw(df)
-    assert first is not df and len(L._SIDECAR_CACHE) == 1
-    fp0 = next(iter(L._SIDECAR_CACHE.values()))[0]
+    assert first is not df and len(L._SIDECAR_CACHE.entries) == 1
+    fp0 = next(iter(L._SIDECAR_CACHE.entries.values()))[0]
 
     # second query: cache object unchanged (same fingerprint), and
     # a poisoned loader proves the sidecar is NOT re-read
@@ -380,7 +380,7 @@ def test_served_sidecar_pinning(spark, src_dir):
     ]
     dfb = spark.read.parquet(src_dir).filter(F.col("o_orderkey").isin(probe))
     ob = _rw(dfb)
-    assert ob is not dfb and len(L._BLOOM_CACHE) == 1
+    assert ob is not dfb and len(L._BLOOM_CACHE.entries) == 1
     assert _keys(ob) == sorted(probe)
 
     # append + refresh -> new inventory -> pin invalidated, results fresh
@@ -395,7 +395,7 @@ def test_served_sidecar_pinning(spark, src_dir):
     o3 = _rw(df3)
     assert o3 is not df3
     assert _keys(o3) == _keys(df3)
-    assert next(iter(L._SIDECAR_CACHE.values()))[0] != fp0
+    assert next(iter(L._SIDECAR_CACHE.entries.values()))[0] != fp0
 
 
 def test_cost_gate_declines_small_tables_by_default(
@@ -551,14 +551,14 @@ def test_bloom_pin_budget_bounded(spark, src_dir, monkeypatch):
     keep_full, cov_full = L.bloom_keep_files(
         spark, meta, "o_orderkey", probe
     )
-    assert L._bloom_pinned_bytes() > 0  # normally pins
+    assert L._BLOOM_CACHE.nbytes > 0  # normally pins
 
-    monkeypatch.setattr(L, "_BLOOM_PIN_BUDGET_BYTES", 1)
+    monkeypatch.setattr(L._BLOOM_CACHE, "budget", 1)
     L._BLOOM_CACHE.clear()
     keep_dist, cov_dist = L.bloom_keep_files(
         spark, meta, "o_orderkey", probe
     )
-    assert L._bloom_pinned_bytes() <= 1  # nothing pinned over budget
+    assert L._BLOOM_CACHE.nbytes <= 1  # nothing pinned over budget
     assert (keep_dist, cov_dist) == (keep_full, cov_full)
 
     # end to end: the point lookup still answers correctly unpinned
@@ -590,13 +590,13 @@ def test_stats_pin_budget_bounded(spark, src_dir, registered, monkeypatch):
     }
     L._SIDECAR_CACHE.clear()
     keep_full, cov_full = L.stats_keep_files(spark, meta, ranges)
-    assert L._stats_pinned_bytes() > 0  # normally pins
+    assert L._SIDECAR_CACHE.nbytes > 0  # normally pins
     assert keep_full and keep_full < cov_full  # box really prunes
 
-    monkeypatch.setattr(L, "_STATS_PIN_BUDGET_BYTES", 1)
+    monkeypatch.setattr(L._SIDECAR_CACHE, "budget", 1)
     L._SIDECAR_CACHE.clear()
     keep_dist, cov_dist = L.stats_keep_files(spark, meta, ranges)
-    assert L._stats_pinned_bytes() <= 1  # nothing pinned over budget
+    assert L._SIDECAR_CACHE.nbytes <= 1  # nothing pinned over budget
     assert (keep_dist, cov_dist) == (keep_full, cov_full)
 
     # end to end under the tiny budget: the served range scan still
@@ -607,6 +607,45 @@ def test_stats_pin_budget_bounded(spark, src_dir, registered, monkeypatch):
     brute = spark.read.parquet(src_dir).filter(_box())
     assert _keys(df.filter(_box())) == _keys(brute)
     assert n_read <= n_total
+
+
+def test_oversized_live_map_served_oneshot_without_eviction(
+    spark, tmp_path, monkeypatch
+):
+    """A layout's live-file map past the pin budget is served once and
+    evicts nothing: the cache used to drop every entry and then skip
+    the insert, so one big layout emptied the pins of all others."""
+    from pdf_etl_ocr_inference_spark.operators import layout as L
+    from pdf_etl_ocr_inference_spark.operators.layout import (
+        register_clustered_layout,
+    )
+
+    metas = []
+    for name, n_files in (("a", 4), ("b", 8)):
+        src = str(tmp_path / name)
+        (
+            spark.read.parquet(f"{SF0001}/orders.parquet")
+            .repartition(2)
+            .write.mode("overwrite")
+            .parquet(src)
+        )
+        metas.append(
+            register_clustered_layout(spark, src, SPECS, n_files=n_files)
+        )
+    meta_a, meta_b = metas
+    ranges = {"o_custkey": (100.0, 299.0)}
+    L._LIVEMAP_CACHE.clear()
+    L.served_scan_with_skipping(spark, meta_a, ranges)
+    pinned = dict(L._LIVEMAP_CACHE.entries)
+    assert list(pinned) == [meta_a["layout_path"]]
+
+    live_b = L._live_stat_map(meta_b["layout_path"])
+    monkeypatch.setattr(
+        L._LIVEMAP_CACHE, "budget", sum(len(f) + 64 for f in live_b) - 1
+    )
+    df, n_read, n_total = L.served_scan_with_skipping(spark, meta_b, ranges)
+    assert n_total == len(live_b) and 0 < n_read <= n_total
+    assert L._LIVEMAP_CACHE.entries == pinned  # A survives, B not pinned
 
 
 def test_inplace_rewrite_detected_by_public_helpers(spark, tmp_path):
