@@ -5,24 +5,18 @@ Graph indexes answer top-k with O(ef·M·log-ish) distance evaluations
 instead of scanning buckets, but their *construction* is inherently
 sequential (each insert searches the graph so far).  The Spark-native
 answer is the standard sharded-serving pattern: partition the corpus
-into ``n_shards`` deterministic shards, build an independent NSW graph
-PER SHARD (each build is a single-task sequential job — Arrow-batched
-numpy inside ``applyInPandas``), and answer queries by scatter-gather:
-greedy-search every shard's graph in parallel, merge the local top-k.
+into ``n_shards`` deterministic shards and build an independent NSW
+graph PER SHARD (each build is a single-task sequential job — numpy
+inside ``applyInPandas``).  Queries are answered by
+``serving.serve_topk(kind="nsw")``: every shard's graph is pinned in
+worker memory by ``shard_server`` and walked there, and the local
+top-k lists merge in the driver.  This module holds the build, the
+walk kernel and the refresh; ``shard_server`` owns the on-disk format
+(``shard=N`` directories and the meta).
 
-Scale shape at 100 TB — stated honestly:
-- build parallelism = shard count (each shard bounded to fit one
-  task's memory); rebuilds are per-shard, so a corpus append only
-  rebuilds the shards it touches;
-- a query runs n_shards parallel walks; each walk COMPUTES only
-  ``ef + M·hops`` distances, but because Spark is a scan engine the
-  task still LOADS its whole shard partition into the Python worker
-  first — per-shard read cost is O(shard size).  Bounding shard size
-  (add shards as the corpus grows) keeps the per-task read constant;
-  a latency-serving deployment would pin the per-shard graphs in
-  worker memory (foreachBatch/external store) instead of re-reading
-  them — within this engine, NSW is the build/layout story and the
-  bucketed LSH/IVF/PQ paths remain the scan-time scale paths.
+Build parallelism = shard count, each shard bounded to fit one task's
+memory (:func:`derive_n_shards`); a refresh rebuilds only the shards
+a commit touches.
 
 Metric: construction and search walk on L2 over NORMALIZED vectors,
 so the walk agrees with the cosine ranking the results are scored by
@@ -41,9 +35,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pdf_etl_ocr_inference_spark.scratch import (
-    atomic_write_json,
-    new_build_id,
+from pdf_etl_ocr_inference_spark.operators.shard_server import (
+    VecStore,
+    publish_meta,
+    read_meta,
+    write_shards,
 )
 
 GRAPH_SCHEMA = T.StructType(
@@ -80,75 +76,14 @@ def derive_n_shards(
     return max(1, -(-int(n_rows) // int(target)))
 
 
-class VecStore:
-    """Unit vectors in one contiguous row-major matrix, keyed by id.
-
-    Reads like the historical dict (``vs[i]`` -> 1-D view, iteration
-    yields ids) while letting the greedy walk score a node's whole
-    adjacency list in one vectorized call (:meth:`dists`) instead of
-    a Python-level ``np.dot`` per neighbor — the within-shard build
-    parallelism that cut the 100k×64 sharded build ~4×.
-    """
-
-    __slots__ = ("V", "idx", "sq")
-
-    def __init__(self, ids, V):
-        """``V`` must already be row-normalized; rows align with ids."""
-        import numpy as np
-
-        self.V = V
-        self.idx = {int(i): r for r, i in enumerate(ids)}
-        # |v|² per row (1.0 unit rows, 0.0 zero rows) — lets dists()
-        # run as one gemv instead of subtract+square per batch
-        self.sq = np.einsum("ij,ij->i", V, V) if len(V) else V.reshape(0)
-
-    @classmethod
-    def unit(cls, ids, vectors):
-        """Stack raw (array-like) vectors and normalize rows to unit
-        L2 (zero vectors pass through unchanged, as before)."""
-        import numpy as np
-
-        if not len(ids):
-            return cls([], np.empty((0, 0), dtype="float64"))
-        V = np.stack(
-            [np.asarray(v, dtype="float64") for v in vectors]
-        )
-        norms = np.sqrt(np.einsum("ij,ij->i", V, V))
-        nz = norms > 0
-        V[nz] = V[nz] / norms[nz, None]
-        return cls(ids, V)
-
-    def __getitem__(self, i):
-        return self.V[self.idx[i]]
-
-    def __iter__(self):
-        return iter(self.idx)
-
-    def __len__(self):
-        return len(self.idx)
-
-    def __contains__(self, i):
-        return i in self.idx
-
-    def dists(self, ids, q, qq=None):
-        """Squared L2 from ``q`` to each of ``ids`` via the expansion
-        ``|q|² + |v|² − 2·v·q`` — one row gather + one gemv.  Pass a
-        precomputed ``qq = q·q`` to amortize it across a walk."""
-        rows = [self.idx[i] for i in ids]
-        if qq is None:
-            qq = float(q @ q)
-        return qq + self.sq[rows] - 2.0 * (self.V[rows] @ q)
-
-
 def _greedy_search(vecs, adj, ids_sorted, q, ef, entry=None):
     """Beam search over one shard's graph: returns [(dist, id)] of the
     ``ef`` closest visited nodes, deterministically (ties by id).
 
-    ``vecs``: :class:`VecStore` (or dict id -> numpy vector — the
-    slow path kept for API compatibility); ``adj``: dict id ->
-    list[id]; entry point = lowest id (the first inserted node)
-    unless an explicit ``entry`` is given (the HNSW layered descent
-    passes the upper layer's result down).
+    ``vecs``: :class:`VecStore`; ``adj``: dict id -> list[id]; entry
+    point = lowest id (the first inserted node) unless an explicit
+    ``entry`` is given (the HNSW layered descent passes the upper
+    layer's result down).
     """
     import numpy as np
 
@@ -156,15 +91,10 @@ def _greedy_search(vecs, adj, ids_sorted, q, ef, entry=None):
         return []
     if entry is None:
         entry = ids_sorted[0]
-    batch_d = getattr(vecs, "dists", None)
     qq = float(np.dot(q, q))
-
-    def d(i):
-        diff = vecs[i] - q
-        return float(np.dot(diff, diff))
-
+    diff = vecs[entry] - q
     visited = {entry}
-    cand = [(d(entry), entry)]  # min-heap of frontier
+    cand = [(float(np.dot(diff, diff)), entry)]  # min-heap of frontier
     best = [(-cand[0][0], entry)]  # max-heap (neg dist) of ef best
     while cand:
         dist, node = heapq.heappop(cand)
@@ -176,10 +106,7 @@ def _greedy_search(vecs, adj, ids_sorted, q, ef, entry=None):
         visited.update(todo)
         # distances don't depend on the evolving beam, so scoring the
         # whole adjacency list up front is semantics-preserving
-        dns = (
-            batch_d(todo, q, qq).tolist() if batch_d else [d(x) for x in todo]
-        )
-        for nb, dn in zip(todo, dns):
+        for nb, dn in zip(todo, vecs.dists(todo, q, qq).tolist()):
             if len(best) < ef or dn < -best[0][0]:
                 heapq.heappush(cand, (dn, nb))
                 heapq.heappush(best, (-dn, nb))
@@ -196,9 +123,9 @@ def build_shard_adjacency(
     its ``m`` nearest, links bidirectionally, prunes over-full
     adjacencies back to the closest ``m`` (ties by id).
 
-    Shared VERBATIM by the ``applyInPandas`` build task and the lazy
-    DuckDB oracle generator (plans/graph_sql.py), so the oracle
-    replays the exact graph the engine built — the PCA/OPQ
+    Shared VERBATIM by the ``applyInPandas`` build task and the
+    Spark-free replay (``plans/graph_sql.replay_topk``), so the
+    oracle replays the exact graph the engine built — the PCA/OPQ
     shared-kernel doctrine applied to the graph family."""
     import numpy as np
 
@@ -225,25 +152,6 @@ def build_shard_adjacency(
             prune(x)
         inserted.append(i)
     return adj
-
-
-def search_shard_nsw(
-    ids: list, mat: "VecStore", adj: dict, qu, k: int, ef: int, excl
-) -> list:
-    """One shard's walk + exact-cosine local top-k: ``[(id, score)]``
-    sorted by (-score, id).  Shared by :func:`topk_nsw`'s
-    applyInPandas task and the oracle generator."""
-    import numpy as np
-
-    near = _greedy_search(mat, adj, sorted(ids), qu, ef)
-    rows = []
-    for _, i in near:
-        if i in excl:
-            continue
-        # unit vectors: cosine == dot
-        rows.append((i, float(np.dot(qu, mat[i]))))
-    rows.sort(key=lambda t: (-t[1], t[0]))
-    return rows[:k]
 
 
 def build_nsw_index(
@@ -293,93 +201,8 @@ def build_nsw_index(
         F.col(embedding_col).cast("array<double>").alias("embedding"),
     )
     graph = sharded.groupBy("shard").applyInPandas(_build, GRAPH_SCHEMA)
-    (
-        graph.repartition("shard")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(path)
-    )
-    _write_meta(
-        path,
-        {
-            "n_shards": n_shards,
-            "m_neighbors": m_neighbors,
-            "last_version": 0,
-            "build_id": new_build_id(),
-        },
-    )
-    return path
-
-
-def _meta_path(path: str) -> str:
-    import os
-
-    return os.path.join(path, "_nsw_meta.json")
-
-
-def _write_meta(path: str, meta: dict) -> None:
-    atomic_write_json(_meta_path(path), meta)
-
-
-def _read_meta(path: str) -> dict:
-    import json
-    import os
-
-    mp = _meta_path(path)
-    if not os.path.exists(mp):
-        raise ValueError(
-            f"no NSW index metadata at {path!r} — build with "
-            "build_nsw_index first"
-        )
-    with open(mp) as f:
-        return json.load(f)
-
-
-def topk_nsw(
-    spark: SparkSession,
-    path: str,
-    query_vec: list,
-    k: int = 5,
-    ef_search: int = 32,
-    exclude_ids: list | None = None,
-) -> DataFrame:
-    """Scatter-gather query: greedy-search every shard's graph in
-    parallel (one ``applyInPandas`` group per shard), merge local
-    top-k globally by cosine.  Scores are exact cosine on the walked
-    vectors — the graph only decides which vectors get scored.
-    """
-    import numpy as np
-    import pandas as pd
-
-    q = np.asarray(query_vec, dtype="float64")
-    qn = float(np.sqrt(np.dot(q, q)))
-    excl = set(exclude_ids or [])
-    ef = max(ef_search, k + len(excl))
-
-    out_schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-
-    qu = q / qn if qn > 0 else q
-
-    def _search(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["vec_id"].tolist()
-        mat = VecStore.unit(ids, pdf["embedding"])
-        adj = {
-            i: list(nb) for i, nb in zip(pdf["vec_id"], pdf["neighbors"])
-        }
-        rows = search_shard_nsw(ids, mat, adj, qu, k, ef, excl)
-        return pd.DataFrame(rows, columns=["vec_id", "score"])
-
-    graph = spark.read.parquet(path)
-    local = graph.groupBy("shard").applyInPandas(_search, out_schema)
-    return (
-        local.orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(k)
-        .select("vec_id", F.round("score", 4).alias("score"))
+    return write_shards(
+        graph, path, "nsw", {"n_shards": n_shards, "m_neighbors": m_neighbors}
     )
 
 
@@ -418,9 +241,8 @@ def refresh_nsw_index(
     rebuilding), and ``last_version`` only bumps after every shard
     swapped.  Returns the rebuilt shard ids.
     """
-    meta = _read_meta(path)
 
-    def _rebuild(members, tmp):
+    def _rebuild(members, tmp, meta):
         build_nsw_index(
             spark,
             members,
@@ -430,43 +252,41 @@ def refresh_nsw_index(
         )
 
     return refresh_sharded_graph(
-        spark, path, changes, version, id_col, embedding_col,
-        meta, lambda m: _write_meta(path, m), _rebuild,
+        spark, path, "nsw", changes, version, id_col, embedding_col,
+        _rebuild,
     )
 
 
 def refresh_sharded_graph(
     spark: SparkSession,
     path: str,
+    kind: str,
     changes: DataFrame,
     version: int,
     id_col: str,
     embedding_col: str,
-    meta: dict,
-    write_meta,
     rebuild,
     shard_col=None,
 ) -> list[int]:
     """Generic per-shard incremental maintenance shared by the sharded
-    index families (NSW/HNSW graphs, PQ/IVF serving layouts): compute
-    touched shards, rebuild their member sets into a tmp index via
-    ``rebuild(members_df, tmp_path)``, then atomically swap shard dirs
-    (see :func:`refresh_nsw_index` for the crash-safety contract).
-    ``meta`` must carry ``n_shards`` and ``last_version``;
-    ``write_meta(meta)`` persists it.  ``shard_col(df) -> Column``
-    overrides the default id-hash sharding (``vec_id % n_shards``) —
-    IVF passes the centroid-argmax so an update that MOVES a vector
-    between cells touches both (preimage rows carry the old
-    embedding, postimage rows the new one)."""
+    vector kinds (NSW/HNSW graphs, PQ/IVF/IVF-PQ serving layouts):
+    read the ``kind`` meta at ``path``, compute touched shards,
+    rebuild their member sets into a tmp index via
+    ``rebuild(members_df, tmp_path, meta)``, atomically swap shard
+    dirs (see :func:`refresh_nsw_index` for the crash-safety
+    contract), then publish the meta with ``last_version`` bumped.
+    ``shard_col(meta) -> Column`` overrides the default id-hash
+    sharding (``vec_id % n_shards``) — IVF passes the centroid argmax
+    so an update that MOVES a vector between cells touches both
+    (preimage rows carry the old embedding, postimage rows the new
+    one)."""
     import os
     import shutil
 
+    meta = read_meta(path, kind)
     if version <= meta.get("last_version", 0):
         return []  # already folded (idempotent on driver retry)
-    n_shards = meta["n_shards"]
-    sc_ = shard_col or (
-        lambda df: F.pmod(F.col("vec_id"), F.lit(n_shards))
-    )
+    shard = (shard_col or _id_shard)(meta)
 
     adds = changes.filter(
         F.col("_change_type").isin("insert", "update_postimage")
@@ -483,14 +303,14 @@ def refresh_sharded_graph(
 
     touched = sorted(
         r["s"]
-        for r in adds.select(sc_(adds).cast("int").alias("s"))
-        .union(removes.select(sc_(removes).cast("int").alias("s")))
+        for r in adds.select(shard.cast("int").alias("s"))
+        .union(removes.select(shard.cast("int").alias("s")))
         .distinct()
         .collect()
     )
     if not touched:
         meta["last_version"] = version
-        write_meta(meta)
+        publish_meta(path, kind, meta)
         return []
 
     # recover any shard left under .old by a crash mid-swap of a
@@ -518,7 +338,7 @@ def refresh_sharded_graph(
 
     tmp = path + "_refresh_tmp"
     try:
-        rebuild(members, tmp)
+        rebuild(members, tmp, meta)
         # swap LAST: two atomic renames per shard — the old shard is
         # parked under .old (recoverable) before the new one lands,
         # so no crash point leaves the shard missing.
@@ -532,9 +352,14 @@ def refresh_sharded_graph(
             if os.path.exists(src):
                 os.replace(src, dst)
         meta["last_version"] = version
-        write_meta(meta)
+        publish_meta(path, kind, meta)
         for sh in touched:  # all swapped + version durable: drop .old
             shutil.rmtree(f"{path}/_old_shard_{sh}", ignore_errors=True)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return touched
+
+
+def _id_shard(meta: dict):
+    """The default shard of a row: ``vec_id % n_shards``."""
+    return F.pmod(F.col("vec_id"), F.lit(meta["n_shards"]))

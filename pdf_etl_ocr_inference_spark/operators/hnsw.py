@@ -17,11 +17,10 @@ neighborhood.  Search cost becomes O(log n · M) distance evaluations.
 
 Spark shape — identical to the sharded NSW pattern: deterministic
 shards (id % n_shards), each shard's multi-layer graph built
-sequentially inside one ``applyInPandas`` task, queries scatter-gather
-all shards and merge exact-cosine top-k.  The same honesty notes as
-graph_ann.py:13-26 apply (per-query tasks re-read shard parquet; the
-pinned-serving cache in ``operators/serving.py`` is the low-latency
-path).
+sequentially inside one ``applyInPandas`` task.  Queries are answered
+by ``serving.serve_topk(kind="hnsw")`` from shards pinned in worker
+memory (``shard_server``), and the per-shard exact-cosine top-k lists
+merge in the driver.
 
 Determinism (the layer-assignment rule the build is invariant under):
 ``level(id) = floor(-ln(u_id)·mL)`` with ``u_id`` the (0,1] uniform
@@ -42,12 +41,13 @@ from pyspark.sql import types as T
 
 from pdf_etl_ocr_inference_spark.operators.graph_ann import (
     EF_CONSTRUCTION,
-    VecStore,
     _greedy_search,
+    derive_n_shards,
+    refresh_sharded_graph,
 )
-from pdf_etl_ocr_inference_spark.scratch import (
-    atomic_write_json,
-    new_build_id,
+from pdf_etl_ocr_inference_spark.operators.shard_server import (
+    VecStore,
+    write_shards,
 )
 
 HNSW_SCHEMA = T.StructType(
@@ -89,9 +89,9 @@ def build_shard_layers(ids: list, mat: "VecStore", m: int, efc: int):
     (ascending order expected) → ``(levels, adj)`` with
     ``adj[l][i]`` the layer-``l`` neighbor list of ``i``.
 
-    Shared VERBATIM by the ``applyInPandas`` build task and the lazy
-    DuckDB oracle generator (plans/graph_sql.py) — the shared-kernel
-    doctrine (see graph_ann.build_shard_adjacency)."""
+    Shared VERBATIM by the ``applyInPandas`` build task and the
+    Spark-free replay (``plans/graph_sql.replay_topk``) — the
+    shared-kernel doctrine (see graph_ann.build_shard_adjacency)."""
     import numpy as np
 
     m0 = 2 * m
@@ -172,10 +172,6 @@ def build_hnsw_index(
     """
     import pandas as pd
 
-    from pdf_etl_ocr_inference_spark.operators.graph_ann import (
-        derive_n_shards,
-    )
-
     if n_shards is None:
         n_shards = derive_n_shards(corpus.count())
 
@@ -202,46 +198,9 @@ def build_hnsw_index(
         F.col(embedding_col).cast("array<double>").alias("embedding"),
     )
     graph = sharded.groupBy("shard").applyInPandas(_build, HNSW_SCHEMA)
-    (
-        graph.repartition("shard")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(path)
+    return write_shards(
+        graph, path, "hnsw", {"n_shards": n_shards, "m_neighbors": m_neighbors}
     )
-    _write_meta(
-        path,
-        {
-            "n_shards": n_shards,
-            "m_neighbors": m_neighbors,
-            "last_version": 0,
-            "build_id": new_build_id(),
-        },
-    )
-    return path
-
-
-def _meta_path(path: str) -> str:
-    import os
-
-    return os.path.join(path, "_hnsw_meta.json")
-
-
-def _write_meta(path: str, meta: dict) -> None:
-    atomic_write_json(_meta_path(path), meta)
-
-
-def _read_meta(path: str) -> dict:
-    import json
-    import os
-
-    mp = _meta_path(path)
-    if not os.path.exists(mp):
-        raise ValueError(
-            f"no HNSW index metadata at {path!r} — build with "
-            "build_hnsw_index first"
-        )
-    with open(mp) as f:
-        return json.load(f)
 
 
 def refresh_hnsw_index(
@@ -258,13 +217,8 @@ def refresh_hnsw_index(
     generic machinery is shared: ``graph_ann.refresh_sharded_graph``).
     Deterministic layer assignment means refresh ≡ full rebuild of the
     post-change corpus, shard by shard."""
-    from pdf_etl_ocr_inference_spark.operators.graph_ann import (
-        refresh_sharded_graph,
-    )
 
-    meta = _read_meta(path)
-
-    def _rebuild(members, tmp):
+    def _rebuild(members, tmp, meta):
         build_hnsw_index(
             spark,
             members,
@@ -274,81 +228,7 @@ def refresh_hnsw_index(
         )
 
     return refresh_sharded_graph(
-        spark, path, changes, version, id_col, embedding_col,
-        meta, lambda m: _write_meta(path, m), _rebuild,
+        spark, path, "hnsw", changes, version, id_col, embedding_col,
+        _rebuild,
     )
 
-
-def _search_shard(pdf, qu, k, ef, excl):
-    """Layered descent + layer-0 beam over one shard's graph rows."""
-    import numpy as np
-
-    ids_sorted = sorted(pdf["vec_id"].tolist())
-    if not ids_sorted:
-        return []
-    mat = VecStore.unit(pdf["vec_id"].tolist(), pdf["embedding"])
-    levels = {}
-    for i, layers in zip(pdf["vec_id"], pdf["layers"]):
-        levels[i] = len(layers) - 1
-    adj = [
-        {} for _ in range(max(levels.values(), default=0) + 1)
-    ]
-    for i, layers in zip(pdf["vec_id"], pdf["layers"]):
-        for l, nb in enumerate(layers):
-            adj[l][i] = list(nb)
-    # entry point: highest level, then lowest id (matches the build)
-    ep = min(mat, key=lambda i: (-levels[i], i))
-    cur = ep
-    for l in range(levels[ep], 0, -1):
-        near = _greedy_search(mat, adj[l], ids_sorted, qu, 1, entry=cur)
-        if near:
-            cur = near[0][1]
-    near = _greedy_search(mat, adj[0], ids_sorted, qu, ef, entry=cur)
-    rows = []
-    for _, i in near:
-        if i in excl:
-            continue
-        rows.append((i, float(np.dot(qu, mat[i]))))
-    rows.sort(key=lambda t: (-t[1], t[0]))
-    return rows[:k]
-
-
-def topk_hnsw(
-    spark: SparkSession,
-    path: str,
-    query_vec: list,
-    k: int = 5,
-    ef_search: int = 32,
-    exclude_ids: list | None = None,
-) -> DataFrame:
-    """Scatter-gather query over the sharded HNSW graph: each shard
-    descends its layer stack (ef=1 per upper layer) and beam-searches
-    layer 0 with ``ef_search``; local top-k merge globally by exact
-    cosine (the graph only decides which vectors get scored)."""
-    import numpy as np
-    import pandas as pd
-
-    q = np.asarray(query_vec, dtype="float64")
-    qn = float(np.sqrt(np.dot(q, q)))
-    qu = q / qn if qn > 0 else q
-    excl = set(exclude_ids or [])
-    ef = max(ef_search, k + len(excl))
-
-    out_schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-
-    def _search(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = _search_shard(pdf, qu, k, ef, excl)
-        return pd.DataFrame(rows, columns=["vec_id", "score"])
-
-    graph = spark.read.parquet(path)
-    local = graph.groupBy("shard").applyInPandas(_search, out_schema)
-    return (
-        local.orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(k)
-        .select("vec_id", F.round("score", 4).alias("score"))
-    )

@@ -41,6 +41,7 @@ from pdf_etl_ocr_inference_spark.operators.shard_server import (
     _load_shard,
     dispatch,
     merge_topk,
+    publish_build,
     publish_meta,
     read_meta,
     rows_schema,
@@ -377,8 +378,6 @@ def build_postings_index(
     """Materialize (term, id, dl, tf) postings partitioned by the
     term-hash bucket, plus corpus stats in the meta.  One combinable
     shuffle over the corpus, written once."""
-    from pdf_etl_ocr_inference_spark.scratch import new_build_id
-
     rows = _postings_rows(df, text_col, id_col).withColumn("v", F.lit(0))
     (
         rows.repartition("_pb")
@@ -391,17 +390,10 @@ def build_postings_index(
     stats = df.select(F.size(toks).alias("dl")).agg(
         F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sum_dl")
     ).first()
-    publish_meta(
+    publish_build(
         path,
         "postings",
-        {
-            "n_docs": int(stats["n"]),
-            "sum_dl": int(stats["sum_dl"]),
-            "last_version": 0,
-            # unique per build: versions restart at 0 on a rebuild at
-            # the same path, so worker caches key on this nonce too
-            "build_id": new_build_id(),
-        },
+        {"n_docs": int(stats["n"]), "sum_dl": int(stats["sum_dl"])},
     )
     return path
 

@@ -1,12 +1,14 @@
 """Pinned-index vector serving: ``serve_topk`` over five index kinds.
 
-The batch query paths (``topk_nsw``, ``topk_hnsw``, ``topk_pq``,
-``topk_ivf``) re-read their parquet on every query, which suits
-analytics but not the reference's ONLINE similarity call
-(``ocr-tesseract-unstructured.py:166-172``, a managed-index query
-endpoint).  This module builds serving layouts (parquet partitioned
-by shard, parameters in a meta file) and answers top-k batches from
-state pinned in Python worker memory:
+``serve_topk`` is the one read path of every built vector index: the
+NSW and HNSW graphs built by ``graph_ann`` and ``hnsw`` and the PQ,
+IVF and IVF-PQ layouts built here.  It answers like the reference's
+ONLINE similarity call (``ocr-tesseract-unstructured.py:166-172``, a
+managed-index query endpoint): top-k batches from state pinned in
+Python worker memory, never a re-read of the parquet per query.  (The
+DataFrame-level ``topk_pq``/``topk_ivf`` query caller-supplied
+frames, not a built layout.)  The layouts are parquet partitioned by
+shard plus a meta file, in the format ``shard_server`` owns:
 
 - ``nsw`` / ``hnsw``: sharded graphs, one greedy walk per shard;
 - ``pq``: ADC scan over pinned codes + exact re-rank;
@@ -45,12 +47,15 @@ from pdf_etl_ocr_inference_spark.operators.shard_server import (
     _load_shard,
     dispatch,
     merge_topk,
-    publish_meta,
     read_meta,
     rows_schema,
     shard_token,
+    write_shards,
 )
-from pdf_etl_ocr_inference_spark.scratch import new_build_id
+from pdf_etl_ocr_inference_spark.operators.similarity import (
+    ivf_assign,
+    ivf_cell,
+)
 
 
 # ------------------------------------------------------------------
@@ -107,24 +112,12 @@ def build_pq_serving_index(
         out_col="pq_codes",
         rotation=rotation,
     )
-    (
-        encoded.repartition("shard")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(path)
-    )
-    publish_meta(
+    return write_shards(
+        encoded,
         path,
         "pq",
-        {
-            "n_shards": n_shards,
-            "codebooks": codebooks,
-            "rotation": rotation,
-            "last_version": 0,
-            "build_id": new_build_id(),
-        },
+        {"n_shards": n_shards, "codebooks": codebooks, "rotation": rotation},
     )
-    return path
 
 
 def refresh_pq_serving_index(
@@ -141,9 +134,8 @@ def refresh_pq_serving_index(
     same crash-safe swap + version watermark as the graph families
     (``graph_ann.refresh_sharded_graph``), so the serving cache
     invalidates by key."""
-    meta = read_meta(path, "pq")
 
-    def _rebuild(members, tmp):
+    def _rebuild(members, tmp, meta):
         build_pq_serving_index(
             spark,
             members,
@@ -154,8 +146,8 @@ def refresh_pq_serving_index(
         )
 
     return refresh_sharded_graph(
-        spark, path, changes, version, id_col, embedding_col,
-        meta, lambda m: publish_meta(path, "pq", m), _rebuild,
+        spark, path, "pq", changes, version, id_col, embedding_col,
+        _rebuild,
     )
 
 
@@ -165,24 +157,10 @@ def refresh_pq_serving_index(
 # ------------------------------------------------------------------
 
 
-def _ivf_shard_col(centroids):
-    """Centroid-argmax as a Column (cell id), evaluated per row with
-    each dot computed once (array-argmax, not a when-chain)."""
-    dots = F.array(
-        *[
-            F.aggregate(
-                F.zip_with(
-                    "embedding",
-                    F.array(*[F.lit(float(v)) for v in c]),
-                    lambda a, b: a * b,
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            for c in centroids
-        ]
-    )
-    return (F.array_position(dots, F.array_max(dots)) - 1).cast("int")
+def _ivf_cell(meta: dict):
+    """Refresh shard of a row of an IVF kind: the cell its build
+    assigns (``ivf_assign`` uses the same expression)."""
+    return ivf_cell("embedding", meta["centroids"])
 
 
 def build_ivf_serving_index(
@@ -198,8 +176,6 @@ def build_ivf_serving_index(
     meta.  A query then schedules tasks ONLY for its ``n_probe``
     nearest cells — the serving twin of ``topk_ivf``'s partition-
     pruned scan."""
-    from pdf_etl_ocr_inference_spark.operators.similarity import ivf_assign
-
     assigned = ivf_assign(
         corpus.select(
             F.col(id_col).cast("long").alias("vec_id"),
@@ -211,23 +187,12 @@ def build_ivf_serving_index(
     ).select(
         F.col("cell").cast("int").alias("shard"), "vec_id", "embedding"
     )
-    (
-        assigned.repartition("shard")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(path)
-    )
-    publish_meta(
+    return write_shards(
+        assigned,
         path,
         "ivf",
-        {
-            "n_shards": len(centroids),
-            "centroids": centroids,
-            "last_version": 0,
-            "build_id": new_build_id(),
-        },
+        {"n_shards": len(centroids), "centroids": centroids},
     )
-    return path
 
 
 def refresh_ivf_serving_index(
@@ -243,16 +208,15 @@ def refresh_ivf_serving_index(
     between cells touches BOTH (preimage rows carry the old
     embedding); same atomic swap + version watermark as the other
     families."""
-    meta = read_meta(path, "ivf")
-    cents = meta["centroids"]
 
-    def _rebuild(members, tmp):
-        build_ivf_serving_index(spark, members, tmp, centroids=cents)
+    def _rebuild(members, tmp, meta):
+        build_ivf_serving_index(
+            spark, members, tmp, centroids=meta["centroids"]
+        )
 
     return refresh_sharded_graph(
-        spark, path, changes, version, id_col, embedding_col,
-        meta, lambda m: publish_meta(path, "ivf", m), _rebuild,
-        shard_col=lambda df: _ivf_shard_col(cents),
+        spark, path, "ivf", changes, version, id_col, embedding_col,
+        _rebuild, shard_col=_ivf_cell,
     )
 
 
@@ -272,7 +236,6 @@ def build_ivfpq_serving_index(
     each task's ADC runs against that cell's residual LUT on pinned
     arrays — IVFADC end to end with no parquet scan per query."""
     from pdf_etl_ocr_inference_spark.operators.pq import ivfpq_encode
-    from pdf_etl_ocr_inference_spark.operators.similarity import ivf_assign
 
     assigned = ivf_assign(
         corpus.select(
@@ -291,24 +254,16 @@ def build_ivfpq_serving_index(
         "embedding",
         "pq_codes",
     )
-    (
-        encoded.repartition("shard")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(path)
-    )
-    publish_meta(
+    return write_shards(
+        encoded,
         path,
         "ivfpq",
         {
             "n_shards": len(centroids),
             "centroids": centroids,
             "codebooks": codebooks,
-            "last_version": 0,
-            "build_id": new_build_id(),
         },
     )
-    return path
 
 
 def refresh_ivfpq_serving_index(
@@ -325,19 +280,19 @@ def refresh_ivfpq_serving_index(
     cross-cell moves touch both cells via the centroid-argmax shard
     column; same crash-safe swap + version watermark as the other
     serving families."""
-    meta = read_meta(path, "ivfpq")
-    cents = meta["centroids"]
-    books = meta["codebooks"]
 
-    def _rebuild(members, tmp):
+    def _rebuild(members, tmp, meta):
         build_ivfpq_serving_index(
-            spark, members, tmp, centroids=cents, codebooks=books
+            spark,
+            members,
+            tmp,
+            centroids=meta["centroids"],
+            codebooks=meta["codebooks"],
         )
 
     return refresh_sharded_graph(
-        spark, path, changes, version, id_col, embedding_col,
-        meta, lambda m: publish_meta(path, "ivfpq", m), _rebuild,
-        shard_col=lambda df: _ivf_shard_col(cents),
+        spark, path, "ivfpq", changes, version, id_col, embedding_col,
+        _rebuild, shard_col=_ivf_cell,
     )
 
 
@@ -424,8 +379,9 @@ def _nsw_walk(state, qu, k, ef, rerank, excl, pred):
 
 
 def _hnsw_walk(state, qu, k, ef, rerank, excl, pred):
-    """Layered descent + layer-0 beam on pre-parsed state (the cached
-    twin of ``hnsw._search_shard``, which parses pandas rows)."""
+    """Layered descent from the entry point (highest level, then
+    lowest id — as the build picks it) + layer-0 beam of one pinned
+    HNSW shard."""
     mat, layered, levels, ids_sorted = state
     ep = min(mat, key=lambda i: (-levels[i], i))
     cur = ep
@@ -434,6 +390,13 @@ def _hnsw_walk(state, qu, k, ef, rerank, excl, pred):
         if near:
             cur = near[0][1]
     return _beam(mat, layered[0], ids_sorted, qu, k, ef, excl, pred, entry=cur)
+
+
+def unit_query(vec) -> np.ndarray:
+    """A query vector as float64 scaled to unit L2 (zero stays zero)."""
+    q = np.asarray(vec, dtype="float64")
+    n = float(np.sqrt(np.dot(q, q)))
+    return q / n if n > 0 else q
 
 
 _ANSWERS = {
@@ -493,11 +456,7 @@ def serve_topk(
     excl = set(exclude_ids or [])
     ef = max(ef_search, k + len(excl))
     kind_answer = _ANSWERS[kind]
-    qnorm = []
-    for qid, vec in queries:
-        q = np.asarray(vec, dtype="float64")
-        n = float(np.sqrt(np.dot(q, q)))
-        qnorm.append((int(qid), q / n if n > 0 else q))
+    qnorm = [(int(qid), unit_query(vec)) for qid, vec in queries]
 
     def answer(shard, todo):
         state = _load_shard(path, shard, kind, token)

@@ -27,9 +27,17 @@ BM25 postings — runs the same three steps, all of them here:
 cache above, and every driver-side pin (``layout``'s sidecar, live
 map and manifest caches, ``search``'s term → bucket memo).
 
-Builds and refreshes stay batch jobs in ``serving``, ``search``,
-``graph_ann`` and ``hnsw``; every one publishes its meta file through
-:func:`publish_meta` (``scratch.atomic_write_json``).
+This module also owns the on-disk index format.  A vector index is
+one ``shard=N`` parquet directory per shard, written by
+:func:`write_shards`; every index (postings too) has one meta file
+(:data:`META_FILES`), read by :func:`read_meta` and published by
+:func:`publish_meta` (``scratch.atomic_write_json``).  A build
+publishes ``last_version`` 0 and a fresh ``build_id``
+(:func:`publish_build`).  :func:`unit_rows` is the one row
+normalisation: graph builds, the loader and the oracle replay
+(``plans/graph_sql.py``) all use it, so a graph is walked on the
+vectors it was built on.  Builds and refreshes stay batch jobs in
+``serving``, ``search``, ``graph_ann`` and ``hnsw``.
 """
 
 from __future__ import annotations
@@ -37,6 +45,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import uuid
 from collections import OrderedDict
 from decimal import ROUND_HALF_UP, Decimal
 
@@ -48,8 +57,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pdf_etl_ocr_inference_spark.operators.graph_ann import VecStore
 from pdf_etl_ocr_inference_spark.scratch import atomic_write_json
+
+# ------------------------------------------------------------------
+# Index format: meta files, build ids, shard directories
+# ------------------------------------------------------------------
 
 META_FILES = {
     "nsw": "_nsw_meta.json",
@@ -62,7 +74,12 @@ META_FILES = {
 
 
 def read_meta(path: str, kind: str) -> dict:
-    with open(os.path.join(path, META_FILES[kind])) as f:
+    mp = os.path.join(path, META_FILES[kind])
+    if not os.path.exists(mp):
+        raise ValueError(
+            f"no {kind} index meta at {path!r}: build it first"
+        )
+    with open(mp) as f:
         return json.load(f)
 
 
@@ -70,6 +87,36 @@ def publish_meta(path: str, kind: str, meta: dict) -> None:
     """Crash-safe meta publish: a failed write leaves the previous
     meta in place, never truncated JSON."""
     atomic_write_json(os.path.join(path, META_FILES[kind]), meta)
+
+
+def new_build_id() -> str:
+    """Unique nonce stamped into an index meta at build time and
+    included in worker shard-cache keys: rebuilding an index at the
+    SAME path restarts versions at 0, so without the nonce a
+    long-lived executor would keep serving the pre-rebuild cache
+    entry keyed (path, shard, 0)."""
+    return uuid.uuid4().hex[:12]
+
+
+def publish_build(path: str, kind: str, meta: dict) -> None:
+    """Publish the meta of a fresh build: ``meta`` plus
+    ``last_version`` 0 and a new ``build_id``."""
+    publish_meta(
+        path, kind, {**meta, "last_version": 0, "build_id": new_build_id()}
+    )
+
+
+def write_shards(df: DataFrame, path: str, kind: str, meta: dict) -> str:
+    """Write ``df`` as the index at ``path``, one ``shard=N`` directory
+    per value of its ``shard`` column, then publish its build meta."""
+    (
+        df.repartition("shard")
+        .write.mode("overwrite")
+        .partitionBy("shard")
+        .parquet(path)
+    )
+    publish_build(path, kind, meta)
+    return path
 
 
 def shard_token(meta: dict) -> str:
@@ -140,30 +187,91 @@ WORKER_PIN_BYTES = 256 << 20
 WORKER_CACHE = PinCache(WORKER_PIN_BYTES, keep_oversized=True)
 
 
-def _unit_rows(tbl):
-    """(ids, row-normalised float64 matrix): one flatten + reshape
-    instead of a Python loop over rows (the parse is the cold-load
-    cost)."""
+# ------------------------------------------------------------------
+# Load: unit vectors and the per-kind parse of one shard
+# ------------------------------------------------------------------
+
+
+def unit_rows(m: np.ndarray) -> np.ndarray:
+    """Rows of the float64 matrix ``m`` scaled to unit L2 norm; zero
+    rows stay zero.  The one normalisation of stored vectors (see the
+    module doc)."""
+    norms = np.sqrt(np.einsum("ij,ij->i", m, m))
+    norms[norms == 0] = 1.0
+    return m / norms[:, None]
+
+
+class VecStore:
+    """Unit vectors in one contiguous row-major matrix, keyed by id.
+
+    Reads like a dict (``vs[i]`` -> 1-D view, iteration yields ids)
+    while letting the greedy walk score a node's whole adjacency list
+    in one vectorized call (:meth:`dists`) instead of a Python-level
+    ``np.dot`` per neighbor.
+    """
+
+    __slots__ = ("V", "idx", "sq")
+
+    def __init__(self, ids, V):
+        """``V`` must already be row-normalized; rows align with ids."""
+        self.V = V
+        self.idx = {int(i): r for r, i in enumerate(ids)}
+        # |v|² per row (1.0 unit rows, 0.0 zero rows) — lets dists()
+        # run as one gemv instead of subtract+square per batch
+        self.sq = np.einsum("ij,ij->i", V, V) if len(V) else V.reshape(0)
+
+    @classmethod
+    def unit(cls, ids, vectors):
+        """Stack raw (array-like) vectors and normalize them with
+        :func:`unit_rows` — how a graph build sees its shard."""
+        if not len(ids):
+            return cls([], np.empty((0, 0), dtype="float64"))
+        V = np.stack([np.asarray(v, dtype="float64") for v in vectors])
+        return cls(ids, unit_rows(V))
+
+    def __getitem__(self, i):
+        return self.V[self.idx[i]]
+
+    def __iter__(self):
+        return iter(self.idx)
+
+    def __len__(self):
+        return len(self.idx)
+
+    def __contains__(self, i):
+        return i in self.idx
+
+    def dists(self, ids, q, qq=None):
+        """Squared L2 from ``q`` to each of ``ids`` via the expansion
+        ``|q|² + |v|² − 2·v·q`` — one row gather + one gemv.  Pass a
+        precomputed ``qq = q·q`` to amortize it across a walk."""
+        rows = [self.idx[i] for i in ids]
+        if qq is None:
+            qq = float(q @ q)
+        return qq + self.sq[rows] - 2.0 * (self.V[rows] @ q)
+
+
+def _unit_table(tbl):
+    """(ids, :func:`unit_rows` matrix) of a shard's Arrow table: one
+    flatten + reshape instead of a Python loop over rows (the parse is
+    the cold-load cost)."""
     ids = tbl["vec_id"].to_numpy(zero_copy_only=False).astype("int64")
     flat = (
         tbl["embedding"].combine_chunks().flatten()
         .to_numpy(zero_copy_only=False).astype("float64")
     )
-    m = flat.reshape(len(ids), len(flat) // len(ids))
-    norms = np.sqrt((m * m).sum(axis=1))
-    norms[norms == 0] = 1.0
-    return ids, m / norms[:, None]
+    return ids, unit_rows(flat.reshape(len(ids), len(flat) // len(ids)))
 
 
 def _ivf_state(tbl, path, shard, kind):
-    return _unit_rows(tbl)
+    return _unit_table(tbl)
 
 
 def _adc_state(tbl, path, shard, kind):
     """PQ and IVF-PQ share one state: (ids, vectors, codes, codebooks,
     rotation, cell centroid).  PQ may carry a rotation; IVF-PQ codes
     are residuals from this cell's centroid."""
-    ids, emb = _unit_rows(tbl)
+    ids, emb = _unit_table(tbl)
     flat = tbl["pq_codes"].combine_chunks().flatten()
     flat = flat.to_numpy(zero_copy_only=False)
     codes = flat.reshape(len(ids), len(flat) // len(ids))
@@ -183,14 +291,14 @@ def _adc_state(tbl, path, shard, kind):
 def _nsw_state(tbl, path, shard, kind):
     # contiguous VecStore: the walk scores whole adjacency lists in
     # one vectorized call
-    mat = VecStore(*_unit_rows(tbl))
+    mat = VecStore(*_unit_table(tbl))
     d = tbl.select(["vec_id", "neighbors"]).to_pydict()
     adj = {int(i): list(nb) for i, nb in zip(d["vec_id"], d["neighbors"])}
     return mat, adj, sorted(mat)
 
 
 def _hnsw_state(tbl, path, shard, kind):
-    mat = VecStore(*_unit_rows(tbl))
+    mat = VecStore(*_unit_table(tbl))
     d = tbl.select(["vec_id", "layers"]).to_pydict()
     levels = {int(i): len(ls) - 1 for i, ls in zip(d["vec_id"], d["layers"])}
     layered: list[dict] = [{} for _ in range(max(levels.values()) + 1)]

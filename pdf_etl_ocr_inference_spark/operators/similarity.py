@@ -598,22 +598,20 @@ def ivf_assign(
     expression tree doubles per centroid and evaluation goes
     exponential in the centroid count.)
     """
-    dots = F.array(
-        *[
-            dot_product(F.col(embedding_col), _as_vec_lit(c))
-            for c in centroids
-        ]
+    return df.select(
+        F.col(id_col),
+        F.col(embedding_col),
+        ivf_cell(embedding_col, centroids).alias("cell"),
     )
-    return (
-        df.select(F.col(id_col), F.col(embedding_col), dots.alias("_dots"))
-        .select(
-            id_col,
-            embedding_col,
-            (
-                F.array_position(F.col("_dots"), F.array_max("_dots")) - 1
-            ).cast("int").alias("cell"),
-        )
-    )
+
+
+def ivf_cell(embedding: Column | str, centroids: list[list[float]]) -> Column:
+    """Nearest-centroid cell of each row (largest dot, lowest cell on a
+    tie), as an int Column.  The one assignment expression of every
+    IVF kind: builds (:func:`ivf_assign`) and the serving refreshes
+    place a row with it."""
+    dots = F.array(*[dot_product(embedding, _as_vec_lit(c)) for c in centroids])
+    return (F.array_position(dots, F.array_max(dots)) - 1).cast("int")
 
 
 def topk_ivf(

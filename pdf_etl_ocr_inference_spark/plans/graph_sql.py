@@ -1,20 +1,22 @@
 """Lazy DuckDB oracles for the graph-ANN query entries
-(``ann_nsw_topk`` / ``ann_hnsw_topk``) — r9, verdict #4.
+(``ann_nsw_topk`` / ``ann_hnsw_topk`` / ``ann_served_topk``).
 
 A beam walk over an incrementally-built graph has no SQL replay (the
 build and the walk are inherently sequential), so — exactly like the
 eigh/SVD lazy oracles (plans/pca_sql.py, opq_sql.py) — the
-non-SQL kernel runs in the GENERATOR through the SAME shared code
-path the engine executes (``graph_ann.build_shard_adjacency`` /
-``search_shard_nsw``, ``hnsw.build_shard_layers`` /
-``_search_shard``), straight from the parquet with no Spark, and the
-SQL then independently verifies everything DISTRIBUTED about the
-entry: that the engine sharded by ``vec_id % n_shards``, round-
-tripped float64 embeddings through Arrow and parquet unchanged,
-scored the walked candidates by exact cosine against the corpus
-(DuckDB recomputes the scores from the parquet — they are NOT baked
-in), merged the per-shard lists globally with the (-score, id) tie
-order, and rounded once at the end.
+non-SQL kernel runs in the GENERATOR through the SAME code the engine
+serves with.  :func:`replay_topk` builds each shard with the shared
+kernel (``graph_ann.build_shard_adjacency`` /
+``hnsw.build_shard_layers``), parses the built rows with the shard
+server's loader (``shard_server._PARSE``) and walks them with the
+served answer (``serving._ANSWERS``), straight from the parquet with
+no Spark.  The SQL then independently verifies everything
+DISTRIBUTED about the entry: that the engine sharded by
+``vec_id % n_shards``, round-tripped float64 embeddings through Arrow
+and parquet unchanged, scored the walked candidates by exact cosine
+against the corpus (DuckDB recomputes the scores from the parquet —
+they are NOT baked in), merged the per-shard lists globally with the
+(-score, id) tie order, and rounded once at the end.
 
 What stays outside the SQL: which candidates the walks visit — the
 same freedom the r8 served-trio pin had; here it is closed by
@@ -58,12 +60,73 @@ def _corpus(sf_dir: str):
     return [int(r[0]) for r in rows], [list(map(float, r[1])) for r in rows]
 
 
-def _query_unit(ids, embs):
-    import numpy as np
+def replay_topk(
+    kind: str,
+    ids: list,
+    embs: list,
+    query_vec,
+    k: int = _K,
+    ef_search: int = _EF_SEARCH,
+    exclude_ids=(),
+    n_shards: int | None = None,
+    m_neighbors: int = _M,
+) -> list:
+    """Spark-free replay of ``build_<kind>_index`` + ``serve_topk`` for
+    a graph ``kind`` (``nsw`` or ``hnsw``) over the corpus
+    ``(ids, embs)``: every shard's local top-k ``[(vec_id, score)]``
+    at full precision, concatenated.  ``n_shards=None`` derives the
+    count as the builders do."""
+    import pyarrow as pa
 
-    q = np.asarray(embs[ids.index(0)], dtype="float64")
-    qn = float(np.sqrt(np.dot(q, q)))
-    return q / qn if qn > 0 else q
+    from pdf_etl_ocr_inference_spark.operators.graph_ann import (
+        EF_CONSTRUCTION,
+        build_shard_adjacency,
+        derive_n_shards,
+    )
+    from pdf_etl_ocr_inference_spark.operators.hnsw import build_shard_layers
+    from pdf_etl_ocr_inference_spark.operators.serving import (
+        _ANSWERS,
+        unit_query,
+    )
+    from pdf_etl_ocr_inference_spark.operators.shard_server import (
+        _PARSE,
+        VecStore,
+    )
+
+    n_shards = n_shards or derive_n_shards(len(ids))
+    qu = unit_query(query_vec)
+    excl = set(exclude_ids)
+    ef = max(ef_search, k + len(excl))
+    emb = dict(zip(ids, embs))
+    rows: list = []
+    for s in range(n_shards):
+        sids = sorted(i for i in ids if i % n_shards == s)
+        if not sids:
+            continue
+        vecs = [emb[i] for i in sids]
+        mat = VecStore.unit(sids, vecs)
+        if kind == "nsw":
+            adj = build_shard_adjacency(sids, mat, m_neighbors, EF_CONSTRUCTION)
+            graph = {"neighbors": [adj[i] for i in sids]}
+        else:
+            levels, adj = build_shard_layers(
+                sids, mat, m_neighbors, EF_CONSTRUCTION
+            )
+            graph = {
+                "layers": [
+                    [adj[lv][i] for lv in range(levels[i] + 1)] for i in sids
+                ]
+            }
+        tbl = pa.table(
+            {
+                "vec_id": pa.array(sids, pa.int64()),
+                "embedding": pa.array(vecs, pa.list_(pa.float64())),
+                **graph,
+            }
+        )
+        state = _PARSE[kind](tbl, None, s, kind)
+        rows += _ANSWERS[kind](state, qu, k, ef, 0, excl, None)
+    return rows
 
 
 def _topk_sql(cand_ids: list, k: int) -> str:
@@ -85,81 +148,20 @@ def _topk_sql(cand_ids: list, k: int) -> str:
     )
 
 
-def nsw_topk_oracle() -> str:
-    """Replay the NSW build + walk per shard via the shared kernels;
-    emit SQL that re-scores and re-ranks the walked candidates."""
-    import pandas as pd
-
-    from pdf_etl_ocr_inference_spark.operators.graph_ann import (
-        EF_CONSTRUCTION,
-        VecStore,
-        build_shard_adjacency,
-        derive_n_shards,
-        search_shard_nsw,
-    )
-
+def _graph_topk_oracle(kind: str) -> str:
+    """Replay the ``kind`` build + walk per shard; emit SQL that
+    re-scores and re-ranks the walked candidates."""
     sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", _DEFAULT_SF)
     ids, embs = _corpus(sf_dir)
-    n_shards = derive_n_shards(len(ids))  # same rule as the entry
-    pos = {i: r for r, i in enumerate(ids)}  # O(1) lookups, not .index
-    qu = _query_unit(ids, embs)
-    excl = set(_EXCLUDE)
-    ef = max(_EF_SEARCH, _K + len(excl))
-    cand: list = []
-    for s in range(n_shards):
-        sids = [i for i in ids if i % n_shards == s]
-        if not sids:
-            continue
-        mat = VecStore.unit(
-            sids, pd.Series([embs[pos[i]] for i in sids])
-        )
-        adj = build_shard_adjacency(sids, mat, _M, EF_CONSTRUCTION)
-        rows = search_shard_nsw(sids, mat, adj, qu, _K, ef, excl)
-        cand.extend(i for i, _ in rows)
-    return _topk_sql(cand, _K)
+    rows = replay_topk(
+        kind, ids, embs, embs[ids.index(0)], exclude_ids=_EXCLUDE
+    )
+    return _topk_sql([i for i, _ in rows], _K)
+
+
+def nsw_topk_oracle() -> str:
+    return _graph_topk_oracle("nsw")
 
 
 def hnsw_topk_oracle() -> str:
-    """Same doctrine for the layered graph: shared build + layered
-    descent kernels, SQL re-scores the walked candidates."""
-    import pandas as pd
-
-    from pdf_etl_ocr_inference_spark.operators.graph_ann import (
-        EF_CONSTRUCTION,
-        VecStore,
-        derive_n_shards,
-    )
-    from pdf_etl_ocr_inference_spark.operators.hnsw import (
-        _search_shard,
-        build_shard_layers,
-    )
-
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", _DEFAULT_SF)
-    ids, embs = _corpus(sf_dir)
-    n_shards = derive_n_shards(len(ids))  # same rule as the entry
-    pos = {i: r for r, i in enumerate(ids)}  # O(1) lookups, not .index
-    qu = _query_unit(ids, embs)
-    excl = set(_EXCLUDE)
-    ef = max(_EF_SEARCH, _K + len(excl))
-    cand: list = []
-    for s in range(n_shards):
-        sids = [i for i in ids if i % n_shards == s]
-        if not sids:
-            continue
-        mat = VecStore.unit(
-            sids, pd.Series([embs[pos[i]] for i in sids])
-        )
-        levels, adj = build_shard_layers(sids, mat, _M, EF_CONSTRUCTION)
-        pdf = pd.DataFrame(
-            {
-                "vec_id": sids,
-                "embedding": [embs[pos[i]] for i in sids],
-                "layers": [
-                    [adj[l][i] for l in range(levels[i] + 1)]
-                    for i in sids
-                ],
-            }
-        )
-        rows = _search_shard(pdf, qu, _K, ef, excl)
-        cand.extend(i for i, _ in rows)
-    return _topk_sql(cand, _K)
+    return _graph_topk_oracle("hnsw")

@@ -849,9 +849,10 @@ def ann_opq_topk(spark: SparkSession, sf: str) -> DataFrame:
 
 @register(
     "ann_nsw_topk",
-    # LAZY ORACLE (r9, verdict #4): the build+walk kernel is shared
-    # verbatim with the generator (plans/graph_sql.py), which replays
-    # it from the parquet and emits SQL that independently re-scores
+    # LAZY ORACLE (r9, verdict #4): the build kernel, the loader's
+    # parse and the served walk are shared verbatim with the generator
+    # (plans/graph_sql.replay_topk), which replays them from the
+    # parquet and emits SQL that independently re-scores
     # and re-ranks the walked candidates by exact cosine — the
     # eigh/SVD lazy-oracle doctrine applied to the graph family.
     # Recall floor + determinism + design-regime properties remain in
@@ -860,18 +861,17 @@ def ann_opq_topk(spark: SparkSession, sf: str) -> DataFrame:
     doc="sharded small-world graph ANN (NSW, the single-layer core of "
     "HNSW): independent per-shard graphs built in applyInPandas "
     "(build parallelism = shard count; per-shard rebuilds), queried "
-    "by scatter-gather greedy beam search — per-shard cost tracks "
-    "ef*M walk length, not shard size; exact cosine on the walked "
-    "vectors, k-row global merge. The fourth ANN family next to "
-    "LSH / IVF / PQ.",
+    "through serve_topk: a greedy beam search of every shard's graph "
+    "pinned in worker memory — per-shard cost tracks ef*M walk "
+    "length, not shard size; exact cosine on the walked vectors, "
+    "k-row global merge in the driver. The fourth ANN family next "
+    "to LSH / IVF / PQ.",
 )
 def ann_nsw_topk(spark: SparkSession, sf: str) -> DataFrame:
-
     from pdf_etl_ocr_inference_spark.operators.graph_ann import (
         build_nsw_index,
-        topk_nsw,
     )
-
+    from pdf_etl_ocr_inference_spark.operators.serving import serve_topk
     from pdf_etl_ocr_inference_spark.scratch import scratch_dir
 
     emb = _t(spark, sf, "embeddings")
@@ -888,7 +888,10 @@ def ann_nsw_topk(spark: SparkSession, sf: str) -> DataFrame:
         float(v)
         for v in emb.filter(F.col("vec_id") == 0).first()["embedding"]
     ]
-    return topk_nsw(spark, path, qvec, k=5, ef_search=32, exclude_ids=[0])
+    return serve_topk(
+        spark, path, [(0, qvec)], k=5, ef_search=32, exclude_ids=[0],
+        kind="nsw",
+    ).select("vec_id", "score")
 
 
 @register(
@@ -899,7 +902,8 @@ def ann_nsw_topk(spark: SparkSession, sf: str) -> DataFrame:
     doc="sharded HIERARCHICAL small-world graph ANN (HNSW, Malkov & "
     "Yashunin 2016; ref anchor ocr:145-170): deterministic geometric "
     "layer assignment (pure function of the id), per-shard "
-    "multi-layer graphs built in applyInPandas, queried by layered "
+    "multi-layer graphs built in applyInPandas, queried through "
+    "serve_topk from worker-pinned shards by layered "
     "descent (ef=1 per upper layer) + layer-0 beam search — the "
     "express layers cut entry-to-neighborhood hops to O(log n), "
     "which is what keeps recall at fixed ef as the corpus grows. "
@@ -907,10 +911,8 @@ def ann_nsw_topk(spark: SparkSession, sf: str) -> DataFrame:
     "ANN family: LSH / IVF / PQ+OPQ / NSW / HNSW.",
 )
 def ann_hnsw_topk(spark: SparkSession, sf: str) -> DataFrame:
-    from pdf_etl_ocr_inference_spark.operators.hnsw import (
-        build_hnsw_index,
-        topk_hnsw,
-    )
+    from pdf_etl_ocr_inference_spark.operators.hnsw import build_hnsw_index
+    from pdf_etl_ocr_inference_spark.operators.serving import serve_topk
     from pdf_etl_ocr_inference_spark.scratch import scratch_dir
 
     emb = _t(spark, sf, "embeddings")
@@ -922,17 +924,19 @@ def ann_hnsw_topk(spark: SparkSession, sf: str) -> DataFrame:
         float(v)
         for v in emb.filter(F.col("vec_id") == 0).first()["embedding"]
     ]
-    return topk_hnsw(spark, path, qvec, k=5, ef_search=32, exclude_ids=[0])
+    return serve_topk(
+        spark, path, [(0, qvec)], k=5, ef_search=32, exclude_ids=[0],
+        kind="hnsw",
+    ).select("vec_id", "score")
 
 
 @register(
     "ann_served_topk",
-    # the SAME lazy oracle as ann_nsw_topk (r9): the served path runs
-    # the identical graph (same build params, same corpus), identical
-    # walk (_greedy_search at the same ef), identical excl/merge/tie
-    # order and rounding — served ≡ batch is asserted exactly in
-    # tests/test_serving.py, and the batch path's shared-kernel
-    # replay (plans/graph_sql.py) therefore oracles this entry too.
+    # the SAME lazy oracle as ann_nsw_topk (r9): both entries build
+    # the same graph and answer through serve_topk, and the oracle's
+    # Spark-free replay (plans/graph_sql.replay_topk) runs the same
+    # build kernel, loader parse and served walk; served ≡ replay is
+    # asserted exactly in tests/test_serving.py.
     graph_sql.nsw_topk_oracle,
     doc="the PINNED-INDEX serving path (ref ocr:167-170's online "
     "query shape): top-k answered from per-shard NSW graphs cached "

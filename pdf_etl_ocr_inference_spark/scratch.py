@@ -85,13 +85,3 @@ def atomic_write_json(path: str, obj) -> None:
             os.remove(tmp)
         raise
 
-
-def new_build_id() -> str:
-    """Unique nonce stamped into an index meta at build time and
-    included in worker shard-cache keys: rebuilding an index at the
-    SAME path restarts versions at 0, so without the nonce a
-    long-lived executor would keep serving the pre-rebuild cache
-    entry keyed (path, shard, 0) (ADVICE r3)."""
-    import uuid
-
-    return uuid.uuid4().hex[:12]

@@ -10,10 +10,8 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from pdf_etl_ocr_inference_spark.operators.graph_ann import (
-    build_nsw_index,
-    topk_nsw,
-)
+from pdf_etl_ocr_inference_spark.operators.graph_ann import build_nsw_index
+from pdf_etl_ocr_inference_spark.operators.serving import serve_topk
 
 SF = "/root/testdata/sf0.001"
 
@@ -45,8 +43,12 @@ def test_partition_invariance(spark, tmp_path):
         float(v)
         for v in emb.filter(F.col("vec_id") == 0).first()["embedding"]
     ]
-    r1 = topk_nsw(spark, p1, qvec, k=5, exclude_ids=[0]).collect()
-    r2 = topk_nsw(spark, p2, qvec, k=5, exclude_ids=[0]).collect()
+    r1 = serve_topk(
+        spark, p1, [(0, qvec)], k=5, exclude_ids=[0], kind="nsw"
+    ).select("vec_id", "score").collect()
+    r2 = serve_topk(
+        spark, p2, [(0, qvec)], k=5, exclude_ids=[0], kind="nsw"
+    ).select("vec_id", "score").collect()
     assert [tuple(r) for r in r1] == [tuple(r) for r in r2]
 
 
@@ -56,9 +58,10 @@ def test_recall_and_exact_scores(spark, graph_path):
         float(v)
         for v in emb.filter(F.col("vec_id") == 0).first()["embedding"]
     ]
-    got = topk_nsw(
-        spark, graph_path, qvec, k=5, ef_search=32, exclude_ids=[0]
-    ).collect()
+    got = serve_topk(
+        spark, graph_path, [(0, qvec)], k=5, ef_search=32, exclude_ids=[0],
+        kind="nsw",
+    ).select("vec_id", "score").collect()
     assert len(got) == 5
     # exact scores
     vecs = {r["vec_id"]: np.asarray(r["embedding"]) for r in emb.collect()}
@@ -113,14 +116,15 @@ def test_design_regime_recall_is_one(spark, tmp_path):
     build_nsw_index(spark, corpus, path, n_shards=4, m_neighbors=8)
     rows = corpus.filter(F.col("vec_id") % 5 == 0).collect()
     for r in rows[:5]:
-        got = topk_nsw(
+        got = serve_topk(
             spark,
             path,
-            [float(v) for v in r["embedding"]],
+            [(0, [float(v) for v in r["embedding"]])],
             k=4,
             ef_search=32,
             exclude_ids=[r["vec_id"]],
-        ).collect()
+            kind="nsw",
+        ).select("vec_id", "score").collect()
         q = r["vec_id"]
         assert {x["vec_id"] for x in got} == {q + 1, q + 2, q + 3, q + 4}
 
@@ -143,8 +147,15 @@ def test_varying_norms_walk_agrees_with_cosine(spark, tmp_path):
         float(v)
         for v in emb.filter(F.col("vec_id") == 0).first()["embedding"]
     ]
-    r1 = [tuple(r) for r in topk_nsw(spark, p1, qvec, k=5, exclude_ids=[0]).collect()]
-    r2 = [tuple(r) for r in topk_nsw(spark, p2, qvec, k=5, exclude_ids=[0]).collect()]
+    r1, r2 = (
+        [
+            tuple(r)
+            for r in serve_topk(
+                spark, p, [(0, qvec)], k=5, exclude_ids=[0], kind="nsw"
+            ).select("vec_id", "score").collect()
+        ]
+        for p in (p1, p2)
+    )
     assert r1 == r2
 
 
@@ -239,9 +250,9 @@ def test_derive_n_shards_rule_and_default(spark, tmp_path):
     same row count (plans/graph_sql.py imports this function)."""
     from pdf_etl_ocr_inference_spark.operators.graph_ann import (
         GRAPH_SHARD_TARGET_ROWS,
-        _read_meta,
         derive_n_shards,
     )
+    from pdf_etl_ocr_inference_spark.operators.shard_server import read_meta
 
     t = GRAPH_SHARD_TARGET_ROWS
     assert derive_n_shards(0) == 1
@@ -257,7 +268,7 @@ def test_derive_n_shards_rule_and_default(spark, tmp_path):
     n = emb.count()
     path = str(tmp_path / "g_derived")
     build_nsw_index(spark, emb, path)  # no explicit n_shards
-    meta = _read_meta(path)
+    meta = read_meta(path, "nsw")
     assert meta["n_shards"] == derive_n_shards(n)
     shards = {
         r["shard"] for r in spark.read.parquet(path).select("shard").collect()

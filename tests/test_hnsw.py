@@ -13,8 +13,8 @@ from pyspark.sql import functions as F
 from pdf_etl_ocr_inference_spark.operators.hnsw import (
     build_hnsw_index,
     node_level,
-    topk_hnsw,
 )
+from pdf_etl_ocr_inference_spark.operators.serving import serve_topk
 
 SF = "/root/testdata/sf0.001"
 
@@ -50,8 +50,12 @@ def test_partition_invariance(spark, tmp_path):
         float(v)
         for v in emb.filter(F.col("vec_id") == 0).first()["embedding"]
     ]
-    r1 = topk_hnsw(spark, p1, qvec, k=5, exclude_ids=[0]).collect()
-    r2 = topk_hnsw(spark, p2, qvec, k=5, exclude_ids=[0]).collect()
+    r1 = serve_topk(
+        spark, p1, [(0, qvec)], k=5, exclude_ids=[0], kind="hnsw"
+    ).select("vec_id", "score").collect()
+    r2 = serve_topk(
+        spark, p2, [(0, qvec)], k=5, exclude_ids=[0], kind="hnsw"
+    ).select("vec_id", "score").collect()
     assert [tuple(r) for r in r1] == [tuple(r) for r in r2]
 
 
@@ -61,7 +65,6 @@ def test_recall_floor_at_least_nsw_and_exact_scores(spark, tmp_path):
     )
     from pdf_etl_ocr_inference_spark.operators.graph_ann import (
         build_nsw_index,
-        topk_nsw,
     )
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
@@ -89,14 +92,16 @@ def test_recall_floor_at_least_nsw_and_exact_scores(spark, tmp_path):
         }
         got_h = {
             r["vec_id"]
-            for r in topk_hnsw(
-                spark, hp, qvec, k=5, ef_search=32, exclude_ids=[qid]
+            for r in serve_topk(
+                spark, hp, [(0, qvec)], k=5, ef_search=32,
+                exclude_ids=[qid], kind="hnsw",
             ).collect()
         }
         got_n = {
             r["vec_id"]
-            for r in topk_nsw(
-                spark, np_, qvec, k=5, ef_search=32, exclude_ids=[qid]
+            for r in serve_topk(
+                spark, np_, [(0, qvec)], k=5, ef_search=32,
+                exclude_ids=[qid], kind="nsw",
             ).collect()
         }
         hnsw_hits += len(got_h & truth)
@@ -106,8 +111,9 @@ def test_recall_floor_at_least_nsw_and_exact_scores(spark, tmp_path):
             r["vec_id"]: np.asarray(r["embedding"]) for r in emb.collect()
         }
         q = np.asarray(qvec)
-        for r in topk_hnsw(
-            spark, hp, qvec, k=5, ef_search=32, exclude_ids=[qid]
+        for r in serve_topk(
+            spark, hp, [(0, qvec)], k=5, ef_search=32, exclude_ids=[qid],
+            kind="hnsw",
         ).collect():
             v = vecs[r["vec_id"]]
             expect = float(q @ v / (np.linalg.norm(q) * np.linalg.norm(v)))
@@ -143,14 +149,15 @@ def test_design_regime_recall_is_one(spark, tmp_path):
     build_hnsw_index(spark, corpus, path, n_shards=4, m_neighbors=8)
     rows = corpus.filter(F.col("vec_id") % 5 == 0).collect()
     for r in rows[:5]:
-        got = topk_hnsw(
+        got = serve_topk(
             spark,
             path,
-            [float(v) for v in r["embedding"]],
+            [(0, [float(v) for v in r["embedding"]])],
             k=4,
             ef_search=32,
             exclude_ids=[r["vec_id"]],
-        ).collect()
+            kind="hnsw",
+        ).select("vec_id", "score").collect()
         q = r["vec_id"]
         assert {x["vec_id"] for x in got} == {q + 1, q + 2, q + 3, q + 4}
 

@@ -12,17 +12,23 @@ from pyspark.sql import functions as F
 from pdf_etl_ocr_inference_spark.operators.hnsw import (
     build_hnsw_index,
     refresh_hnsw_index,
-    topk_hnsw,
 )
 from pdf_etl_ocr_inference_spark.operators.serving import serve_topk
 
+from .conftest import replayed_topk
 
-def _vecs(spark, ids, shift=0.0):
-    rows = [
+
+def _rows(ids, shift=0.0):
+    return [
         (i, [float((i * 7 + j * 3) % 11) - 5.0 + shift for j in range(8)])
         for i in ids
     ]
-    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+def _vecs(spark, ids, shift=0.0):
+    return spark.createDataFrame(
+        _rows(ids, shift), "vec_id long, embedding array<double>"
+    )
 
 
 def test_refresh_equals_rebuild_touched_only(spark, tmp_path):
@@ -86,7 +92,9 @@ def test_refresh_invalidates_hnsw_serving(spark, tmp_path):
     refresh_hnsw_index(spark, path, changes, version=1)
     after = serve_topk(spark, path, [(0, q)], k=3, kind="hnsw").collect()
     assert 8 not in {r["vec_id"] for r in after}
-    batch = topk_hnsw(spark, path, q, k=3).collect()
-    assert [(r["vec_id"], r["score"]) for r in after] == [
-        (r["vec_id"], r["score"]) for r in batch
-    ]
+    # and equals the Spark-free replay of a build + walk of the
+    # post-change corpus
+    ids, embs = zip(*_rows([i for i in range(40) if i != 8]))
+    assert [(r["vec_id"], r["score"]) for r in after] == replayed_topk(
+        "hnsw", list(ids), list(embs), q, 3, n_shards=4, m_neighbors=4
+    )

@@ -225,3 +225,60 @@ def test_one_lru_implementation():
         "hand-rolled LRU eviction outside shard_server.PinCache — make "
         "the cache a PinCache:\n" + "\n".join(sites)
     )
+
+
+# ---------------------------------------------------------------------------
+# One index format.  ``shard_server`` owns the on-disk layout of every
+# served index: it mints build ids (``new_build_id()``) and writes the
+# ``shard=N`` directories (``<writer>.partitionBy("shard")``).  A build
+# elsewhere goes through ``shard_server.write_shards`` /
+# ``publish_build``.  ``Window.partitionBy("shard")`` is not a write and
+# is allowed.
+# ---------------------------------------------------------------------------
+
+
+def _on_writer(node: ast.AST) -> bool:
+    """True when ``node`` chains through a ``.write`` attribute."""
+    while isinstance(node, (ast.Attribute, ast.Call)):
+        if isinstance(node, ast.Attribute):
+            if node.attr == "write":
+                return True
+            node = node.value
+        else:
+            node = node.func
+    return False
+
+
+def _index_format_sites(path: pathlib.Path) -> list[str]:
+    tree = ast.parse(path.read_text(), filename=str(path))
+    rel = path.relative_to(PKG).as_posix()
+    out = []
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        name = _call_name(node)
+        if name == "new_build_id" or (
+            name == "partitionBy"
+            and isinstance(node.func, ast.Attribute)
+            and _on_writer(node.func.value)
+            and any(
+                isinstance(a, ast.Constant) and a.value == "shard"
+                for a in node.args
+            )
+        ):
+            out.append((node.lineno, f"{rel}:{node.lineno}"))
+    return [site for _, site in sorted(out)]
+
+
+def test_one_index_format_owner():
+    sites = [
+        s
+        for p in sorted(PKG.rglob("*.py"))
+        if p.name != "shard_server.py"
+        for s in _index_format_sites(p)
+    ]
+    assert not sites, (
+        "index build id or shard directory written outside shard_server "
+        "— use shard_server.write_shards / publish_build:\n"
+        + "\n".join(sites)
+    )

@@ -1,6 +1,8 @@
-"""Pinned-index serving (operators/serving.py): served results equal
-the batch query paths, refresh invalidates the pinned state (version-
-keyed cache), and the batch-of-queries shape answers every query.
+"""Pinned-index serving (operators/serving.py): served graph results
+equal the Spark-free replay of the same build and walk
+(``plans/graph_sql.replay_topk``), refresh invalidates the pinned
+state (version-keyed cache), and the batch-of-queries shape answers
+every query.
 """
 
 from __future__ import annotations
@@ -11,13 +13,12 @@ from pyspark.sql import functions as F
 from pdf_etl_ocr_inference_spark.operators.graph_ann import (
     build_nsw_index,
     refresh_nsw_index,
-    topk_nsw,
 )
-from pdf_etl_ocr_inference_spark.operators.hnsw import (
-    build_hnsw_index,
-    topk_hnsw,
-)
+from pdf_etl_ocr_inference_spark.operators.hnsw import build_hnsw_index
 from pdf_etl_ocr_inference_spark.operators.serving import serve_topk
+from pdf_etl_ocr_inference_spark.plans.graph_sql import _corpus
+
+from .conftest import replayed_topk
 
 SF = "/root/testdata/sf0.001"
 
@@ -28,38 +29,31 @@ def _qvec(emb, vid=0):
     ]
 
 
-def test_served_equals_batch_nsw_and_hnsw(spark, tmp_path):
+def test_served_equals_replay_nsw_and_hnsw(spark, tmp_path):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     np_, hp = str(tmp_path / "nsw"), str(tmp_path / "hnsw")
     build_nsw_index(spark, emb, np_, n_shards=4, m_neighbors=8)
     build_hnsw_index(spark, emb, hp, n_shards=4, m_neighbors=8)
     qvec = _qvec(emb)
-    batch_n = [
-        (r["vec_id"], r["score"])
-        for r in topk_nsw(spark, np_, qvec, k=5, exclude_ids=[0]).collect()
-    ]
+    ids, embs = _corpus(SF)
     served_n = [
         (r["vec_id"], r["score"])
         for r in serve_topk(
             spark, np_, [(0, qvec)], k=5, exclude_ids=[0], kind="nsw"
-        )
-        .orderBy(F.desc("score"), "vec_id")
-        .collect()
+        ).collect()
     ]
-    assert served_n == batch_n
-    batch_h = [
-        (r["vec_id"], r["score"])
-        for r in topk_hnsw(spark, hp, qvec, k=5, exclude_ids=[0]).collect()
-    ]
+    assert served_n == replayed_topk(
+        "nsw", ids, embs, qvec, 5, exclude_ids=[0], n_shards=4
+    )
     served_h = [
         (r["vec_id"], r["score"])
         for r in serve_topk(
             spark, hp, [(0, qvec)], k=5, exclude_ids=[0], kind="hnsw"
-        )
-        .orderBy(F.desc("score"), "vec_id")
-        .collect()
+        ).collect()
     ]
-    assert served_h == batch_h
+    assert served_h == replayed_topk(
+        "hnsw", ids, embs, qvec, 5, exclude_ids=[0], n_shards=4
+    )
 
 
 def test_batch_queries_answer_all(spark, tmp_path):
@@ -84,16 +78,18 @@ def test_refresh_invalidates_pinned_state(spark, tmp_path):
     folds a delete + insert, a served query must reflect the NEW
     graph even though the old shard state was pinned by query 1."""
 
-    def vecs(ids, shift=0.0):
-        rows = [
+    def rows(ids, shift=0.0):
+        return [
             (
                 i,
                 [float((i * 7 + j * 3) % 11) - 5.0 + shift for j in range(8)],
             )
             for i in ids
         ]
+
+    def vecs(ids, shift=0.0):
         return spark.createDataFrame(
-            rows, "vec_id long, embedding array<double>"
+            rows(ids, shift), "vec_id long, embedding array<double>"
         )
 
     path = str(tmp_path / "g")
@@ -108,11 +104,11 @@ def test_refresh_invalidates_pinned_state(spark, tmp_path):
     refresh_nsw_index(spark, path, changes, version=1)
     after = serve_topk(spark, path, [(0, q)], k=3, kind="nsw").collect()
     assert 8 not in {r["vec_id"] for r in after}
-    # and the served result equals the batch path on the new graph
-    batch = topk_nsw(spark, path, q, k=3).collect()
-    assert [(r["vec_id"], r["score"]) for r in after] == [
-        (r["vec_id"], r["score"]) for r in batch
-    ]
+    # and the served result equals the replay of the new graph
+    ids, embs = zip(*rows([i for i in range(40) if i != 8]))
+    assert [(r["vec_id"], r["score"]) for r in after] == replayed_topk(
+        "nsw", list(ids), list(embs), q, 3, n_shards=4, m_neighbors=4
+    )
 
 
 def test_bad_kind_rejected(spark, tmp_path):

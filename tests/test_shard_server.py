@@ -29,12 +29,15 @@ from pdf_etl_ocr_inference_spark.operators.serving import (
 )
 from pdf_etl_ocr_inference_spark.operators import serving
 from pdf_etl_ocr_inference_spark.operators.shard_server import (
+    META_FILES,
     WORKER_CACHE,
     _load_shard,
     read_meta,
     round_half_up,
     shard_token,
 )
+
+from .conftest import SF0001
 
 DOCS = [
     (0, "spark join spark join spark"),
@@ -292,3 +295,52 @@ def test_round_half_up_matches_spark_round(spark):
     want = [r["r"] for r in df.select(F.round("x", 6).alias("r")).collect()]
     got = round_half_up(np.asarray(vals, dtype="float64"), 6).tolist()
     assert got == want
+
+
+def test_graph_walks_the_vectors_it_was_built_on(spark, tmp_path):
+    """The unit matrix a graph shard is built with (its rows as the
+    build task sees them, normalised by ``VecStore.unit``) equals, bit
+    for bit, the one ``_load_shard`` pins for the walk."""
+    from pdf_etl_ocr_inference_spark.operators.graph_ann import (
+        build_nsw_index,
+    )
+    from pdf_etl_ocr_inference_spark.operators.shard_server import VecStore
+
+    emb = spark.read.parquet(f"{SF0001}/embeddings.parquet")
+    path = str(tmp_path / "nsw")
+    build_nsw_index(spark, emb, path, n_shards=2)
+    token = shard_token(read_meta(path, "nsw"))
+    for shard in range(2):
+        pdf = pd.read_parquet(f"{path}/shard={shard}").sort_values("vec_id")
+        ids = pdf["vec_id"].tolist()
+        built = VecStore.unit(ids, pdf["embedding"])
+        pinned = _load_shard(path, shard, "nsw", token)[0]
+        assert sorted(pinned) == ids
+        rows = pinned.V[[pinned.idx[i] for i in ids]]
+        assert rows.tobytes() == built.V.tobytes(), shard
+
+
+@pytest.mark.parametrize("kind", sorted(META_FILES))
+def test_missing_meta_is_one_clear_error(spark, tmp_path, kind):
+    """Every kind's refresh on a path with no index meta raises a
+    ValueError naming the kind and the path."""
+    from pdf_etl_ocr_inference_spark.operators.graph_ann import (
+        refresh_nsw_index,
+    )
+    from pdf_etl_ocr_inference_spark.operators.hnsw import refresh_hnsw_index
+    from pdf_etl_ocr_inference_spark.operators.search import (
+        refresh_postings_index,
+    )
+
+    refresh = {
+        "nsw": refresh_nsw_index,
+        "hnsw": refresh_hnsw_index,
+        "pq": serving.refresh_pq_serving_index,
+        "ivf": serving.refresh_ivf_serving_index,
+        "ivfpq": serving.refresh_ivfpq_serving_index,
+        "postings": refresh_postings_index,
+    }[kind]
+    path = str(tmp_path / "missing")
+    with pytest.raises(ValueError, match="build") as err:
+        refresh(spark, path, None, 1)
+    assert kind in str(err.value).lower() and path in str(err.value)
