@@ -2,9 +2,25 @@
 
 All-native Column implementations (no Python UDFs): hashing uses
 ``xxhash64``/``md5`` built-ins, shingling uses higher-order array
-functions, candidate generation is a band-bucket self-join — the
-standard MinHash-LSH construction (Broder 1997; Leskovec et al.,
-"Mining of Massive Datasets" ch.3), expressed Spark-first.
+functions, candidate generation is banded bucketing — the standard
+MinHash-LSH construction (Broder 1997; Leskovec et al., "Mining of
+Massive Datasets" ch.3), expressed Spark-first.
+
+Every bucketed near-pair operator here and elsewhere in the package
+(MinHash and SimHash dedup, the incremental MinHash index, embedding
+LSH pairs, the near-pairs rewrite, gram-share pairs) is built from
+one kernel, one function per step:
+
+- :func:`shingle_signatures` — MinHash signature per grouping key;
+- :func:`band_buckets` — the per-band bucket ids of a signature;
+- :func:`bucket_pairs` — group by bucket, pair each bucket's sorted
+  members (optionally capped, with the drop logged), built on
+  :func:`ordered_pairs`, the one i<j pair generator;
+- :func:`jaccard` — the one verification score over shingle sets;
+- :func:`expand_groups` — re-expand verified representative pairs
+  through their member arrays, plus each group's internal pairs;
+- :func:`latest_live` — the index liveness rule (latest commit
+  version wins, live beats tombstone).
 
 Scale notes (100 TB):
 - exact dedup = hash-groupBy: one shuffle on a 32-byte key, heavily
@@ -13,30 +29,51 @@ Scale notes (100 TB):
   space (~2^64) spreads DISTINCT documents thinly, but d EXACT
   duplicates share every band bucket → d²/2 candidate pairs per band
   — quadratic exactly on the mass-duplicated corpora (boilerplate
-  pages, mirrored docs) near-dedup exists for.  So the bucket join
+  pages, mirrored docs) near-dedup exists for.  So the bucket pairing
   runs on one representative per distinct shingle set (exact-dup
   cliques collapse BEFORE banding; verified pairs re-expand through
-  the survivor map afterwards, so the emitted pair set is unchanged).
+  the member arrays afterwards, so the emitted pair set is unchanged).
   Candidate verification re-joins shingle sets only for candidate
   pairs among representatives (tiny vs corpus).
+- The collapsed group frame feeds several branches (signatures,
+  both verify sides, expansion, intra-group pairs), so it is
+  materialised once by an eager checkpoint (``layout.truncate_lineage``)
+  when the operator is called: the operator runs that job up front,
+  and leaves no cached frame behind — the checkpoint's blocks go
+  when the returned frame is dropped (ContextCleaner).
 - SimHash: 64-bit fingerprint per doc; near-dup = identical fingerprint
-  per rotated band table (Manku et al. WWW'07 style), again join-based
-  — with the same collapse applied on the fingerprint value itself.
-- Both candidate joins take an optional ``bucket_cap``: adversarial
-  buckets (many DISTINCT values sharing one bucket) truncate to the
-  cap's lowest ids with the dropped-row count LOGGED (never silent).
+  per rotated band table (Manku et al. WWW'07 style), bucketed the
+  same way — with the same collapse applied on the fingerprint value.
+- Both candidate generators take an optional ``bucket_cap``:
+  adversarial buckets (many DISTINCT values sharing one bucket)
+  truncate to the cap's lowest members with the dropped-row count
+  LOGGED (never silent).
 """
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from pdf_etl_ocr_inference_spark.functions.text import (
     doc_fingerprint,
     word_ngrams,
 )
-from pdf_etl_ocr_inference_spark.operators.layout import ensure_min_parallelism
+from pdf_etl_ocr_inference_spark.operators.layout import (
+    ensure_min_parallelism,
+    truncate_lineage,
+)
+
+log = logging.getLogger(__name__)
+
+# MinHash shape: every caller used 32 hashes in 8 bands of 4 rows over
+# word 3-gram shingles, so they are constants, not options.
+NUM_HASHES = 32
+NUM_BANDS = 8
+SHINGLE_N = 3
 
 # ------------------------------------------------------------------
 # Hash families
@@ -112,6 +149,182 @@ def band_bucket(sig: Column, band: Column, rpb, family: str) -> Column:
     raise ValueError(f"unknown hash family {family!r}")
 
 
+def band_buckets(sig: Column, num_bands: int, family: str) -> Column:
+    """The ``num_bands`` bucket ids of a signature as one array
+    (``posexplode`` it into ``(band, bucket)`` rows); a band is
+    ``len(sig) / num_bands`` signature rows.  The one band expression:
+    the batch pipeline and the incremental index bucket alike by
+    construction."""
+    rpb = (F.size(sig) / num_bands).cast("int")
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(num_bands - 1)),
+        lambda b: band_bucket(sig, b, rpb, family),
+    )
+
+
+# ------------------------------------------------------------------
+# Bucketed near-pair kernel
+# ------------------------------------------------------------------
+
+
+def ordered_pairs(
+    members: DataFrame, ids: str, a: str = "id_a", b: str = "id_b"
+) -> DataFrame:
+    """Every pair ``(a, b)`` of each row's SORTED member array ``ids``
+    with ``a`` ahead of ``b`` — so ``a < b`` for distinct members.
+
+    Two chained explodes: one row per member with its position, then
+    one row per later partner.  Per-row memory is one member array,
+    never the materialised pair set, so a pathological group streams
+    its n²/2 pairs.  Rows with fewer than two members emit nothing.
+    """
+    with_a = members.filter(F.size(ids) >= 2).select(
+        ids, F.posexplode(ids).alias("_i", a)
+    )
+    return with_a.select(
+        a, F.explode(F.slice(ids, F.col("_i") + 2, F.size(ids))).alias(b)
+    )
+
+
+def bucket_pairs(
+    rows: DataFrame,
+    keys: list[str],
+    member: Column | str,
+    bucket_cap: int | None = None,
+    a: str = "id_a",
+    b: str = "id_b",
+) -> DataFrame:
+    """Pairs of distinct members that share a bucket: group ``rows``
+    by ``keys``, sort each bucket's distinct members and pair them
+    (:func:`ordered_pairs`).  ONE bucket shuffle instead of a two-sided
+    self-join (r8), with the join's strict ``a < b``: a member
+    repeated in one bucket never pairs with itself.  A pair comes out
+    once per bucket it shares; callers ``distinct`` or count.
+
+    ``bucket_cap`` keeps each bucket's ``cap`` LOWEST members (the
+    survivors of the old windowed rank) and logs how many it dropped
+    — one extra job; recall, not correctness, is affected.
+
+    Memory bound: a bucket's member list is ONE aggregation buffer.
+    Sort-based aggregation falls back to spilling rows BETWEEN
+    groups, never within one, so the largest bucket's list must fit
+    in one task's heap (about 8 bytes per id member); ``bucket_cap``
+    bounds the pairs, not that buffer.  The member-id lists of the
+    collapse groups (:func:`shingle_clique_groups`,
+    :func:`hamming_near_pairs`) carry the same bound.
+    """
+    buckets = (
+        rows.groupBy(*keys)
+        .agg(
+            F.sort_array(F.array_distinct(F.collect_list(member))).alias(
+                "_ids"
+            )
+        )
+        .filter(F.size("_ids") >= 2)
+    )
+    if bucket_cap is not None:
+        dropped = buckets.agg(
+            F.sum(
+                F.greatest(F.size("_ids") - bucket_cap, F.lit(0))
+            ).alias("_d")
+        ).first()["_d"]
+        if dropped:
+            log.warning(
+                "bucket_cap=%d dropped %d bucket member(s) from "
+                "candidate generation (recall, not correctness, is "
+                "affected)",
+                bucket_cap,
+                int(dropped),
+            )
+        buckets = buckets.withColumn("_ids", F.slice("_ids", 1, bucket_cap))
+    return ordered_pairs(buckets, "_ids", a, b)
+
+
+def shingle_signatures(
+    rows: DataFrame, keys: list[str], shingles: Column, hash_family: str
+) -> DataFrame:
+    """``keys + sig``: the MinHash signature (array<long>, length
+    ``NUM_HASHES``) of each key group's distinct ``shingles``.  The
+    one signature function: the batch pipeline keys by representative
+    id, the incremental index by ``(id, _deleted)``.
+
+    Hash family: xxhash64(shingle, seed=i) — independent seeds give
+    independent permutation approximations; all JVM-native.
+    ``hash_family="md5"`` is the DuckDB-replayable affine family (one
+    md5 per shingle + exact integer affine maps — see module header),
+    which lets the oracle gate hash-check the output.
+
+    Formulation: explode shingles → ``NUM_HASHES`` seeded
+    min-aggregates → repack as array.  One shuffle keyed by the group
+    with full map-side combine (partial mins), and every hash stays
+    inside whole-stage codegen.  The alternative — nested
+    ``array_min(transform(...))`` once per seed — builds a lambda
+    expression per hash that is interpreted per array element and
+    bloats codegen compile time by seconds per query.
+
+    Groups with zero shingles (documents shorter than ``SHINGLE_N``
+    words) drop out, which is correct for dedup: they collide with
+    nothing.
+    """
+    exploded = rows.select(*keys, F.explode(shingles).alias("_sh"))
+    hs = seeded_hashes("_sh", NUM_HASHES, hash_family)
+    per_key = exploded.groupBy(*keys).agg(
+        *[F.min(h).alias(f"_h{i}") for i, h in enumerate(hs)]
+    )
+    return per_key.select(
+        *keys,
+        F.array(*[F.col(f"_h{i}") for i in range(NUM_HASHES)]).alias("sig"),
+    )
+
+
+def jaccard(a: str, b: str) -> Column:
+    """Exact Jaccard similarity of two distinct-element arrays."""
+    return F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b))
+
+
+def expand_groups(
+    rep_pairs: DataFrame, groups: DataFrame, score: str, intra: Column
+) -> DataFrame:
+    """Member pairs ``(id_a < id_b, score)`` of a collapsed run.
+
+    ``rep_pairs`` holds the verified representative pairs with both
+    sides' member arrays (``_ids_a``, ``_ids_b``) and their ``score``;
+    ``groups`` has the sorted member array ``_ids`` of every group.  A
+    verified pair (A, B) emits every (x ∈ A, y ∈ B) by chained
+    explodes over the arrays riding the pair — output-sized work, no
+    joins — and every group with >1 member emits its internal pairs
+    at score ``intra`` (what two identical members score).  Together
+    that is exactly the pair set of the uncollapsed pipeline.
+    """
+    inter = (
+        rep_pairs.select(F.explode("_ids_a").alias("_xa"), "_ids_b", score)
+        .select("_xa", F.explode("_ids_b").alias("_xb"), score)
+        .select(
+            F.least("_xa", "_xb").alias("id_a"),
+            F.greatest("_xa", "_xb").alias("id_b"),
+            score,
+        )
+    )
+    intra_pairs = ordered_pairs(groups, "_ids").withColumn(score, intra)
+    return inter.unionByName(intra_pairs)
+
+
+def latest_live(rows: DataFrame, keys: list[str]) -> DataFrame:
+    """The liveness rule of the append-only indexes: per ``keys`` the
+    row with the latest ``_commit_version`` wins, and a live row beats
+    a tombstone (``_deleted``) at equal version (an in-place update
+    that stays in its bucket).  Keys whose winner is a tombstone drop
+    out; every column of ``rows`` is kept."""
+    w = Window.partitionBy(*keys).orderBy(
+        F.desc("_commit_version"), F.asc("_deleted")
+    )
+    return (
+        rows.withColumn("_rn", F.row_number().over(w))
+        .filter((F.col("_rn") == 1) & (~F.col("_deleted")))
+        .drop("_rn")
+    )
+
+
 # ------------------------------------------------------------------
 # Exact dedup
 # ------------------------------------------------------------------
@@ -153,139 +366,40 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 # ------------------------------------------------------------------
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 32,
-    shingle_n: int = 3,
-    hash_family: str = "xxhash64",
-) -> DataFrame:
-    """id + MinHash signature (array<long>) per document.
-
-    Hash family: xxhash64(shingle, seed=i) — independent seeds give
-    independent permutation approximations; all JVM-native.  Pass
-    ``hash_family="md5"`` for the DuckDB-replayable affine family
-    (one md5 per shingle + 32 exact integer affine maps — see module
-    header), which lets the driver gate hash-check the output.
-
-    Formulation: explode distinct shingles → ``num_hashes`` seeded
-    min-aggregates → repack as array.  One shuffle keyed by doc id
-    with full map-side combine (partial mins), and every hash stays
-    inside whole-stage codegen.  The alternative — nested
-    ``array_min(transform(...))`` once per seed — builds a lambda
-    expression per hash that is interpreted per array element and
-    bloats codegen compile time by seconds per query.
-
-    Documents with zero shingles (shorter than ``shingle_n`` words)
-    drop out here, which is correct for dedup: they collide with
-    nothing.
-    """
-    exploded = ensure_min_parallelism(df).select(
-        F.col(id_col),
-        F.explode(F.array_distinct(word_ngrams(text_col, shingle_n))).alias(
-            "_sh"
-        ),
-    )
-    hs = seeded_hashes("_sh", num_hashes, hash_family)
-    per_doc = exploded.groupBy(id_col).agg(
-        *[F.min(h).alias(f"_h{i}") for i, h in enumerate(hs)]
-    )
-    return per_doc.select(
-        F.col(id_col),
-        F.array(*[F.col(f"_h{i}") for i in range(num_hashes)]).alias("sig"),
-    )
-
-
 def minhash_lsh_candidates(
     sigs: DataFrame,
     id_col: str,
     num_bands: int = 8,
-    rows_per_band: int | None = None,
     bucket_cap: int | None = None,
     hash_family: str = "xxhash64",
 ) -> DataFrame:
     """Band the signatures and pair up each (band, band-hash) bucket.
 
     Output: candidate pairs ``id_a < id_b`` with the number of bands
-    in which they collided (dedup over bands built in).
+    in which they collided (dedup over bands built in).  A band is
+    ``len(sig) / num_bands`` signature rows.
 
-    Shape (r8): GROUP the banded rows by bucket and generate the
-    i<j pairs from each bucket's sorted id list — NOT a self-join.
-    The self-join evaluated the whole signature-aggregation subtree
-    once per join side (two full 32-min-agg passes) and shuffled
-    both sides on the bucket key; this is ONE pass and ONE bucket
-    shuffle, measured 21% faster on the candidate stage at sf0.1
-    with bit-identical output (pair generation is two chained
-    explodes, so per-row memory is one bucket's id list, never the
-    materialized pair set — a pathological bucket streams its
-    cap²/2 pairs exactly like the join did).
+    Shape (r8): :func:`bucket_pairs`, NOT a self-join.  The self-join
+    evaluated the whole signature-aggregation subtree once per join
+    side (two full 32-min-agg passes) and shuffled both sides on the
+    bucket key; this is ONE pass and ONE bucket shuffle, measured 21%
+    faster on the candidate stage at sf0.1 with bit-identical output.
 
-    ``bucket_cap`` keeps each bucket's ``cap`` LOWEST ids (a sorted-
-    list slice — same survivor set as the old windowed rank), with
-    the dropped-member count logged (No-silent-caps).  Callers that
-    collapse exact-dup cliques first (``minhash_dedup_pairs``)
-    rarely need it; it is the backstop against adversarial
-    near-collisions among DISTINCT signatures.
+    ``bucket_cap`` (logged truncation to each bucket's lowest ids) is
+    the backstop against adversarial near-collisions among DISTINCT
+    signatures; callers that collapse exact-dup cliques first
+    (``minhash_dedup_pairs``) rarely need it.
     """
-    if rows_per_band is not None:
-        rpb = F.lit(rows_per_band)
-    else:
-        rpb = (F.size("sig") / num_bands).cast("int")
     banded = sigs.select(
         id_col,
         F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(num_bands - 1)),
-                lambda b: band_bucket(F.col("sig"), b, rpb, hash_family),
-            )
+            band_buckets(F.col("sig"), num_bands, hash_family)
         ).alias("band", "bucket"),
     )
-    # array_distinct matches the old self-join's strict id_a < id_b
-    # guard under duplicate input ids: a repeated id in one bucket
-    # would otherwise emit an id_a == id_b self-pair
-    buckets = (
-        banded.groupBy("band", "bucket")
-        .agg(
-            F.sort_array(
-                F.array_distinct(F.collect_list(id_col))
-            ).alias("_ids")
-        )
-        .filter(F.size("_ids") >= 2)
-    )
-    if bucket_cap is not None:
-        dropped = buckets.agg(
-            F.sum(
-                F.greatest(F.size("_ids") - bucket_cap, F.lit(0))
-            ).alias("_d")
-        ).first()["_d"]
-        if dropped:
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "bucket_cap=%d dropped %d bucket member(s) from "
-                "candidate generation (recall, not correctness, is "
-                "affected)",
-                bucket_cap,
-                int(dropped),
-            )
-        buckets = buckets.withColumn(
-            "_ids", F.slice("_ids", 1, bucket_cap)
-        ).filter(F.size("_ids") >= 2)
-    # chained explodes: (bucket, ids) -> one row per id_a with its
-    # ordered partners -> one row per (id_a, id_b), id_a < id_b by
-    # the sort above
-    with_a = buckets.select(
-        "_ids", F.posexplode("_ids").alias("_i", "id_a")
-    )
-    pairs = with_a.select(
-        "id_a",
-        F.explode(
-            F.slice("_ids", F.col("_i") + 2, F.size("_ids"))
-        ).alias("id_b"),
-    )
-    return pairs.groupBy("id_a", "id_b").agg(
-        F.count("*").alias("n_bands")
+    return (
+        bucket_pairs(banded, ["band", "bucket"], id_col, bucket_cap)
+        .groupBy("id_a", "id_b")
+        .agg(F.count("*").alias("n_bands"))
     )
 
 
@@ -293,7 +407,6 @@ def shingle_clique_groups(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Collapse exact-duplicate shingle sets to one GROUP row each.
 
@@ -303,7 +416,7 @@ def shingle_clique_groups(
     sorted set joined on ``\\x1f`` — injective on sets, same
     collision budget as ``exact_dedup``'s md5).
 
-    Returns the lazily-persisted frame
+    Returns the checkpointed frame
     ``(_fp, _s struct(<id>, shingles), _ids array<id>)`` — one row
     per DISTINCT shingle set: ``_s`` is the min-id survivor with its
     shingle set, ``_ids`` the sorted member ids.  This is the
@@ -317,17 +430,19 @@ def shingle_clique_groups(
     struct per fingerprint per map task; ``collect_list`` ships ids
     only), so a 10k-deep boilerplate clique ships each map task's
     one survivor candidate instead of routing 10k full shingle
-    arrays into a single window partition — and the persisted frame
-    holds shingles for DISTINCT sets only, not every row.  The one
-    pass feeds every downstream branch (signature build, both verify
-    sides, both expansion sides, intra-clique pairs) as a cache
-    read; MEMORY_AND_DISK, so at 100 TB the blocks spill instead of
-    OOM.
+    arrays into a single window partition — and the frame holds
+    shingles for DISTINCT sets only, not every row.  The one pass
+    feeds every downstream branch (signature build, both verify
+    sides, expansion, intra-clique pairs), so it is materialised by
+    an eager checkpoint (``truncate_lineage``): this call runs one
+    job, and nothing stays cached once the frame is dropped.  A
+    clique's member-id list is one aggregation buffer (the bound
+    :func:`bucket_pairs` states).
     """
     sh_expr = F.array_sort(
-        F.array_distinct(word_ngrams(text_col, shingle_n))
+        F.array_distinct(word_ngrams(text_col, SHINGLE_N))
     )
-    return (
+    return truncate_lineage(
         ensure_min_parallelism(df)
         .select(F.col(id_col), sh_expr.alias("shingles"))
         .withColumn("_fp", F.md5(F.concat_ws("\x1f", F.col("shingles"))))
@@ -338,47 +453,19 @@ def shingle_clique_groups(
             ).alias("_s"),
             F.sort_array(F.collect_list(id_col)).alias("_ids"),
         )
-        .persist()
     )
-
-
-def shingle_cliques(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    shingle_n: int = 3,
-) -> tuple[DataFrame, DataFrame]:
-    """Row-level view of :func:`shingle_clique_groups`:
-    ``(reps, smap)`` — ``reps(id, shingles)`` one row per DISTINCT
-    shingle set (the survivor's), ``smap(id, _fp, _keep)`` covering
-    every input row.  Kept for callers that want the survivor map
-    shape; the near-dedup pipeline consumes the group frame
-    directly."""
-    grp = shingle_clique_groups(df, text_col, id_col, shingle_n)
-    reps = grp.select(
-        F.col(f"_s.{id_col}").alias(id_col), F.col("_s.shingles").alias("shingles")
-    )
-    smap = grp.select(
-        F.explode("_ids").alias(id_col),
-        "_fp",
-        F.col(f"_s.{id_col}").alias("_keep"),
-    )
-    return reps, smap
 
 
 def minhash_rep_pairs(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    num_hashes: int = 32,
-    num_bands: int = 8,
-    shingle_n: int = 3,
     jaccard_threshold: float = 0.5,
     bucket_cap: int | None = None,
     hash_family: str = "xxhash64",
 ) -> tuple[DataFrame, DataFrame]:
     """The near-dedup pipeline UP TO clique expansion: returns
-    ``(grp, vrep)`` — the persisted clique-group frame
+    ``(grp, vrep)`` — the checkpointed clique-group frame
     (:func:`shingle_clique_groups`) and the VERIFIED representative-
     level pairs ``(id_a, id_b, _ids_a, _ids_b, jaccard)`` with
     ``id_a < id_b`` (both are clique survivors; member arrays ride
@@ -388,31 +475,18 @@ def minhash_rep_pairs(
     (connected components, cluster collapse) should work on this
     frame instead — d-deep duplicate cliques contribute ONE node,
     not d, to whatever runs next."""
-    if num_hashes % num_bands:
-        raise ValueError("num_bands must divide num_hashes")
-    grp = shingle_clique_groups(df, text_col, id_col, shingle_n)
+    grp = shingle_clique_groups(df, text_col, id_col)
     reps = grp.select(
         F.col(f"_s.{id_col}").alias(id_col),
         F.col("_s.shingles").alias("shingles"),
     )
-
     # signatures over representative shingle sets (shingles computed
-    # once — the pre-collapse path re-ran word_ngrams inside
-    # minhash_signatures)
-    exploded = reps.select(F.col(id_col), F.explode("shingles").alias("_sh"))
-    hs = seeded_hashes("_sh", num_hashes, hash_family)
-    per_doc = exploded.groupBy(id_col).agg(
-        *[F.min(h).alias(f"_h{i}") for i, h in enumerate(hs)]
-    )
-    sigs = per_doc.select(
-        F.col(id_col),
-        F.array(*[F.col(f"_h{i}") for i in range(num_hashes)]).alias("sig"),
-    )
+    # once, in the group frame)
+    sigs = shingle_signatures(reps, [id_col], F.col("shingles"), hash_family)
     cands = minhash_lsh_candidates(
         sigs,
         id_col,
-        num_bands,
-        rows_per_band=num_hashes // num_bands,
+        NUM_BANDS,
         bucket_cap=bucket_cap,
         hash_family=hash_family,
     )
@@ -432,11 +506,7 @@ def minhash_rep_pairs(
     vrep = (
         cands.join(ga, "id_a")
         .join(gb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
+        .withColumn("jaccard", jaccard("sh_a", "sh_b"))
         .filter(F.col("jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", "_ids_a", "_ids_b", "jaccard")
     )
@@ -447,9 +517,6 @@ def minhash_dedup_pairs(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    num_hashes: int = 32,
-    num_bands: int = 8,
-    shingle_n: int = 3,
     jaccard_threshold: float = 0.5,
     bucket_cap: int | None = None,
     hash_family: str = "xxhash64",
@@ -460,60 +527,36 @@ def minhash_dedup_pairs(
     (sorted, distinct) shingle set — Jaccard is a pure function of
     that set, so clique members are interchangeable — and only the
     min-id representative of each distinct set is shingled into the
-    band join.  d identical documents therefore contribute ONE row
+    band buckets.  d identical documents therefore contribute ONE row
     per band bucket instead of d (candidate volume stays linear in
     planted duplication; the pre-collapse join was d²/2 per band —
     the realistic 100 TB worst case, since pretraining corpora carry
     thousands-deep boilerplate/mirror cliques).
 
     Candidates among representatives verify by exact Jaccard on the
-    representative shingle sets, then re-expand through the survivor
-    map: an inter-clique verified pair (A, B) emits every (x ∈ A,
-    y ∈ B), and every clique with >1 member emits its internal pairs
-    at jaccard 1.0 — exactly the pair set the uncollapsed pipeline
-    produced (expansion cost ∝ output size, which is irreducible for
-    pair output).  Output: ``id_a, id_b, jaccard`` for pairs ≥
-    threshold.  ``bucket_cap`` additionally bounds adversarial
-    buckets among DISTINCT sets (logged truncation).
+    representative shingle sets, then re-expand through the member
+    arrays (:func:`expand_groups`): an inter-clique verified pair
+    (A, B) emits every (x ∈ A, y ∈ B), and every clique with >1
+    member emits its internal pairs at jaccard 1.0 — exactly the pair
+    set the uncollapsed pipeline produced (expansion cost ∝ output
+    size, which is irreducible for pair output).  Output: ``id_a,
+    id_b, jaccard`` for pairs ≥ threshold.  ``bucket_cap``
+    additionally bounds adversarial buckets among DISTINCT sets
+    (logged truncation).  Runs the clique-group checkpoint job when
+    called and leaves no cached frame.
     """
     grp, vrep = minhash_rep_pairs(
         df,
         text_col,
         id_col,
-        num_hashes=num_hashes,
-        num_bands=num_bands,
-        shingle_n=shingle_n,
         jaccard_threshold=jaccard_threshold,
         bucket_cap=bucket_cap,
         hash_family=hash_family,
     )
-    # inter-clique expansion by chained explodes over the member
-    # arrays already riding the verified pairs — (member x of
-    # clique(id_a), member y of clique(id_b)) — output-sized work,
-    # no further joins (r13; the r12 shape joined two member-exploded
-    # projections of a survivor map per side)
-    inter = (
-        vrep
-        .select(F.explode("_ids_a").alias("_xa"), "_ids_b", "jaccard")
-        .select("_xa", F.explode("_ids_b").alias("_xb"), "jaccard")
-        .select(
-            F.least("_xa", "_xb").alias("id_a"),
-            F.greatest("_xa", "_xb").alias("id_b"),
-            "jaccard",
-        )
-    )
-    cl = grp.filter(F.size("_ids") >= 2).select("_ids")
-    with_a = cl.select("_ids", F.posexplode("_ids").alias("_i", "id_a"))
-    intra = with_a.select(
-        "id_a",
-        F.explode(
-            F.slice("_ids", F.col("_i") + 2, F.size("_ids"))
-        ).alias("id_b"),
-        F.lit(1.0).alias("jaccard"),
-    )
-    if jaccard_threshold > 1.0:
-        return inter  # degenerate threshold: even exact dups fail it
-    return inter.unionByName(intra)
+    pairs = expand_groups(vrep, grp, "jaccard", F.lit(1.0))
+    # intra-clique pairs score 1.0, so a threshold above 1 drops them
+    # too (verified pairs already passed it)
+    return pairs.filter(F.col("jaccard") >= jaccard_threshold)
 
 
 # ------------------------------------------------------------------
@@ -525,7 +568,6 @@ def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    shingle_n: int = 3,
     threshold: float = 0.2,
 ) -> DataFrame:
     """Exact pairwise n-gram Jaccard ≥ threshold.
@@ -535,18 +577,14 @@ def ngram_jaccard_pairs(
     """
     sh = ensure_min_parallelism(df).select(
         F.col(id_col),
-        F.array_distinct(word_ngrams(text_col, shingle_n)).alias("sh"),
+        F.array_distinct(word_ngrams(text_col, SHINGLE_N)).alias("sh"),
     )
     a = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
     return (
         a.crossJoin(b)
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
+        .withColumn("jaccard", jaccard("sh_a", "sh_b"))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -640,23 +678,26 @@ def hamming_near_pairs(
     Block-permutation candidate generation (Manku et al., WWW'07):
     split the 64-bit fingerprint into ``num_blocks`` 16-bit blocks; two
     fingerprints within hamming r < num_blocks must agree on ≥1 block →
-    join per block, verify with bit_count(xor).  Works for any 64-bit
+    pair per block bucket (:func:`bucket_pairs`), verify with
+    bit_count(xor).  Works for any 64-bit
     locality-preserving hash (SimHash over text, dHash over images).
 
     EQUAL FINGERPRINTS COLLAPSE FIRST: the pair predicate is a pure
     function of the two hash values, so rows group by value and only
-    one representative per DISTINCT fingerprint enters the block join
-    — d identical fingerprints (mass-duplicated docs/images hash
+    one representative per DISTINCT fingerprint enters the block
+    buckets — d identical fingerprints (mass-duplicated docs/images hash
     identically) contribute 1 row per block instead of d (the
     pre-collapse join paid d²/2 candidates per block).  Verified
     value pairs re-expand through the value groups afterwards, plus
-    each >1-member group's internal pairs at hamming 0, reproducing
-    the uncollapsed pair set exactly.
+    each >1-member group's internal pairs at hamming 0
+    (:func:`expand_groups`), reproducing the uncollapsed pair set
+    exactly.  Runs the group-frame checkpoint job when called and
+    leaves no cached frame.
 
     Completeness requires ``max_hamming < num_blocks`` (pigeonhole);
     rejected otherwise instead of silently losing recall.  Wider radii
     → more, narrower blocks (e.g. 8 blocks of 8 bits for radius ≤ 7),
-    which also widens the candidate join — the usual LSH trade.
+    which also widens the candidate buckets — the usual LSH trade.
     ``bucket_cap`` bounds adversarial buckets (many DISTINCT values
     sharing one block value) with logged truncation.
     """
@@ -672,27 +713,26 @@ def hamming_near_pairs(
     # all-bits mask in signed-64 arithmetic is -1
     mask = (1 << width) - 1 if width < 64 else -1
     vals = fps.select(F.col(id_col), F.col(hash_col).alias("_fpv"))
-    # persist the per-DISTINCT-fingerprint group frame: it feeds five
-    # downstream branches (block join, both expansion sides, the
-    # intra pairs) and each reference would otherwise re-run the
+    # checkpoint the per-DISTINCT-fingerprint group frame: it feeds
+    # four downstream branches (block buckets, both expansion sides,
+    # the intra pairs) and each reference would otherwise re-run the
     # upstream fingerprint computation (a 64-agg shuffle for SimHash,
-    # a pandas-UDF pass for dHash).  r13 (guide §2.3/§2.4): the
-    # grouping is a map-side-COMBINABLE aggregate (one partial row
-    # per fingerprint value per map task) instead of the r12
-    # ``min() over (partition by _fpv)`` window that routed every
-    # member row of a mass-duplicated fingerprint into one window
-    # partition; the member ids ride as a sorted array so expansion
-    # needs no survivor-map joins.  Lazy persist, MEMORY_AND_DISK.
-    grp = (
-        vals.groupBy("_fpv")
-        .agg(
+    # a pandas-UDF pass for dHash).  Eager, so this call runs one
+    # job, and nothing stays cached once the frame is dropped.  r13
+    # (guide §2.3/§2.4): the grouping is a map-side-COMBINABLE
+    # aggregate (one partial row per fingerprint value per map task)
+    # instead of the r12 ``min() over (partition by _fpv)`` window
+    # that routed every member row of a mass-duplicated fingerprint
+    # into one window partition; the member ids ride as a sorted
+    # array (one aggregation buffer — the bound :func:`bucket_pairs`
+    # states) so expansion needs no survivor-map joins.
+    grp = truncate_lineage(
+        vals.groupBy("_fpv").agg(
             F.min(id_col).alias("_keep"),
-            F.sort_array(F.collect_list(id_col)).alias("_mids"),
+            F.sort_array(F.collect_list(id_col)).alias("_ids"),
         )
-        .persist()
     )
-    groups = grp.select("_fpv", "_keep")
-    blocked = groups.select(
+    blocked = grp.select(
         "_fpv",
         "_keep",
         F.posexplode(
@@ -706,52 +746,21 @@ def hamming_near_pairs(
             )
         ).alias("block_idx", "block_val"),
     )
-    # bucket-group pair generation (r8, same shape as
-    # minhash_lsh_candidates): ONE shuffle on the block key instead
-    # of a two-sided self-join; each block bucket's i<j pairs come
-    # from its (_keep, _fpv)-sorted struct list via chained explodes
-    # (per-row memory = one bucket's list; sort is by _keep first, so
-    # the _ka < _kb orientation of the join version is preserved —
-    # _keep values are distinct across distinct fingerprints)
-    buckets = (
-        blocked.groupBy("block_idx", "block_val")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("_keep", "_fpv"))
-            ).alias("_g")
-        )
-        .filter(F.size("_g") >= 2)
-    )
-    if bucket_cap is not None:
-        dropped = buckets.agg(
-            F.sum(
-                F.greatest(F.size("_g") - bucket_cap, F.lit(0))
-            ).alias("_d")
-        ).first()["_d"]
-        if dropped:
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "bucket_cap=%d dropped %d bucket member(s) from "
-                "candidate generation (recall, not correctness, is "
-                "affected)",
-                bucket_cap,
-                int(dropped),
-            )
-        buckets = buckets.withColumn(
-            "_g", F.slice("_g", 1, bucket_cap)
-        ).filter(F.size("_g") >= 2)
-    with_a = buckets.select(
-        "_g", F.posexplode("_g").alias("_i", "_a")
-    )
+    # bucket members are (_keep, _fpv) structs, sorted by _keep first,
+    # so pairs keep the _ka < _kb orientation of the join version
+    # (_keep values are distinct across distinct fingerprints)
     value_pairs = (
-        with_a.select(
-            F.col("_a._fpv").alias("fp_a"),
-            F.explode(
-                F.slice("_g", F.col("_i") + 2, F.size("_g"))
-            ).alias("_b"),
+        bucket_pairs(
+            blocked,
+            ["block_idx", "block_val"],
+            F.struct("_keep", "_fpv"),
+            bucket_cap,
+            "_a",
+            "_b",
         )
-        .select("fp_a", F.col("_b._fpv").alias("fp_b"))
+        .select(
+            F.col("_a._fpv").alias("fp_a"), F.col("_b._fpv").alias("fp_b")
+        )
         .distinct()
         .withColumn(
             "hamming", F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
@@ -759,39 +768,19 @@ def hamming_near_pairs(
         .filter(F.col("hamming") <= max_hamming)
     )
     # expansion reads the member ARRAYS off the group frame (one join
-    # row per distinct fingerprint, chained explodes produce exactly
-    # the member pairs — output-sized work); intra pairs need no join
-    # at all — the bucket-pair chained-explode shape over the sorted
-    # member list
+    # row per distinct fingerprint)
     ma = grp.select(
-        F.col("_fpv").alias("fp_a"), F.col("_mids").alias("_ids_a")
+        F.col("_fpv").alias("fp_a"), F.col("_ids").alias("_ids_a")
     )
     mb = grp.select(
-        F.col("_fpv").alias("fp_b"), F.col("_mids").alias("_ids_b")
+        F.col("_fpv").alias("fp_b"), F.col("_ids").alias("_ids_b")
     )
-    inter = (
-        value_pairs.join(ma, "fp_a")
-        .join(mb, "fp_b")
-        .select(F.explode("_ids_a").alias("_xa"), "_ids_b", "hamming")
-        .select("_xa", F.explode("_ids_b").alias("_xb"), "hamming")
-        .select(
-            F.least("_xa", "_xb").alias("id_a"),
-            F.greatest("_xa", "_xb").alias("id_b"),
-            "hamming",
-        )
+    return expand_groups(
+        value_pairs.join(ma, "fp_a").join(mb, "fp_b"),
+        grp,
+        "hamming",
+        F.lit(0).cast("int"),
     )
-    cl = grp.filter(F.size("_mids") >= 2).select("_mids")
-    intra_a = cl.select(
-        "_mids", F.posexplode("_mids").alias("_i", "id_a")
-    )
-    intra = intra_a.select(
-        "id_a",
-        F.explode(
-            F.slice("_mids", F.col("_i") + 2, F.size("_mids"))
-        ).alias("id_b"),
-        F.lit(0).cast("int").alias("hamming"),
-    )
-    return inter.unionByName(intra)
 
 
 def simhash_near_pairs(
@@ -846,8 +835,6 @@ def connected_components(
     through every round would scale with the corpus, not the pair
     graph).  Raises if ``max_rounds`` is hit without convergence.
     """
-    from pdf_etl_ocr_inference_spark.operators.layout import truncate_lineage
-
     pairs = edges.select(
         F.col(id_a).alias("src"), F.col(id_b).alias("dst")
     ).filter(F.col("src") != F.col("dst"))

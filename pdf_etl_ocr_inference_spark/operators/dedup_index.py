@@ -13,8 +13,9 @@ table, maintained append-only from the change feed:
   insert/update_postimage (hashed from the NEW text), tombstones for
   delete/update_preimage (hashed from the OLD text — the preimage
   tells us which buckets the stale entry occupies, no index lookup);
-- probes resolve liveness per (id, band, bucket): latest version
-  wins, live beats tombstone at equal version;
+- probes resolve liveness per (id, band, bucket) with
+  ``dedup.latest_live``: latest version wins, live beats tombstone
+  at equal version;
 - a new-arrivals batch probes by joining its own band rows against
   the index buckets — cost ∝ |batch| × collisions, never a corpus
   scan — then exact-Jaccard-verifies candidates against corpus text
@@ -27,19 +28,36 @@ cost dominates the probe.  So the partition column is _pb =
 xxhash64(band, bucket) mod 256 alone (256 directories total, any
 num_bands), with (band, bucket) kept as sorted DATA columns so
 row-group min/max stats prune the equality probe inside each file.
+
+The index has the batch pipeline's fixed MinHash shape
+(``dedup.NUM_HASHES`` hashes, ``NUM_BANDS`` bands, ``SHINGLE_N``-gram
+shingles); its meta records only the hash family.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_etl_ocr_inference_spark.functions.text import word_ngrams
-from pdf_etl_ocr_inference_spark.optimizer import IndexCatalog
+from pdf_etl_ocr_inference_spark.operators.dedup import (
+    NUM_BANDS,
+    SHINGLE_N,
+    band_buckets,
+    jaccard,
+    latest_live,
+    shingle_signatures,
+)
+from pdf_etl_ocr_inference_spark.operators.layout import (
+    ensure_min_parallelism,
+    truncate_lineage,
+)
+from pdf_etl_ocr_inference_spark.optimizer import IndexCatalog, _index_dir
 
-MINHASH_INDEX_FORMAT = 2
+MINHASH_INDEX_FORMAT = 3
 _PARTITION_BUCKETS = 256
 
 
@@ -47,9 +65,6 @@ def _band_rows(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    num_hashes: int,
-    num_bands: int,
-    shingle_n: int,
     version: int,
     hash_family: str = "xxhash64",
 ) -> DataFrame:
@@ -59,42 +74,24 @@ def _band_rows(
     by (id, _deleted) so ONE pipeline handles a mixed change commit —
     an update contributes a live row hashed from its postimage text
     AND a tombstone hashed from its preimage text, without running
-    (and codegen-compiling) the minhash pipeline twice.  Bucket
-    values depend only on shingles and seeds, so they are identical
-    to ``operators.dedup.minhash_signatures``'s (the batch pipeline
-    the property tests compare against).
+    (and codegen-compiling) the minhash pipeline twice.  Signatures
+    and bands come from ``dedup.shingle_signatures`` and
+    ``dedup.band_buckets``, the functions the batch pipeline
+    (``minhash_dedup_pairs``) uses, so both compute the same buckets
+    by construction.
     """
-    from pdf_etl_ocr_inference_spark.operators.layout import (
-        ensure_min_parallelism,
+    sigs = shingle_signatures(
+        ensure_min_parallelism(df),
+        [id_col, "_deleted"],
+        F.array_distinct(word_ngrams(text_col, SHINGLE_N)),
+        hash_family,
     )
-
-    from pdf_etl_ocr_inference_spark.operators.dedup import (
-        band_bucket,
-        seeded_hashes,
-    )
-
-    rpb = num_hashes // num_bands
-    exploded = ensure_min_parallelism(df).select(
-        F.col(id_col),
-        F.col("_deleted"),
-        F.explode(
-            F.array_distinct(word_ngrams(text_col, shingle_n))
-        ).alias("_sh"),
-    )
-    hs = seeded_hashes("_sh", num_hashes, hash_family)
-    sigs = exploded.groupBy(id_col, "_deleted").agg(
-        *[F.min(h).alias(f"_h{i}") for i, h in enumerate(hs)]
-    )
-    sig = F.array(*[F.col(f"_h{i}") for i in range(num_hashes)])
     return (
         sigs.select(
             F.col(id_col),
             F.col("_deleted"),
             F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(num_bands - 1)),
-                    lambda b: band_bucket(sig, b, rpb, hash_family),
-                )
+                band_buckets(F.col("sig"), NUM_BANDS, hash_family)
             ).alias("band", "bucket"),
         )
         .withColumn("_commit_version", F.lit(version).cast("long"))
@@ -111,29 +108,19 @@ def build_minhash_index(
     table_key: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 32,
-    num_bands: int = 8,
-    shingle_n: int = 3,
     catalog: IndexCatalog | None = None,
     hash_family: str = "xxhash64",
 ) -> str:
     """Full (re)build at version 0 — also the compaction that folds
     accumulated tombstones away.  One corpus scan; band hashing is
-    the same seeded-xxhash64 pipeline as the batch dedup op."""
-    if num_hashes % num_bands:
-        raise ValueError("num_bands must divide num_hashes")
+    the same seeded pipeline as the batch dedup op."""
     cat = catalog or IndexCatalog()
-    from pdf_etl_ocr_inference_spark.optimizer import _index_dir
-
     d = _index_dir(cat.root, table_key)
     data_path = os.path.join(d, "data")
-    import shutil
-
     shutil.rmtree(data_path, ignore_errors=True)
     rows = _band_rows(
         corpus.withColumn("_deleted", F.lit(False)),
-        text_col, id_col, num_hashes, num_bands, shingle_n,
-        version=0, hash_family=hash_family,
+        text_col, id_col, version=0, hash_family=hash_family,
     )
     (
         rows.repartition("_pb")
@@ -149,9 +136,6 @@ def build_minhash_index(
             "format_version": MINHASH_INDEX_FORMAT,
             "data_path": data_path,
             "id_col": id_col,
-            "num_hashes": num_hashes,
-            "num_bands": num_bands,
-            "shingle_n": shingle_n,
             "hash_family": hash_family,
             "last_version": 0,
         },
@@ -201,11 +185,8 @@ def refresh_minhash_index(
         tagged,
         text_col,
         meta["id_col"],
-        meta["num_hashes"],
-        meta["num_bands"],
-        meta["shingle_n"],
         version=version,
-        hash_family=meta.get("hash_family", "xxhash64"),
+        hash_family=meta["hash_family"],
     )
     (
         rows.repartition("_pb")
@@ -226,18 +207,11 @@ def live_band_rows(
     """Liveness-resolved (id, band, bucket) view of the index: per
     (id, band, bucket) the latest version wins, live beats tombstone
     at equal version."""
-    from pyspark.sql.window import Window
-
     meta = _load_meta(table_key, catalog)
     idx = spark.read.parquet(meta["data_path"])
     id_col = meta["id_col"]
-    w = Window.partitionBy(id_col, "band", "bucket").orderBy(
-        F.desc("_commit_version"), F.asc("_deleted")
-    )
-    return (
-        idx.withColumn("_rn", F.row_number().over(w))
-        .filter((F.col("_rn") == 1) & (~F.col("_deleted")))
-        .select(id_col, "band", "bucket")
+    return latest_live(idx, [id_col, "band", "bucket"]).select(
+        id_col, "band", "bucket"
     )
 
 
@@ -271,20 +245,22 @@ def dedup_against_index(
     found via the index too.  Output: ``id_a < id_b, jaccard`` —
     exactly the batch-touching subset of ``minhash_dedup_pairs`` over
     the full corpus (the property pytest asserts).
+
+    The probe rows and the candidates' shingle sets each feed two
+    branches, so each is materialised by an eager checkpoint: this
+    call runs those jobs and leaves no cached frame.
     """
     meta = _load_meta(table_key, catalog)
     id_col = meta["id_col"]
-    probe = _band_rows(
-        new_docs.withColumn("_deleted", F.lit(False)),
-        text_col,
-        id_col,
-        meta["num_hashes"],
-        meta["num_bands"],
-        meta["shingle_n"],
-        version=0,
-        hash_family=meta.get("hash_family", "xxhash64"),
-    ).select(F.col(id_col).alias("_probe_id"), "band", "bucket", "_pb")
-    probe = probe.persist()
+    probe = truncate_lineage(
+        _band_rows(
+            new_docs.withColumn("_deleted", F.lit(False)),
+            text_col,
+            id_col,
+            version=0,
+            hash_family=meta["hash_family"],
+        ).select(F.col(id_col).alias("_probe_id"), "band", "bucket", "_pb")
+    )
     # touched partition directories — ≤ 256 values of control data,
     # collected driver-side into a simple IN-list predicate on the
     # partition column so it lands in PartitionFilters
@@ -297,22 +273,18 @@ def dedup_against_index(
     matched = idx.join(
         F.broadcast(probe.drop("_pb")), ["band", "bucket"]
     ).filter(F.col(id_col) != F.col("_probe_id"))
-    # liveness on the matched subset only
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(id_col, "band", "bucket", "_probe_id").orderBy(
-        F.desc("_commit_version"), F.asc("_deleted")
-    )
+    # liveness on the matched subset only.  Not materialised: the
+    # pruned, broadcast probe is cheap to run twice (once for the
+    # shingle fetch, once in the returned plan), and keeping it in the
+    # returned plan keeps the pruning and the broadcast visible there
     cands = (
-        matched.withColumn("_rn", F.row_number().over(w))
-        .filter((F.col("_rn") == 1) & (~F.col("_deleted")))
+        latest_live(matched, [id_col, "band", "bucket", "_probe_id"])
         .select(
             F.least(F.col(id_col), F.col("_probe_id")).alias("id_a"),
             F.greatest(F.col(id_col), F.col("_probe_id")).alias("id_b"),
         )
         .distinct()
     )
-    cands = cands.persist()
     # shingle ONLY candidate docs: the candidate-id set is small, so
     # it broadcasts into the corpus_text scan and the expensive
     # shingling runs on candidates alone — verification cost stays
@@ -321,26 +293,18 @@ def dedup_against_index(
         cands.select(F.explode(F.array("id_a", "id_b")).alias(id_col))
         .distinct()
     )
-    sh = (
-        corpus_text.join(F.broadcast(cand_ids), id_col)
-        .select(
+    sh = truncate_lineage(
+        corpus_text.join(F.broadcast(cand_ids), id_col).select(
             F.col(id_col),
-            F.array_distinct(
-                word_ngrams(text_col, meta["shingle_n"])
-            ).alias("_sh"),
+            F.array_distinct(word_ngrams(text_col, SHINGLE_N)).alias("_sh"),
         )
-        .persist()
     )
     sa = sh.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("sh_a"))
     sb = sh.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("sh_b"))
     return (
         cands.join(sa, "id_a")
         .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
+        .withColumn("jaccard", jaccard("sh_a", "sh_b"))
         .filter(F.col("jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", "jaccard")
     )

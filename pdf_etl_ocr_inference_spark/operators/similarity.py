@@ -33,6 +33,7 @@ from pdf_etl_ocr_inference_spark.functions.vector import (
     dot_product,
     l2_norm,
 )
+from pdf_etl_ocr_inference_spark.operators.dedup import bucket_pairs
 
 
 def _as_vec_lit(vec: list[float]) -> Column:
@@ -338,18 +339,19 @@ def lsh_near_pairs(
     similar pairs that straddle one hyperplane; with t tables a pair
     colliding in any table survives — miss probability decays
     exponentially in t (the OR-amplification MinHash banding uses).
-    Candidates are distinct-ed across tables before the (more
-    expensive) verification, so each pair verifies once.
+    Candidates are id-only bucket pairs (``dedup.bucket_pairs``, the
+    kernel every bucketed near-pair operator shares), distinct-ed
+    across tables before the (more expensive) verification, so each
+    pair verifies once.
     Verified-subset property is tested against brute force.
     """
     # r8 shape: buckets carry IDS ONLY — the old self-join shuffled
     # the full embedding arrays through BOTH sides of the bucket
     # exchange (2 × 8·dim bytes per banded row at 100 TB) and ran
     # the 3-table signature computation once per side.  Now one
-    # id-only bucket shuffle generates the distinct candidate pairs
-    # (chained explodes over each bucket's sorted id list, per-row
-    # memory = one bucket), and embeddings are fetched by id for the
-    # CANDIDATES only — the far smaller set — for verification.
+    # id-only bucket shuffle (dedup.bucket_pairs) generates the
+    # distinct candidate pairs, and embeddings are fetched by id for
+    # the CANDIDATES only — the far smaller set — for verification.
     exploded = df.select(
         id_col,
         F.posexplode(
@@ -363,29 +365,7 @@ def lsh_near_pairs(
             )
         ).alias("_table", "_sig"),
     )
-    # array_distinct: duplicate input ids must not become id_a ==
-    # id_b self-pairs (the old self-join's i<j guard was strict)
-    buckets = (
-        exploded.groupBy("_table", "_sig")
-        .agg(
-            F.sort_array(
-                F.array_distinct(F.collect_list(id_col))
-            ).alias("_ids")
-        )
-        .filter(F.size("_ids") >= 2)
-    )
-    with_a = buckets.select(
-        "_ids", F.posexplode("_ids").alias("_i", "id_a")
-    )
-    pairs = (
-        with_a.select(
-            "id_a",
-            F.explode(
-                F.slice("_ids", F.col("_i") + 2, F.size("_ids"))
-            ).alias("id_b"),
-        )
-        .distinct()
-    )
+    pairs = bucket_pairs(exploded, ["_table", "_sig"], id_col).distinct()
     ea = df.select(
         F.col(id_col).alias("id_a"), F.col(embedding_col).alias("e_a")
     )

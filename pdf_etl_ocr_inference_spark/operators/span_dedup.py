@@ -159,10 +159,14 @@ def dup_span_intervals(
         # shipped the ~n-token string on EVERY occurrence row; unique
         # grams are dropped before the explode re-expands
         # occurrences, so post-shuffle work is ∝ duplicated mass.
-        # Same hit set by construction.  A pathological gram buffers
-        # its occurrence list in one aggregation buffer — the same
-        # single-group cost the window paid, with the same
-        # sort-fallback/spill escape.
+        # Same hit set by construction.  Memory bound: a gram's
+        # occurrence list is ONE aggregation buffer, and sort-based
+        # aggregation fallback spills rows between groups, never
+        # within one — so the hottest gram's (id, pos) list must fit
+        # in one task's heap (the r12 window buffered it in a
+        # spillable array).  Passing ``max_doc_freq`` takes the
+        # join-based stats path below, which buffers no gram's list
+        # and drops (and logs) grams above the cap.
         g = (
             occ.groupBy("gram")
             .agg(
@@ -229,7 +233,8 @@ def dup_span_intervals_both(
     occ = positional_ngrams(df, text_col, id_col, n)
     # same combinable-aggregate hit derivation as the
     # dup_span_intervals fast path (r13, guide §2.3): the gram string
-    # ships once per map partition, occurrences ride as structs
+    # ships once per map partition, occurrences ride as structs —
+    # with the same bound, one gram's list in one task's heap
     hits = (
         occ.groupBy("gram")
         .agg(

@@ -48,6 +48,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pdf_etl_ocr_inference_spark.operators.dedup import (
+    bucket_pairs,
+    latest_live,
+)
+
 HINT_KEY = "spark_graft.similarity_hint"
 BM25_HINT_KEY = "spark_graft.bm25_hint"
 
@@ -412,25 +417,9 @@ def probe_lsh_index(
     # skip the per-bucket liveness window — one less shuffle on the
     # latency-critical probe path.
     if idx.get("last_version", 0) != 0:
-        cand = _resolve_live(cand, idx)
+        cand = latest_live(cand, [idx["id_col"], "_table", "_sig"])
     return cand.dropDuplicates([idx["id_col"]]).select(
         idx["id_col"], "embedding"
-    )
-
-
-def _resolve_live(rows: DataFrame, idx: dict) -> DataFrame:
-    """Per-bucket liveness: latest commit version wins; a live row
-    beats a tombstone at equal version (same-bucket in-place update).
-    Keeps ``_table``/``_sig`` so callers can still bucket-join."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(idx["id_col"], "_table", "_sig").orderBy(
-        F.desc("_commit_version"), F.asc("_deleted")
-    )
-    return (
-        rows.withColumn("_rn", F.row_number().over(w))
-        .filter((F.col("_rn") == 1) & (~F.col("_deleted")))
-        .drop("_rn")
     )
 
 
@@ -552,10 +541,12 @@ def rewrite_near_pairs(
     generation over the stored LSH index (Σ bucket² per table,
     OR-amplified across tables) + exact verification.
 
-    Every emitted pair is exact-verified, so the rewrite has zero
-    false positives; recall follows the LSH collision probability
-    (OR-amplified).  ``id_limit`` in the hint is honored so scoped
-    baselines rewrite consistently."""
+    The index rows are liveness-resolved (``dedup.latest_live``) and
+    paired per bucket by ``dedup.bucket_pairs`` — the same kernel as
+    ``lsh_near_pairs``.  Every emitted pair is exact-verified, so the
+    rewrite has zero false positives; recall follows the LSH
+    collision probability (OR-amplified).  ``id_limit`` in the hint
+    is honored so scoped baselines rewrite consistently."""
     from pdf_etl_ocr_inference_spark.functions.vector import (
         cosine_similarity,
     )
@@ -578,38 +569,18 @@ def rewrite_near_pairs(
         return df
 
     spark = df.sparkSession
-    live = _resolve_live(spark.read.parquet(idx["data_path"]), idx)
+    live = latest_live(
+        spark.read.parquet(idx["data_path"]), [idx["id_col"], "_table", "_sig"]
+    )
     if hint.get("id_limit") is not None:
         live = live.filter(F.col(idx["id_col"]) < hint["id_limit"])
     threshold = float(hint["threshold"])
     # id-only bucket pairing (r8, the lsh_near_pairs shape): one
-    # bucket shuffle of ids, pairs from each bucket's sorted list,
-    # embeddings fetched BY ID for the distinct candidates only —
-    # the old self-join moved the embedding arrays through both join
-    # sides and is the wrong byte volume at index scale
-    buckets = (
-        live.groupBy("_table", "_sig")
-        .agg(
-            # array_distinct: no id_a == id_b self-pairs under
-            # duplicate ids (matches the old join's strict i<j)
-            F.sort_array(
-                F.array_distinct(F.collect_list(idx["id_col"]))
-            ).alias("_ids")
-        )
-        .filter(F.size("_ids") >= 2)
-    )
-    with_a = buckets.select(
-        "_ids", F.posexplode("_ids").alias("_i", "id_a")
-    )
-    pairs = (
-        with_a.select(
-            "id_a",
-            F.explode(
-                F.slice("_ids", F.col("_i") + 2, F.size("_ids"))
-            ).alias("id_b"),
-        )
-        .distinct()  # a pair may collide in several tables
-    )
+    # bucket shuffle of ids, embeddings fetched BY ID for the distinct
+    # candidates only — the old self-join moved the embedding arrays
+    # through both join sides and is the wrong byte volume at index
+    # scale.  A pair may collide in several tables, hence distinct.
+    pairs = bucket_pairs(live, ["_table", "_sig"], idx["id_col"]).distinct()
     emb = live.select(
         F.col(idx["id_col"]).alias("_id"), "embedding"
     ).dropDuplicates(["_id"])
@@ -835,7 +806,7 @@ def knn_join(
     spark = queries.sparkSession
     live = spark.read.parquet(idx["data_path"])
     if idx.get("last_version", 0) != 0:
-        live = _resolve_live(live, idx)
+        live = latest_live(live, [idx["id_col"], "_table", "_sig"])
     id_col = idx["id_col"]
     cand = (
         qp.join(

@@ -78,7 +78,7 @@ _SHINGLES = (
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf: str) -> DataFrame:
     docs = _t(spark, sf, "documents").filter(F.col("doc_id") < 1000)
-    return ngram_jaccard_pairs(docs, "text", "doc_id", shingle_n=3, threshold=0.2)
+    return ngram_jaccard_pairs(docs, "text", "doc_id", threshold=0.2)
 
 
 
@@ -298,7 +298,7 @@ def dedup_minhash_bylabel(spark: SparkSession, sf: str) -> DataFrame:
     # one — together they oracle both families on the same fixture
     return minhash_dedup_pairs(
         docs, "text", "doc_id",
-        num_hashes=32, num_bands=8, jaccard_threshold=0.5,
+        jaccard_threshold=0.5,
         hash_family="md5",
     )
 
@@ -352,7 +352,7 @@ def dedup_minhash_bylabel_xx(spark: SparkSession, sf: str) -> DataFrame:
     docs = _bylabel_fixture(spark, sf, 100)
     return minhash_dedup_pairs(
         docs, "text", "doc_id",
-        num_hashes=32, num_bands=8, jaccard_threshold=0.5,
+        jaccard_threshold=0.5,
         hash_family="xxhash64",
     )
 
@@ -440,8 +440,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf: str) -> DataFrame:
         _t(spark, sf, "documents"),
         "text",
         "doc_id",
-        num_hashes=32,
-        num_bands=8,
         jaccard_threshold=0.5,
         hash_family="md5",
     )
@@ -1253,8 +1251,6 @@ def quality_cluster_members(spark: SparkSession, sf: str) -> DataFrame:
         docs,
         "text",
         "doc_id",
-        num_hashes=32,
-        num_bands=8,
         jaccard_threshold=0.5,
         hash_family="md5",
     )
@@ -1371,8 +1367,6 @@ def dedup_cross_source_matrix(spark: SparkSession, sf: str) -> DataFrame:
         docs,
         "text",
         "doc_id",
-        num_hashes=32,
-        num_bands=8,
         jaccard_threshold=0.5,
         hash_family="md5",
     ).select("id_a", "id_b")

@@ -17,6 +17,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pdf_etl_ocr_inference_spark.operators.dedup import (
+    bucket_pairs,
+    connected_components,
+    exact_dedup,
+)
 from pdf_etl_ocr_inference_spark.plans.registry import register
 from pdf_etl_ocr_inference_spark.sources.catalog import load_table as _t
 
@@ -297,9 +302,6 @@ def dedup_clusters(spark: SparkSession, sf: str) -> DataFrame:
 )
 def dedup_clusters_sv(spark: SparkSession, sf: str) -> DataFrame:
     from pdf_etl_ocr_inference_spark.functions.text import doc_fingerprint
-    from pdf_etl_ocr_inference_spark.operators.dedup import (
-        connected_components,
-    )
     docs = _t(spark, sf, "documents")
     # star edges per fingerprint group — see dedup_clusters (r8)
     from pyspark.sql import Window
@@ -712,8 +714,6 @@ def graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
         positional_ngrams,
     )
 
-    from pdf_etl_ocr_inference_spark.operators.dedup import exact_dedup
-
     docs = exact_dedup(
         _t(spark, sf, "documents").select("doc_id", "text"),
         "text",
@@ -743,31 +743,11 @@ def graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
 
 def _gram_share_pairs(occ: DataFrame) -> DataFrame:
     """Distinct cross-doc pairs (ia < ib) sharing a gram: ONE gram
-    shuffle — per-gram sorted distinct-id lists, pairs via chained
-    explodes (the r8 dedup bucket shape) — replacing the r1-r7
-    dup-filter + two-sided self-join, which shuffled the occurrence
-    table three times for the same pair set."""
-    buckets = (
-        occ.groupBy("gram")
-        .agg(
-            F.sort_array(F.array_distinct(F.collect_list("id"))).alias(
-                "_ids"
-            )
-        )
-        .filter(F.size("_ids") >= 2)
-    )
-    with_a = buckets.select(
-        "_ids", F.posexplode("_ids").alias("_i", "ia")
-    )
-    return (
-        with_a.select(
-            "ia",
-            F.explode(
-                F.slice("_ids", F.col("_i") + 2, F.size("_ids"))
-            ).alias("ib"),
-        )
-        .distinct()
-    )
+    shuffle (``dedup.bucket_pairs`` with the gram as the bucket) —
+    replacing the r1-r7 dup-filter + two-sided self-join, which
+    shuffled the occurrence table three times for the same pair
+    set."""
+    return bucket_pairs(occ, ["gram"], "id", a="ia", b="ib").distinct()
 
 
 @register(
@@ -833,7 +813,6 @@ def op90_recursive_cte(spark: SparkSession, sf: str) -> DataFrame:
     "families (operators/graph.py).",
 )
 def graph_triangles(spark: SparkSession, sf: str) -> DataFrame:
-    from pdf_etl_ocr_inference_spark.operators.dedup import exact_dedup
     from pdf_etl_ocr_inference_spark.operators.graph import (
         triangle_count,
     )
@@ -1212,7 +1191,6 @@ def _kcore_oracle_sql(k: int = 2, rounds: int = 8) -> str:
     "this corpus).",
 )
 def graph_kcore(spark: SparkSession, sf: str) -> DataFrame:
-    from pdf_etl_ocr_inference_spark.operators.dedup import exact_dedup
     from pdf_etl_ocr_inference_spark.operators.graph import k_core
     from pdf_etl_ocr_inference_spark.operators.span_dedup import (
         positional_ngrams,

@@ -1593,8 +1593,6 @@ def train_split_leakage(spark: SparkSession, sf: str) -> DataFrame:
         docs,
         "text",
         "doc_id",
-        num_hashes=32,
-        num_bands=8,
         jaccard_threshold=0.5,
         hash_family="md5",
     )

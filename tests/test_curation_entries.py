@@ -30,8 +30,6 @@ def _minhash_pairs(spark):
         _docs(spark).select("doc_id", "text"),
         "text",
         "doc_id",
-        num_hashes=32,
-        num_bands=8,
         jaccard_threshold=0.5,
         hash_family="md5",
     )
@@ -521,6 +519,18 @@ def test_span_intervals_both_leaves_no_persisted_frames(spark):
     assert not leaked, leaked
 
 
+def _cached_ids(spark):
+    """IDs of the Spark session's persisted RDDs that are cached
+    frames: the localCheckpoint RDDs lineage truncation leaves are
+    checkpoints, dropped by the ContextCleaner once unreferenced."""
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    return {
+        int(k)
+        for k in jmap.keySet().toArray()
+        if not jmap.get(k).isCheckpointed()
+    }
+
+
 @pytest.mark.parametrize(
     "name", ["train_temperature_mix", "pipeline_curated_mix"]
 )
@@ -529,30 +539,62 @@ def test_temperature_mix_leaves_no_persisted_frames(spark, name):
     cached frame in the session.
 
     Compares persisted-RDD ID sets, as above, restricted to cached
-    frames: the localCheckpoint RDDs connected_components truncates
-    lineage with are checkpoints, dropped by the ContextCleaner once
-    unreferenced.  The near-dup stage of pipeline_curated_mix caches
-    its clique-group frame once per input (a separate leak), so that
-    stage is run before the snapshot; the cache is cleared first so
-    an earlier test's cached projection cannot hide a new one."""
-    from pdf_etl_ocr_inference_spark.plans.dedup_plans import (
-        quality_cluster_members,
+    frames (:func:`_cached_ids`).  pipeline_curated_mix runs the
+    whole curation path, near-dup stage included; the cache is
+    cleared first so an earlier test's cached projection cannot hide
+    a new one."""
+    spark.catalog.clearCache()
+    before = _cached_ids(spark)
+    assert _SPECS[name].fn(spark, SF).collect()
+    leaked = _cached_ids(spark) - before
+    assert not leaked, leaked
+
+
+def _run_dedup_operator(spark, name, tmp_path):
+    from pdf_etl_ocr_inference_spark.operators.dedup import (
+        hamming_near_pairs,
+        simhash,
+        simhash_near_pairs,
+    )
+    from pdf_etl_ocr_inference_spark.operators.dedup_index import (
+        build_minhash_index,
+        dedup_against_index,
+    )
+    from pdf_etl_ocr_inference_spark.optimizer import IndexCatalog
+
+    docs = _docs(spark).select("doc_id", "text")
+    if name == "minhash_dedup_pairs":
+        return minhash_dedup_pairs(docs, "text", "doc_id", hash_family="md5")
+    if name == "simhash_near_pairs":
+        return simhash_near_pairs(docs, "text", "doc_id")
+    if name == "hamming_near_pairs":
+        fps = simhash(docs, "text", "doc_id")
+        return hamming_near_pairs(fps, "simhash", "doc_id")
+    cat = IndexCatalog(root=str(tmp_path))
+    build_minhash_index(spark, docs, "t/leak", catalog=cat)
+    return dedup_against_index(
+        spark, "t/leak", docs.filter(F.col("doc_id") < 50), docs,
+        catalog=cat,
     )
 
-    def _cached_ids():
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        return {
-            int(k)
-            for k in jmap.keySet().toArray()
-            if not jmap.get(k).isCheckpointed()
-        }
 
+@pytest.mark.parametrize(
+    "name",
+    [
+        "minhash_dedup_pairs",
+        "simhash_near_pairs",
+        "hamming_near_pairs",
+        "dedup_against_index",
+    ],
+)
+def test_dedup_operator_leaves_no_persisted_frames(spark, name, tmp_path):
+    """A dedup operator releases what it caches: calling it and
+    consuming its output leaves no new cached frame in the Spark session,
+    so no caller has to ``clearCache()`` after it."""
     spark.catalog.clearCache()
-    if name == "pipeline_curated_mix":
-        quality_cluster_members(spark, SF).collect()
-    before = _cached_ids()
-    assert _SPECS[name].fn(spark, SF).collect()
-    leaked = _cached_ids() - before
+    before = _cached_ids(spark)
+    _run_dedup_operator(spark, name, tmp_path).collect()
+    leaked = _cached_ids(spark) - before
     assert not leaked, leaked
 
 

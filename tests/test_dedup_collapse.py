@@ -24,7 +24,7 @@ from pdf_etl_ocr_inference_spark.operators.dedup import (
     minhash_dedup_pairs,
     minhash_lsh_candidates,
     ngram_jaccard_pairs,
-    shingle_cliques,
+    shingle_clique_groups,
     simhash_near_pairs,
 )
 
@@ -51,9 +51,10 @@ def test_banded_rows_constant_under_duplication(spark):
     track DISTINCT shingle sets — identical under 8× duplication."""
     counts = {}
     for n in (100, 800):
-        reps, smap = shingle_cliques(
+        reps = shingle_clique_groups(
             _mass_dup_docs(spark, n), "text", "doc_id"
         )
+        smap = reps.select(F.explode("_ids"))
         counts[n] = reps.count()
         assert smap.count() == n + 22
     assert counts[100] == counts[800] == 22 + 1  # distinct sets only
@@ -71,7 +72,7 @@ def test_pairs_match_bruteforce_with_mass_dups(spark):
     exact = {
         (r["id_a"], r["id_b"])
         for r in ngram_jaccard_pairs(
-            docs, "text", "doc_id", shingle_n=3, threshold=0.5
+            docs, "text", "doc_id", threshold=0.5
         ).collect()
     }
     # the clique's internal pairs are all there, at full cardinality
@@ -153,7 +154,7 @@ def test_minhash_bucket_cap_logged(spark, caplog):
         logging.WARNING, logger="pdf_etl_ocr_inference_spark.operators.dedup"
     ):
         out = minhash_lsh_candidates(
-            sigs, "doc_id", num_bands=8, rows_per_band=4, bucket_cap=5
+            sigs, "doc_id", num_bands=8, bucket_cap=5
         )
         n = out.count()
     assert any("bucket_cap" in r.message for r in caplog.records)
@@ -183,8 +184,7 @@ def test_rep_graph_cc_matches_expanded_cc(spark):
     }
     docs = spark.read.parquet(f"{SF0001}/documents.parquet")
     pairs = minhash_dedup_pairs(
-        docs, "text", "doc_id", num_hashes=32, num_bands=8,
-        jaccard_threshold=0.5, hash_family="md5",
+        docs, "text", "doc_id", jaccard_threshold=0.5, hash_family="md5",
     )
     labels, _ = connected_components(pairs.select("id_a", "id_b"))
     want = {(r["node"], r["component"]) for r in labels.collect()}

@@ -39,7 +39,7 @@ def test_minhash_pair_set_family_independent_on_real_corpus(spark):
     def pairs(fam):
         out = minhash_dedup_pairs(
             docs, "text", "doc_id",
-            num_hashes=32, num_bands=8, jaccard_threshold=0.5,
+            jaccard_threshold=0.5,
             hash_family=fam,
         )
         return {

@@ -282,3 +282,83 @@ def test_one_index_format_owner():
         "— use shard_server.write_shards / publish_build:\n"
         + "\n".join(sites)
     )
+
+
+# ---------------------------------------------------------------------------
+# One near-pair kernel.  Every bucketed dedup and LSH operator pairs,
+# signs and resolves liveness through ``operators/dedup.py``: the i<j
+# pair idiom ``F.slice(ids, F.col(pos) + 2, …)`` lives only in
+# ``ordered_pairs``, ``seeded_hashes(`` is called only by
+# ``shingle_signatures``, and the ``desc("_commit_version"),
+# asc("_deleted")`` row-number order is written only in ``latest_live``.
+# ---------------------------------------------------------------------------
+
+KERNEL_HOMES = {
+    "pair idiom": "ordered_pairs",
+    "seeded_hashes": "shingle_signatures",
+    "liveness order": "latest_live",
+}
+
+
+def _const_call(node: ast.AST, name: str, value: str) -> bool:
+    """True for ``<...>.name("value")``."""
+    return (
+        isinstance(node, ast.Call)
+        and _call_name(node) == name
+        and any(isinstance(a, ast.Constant) and a.value == value for a in node.args)
+    )
+
+
+def _kernel_idiom(node: ast.Call) -> str | None:
+    name = _call_name(node)
+    if name == "seeded_hashes":
+        return "seeded_hashes"
+    if name == "slice" and len(node.args) >= 2:
+        start = node.args[1]
+        if (
+            isinstance(start, ast.BinOp)
+            and isinstance(start.op, ast.Add)
+            and isinstance(start.left, ast.Call)
+            and _call_name(start.left) == "col"
+            and isinstance(start.right, ast.Constant)
+            and start.right.value == 2
+        ):
+            return "pair idiom"
+    if (
+        name == "orderBy"
+        and any(_const_call(a, "desc", "_commit_version") for a in node.args)
+        and any(_const_call(a, "asc", "_deleted") for a in node.args)
+    ):
+        return "liveness order"
+    return None
+
+
+def _kernel_sites(path: pathlib.Path) -> list[tuple[int, str, str | None]]:
+    """(line, idiom, enclosing top-level function) per kernel idiom."""
+    tree = ast.parse(path.read_text(), filename=str(path))
+    out = []
+    for top in tree.body:
+        fn = top.name if isinstance(top, ast.FunctionDef) else None
+        for node in ast.walk(top):
+            if isinstance(node, ast.Call):
+                idiom = _kernel_idiom(node)
+                if idiom:
+                    out.append((node.lineno, idiom, fn))
+    return sorted(out)
+
+
+def test_one_near_pair_kernel():
+    stray, homes = [], []
+    for p in sorted(PKG.rglob("*.py")):
+        rel = p.relative_to(PKG).as_posix()
+        for line, idiom, fn in _kernel_sites(p):
+            if rel == "operators/dedup.py" and fn == KERNEL_HOMES[idiom]:
+                homes.append(idiom)
+            else:
+                stray.append(f"{rel}:{line} ({idiom})")
+    assert not stray, (
+        "near-pair kernel step spelled out by hand — call "
+        "dedup.ordered_pairs / bucket_pairs, shingle_signatures or "
+        "latest_live:\n" + "\n".join(stray)
+    )
+    assert sorted(homes) == sorted(KERNEL_HOMES), homes

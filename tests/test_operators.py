@@ -332,7 +332,7 @@ def test_minhash_lsh_subset_of_exact(spark):
     exact = {
         (r["id_a"], r["id_b"])
         for r in ngram_jaccard_pairs(
-            docs, "text", "doc_id", shingle_n=3, threshold=0.5
+            docs, "text", "doc_id", threshold=0.5
         ).collect()
     }
     lsh = {

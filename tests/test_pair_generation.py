@@ -34,10 +34,12 @@ def _naive_candidates(spark, docs, num_hashes=16, num_bands=4):
     from pdf_etl_ocr_inference_spark.operators.dedup import (
         band_bucket,
         seeded_hashes,
-        shingle_cliques,
+        shingle_clique_groups,
     )
 
-    reps, _ = shingle_cliques(docs, "text", "doc_id")
+    reps = shingle_clique_groups(docs, "text", "doc_id").select(
+        F.col("_s.doc_id").alias("doc_id"), F.col("_s.shingles").alias("shingles")
+    )
     ex = reps.select(F.col("doc_id"), F.explode("shingles").alias("_sh"))
     hs = seeded_hashes("_sh", num_hashes, "md5")
     per_doc = ex.groupBy("doc_id").agg(
@@ -81,7 +83,7 @@ def test_lsh_candidates_match_self_join_reference(spark):
         got = {
             (r["id_a"], r["id_b"], r["n_bands"])
             for r in minhash_lsh_candidates(
-                sigs, "doc_id", 4, rows_per_band=4, hash_family="md5"
+                sigs, "doc_id", 4, hash_family="md5"
             ).collect()
         }
         assert got == ref, (seed, got ^ ref)
@@ -103,7 +105,7 @@ def test_lsh_candidates_bucket_cap_keeps_lowest_ids(spark):
     got = {
         (r["id_a"], r["id_b"])
         for r in minhash_lsh_candidates(
-            sigs, "doc_id", 2, rows_per_band=4, bucket_cap=3,
+            sigs, "doc_id", 2, bucket_cap=3,
             hash_family="md5",
         ).collect()
     }
