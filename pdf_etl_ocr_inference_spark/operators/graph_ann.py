@@ -8,9 +8,10 @@ answer is the standard sharded-serving pattern: partition the corpus
 into ``n_shards`` deterministic shards and build an independent NSW
 graph PER SHARD (each build is a single-task sequential job — numpy
 inside ``applyInPandas``).  Queries are answered by
-``serving.serve_topk(kind="nsw")``: every shard's graph is pinned in
-worker memory by ``shard_server`` and walked there, and the local
-top-k lists merge in the driver.  This module holds the build, the
+``serving.serve_topk(kind="nsw")``: every shard's graph is pinned by
+``shard_server`` (in the driver, or in the Python workers when the
+shards exceed the pin budget) and walked there, and the local top-k
+lists merge in the driver.  This module holds the build, the
 walk kernel and the refresh; ``shard_server`` owns the on-disk format
 (``shard=N`` directories and the meta).
 

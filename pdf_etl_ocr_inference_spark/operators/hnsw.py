@@ -18,9 +18,9 @@ neighborhood.  Search cost becomes O(log n · M) distance evaluations.
 Spark shape — identical to the sharded NSW pattern: deterministic
 shards (id % n_shards), each shard's multi-layer graph built
 sequentially inside one ``applyInPandas`` task.  Queries are answered
-by ``serving.serve_topk(kind="hnsw")`` from shards pinned in worker
-memory (``shard_server``), and the per-shard exact-cosine top-k lists
-merge in the driver.
+by ``serving.serve_topk(kind="hnsw")`` from shards pinned by
+``shard_server`` (in the driver when they fit its pin budget), and the
+per-shard exact-cosine top-k lists merge in the driver.
 
 Determinism (the layer-assignment rule the build is invariant under):
 ``level(id) = floor(-ln(u_id)·mL)`` with ``u_id`` the (0,1] uniform

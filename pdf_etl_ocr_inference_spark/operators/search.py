@@ -29,6 +29,7 @@ so engines that differ in the last float ulp still rank identically.
 
 from __future__ import annotations
 
+import struct
 from collections.abc import Iterator
 
 import pandas as pd
@@ -36,10 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pdf_etl_ocr_inference_spark.operators.shard_server import (
-    MISS,
-    PinCache,
-    _load_shard,
-    dispatch,
+    lookup,
     merge_topk,
     publish_build,
     publish_meta,
@@ -336,28 +334,62 @@ def rerank_topk(
 # ------------------------------------------------------------------ #
 
 _POSTINGS_PB = 64
-_PB_MEMO_TERMS = 4096  # terms whose bucket is remembered
-_PB_MEMO = PinCache(_PB_MEMO_TERMS)  # term -> bucket; counts terms
+
+# XXH64 (Spark's ``xxhash64``, seed 42) in Python: the driver buckets
+# a query term with no Spark job.  ``_postings_rows`` buckets with
+# ``F.xxhash64``; tests hold the two equal.
+_P1, _P2, _P3 = 11400714785074694791, 14029467366897019727, 1609587929392839161
+_P4, _P5 = 9650029242287828579, 2870177450012600261
+_M64 = (1 << 64) - 1
 
 
-def _term_buckets(spark, terms: list[str]) -> dict[str, int]:
-    """term -> ``_pb`` bucket, ``pmod(xxhash64(term), 64)`` as the
-    postings layout computes it.  Memoised per term in a bounded LRU;
-    only terms not seen before cost a (one-row-per-term) job."""
-    out = {t: _PB_MEMO.get(t) for t in terms}
-    new = sorted(t for t, pb in out.items() if pb is MISS)
-    if new:
-        for r in (
-            spark.createDataFrame([(t,) for t in new], "term string")
-            .select(
-                "term",
-                F.pmod(F.xxhash64("term"), F.lit(_POSTINGS_PB)).alias("_pb"),
-            )
-            .collect()
-        ):
-            out[r["term"]] = int(r["_pb"])
-            _PB_MEMO.put(r["term"], None, out[r["term"]], 1)
-    return out
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh_round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _xxhash64(data: bytes) -> int:
+    """XXH64 of ``data`` as a signed long, bit for bit Spark's
+    ``xxhash64`` of a string column (over its UTF-8 bytes)."""
+    seed, n, i = 42, len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed,
+             (seed - _P1) & _M64]
+        while i + 32 <= n:
+            lanes = struct.unpack_from("<4Q", data, i)
+            v = [_xxh_round(a, lane) for a, lane in zip(v, lanes)]
+            i += 32
+        h = sum(_rotl(a, r) for a, r in zip(v, (1, 7, 12, 18))) & _M64
+        for a in v:
+            h = ((h ^ _xxh_round(0, a)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h ^= _xxh_round(0, struct.unpack_from("<Q", data, i)[0])
+        h = (_rotl(h, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h ^= struct.unpack_from("<I", data, i)[0] * _P1 & _M64
+        h = (_rotl(h, 23) * _P2 + _P3) & _M64
+        i += 4
+    for b in data[i:]:
+        h ^= b * _P5 & _M64
+        h = _rotl(h, 11) * _P1 & _M64
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
+
+
+def _term_bucket(term: str) -> int:
+    """A term's ``_pb`` bucket, ``pmod(xxhash64(term), 64)`` as the
+    postings layout computes it (64 is a power of two, so the pmod of
+    a two's-complement hash is its low bits)."""
+    return _xxhash64(term.encode("utf-8")) & (_POSTINGS_PB - 1)
 
 
 def _postings_rows(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -442,9 +474,11 @@ def bm25_topk_indexed(
     only the query terms' ``_pb`` partition dirs and the matching
     term rows inside them (min/max row-group pruning on the sorted
     ``term`` column); corpus stats come from the meta — no corpus
-    pass, no full-index scan.  Scores are identical to the batch
-    ``bm25_topk`` by construction (same formula, same stats) —
-    asserted in tests and by the catalog oracle."""
+    pass, no full-index scan.  The buckets are hashed in the driver
+    (``_term_bucket``), so the scan is the only job.  Scores are
+    identical to the batch ``bm25_topk`` by construction (same
+    formula, same stats) — asserted in tests and by the catalog
+    oracle."""
     meta = read_meta(path, "postings")
     n_docs = meta["n_docs"]
     avgdl = meta["sum_dl"] / max(n_docs, 1)
@@ -454,7 +488,7 @@ def bm25_topk_indexed(
     # (_pb, term) was tried — dynamic partition pruning did not
     # engage for the tiny local-relation side, so the scan read every
     # directory.)
-    pbs = sorted(set(_term_buckets(spark, query_terms).values()))
+    pbs = sorted({_term_bucket(t) for t in query_terms})
     post = (
         spark.read.parquet(path)
         .filter(F.col("_pb").isin(pbs))
@@ -491,12 +525,13 @@ def bm25_topk_indexed(
 
 # ------------------------------------------------------------------ #
 # Pinned lexical serving: the search-engine sharding (postings       #
-# sharded BY TERM bucket, pinned in worker memory by the shard       #
-# server) applied to the BM25 index — the lexical twin of            #
-# serving.serve_topk.  A term's postings live wholly inside one _pb  #
-# bucket, so each bucket task computes COMPLETE per-term score       #
-# contributions locally (df is the bucket-local posting count); the  #
-# driver merge sums them per (qid, doc) and takes per-qid top-k.     #
+# sharded BY TERM bucket, pinned by the shard server) applied to the #
+# BM25 index — the lexical twin of serving.serve_topk.  A term's     #
+# postings live wholly inside one _pb bucket, so each bucket         #
+# computes COMPLETE per-term score contributions locally (df is the  #
+# bucket-local posting count); the driver merge sums them per (qid,  #
+# doc) and takes per-qid top-k.  The buckets are answered in the     #
+# driver when they fit the pin budget, else in one Spark job.        #
 # ------------------------------------------------------------------ #
 
 
@@ -507,27 +542,28 @@ def serve_bm25(
     k: int = 10,
 ) -> DataFrame:
     """Top-k BM25 for a BATCH of (qid, terms) queries against the
-    pinned postings index: one Spark job with tasks ONLY for the
-    queried terms' _pb buckets, each answering from its worker-cached
-    postings (query 2..n never touches parquet).  The job runs when
-    this is called; the result ``(qid, id, score)`` is local, in rank
-    order (score rounded HALF_UP to 6 decimals, then id), with scores
-    equal to ``bm25_topk_indexed`` (same formula, same meta stats).  A
-    repeated query term counts once."""
+    pinned postings index: only the queried terms' _pb buckets
+    (hashed in the driver) are read, each from its pinned postings
+    (query 2..n never touches parquet).  They are answered in the
+    driver when they fit the pin budget, so a warm lookup runs no
+    Spark job, else in one Spark job (``shard_server.lookup``).  The
+    lookup runs when this is called; the result ``(qid, id, score)``
+    is local, in rank order (score rounded HALF_UP to 6 decimals,
+    then id), with scores equal to ``bm25_topk_indexed`` (same
+    formula, same meta stats).  A repeated query term counts once."""
     import math
 
     meta = read_meta(path, "postings")
     n_docs = meta["n_docs"]
     avgdl = meta["sum_dl"] / max(n_docs, 1)
     token = shard_token(meta)
-    bucket = _term_buckets(spark, [t for _, ts in queries for t in ts])
     plan: dict[int, list] = {}
     for qid, terms in queries:
         for t in dict.fromkeys(terms):  # a repeated term counts once
-            plan.setdefault(bucket[t], []).append((int(qid), t))
+            plan.setdefault(_term_bucket(t), []).append((int(qid), t))
 
-    def answer(pb, todo):
-        post = _load_shard(path, pb, "postings", token) or {}
+    def answer(post, todo):
+        post = post or {}
         rows = []
         for qid, term in todo:
             if term not in post:
@@ -544,5 +580,7 @@ def serve_bm25(
             rows.extend((qid, int(i), float(v)) for i, v in zip(ids, s))
         return rows
 
-    rows = dispatch(spark, plan, answer, rows_schema("id"))
+    rows = lookup(
+        spark, path, "postings", token, plan, answer, rows_schema("id")
+    )
     return merge_topk(spark, [rows], k, "id", sum_per_id=True)

@@ -5,7 +5,7 @@ NSW and HNSW graphs built by ``graph_ann`` and ``hnsw`` and the PQ,
 IVF and IVF-PQ layouts built here.  It answers like the reference's
 ONLINE similarity call (``ocr-tesseract-unstructured.py:166-172``, a
 managed-index query endpoint): top-k batches from state pinned in
-Python worker memory, never a re-read of the parquet per query.  (The
+Python memory, never a re-read of the parquet per query.  (The
 DataFrame-level ``topk_pq``/``topk_ivf`` query caller-supplied
 frames, not a built layout.)  The layouts are parquet partitioned by
 shard plus a meta file, in the format ``shard_server`` owns:
@@ -13,19 +13,21 @@ shard plus a meta file, in the format ``shard_server`` owns:
 - ``nsw`` / ``hnsw``: sharded graphs, one greedy walk per shard;
 - ``pq``: ADC scan over pinned codes + exact re-rank;
 - ``ivf``: cells are the shards; an exact scan of each query's
-  ``n_probe`` nearest cells, and tasks run only for probed cells;
+  ``n_probe`` nearest cells, and only probed cells are read;
 - ``ivfpq``: IVF cells holding residual PQ codes.
 
-Loading, dispatch and the merge are the shared shard server
-(``operators.shard_server``): one worker-side cache, one Spark job
-per lookup, and a per-qid top-k merge in the driver.  This module
-adds one answer function per kind (``_ANSWERS``) and the IVF probe
-rounds.  A lookup runs its job when called and returns a DataFrame
-over the merged rows; collecting it runs no further job.
+Loading, answering and the merge are the shared shard server
+(``operators.shard_server.lookup``): the probed shards are answered in
+the driver from its pin when they fit the pin budget, with no Spark
+job, and otherwise by one Spark job over pinned Python workers; a
+per-qid top-k merge in the driver follows.  This module adds one
+answer function per kind (``_ANSWERS``) and the IVF probe rounds.  A
+lookup answers when called and returns a DataFrame over the merged
+rows; collecting it runs no job.
 
 Builds and refreshes stay batch jobs.  Every meta carries a
 ``build_id`` and a ``last_version`` that a refresh bumps; together
-they key the worker cache, so a refresh or a rebuild at the same path
+they key the shard cache, so a refresh or a rebuild at the same path
 is never answered from stale pinned state.
 """
 
@@ -44,8 +46,7 @@ from pdf_etl_ocr_inference_spark.operators.graph_ann import (
     refresh_sharded_graph,
 )
 from pdf_etl_ocr_inference_spark.operators.shard_server import (
-    _load_shard,
-    dispatch,
+    lookup,
     merge_topk,
     read_meta,
     rows_schema,
@@ -424,11 +425,13 @@ def serve_topk(
     sharded index (``kind``: ``nsw``/``hnsw`` graph walk, ``pq`` ADC
     scan + exact re-rank with pinned codebooks, ``ivf`` exact scan of
     the ``n_probe`` nearest pinned cells, ``ivfpq`` ADC within them).
-    One Spark job: every shard task answers its queries from cached
-    state (IVF kinds run tasks only for probed cells); the per-qid
-    merge runs in the driver.  The job runs when this is called;
-    the returned ``(qid, vec_id, score)`` DataFrame is local, in rank
-    order, and ``score`` is exact cosine rounded to 4 decimals.
+    Every probed shard answers its queries from pinned state (IVF
+    kinds probe only the queries' nearest cells): in the driver when
+    the probed shards fit the pin budget, so a warm lookup runs no
+    Spark job, else in one Spark job.  The per-qid merge runs in the
+    driver.  The lookup runs when this is called; the returned
+    ``(qid, vec_id, score)`` DataFrame is local, in rank order, and
+    ``score`` is exact cosine rounded to 4 decimals.
 
     ``predicate`` (``Callable[[int], bool]``, optional) is a metadata
     filter resolved to id level by the caller (tenant = id mod T, a
@@ -436,14 +439,14 @@ def serve_topk(
     restricts the CANDIDATE FETCH, never post-filters a finished
     top-k (ref serving: the vector-search API's ``filters`` arg; the
     ocr:166-172 notebook passes none): graph kinds widen the layer-0
-    beam (ef doubling, in-task) until k survivors pass; PQ kinds
+    beam (ef doubling, per shard) until k survivors pass; PQ kinds
     widen the ADC re-rank window the same way; IVF kinds widen the
     PROBE — still-starved queries double their probed-cell prefix,
-    one extra job per doubling over only the newly probed cells, so
+    one extra round per doubling over only the newly probed cells, so
     a tight filter reads more cells instead of starving.
 
     The query list is bounded control data (an online request batch),
-    shipped in the task closure — there is deliberately no corpus-
+    held in the answer closure — there is deliberately no corpus-
     sized query-side DataFrame here; for corpus-scale two-table top-k
     use ``optimizer.knn_join``.
     """
@@ -458,8 +461,7 @@ def serve_topk(
     kind_answer = _ANSWERS[kind]
     qnorm = [(int(qid), unit_query(vec)) for qid, vec in queries]
 
-    def answer(shard, todo):
-        state = _load_shard(path, shard, kind, token)
+    def answer(state, todo):
         if state is None:
             return []
         return [
@@ -468,25 +470,30 @@ def serve_topk(
             for i, s in kind_answer(state, qu, k, ef, rerank, excl, predicate)
         ]
 
+    def run(plan):
+        return lookup(
+            spark, path, kind, token, plan, answer, rows_schema("vec_id")
+        )
+
     if kind in ("ivf", "ivfpq"):
         frames = _probe_cells(
-            spark, np.asarray(meta["centroids"], dtype="float64"), qnorm,
-            answer, k, n_probe, widen=predicate is not None,
+            np.asarray(meta["centroids"], dtype="float64"), qnorm, run,
+            k, n_probe, widen=predicate is not None,
         )
     else:  # every shard answers every query
-        plan = dict.fromkeys(range(meta["n_shards"]), qnorm)
-        frames = [dispatch(spark, plan, answer, rows_schema("vec_id"))]
+        frames = [run(dict.fromkeys(range(meta["n_shards"]), qnorm))]
     return merge_topk(spark, frames, k, "vec_id")
 
 
-def _probe_cells(spark, cents, qnorm, answer, k, n_probe, widen):
+def _probe_cells(cents, qnorm, run, k, n_probe, widen):
     """IVF kinds: the cells ARE the shards.  Each query ranks the cells
-    by (-dot, cell) and probes its ``n_probe`` nearest; a cell's task
-    answers only the queries that probed it.  With ``widen`` (a
-    predicate is set), any query left with fewer than k rows doubles
-    its probed prefix and the next round — one more job — dispatches
-    only the newly probed cells: at most ``log2(n_cells)`` extra
-    jobs, each smaller than the first.  Returns each round's rows."""
+    by (-dot, cell) and probes its ``n_probe`` nearest; a cell answers
+    only the queries that probed it.  With ``widen`` (a predicate is
+    set), any query left with fewer than k rows doubles its probed
+    prefix and the next round answers only the newly probed cells: at
+    most ``log2(n_cells)`` extra rounds, each smaller than the first.
+    ``run(plan)`` answers one round (one ``shard_server.lookup``).
+    Returns each round's rows."""
     n_cells = len(cents)
     ranked = {
         qid: np.lexsort((np.arange(n_cells), -(cents @ qu)))
@@ -504,7 +511,7 @@ def _probe_cells(spark, cents, qnorm, answer, k, n_probe, widen):
             done[qid] = cur[qid]
         if not plan:
             return frames
-        frames.append(dispatch(spark, plan, answer, rows_schema("vec_id")))
+        frames.append(run(plan))
         found.update(frames[-1]["qid"].tolist())
         starved = [q for q in cur if found[q] < k and cur[q] < n_cells]
         if not widen or not starved:

@@ -2,30 +2,33 @@
 
 Every online lookup — ``serving.serve_topk`` over the five vector
 kinds (nsw, hnsw, pq, ivf, ivfpq) and ``search.serve_bm25`` over the
-BM25 postings — runs the same three steps, all of them here:
+BM25 postings — runs the same three steps, all of them here, through
+:func:`lookup`:
 
-1. **Load** (worker side).  :func:`_load_shard` parses one shard's
-   parquet into numpy state once per Python worker process and pins
-   it in :data:`WORKER_CACHE`, keyed ``(path, shard, kind)`` under a
-   token.  The token is ``"<build_id>:<last_version>"`` from the
-   index meta: a refresh bumps the version and a rebuild at the same
-   path draws a new build id, so either one misses, and the miss
-   drops the stale state.  Spark reuses Python workers across jobs
-   (``spark.python.worker.reuse``, on by default), so warm lookups
-   never touch parquet.  ``layout``'s sidecar chunks share the same
-   worker cache.
-2. **Dispatch** (one Spark job).  :func:`dispatch` runs
+1. **Load.**  :func:`_load_shard` parses one shard's parquet into
+   numpy state once per Python process and pins it in
+   :data:`WORKER_CACHE`, keyed ``(path, shard, kind)`` under a token.
+   The token is ``"<build_id>:<last_version>"`` from the index meta: a
+   refresh bumps the version and a rebuild at the same path draws a
+   new build id, so either one misses, and the miss drops the stale
+   state.  ``layout``'s sidecar chunks share the same cache.
+2. **Answer** (driver, or one Spark job).  When the planned shards fit
+   the pin budget, the driver loads them into its own copy of the
+   cache and answers in-process: a warm lookup runs no Spark job and
+   never touches parquet.  Otherwise :func:`dispatch` runs
    ``spark.range(n, numSlices=n)`` → ``mapInPandas`` → Arrow
-   ``toPandas()``: one task per shard, no scan, no shuffle.  Each task
-   hands its shard id and its share of the work to the caller's
-   ``answer`` function, which holds all per-kind logic.
+   ``toPandas()``: one task per shard, no scan, no shuffle, each task
+   loading into its Python worker's copy of the cache (Spark reuses
+   Python workers across jobs, ``spark.python.worker.reuse``, on by
+   default).  Either way the caller's ``answer(state, todo)`` holds
+   all per-kind logic.
 3. **Merge** (driver).  :func:`merge_topk` ranks the candidate rows
    per query with numpy and returns them as a local relation, so
-   collecting the result runs no second job.
+   collecting the result runs no job.
 
-:class:`PinCache` is the one LRU cache in the package: the worker
-cache above, and every driver-side pin (``layout``'s sidecar, live
-map and manifest caches, ``search``'s term → bucket memo).
+:class:`PinCache` is the one LRU cache in the package: the shard cache
+above, and every driver-side pin (``layout``'s sidecar, live map and
+manifest caches).
 
 This module also owns the on-disk index format.  A vector index is
 one ``shard=N`` parquet directory per shard, written by
@@ -45,6 +48,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import threading
 import uuid
 from collections import OrderedDict
 from decimal import ROUND_HALF_UP, Decimal
@@ -143,46 +147,56 @@ class PinCache:
     payload that must never be parsed twice), or served once without
     evicting anything (the default: a cache that a huge entry would
     otherwise empty).  ``nbytes`` is the running total of ``entries``;
-    tests read it and shrink ``budget``."""
+    tests read it and shrink ``budget``.  One lock serialises every
+    method, so client threads can share a cache."""
 
     def __init__(self, budget: int, keep_oversized: bool = False):
         self.budget = budget
         self.keep_oversized = keep_oversized
         self.nbytes = 0
         self.entries: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
 
     def get(self, key, token=None):
-        hit = self.entries.get(key)
-        if hit is None:
-            return MISS
-        if hit[0] != token:
-            self.pop(key)
-            return MISS
-        self.entries.move_to_end(key)
-        return hit[1]
+        with self._lock:
+            hit = self.entries.get(key)
+            if hit is None:
+                return MISS
+            if hit[0] != token:
+                self._pop(key)
+                return MISS
+            self.entries.move_to_end(key)
+            return hit[1]
 
     def put(self, key, token, value, nbytes: int) -> None:
-        self.pop(key)
-        if nbytes > self.budget and not self.keep_oversized:
-            return
-        while self.entries and self.nbytes + nbytes > self.budget:
-            self.nbytes -= self.entries.popitem(last=False)[1][2]
-        self.entries[key] = (token, value, nbytes)
-        self.nbytes += nbytes
+        with self._lock:
+            self._pop(key)
+            if nbytes > self.budget and not self.keep_oversized:
+                return
+            while self.entries and self.nbytes + nbytes > self.budget:
+                self.nbytes -= self.entries.popitem(last=False)[1][2]
+            self.entries[key] = (token, value, nbytes)
+            self.nbytes += nbytes
 
     def pop(self, key) -> None:
+        with self._lock:
+            self._pop(key)
+
+    def clear(self) -> None:
+        with self._lock:
+            self.entries.clear()
+            self.nbytes = 0
+
+    def _pop(self, key) -> None:
         hit = self.entries.pop(key, None)
         if hit is not None:
             self.nbytes -= hit[2]
 
-    def clear(self) -> None:
-        self.entries.clear()
-        self.nbytes = 0
 
-
-# State pinned per Python worker process: shards of every served
-# index and layout's sidecar chunks, each sized by the Arrow table it
-# was parsed from.
+# State pinned per Python process: shards of every served index and
+# layout's sidecar chunks, each sized by the Arrow table it was parsed
+# from.  The driver's copy serves the lookups :func:`lookup` answers
+# in-process; each Python worker's copy serves the dispatched ones.
 WORKER_PIN_BYTES = 256 << 20
 WORKER_CACHE = PinCache(WORKER_PIN_BYTES, keep_oversized=True)
 
@@ -337,16 +351,20 @@ _FILES = dict.fromkeys(_PARSE, "/shard={shard}/*.parquet")
 _FILES["postings"] = "/v=*/_pb={shard}/*.parquet"
 
 
+def _shard_files(path: str, shard: int, kind: str) -> list:
+    """The parquet files that hold one shard of the index at ``path``."""
+    pattern = _FILES[kind].format(shard=int(shard))
+    return glob.glob(glob.escape(path) + pattern)
+
+
 def _load_shard(path: str, shard: int, kind: str, token: str):
-    """This worker's parsed state for one shard, or ``None`` when the
+    """This process's parsed state for one shard, or ``None`` when the
     shard holds no rows (an empty cell or bucket)."""
     key = (path, int(shard), kind)
     state = WORKER_CACHE.get(key, token)
     if state is not MISS:
         return state
-    files = glob.glob(
-        glob.escape(path) + _FILES[kind].format(shard=int(shard))
-    )
+    files = _shard_files(path, shard, kind)
     tbl = ds.dataset(files, format="parquet").to_table() if files else None
     state = None
     if tbl is not None and tbl.num_rows:
@@ -355,13 +373,29 @@ def _load_shard(path: str, shard: int, kind: str, token: str):
     return state
 
 
+def _plan_bytes(path: str, kind: str, token: str, plan: dict) -> int:
+    """What the planned shards take in the pin: a shard pinned under
+    ``token`` counts its pinned bytes, any other the on-disk bytes of
+    the files :func:`_load_shard` would read."""
+    total = 0
+    for shard in plan:
+        # a peek, not a get: sizing the plan must not reorder the LRU;
+        # one dict read is atomic, and a stale read only moves the sum
+        hit = WORKER_CACHE.entries.get((path, int(shard), kind))
+        if hit is not None and hit[0] == token:
+            total += hit[2]
+        else:
+            total += sum(map(os.path.getsize, _shard_files(path, shard, kind)))
+    return total
+
+
 # ------------------------------------------------------------------
-# Dispatch and merge
+# Answer: in the driver, or dispatched as one Spark job; then merge
 # ------------------------------------------------------------------
 
 
 def rows_schema(id_col: str) -> T.StructType:
-    """``(qid, <id_col>, score)``: the rows every task returns and the
+    """``(qid, <id_col>, score)``: the rows every shard answers and the
     shape of every lookup's result."""
     return T.StructType(
         [
@@ -369,6 +403,39 @@ def rows_schema(id_col: str) -> T.StructType:
             T.StructField(id_col, T.LongType()),
             T.StructField("score", T.DoubleType()),
         ]
+    )
+
+
+_DTYPES = {"long": "int64", "double": "float64"}
+
+
+def lookup(
+    spark: SparkSession,
+    path: str,
+    kind: str,
+    token: str,
+    plan: dict,
+    answer,
+    schema: T.StructType,
+) -> pd.DataFrame:
+    """Rows of ``answer(state, plan[shard])`` over every shard of
+    ``plan``, where ``state`` is the shard's :func:`_load_shard` state
+    under ``token``.
+
+    When the planned shards fit the pin budget (:func:`_plan_bytes`)
+    the driver answers them in-process from its own pin, with no Spark
+    job; otherwise :func:`dispatch` answers them in one job.  Both
+    return rows of ``schema`` (long and double columns), typed even
+    when empty."""
+
+    def run(shard, todo):
+        return answer(_load_shard(path, shard, kind, token), todo)
+
+    if _plan_bytes(path, kind, token, plan) > WORKER_CACHE.budget:
+        return dispatch(spark, plan, run, schema)
+    rows = [r for sh in sorted(plan) for r in run(sh, plan[sh])]
+    return pd.DataFrame(rows, columns=schema.fieldNames()).astype(
+        {f.name: _DTYPES[f.dataType.typeName()] for f in schema.fields}
     )
 
 
@@ -427,8 +494,9 @@ def merge_topk(
     the rows are per-term contributions: they are summed per
     ``(qid, id)`` first and rank by the sum rounded HALF_UP to 6
     decimals, then id, so last-ulp differences in the sum cannot
-    reorder.  The result is ``(qid, id, ROUND(score, 4))`` in rank
-    order, served from a local relation."""
+    reorder.  The result is ``(qid, id, score)`` in rank order with the
+    score rounded as Spark's ``ROUND(score, 4)`` (:func:`round_half_up`),
+    served from a local relation."""
     empty = pd.DataFrame(
         {"qid": np.empty(0, "int64"), id_col: np.empty(0, "int64"),
          "score": np.empty(0)}
@@ -444,9 +512,13 @@ def merge_topk(
     order = np.lexsort((rows[id_col].to_numpy(), -key, rows["qid"].to_numpy()))
     top = rows.iloc[order]
     top = top[top.groupby("qid").cumcount().to_numpy() < k]
-    # an Arrow table, not the pandas frame: Spark turns an EMPTY pandas
+    # an Arrow table, not a pandas frame: Spark turns an EMPTY pandas
     # frame into an RDD, which would cost a job to collect
-    arrow = pa.Table.from_pandas(top, preserve_index=False)
-    return spark.createDataFrame(arrow, rows_schema(id_col)).select(
-        "qid", id_col, F.round("score", 4).alias("score")
+    arrow = pa.table(
+        {
+            "qid": top["qid"].to_numpy(dtype="int64"),
+            id_col: top[id_col].to_numpy(dtype="int64"),
+            "score": round_half_up(top["score"].to_numpy(dtype="float64"), 4),
+        }
     )
+    return spark.createDataFrame(arrow, rows_schema(id_col))

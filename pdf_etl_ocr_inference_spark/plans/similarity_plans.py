@@ -862,7 +862,7 @@ def ann_opq_topk(spark: SparkSession, sf: str) -> DataFrame:
     "HNSW): independent per-shard graphs built in applyInPandas "
     "(build parallelism = shard count; per-shard rebuilds), queried "
     "through serve_topk: a greedy beam search of every shard's graph "
-    "pinned in worker memory — per-shard cost tracks ef*M walk "
+    "pinned in memory — per-shard cost tracks ef*M walk "
     "length, not shard size; exact cosine on the walked vectors, "
     "k-row global merge in the driver. The fourth ANN family next "
     "to LSH / IVF / PQ.",

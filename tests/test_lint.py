@@ -362,3 +362,39 @@ def test_one_near_pair_kernel():
         "latest_live:\n" + "\n".join(stray)
     )
     assert sorted(homes) == sorted(KERNEL_HOMES), homes
+
+
+# ---------------------------------------------------------------------------
+# One seam for online lookups.  ``shard_server.lookup`` loads each probed
+# shard and decides whether the driver answers it or one Spark job does;
+# ``serving`` and ``search`` call ``lookup``.  So in package code
+# ``_load_shard(`` is called only inside ``shard_server``, and
+# ``dispatch(`` only from ``shard_server`` and from ``layout`` (its
+# sidecar probes take the executor-pinned path only after the sidecar
+# has failed the driver budget).
+# ---------------------------------------------------------------------------
+
+SEAM_CALLERS = {
+    "_load_shard": {"operators/shard_server.py"},
+    "dispatch": {"operators/shard_server.py", "operators/layout.py"},
+}
+
+
+def _seam_sites(path: pathlib.Path) -> list[str]:
+    tree = ast.parse(path.read_text(), filename=str(path))
+    rel = path.relative_to(PKG).as_posix()
+    out = [
+        (node.lineno, f"{rel}:{node.lineno} ({_call_name(node)})")
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and rel not in SEAM_CALLERS.get(_call_name(node), {rel})
+    ]
+    return [site for _, site in sorted(out)]
+
+
+def test_one_lookup_seam():
+    sites = [s for p in sorted(PKG.rglob("*.py")) for s in _seam_sites(p)]
+    assert not sites, (
+        "shard loaded or dispatched outside the lookup seam — call "
+        "shard_server.lookup:\n" + "\n".join(sites)
+    )

@@ -79,3 +79,43 @@ def test_total_equals_sum_after_every_call():
                 c.clear()
             assert _total_is_sum(c)
             assert c.nbytes <= c.budget or len(c.entries) == 1
+
+
+def test_threads_keep_the_byte_total_exact():
+    """8 threads get, put and pop overlapping keys of one small cache
+    (a client-thread pattern of the driver's shard pin): no call
+    raises, and the byte total stays the sum of the entries and within
+    the budget.  Without the cache's lock, updates to the total are
+    lost."""
+    import sys
+    import threading
+
+    c = PinCache(20)
+    errors = []
+
+    def client(t):
+        try:
+            for i in range(20000):
+                key = (7 * t + i) % 13
+                if c.get(key, "a") is MISS:
+                    c.put(key, "a", key, 1 + key % 4)
+                if i % 5 == 0:
+                    c.pop((key + 3) % 13)
+                if i % 1000 == 999:
+                    c.get(key, "b")  # a stale token drops the entry
+        except Exception as e:  # reported by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=client, args=(t,)) for t in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors, errors
+    assert _total_is_sum(c) and c.nbytes <= c.budget

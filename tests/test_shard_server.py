@@ -7,6 +7,9 @@ from __future__ import annotations
 
 import json
 import os
+import random
+import sys
+import threading
 import uuid
 from contextlib import contextmanager
 
@@ -17,6 +20,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pdf_etl_ocr_inference_spark.operators.search import (
+    _term_bucket,
+    _xxhash64,
     bm25_topk,
     bm25_topk_indexed,
     build_postings_index,
@@ -32,6 +37,7 @@ from pdf_etl_ocr_inference_spark.operators.shard_server import (
     META_FILES,
     WORKER_CACHE,
     _load_shard,
+    _plan_bytes,
     read_meta,
     round_half_up,
     shard_token,
@@ -158,32 +164,38 @@ def test_repeated_query_terms_count_once(spark, tmp_path):
     assert pairs(serve_bm25(spark, path, [(0, terms)], k=20).collect()) == want
 
 
-def test_warm_serve_topk_ivf_runs_one_job(spark, tmp_path):
+def test_warm_serve_topk_ivf_runs_no_job(spark, tmp_path):
     path = str(tmp_path / "ivf")
     build_ivf_serving_index(spark, _cell_corpus(spark), path, CENTS)
     q = [(0, [1.0, 0.5, 0.0, 0.0])]
     cold = serve_topk(spark, path, q, k=3, kind="ivf", n_probe=2).collect()
     with _jobs(spark) as n:
         warm = serve_topk(spark, path, q, k=3, kind="ivf", n_probe=2).collect()
-    assert n == [1]
+    assert n == [0]
     assert warm == cold and len(warm) == 3
 
 
-def test_warm_serve_bm25_runs_one_job(spark, tmp_path):
+def test_warm_serve_bm25_runs_no_job(spark, tmp_path):
+    """Neither a warm lookup nor one with a term never queried before
+    runs a job: the term's bucket is hashed in the driver, and its
+    postings load there."""
     path = str(tmp_path / "postings")
     build_postings_index(spark, spark.createDataFrame(DOCS, ["doc_id", "text"]), path)
     q = [(0, ["spark", "join"]), (1, ["vector"])]
-    cold = serve_bm25(spark, path, q, k=3).collect()  # memoises buckets
+    cold = serve_bm25(spark, path, q, k=3).collect()
     with _jobs(spark) as n:
         warm = serve_bm25(spark, path, q, k=3).collect()
-    assert n == [1]
+        new = serve_bm25(spark, path, [(2, ["gamma", "words"])], k=3).collect()
+    assert n == [0]
     assert warm == cold and {r["qid"] for r in warm} == {0, 1}
+    assert {r["id"] for r in new} == {2, 3}
 
 
-def test_filtered_ivf_runs_one_job_per_round(spark, tmp_path):
+def test_filtered_ivf_runs_no_job(spark, tmp_path):
     """Only cell 1 passes the filter.  Round 1 probes the query's
     nearest cell (0) and finds nothing; round 2 widens to cells 0-1
-    and dispatches only cell 1.  The result costs no further job."""
+    and answers only cell 1.  Both rounds and the result run in the
+    driver."""
     path = str(tmp_path / "ivf")
     build_ivf_serving_index(spark, _cell_corpus(spark), path, CENTS)
     q = [(0, [1.0, 0.5, 0.2, 0.0])]
@@ -193,8 +205,52 @@ def test_filtered_ivf_runs_one_job_per_round(spark, tmp_path):
             spark, path, q, k=3, kind="ivf", n_probe=1,
             predicate=lambda i: i // 100 == 1,
         ).collect()
-    assert n == [2]
+    assert n == [0]
     assert [r["vec_id"] for r in got] == [104, 103, 102]
+
+
+def _over_budget_case(spark, tmp_path, case):
+    """``(lookup, Spark jobs it runs when its shards do not fit the
+    pin)`` for one lookup of each shape the shard server answers."""
+    from pdf_etl_ocr_inference_spark.operators.graph_ann import (
+        build_nsw_index,
+    )
+
+    q = [(0, [1.0, 0.5, 0.2, 0.0]), (1, [0.0, 0.1, 1.0, 0.3])]
+    path = str(tmp_path / case)
+    if case == "bm25":
+        docs = spark.createDataFrame(DOCS, ["doc_id", "text"])
+        build_postings_index(spark, docs, path)
+        terms = [(0, ["spark", "join"]), (1, ["vector", "words"])]
+        return lambda: serve_bm25(spark, path, terms, k=3), 1
+    if case == "nsw":
+        build_nsw_index(spark, _cell_corpus(spark), path, n_shards=2)
+        return lambda: serve_topk(spark, path, q, k=3, kind="nsw"), 1
+    build_ivf_serving_index(spark, _cell_corpus(spark), path, CENTS)
+    if case == "ivf":
+        return lambda: serve_topk(spark, path, q, k=3, kind="ivf"), 1
+    # filtered: round 1 probes cell 0 and starves, round 2 adds cell 1
+    return lambda: serve_topk(
+        spark, path, q[:1], k=3, kind="ivf", n_probe=1,
+        predicate=lambda i: i // 100 == 1,
+    ), 2
+
+
+@pytest.mark.parametrize("case", ["ivf", "filtered_ivf", "nsw", "bm25"])
+def test_lookup_over_the_pin_budget_runs_one_job_per_round(
+    spark, tmp_path, monkeypatch, case
+):
+    """When the planned shards do not fit the driver's pin, each round
+    is one Spark job over the Python workers' pins, and it answers
+    exactly as the driver does."""
+    serve, jobs = _over_budget_case(spark, tmp_path, case)
+    local = serve().collect()
+    assert local
+    monkeypatch.setattr(WORKER_CACHE, "budget", 1)
+    with _jobs(spark) as n:
+        got = serve().collect()
+    assert n == [jobs]
+    assert got == local
 
 
 def test_empty_lookups_keep_the_output_schema(spark, tmp_path):
@@ -239,62 +295,176 @@ def test_shard_keeps_one_token(tmp_path, spark):
     ] == ["a:1"]
 
 
+def _dense_cells(spark):
+    """Four cells (on the axes of R^4) of 200 rows each: big enough that
+    a cell pins at least half of its on-disk bytes."""
+    rng = np.random.default_rng(11)
+    rows = []
+    for c in range(4):
+        for i in range(200):
+            v = rng.random(4) * 0.1
+            v[c] = 1.0
+            rows.append((1000 * c + i, v.tolist()))
+    return _vecs(spark, rows)
+
+
+def _two_cells(path: str) -> int:
+    """A pin budget of two cells of the IVF index at ``path``, each at
+    the larger of its pinned and its on-disk bytes: a two-cell probe
+    fits it, cold or warm, and four pinned cells do not."""
+    token = shard_token(read_meta(path, "ivf"))
+    WORKER_CACHE.clear()
+    sizes = []
+    for c in range(4):
+        disk = _plan_bytes(path, "ivf", token, {c: None})
+        _load_shard(path, c, "ivf", token)
+        sizes.append(max(disk, WORKER_CACHE.entries[(path, c, "ivf")][2]))
+    WORKER_CACHE.clear()
+    return 2 * max(sizes)
+
+
+def _pin_is_exact():
+    return WORKER_CACHE.nbytes <= WORKER_CACHE.budget and (
+        WORKER_CACHE.nbytes
+        == sum(e[2] for e in WORKER_CACHE.entries.values())
+    )
+
+
 def test_worker_cache_stays_within_budget_in_a_long_session(
     spark, tmp_path, monkeypatch
 ):
     """Memory stays bounded in a long-lived serving session: loading
-    more IVF cells than the worker budget holds evicts the coldest,
-    the pinned total never passes the budget, and lookups answer the
-    same after evicted cells reload.  The lookups run their shard
-    tasks in this process (a local dispatch), so they use the cache
-    this test shrinks."""
+    more IVF cells than the pin budget holds evicts the coldest, the
+    pinned total never passes the budget, and lookups answer the same
+    after evicted cells reload.  Each lookup probes two cells, which
+    fit the shrunken budget, so it runs in this process (no Spark job)
+    against the cache this test shrinks."""
     path = str(tmp_path / "ivf")
-    build_ivf_serving_index(spark, _cell_corpus(spark), path, CENTS)
+    build_ivf_serving_index(spark, _dense_cells(spark), path, CENTS)
     queries = [(c, CENTS[c]) for c in range(4)]
-    want = serve_topk(spark, path, queries, k=3, kind="ivf", n_probe=2)
-    want = want.collect()
+
+    def serve_each():
+        return [
+            r
+            for q in queries
+            for r in serve_topk(
+                spark, path, [q], k=3, kind="ivf", n_probe=2
+            ).collect()
+        ]
+
+    want = serve_each()
     assert len(want) == 12
-
-    def local_dispatch(spark, plan, answer, schema):
-        rows = [r for sh in sorted(plan) for r in answer(sh, plan[sh])]
-        return pd.DataFrame(rows, columns=schema.fieldNames())
-
-    monkeypatch.setattr(serving, "dispatch", local_dispatch)
     token = shard_token(read_meta(path, "ivf"))
-    WORKER_CACHE.clear()
-    for c in range(4):
-        _load_shard(path, c, "ivf", token)
-    cell = max(e[2] for e in WORKER_CACHE.entries.values())
-    monkeypatch.setattr(WORKER_CACHE, "budget", 2 * cell)
-    WORKER_CACHE.clear()
+    monkeypatch.setattr(WORKER_CACHE, "budget", _two_cells(path))
     try:
         for _ in range(3):
             for c in range(4):
                 _load_shard(path, c, "ivf", token)
                 assert WORKER_CACHE.nbytes <= WORKER_CACHE.budget
             assert len(WORKER_CACHE.entries) < 4  # cells were evicted
-            got = serve_topk(spark, path, queries, k=3, kind="ivf", n_probe=2)
-            assert got.collect() == want
-            assert WORKER_CACHE.nbytes <= WORKER_CACHE.budget
-            assert WORKER_CACHE.nbytes == sum(
-                e[2] for e in WORKER_CACHE.entries.values()
-            )
+            with _jobs(spark) as n:
+                got = serve_each()
+            assert n == [0]
+            assert got == want
+            assert _pin_is_exact()
+    finally:
+        WORKER_CACHE.clear()
+
+
+def test_concurrent_lookups_share_one_pin(spark, tmp_path, monkeypatch):
+    """8 client threads, each making 100 ``serve_topk`` and 100
+    ``serve_bm25`` calls against a pin shrunk to two cells, so cells
+    and buckets are evicted and reloaded while other threads read
+    them: every answer equals the single-threaded one, and afterwards
+    the pin's byte total is exact and within the budget."""
+    ivf = str(tmp_path / "ivf")
+    build_ivf_serving_index(spark, _dense_cells(spark), ivf, CENTS)
+    post = str(tmp_path / "postings")
+    build_postings_index(spark, spark.createDataFrame(DOCS, ["doc_id", "text"]), post)
+    vq = [(c, CENTS[c]) for c in range(4)]
+    tq = [(0, ["spark", "join"]), (1, ["vector"]), (2, ["gamma", "words"]),
+          (3, ["join", "alpha"])]
+
+    def one(i):
+        v = serve_topk(spark, ivf, [vq[i % 4]], k=3, kind="ivf", n_probe=2)
+        t = serve_bm25(spark, post, [tq[i % 4]], k=3)
+        return v.collect(), t.collect()
+
+    monkeypatch.setattr(WORKER_CACHE, "budget", _two_cells(ivf))
+    want = [one(i) for i in range(4)]
+    assert all(v and t for v, t in want)
+    wrong, errors = [], []
+
+    def client(t):
+        try:
+            for i in range(t, t + 100):
+                if one(i) != want[i % 4]:
+                    wrong.append(i)
+        except Exception as e:  # reported by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=client, args=(t,)) for t in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=600)
+    finally:
+        sys.setswitchinterval(interval)
+    try:
+        assert not any(th.is_alive() for th in threads)
+        assert not errors and not wrong, (errors, wrong)
+        assert _pin_is_exact()
     finally:
         WORKER_CACHE.clear()
 
 
 def test_round_half_up_matches_spark_round(spark):
+    """At 6 places (the BM25 rank key) and 4 (every served score)."""
     rng = np.random.default_rng(7)
     vals = [
         0.0000125, 1.0000005, 2.4999995, 0.1234565, 12.3456785,
-        3.0000004999, 7.25e-7, 0.0, 1e-9, 123.4567895,
+        3.0000004999, 7.25e-7, 0.0, 1e-9, 123.4567895, 0.00005,
+        2.34565, -0.12345, -0.99995,
     ] + (rng.random(500) * 30).tolist() + (
         np.round(rng.random(200) * 30, 7)
-    ).tolist()
+    ).tolist() + (np.round(rng.random(200) * 2 - 1, 5)).tolist()
     df = spark.createDataFrame([(v,) for v in vals], "x double")
-    want = [r["r"] for r in df.select(F.round("x", 6).alias("r")).collect()]
-    got = round_half_up(np.asarray(vals, dtype="float64"), 6).tolist()
-    assert got == want
+    for places in (4, 6):
+        want = [
+            r["r"]
+            for r in df.select(F.round("x", places).alias("r")).collect()
+        ]
+        got = round_half_up(np.asarray(vals, dtype="float64"), places)
+        assert got.tolist() == want, places
+
+
+def test_term_bucket_matches_spark_xxhash64(spark):
+    """The driver's term hash equals Spark's ``xxhash64`` and the
+    postings layout's ``pmod(xxhash64(term), 64)``: the empty string,
+    every tail length of the hash (1/7/8/31/32/33/100 bytes),
+    multi-byte UTF-8, and 3000 seeded random strings."""
+    rng = random.Random(42)
+    alphabet = "abcxyz019 -_.éßж中😀"
+    strs = ["", "é", "ß", "ж", "中", "😀", "naïve straße жук 中文 😀🎉"]
+    strs += ["q" * n for n in (1, 7, 8, 31, 32, 33, 100)]
+    strs += ["中" * n for n in (1, 3, 11, 33)]
+    strs += [
+        "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 120)))
+        for _ in range(3000)
+    ]
+    rows = (
+        spark.createDataFrame([(s,) for s in strs], "s string")
+        .select(
+            F.xxhash64("s").alias("h"),
+            F.pmod(F.xxhash64("s"), F.lit(64)).alias("pb"),
+        )
+        .collect()
+    )
+    got = [(_xxhash64(s.encode("utf-8")), _term_bucket(s)) for s in strs]
+    assert got == [(r["h"], r["pb"]) for r in rows]
 
 
 def test_graph_walks_the_vectors_it_was_built_on(spark, tmp_path):
