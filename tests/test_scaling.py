@@ -55,9 +55,10 @@ def test_parallel_speedup_near_linear(spark):
     ).count()
     serial = _run(spark, num_partitions=1)
     assert serial >= _N_DOCS * _SLEEP * 0.95
-    # ideal: 16x. Assert ≥3x — far beyond what a serial plan could
-    # show (serial floor is N_DOCS*SLEEP = 3.2s; parallel floor is
-    # SLEEP = 0.2s). The host has multi-second contention bursts, so
+    # ideal: min(N_DOCS, cores)x, 4x on 4 cores. Assert ≥3x — far
+    # beyond what a serial plan could show (serial floor is
+    # N_DOCS*SLEEP = 3.2s; parallel floor is ceil(N_DOCS/cores)*SLEEP,
+    # 0.8s on 4 cores). The host has multi-second contention bursts, so
     # measure up to 4 times and pass on the best observation: a burst
     # can slow a run down, but nothing can make a serial plan fast.
     best = float("inf")
