@@ -21,7 +21,9 @@ multi-executor cluster):
   engine's daemon re-reads an archive only when it changes and forks
   from a frozen heap. The package root goes on the workers'
   ``PYTHONPATH``, so they import the engine whatever the driver's
-  working directory.
+  working directory. On a cluster the executors must import the
+  package when their daemon starts (installed, or on their
+  ``PYTHONPATH``): ``--py-files`` archives reach a worker only per task.
 """
 
 from __future__ import annotations
