@@ -38,8 +38,8 @@ from pyspark.sql import types as T
 
 from pdf_etl_ocr_inference_spark.operators.shard_server import (
     VecStore,
-    publish_meta,
     read_meta,
+    swap_shards,
     write_shards,
 )
 
@@ -233,14 +233,9 @@ def refresh_nsw_index(
     the shard graph rebuilds deterministically from that member set,
     so refresh ≡ full rebuild of the post-change corpus, shard by
     shard.  The rebuilt shard dirs are staged under a tmp index and
-    swapped in by O(1) directory renames LAST (the ``changefeed.
-    compact`` discipline).  Each swap is two atomic renames —
-    park the live shard under ``_old_shard_<n>`` (underscore prefix:
-    ignored by Spark's file listing) then ``os.replace(src, dst)`` —
-    so a crash between them leaves the old shard recoverable (never a
-    missing shard: a retry of the same version restores it before
-    rebuilding), and ``last_version`` only bumps after every shard
-    swapped.  Returns the rebuilt shard ids.
+    swapped in by directory renames LAST, then ``last_version`` bumps
+    (``shard_server.swap_shards`` holds the crash-safety contract).
+    Returns the rebuilt shard ids.
     """
 
     def _rebuild(members, tmp, meta):
@@ -273,17 +268,14 @@ def refresh_sharded_graph(
     vector kinds (NSW/HNSW graphs, PQ/IVF/IVF-PQ serving layouts):
     read the ``kind`` meta at ``path``, compute touched shards,
     rebuild their member sets into a tmp index via
-    ``rebuild(members_df, tmp_path, meta)``, atomically swap shard
-    dirs (see :func:`refresh_nsw_index` for the crash-safety
-    contract), then publish the meta with ``last_version`` bumped.
+    ``rebuild(members_df, tmp_path, meta)``, then swap the shard dirs
+    and publish the meta with ``last_version`` bumped
+    (``shard_server.swap_shards``).
     ``shard_col(meta) -> Column`` overrides the default id-hash
     sharding (``vec_id % n_shards``) — IVF passes the centroid argmax
     so an update that MOVES a vector between cells touches both
     (preimage rows carry the old embedding, postimage rows the new
     one)."""
-    import os
-    import shutil
-
     meta = read_meta(path, kind)
     if version <= meta.get("last_version", 0):
         return []  # already folded (idempotent on driver retry)
@@ -309,56 +301,25 @@ def refresh_sharded_graph(
         .distinct()
         .collect()
     )
-    if not touched:
-        meta["last_version"] = version
-        publish_meta(path, kind, meta)
-        return []
 
-    # recover any shard left under .old by a crash mid-swap of a
-    # PREVIOUS refresh attempt (version not yet bumped ⇒ this is a
-    # retry of that same commit): restore the old shard so the
-    # rebuild below reads the pre-change graph, not a missing dir.
-    for sh in touched:
-        dst = f"{path}/shard={sh}"
-        old = f"{path}/_old_shard_{sh}"  # "_" prefix: invisible to Spark
-        if os.path.exists(old) and not os.path.exists(dst):
-            os.replace(old, dst)
+    def stage(tmp):
+        # read after swap_shards has restored any shard a crashed
+        # attempt parked, so the rebuild starts from the pre-change rows
+        current = (
+            spark.read.parquet(path)
+            .filter(F.col("shard").isin(touched))
+            .select("vec_id", "embedding")
+        )
+        # drop removed ids AND re-added ids (upsert: the add wins)
+        gone = (
+            removes.select("vec_id")
+            .unionByName(adds.select("vec_id"))
+            .distinct()
+        )
+        survivors = current.join(gone, on="vec_id", how="left_anti")
+        rebuild(survivors.unionByName(adds), tmp, meta)
 
-    graph = spark.read.parquet(path)
-    current = graph.filter(F.col("shard").isin(touched)).select(
-        "vec_id", "embedding"
-    )
-    # drop removed ids AND re-added ids (upsert: the add wins)
-    gone = (
-        removes.select("vec_id")
-        .unionByName(adds.select("vec_id"))
-        .distinct()
-    )
-    survivors = current.join(gone, on="vec_id", how="left_anti")
-    members = survivors.unionByName(adds)
-
-    tmp = path + "_refresh_tmp"
-    try:
-        rebuild(members, tmp, meta)
-        # swap LAST: two atomic renames per shard — the old shard is
-        # parked under .old (recoverable) before the new one lands,
-        # so no crash point leaves the shard missing.
-        for sh in touched:
-            src = f"{tmp}/shard={sh}"
-            dst = f"{path}/shard={sh}"
-            old = f"{path}/_old_shard_{sh}"
-            shutil.rmtree(old, ignore_errors=True)
-            if os.path.exists(dst):
-                os.replace(dst, old)
-            if os.path.exists(src):
-                os.replace(src, dst)
-        meta["last_version"] = version
-        publish_meta(path, kind, meta)
-        for sh in touched:  # all swapped + version durable: drop .old
-            shutil.rmtree(f"{path}/_old_shard_{sh}", ignore_errors=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return touched
+    return swap_shards(path, kind, meta, version, touched, stage)
 
 
 def _id_shard(meta: dict):

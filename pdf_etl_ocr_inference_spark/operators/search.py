@@ -29,21 +29,28 @@ so engines that differ in the last float ulp still rank identically.
 
 from __future__ import annotations
 
+import re
 import struct
+from collections import Counter
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pdf_etl_ocr_inference_spark.operators.shard_server import (
+    WORKER_CACHE,
+    frame_bytes,
     lookup,
     merge_topk,
     publish_build,
-    publish_meta,
+    publish_version,
     read_meta,
     rows_schema,
     shard_token,
+    write_shard,
 )
 
 K1 = 1.2
@@ -434,36 +441,106 @@ def refresh_postings_index(
     spark, path: str, batch: DataFrame, version: int,
     text_col: str = "text", id_col: str = "doc_id",
 ) -> None:
-    """Fold a new-arrivals batch in: append its postings under a
-    ``v=<version>`` partition, bump the corpus stats (N, Σdl) in the
-    meta.  Idempotent per version: the watermark skips re-applied
-    commits AND a retry clears its own version dir first, so a crash
-    between the append and the meta bump cannot double-count."""
-    import os
-    import shutil
+    """Fold a new-arrivals batch in: its postings become a
+    ``v=<version>`` partition and the corpus stats (N, Σdl) in the
+    meta grow by the batch's, published last
+    (``shard_server.publish_version``).  Idempotent per version: the
+    watermark skips re-applied commits, and a retry replaces its own
+    crashed ``v=<version>``, so nothing is counted twice.
 
+    A batch that fits the pin budget (Catalyst's estimate) is folded in
+    the driver: one Arrow job collects ``(id, text)`` and
+    :func:`_postings_fold` builds the postings and the stats with the
+    tokenisation of :func:`_postings_rows`.  A larger batch, or a text
+    column that is not a string, is written by Spark."""
     meta = read_meta(path, "postings")
     if version <= meta["last_version"]:
         return
-    shutil.rmtree(os.path.join(path, f"v={version}"), ignore_errors=True)
-    rows = _postings_rows(batch, text_col, id_col).withColumn(
-        "v", F.lit(version)
+    docs = batch.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
+    rows = docs.toArrow() if frame_bytes(docs) <= WORKER_CACHE.budget else None
+    if (
+        rows is not None
+        and rows["id"].null_count == 0
+        and pa.types.is_string(rows.schema.field("text").type)
+    ):
+        # what a null text adds to Σdl: Spark's size(null) is null
+        # under ANSI (the default) and -1 under the legacy setting
+        ansi = spark.conf.get("spark.sql.ansi.enabled") == "true"
+        legacy = not ansi and (
+            spark.conf.get("spark.sql.legacy.sizeOfNull", "true") == "true"
+        )
+        buckets, n_docs, sum_dl = _postings_fold(rows, -1 if legacy else 0)
+
+        def stage(staged):
+            for pb, tbl in buckets.items():
+                write_shard(tbl, f"{staged}/_pb={pb}")
+
+    else:
+        toks = F.split(F.trim(F.col(text_col)), r"\s+")
+        stats = batch.select(F.size(toks).alias("dl")).agg(
+            F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sum_dl")
+        ).first()
+        n_docs, sum_dl = int(stats["n"] or 0), int(stats["sum_dl"] or 0)
+
+        def stage(staged):
+            (
+                _postings_rows(batch, text_col, id_col)
+                .repartition("_pb")
+                .sortWithinPartitions("_pb", "term", "id")
+                .write.mode("overwrite")
+                .partitionBy("_pb")
+                .parquet(staged)
+            )
+
+    meta["n_docs"] += n_docs
+    meta["sum_dl"] += sum_dl
+    publish_version(path, "postings", meta, version, stage)
+
+
+# Java's ``\s`` (the split in :func:`_postings_rows`); Spark's ``trim``
+# strips only U+0020
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
+def _postings_fold(rows: pa.Table, null_dl: int):
+    """``({bucket: postings table}, n_docs, sum_dl)`` of the ``(id,
+    text)`` rows, equal to :func:`_postings_rows` and the stats job of
+    the Spark path: ``split(trim(text), '\\s+')``, tf per ``(term, id,
+    dl)``.  A null text yields no postings, counts in ``n_docs`` and
+    adds ``null_dl`` to ``sum_dl``: 0 where Spark's ``size(null)`` is
+    null, -1 where it is -1."""
+    tf: Counter = Counter()
+    sum_dl = 0
+    for i, text in zip(rows["id"].to_pylist(), rows["text"].to_pylist()):
+        if text is None:
+            sum_dl += null_dl
+            continue
+        toks = _JAVA_WS.split(text.strip(" "))
+        sum_dl += len(toks)
+        for t in toks:
+            tf[(t, i, len(toks))] += 1
+    keys = sorted(tf, key=lambda key: key[:2])
+    terms = [t for t, _, _ in keys]
+    post = pa.Table.from_pydict(
+        {
+            "term": terms,
+            "id": [i for _, i, _ in keys],
+            "dl": [dl for _, _, dl in keys],
+            "tf": [tf[key] for key in keys],
+        },
+        schema=pa.schema(
+            [
+                pa.field("term", pa.string(), nullable=False),
+                pa.field("id", rows.schema.field("id").type),
+                pa.field("dl", pa.int32()),
+                pa.field("tf", pa.int64(), nullable=False),
+            ]
+        ),
     )
-    (
-        rows.repartition("_pb")
-        .sortWithinPartitions("_pb", "term", "id")
-        .write.mode("append")
-        .partitionBy("v", "_pb")
-        .parquet(path)
-    )
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    stats = batch.select(F.size(toks).alias("dl")).agg(
-        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sum_dl")
-    ).first()
-    meta["n_docs"] += int(stats["n"] or 0)
-    meta["sum_dl"] += int(stats["sum_dl"] or 0)
-    meta["last_version"] = version
-    publish_meta(path, "postings", meta)
+    bucket = {t: _term_bucket(t) for t in set(terms)}
+    pbs = np.array([bucket[t] for t in terms], dtype="int64")
+    buckets = {int(pb): post.filter(pbs == pb) for pb in np.unique(pbs)}
+    return buckets, rows.num_rows, sum_dl
 
 
 def bm25_topk_indexed(

@@ -25,10 +25,14 @@ answer function per kind (``_ANSWERS``) and the IVF probe rounds.  A
 lookup answers when called and returns a DataFrame over the merged
 rows; collecting it runs no job.
 
-Builds and refreshes stay batch jobs.  Every meta carries a
-``build_id`` and a ``last_version`` that a refresh bumps; together
-they key the shard cache, so a refresh or a rebuild at the same path
-is never answered from stale pinned state.
+Builds are batch jobs, and so are refreshes of every kind but IVF.
+An IVF refresh whose commit fits the pin budget is folded in the
+driver (one Arrow job collects the change rows; numpy assigns their
+cells and pyarrow rewrites the touched cells); a larger commit is
+rebuilt by Spark.  Every meta carries a ``build_id`` and a
+``last_version`` that a refresh bumps; together they key the shard
+cache, so a refresh or a rebuild at the same path is never answered
+from stale pinned state.
 """
 
 from __future__ import annotations
@@ -36,6 +40,8 @@ from __future__ import annotations
 from collections import Counter
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,16 +52,23 @@ from pdf_etl_ocr_inference_spark.operators.graph_ann import (
     refresh_sharded_graph,
 )
 from pdf_etl_ocr_inference_spark.operators.shard_server import (
+    WORKER_CACHE,
+    frame_bytes,
     lookup,
     merge_topk,
     read_meta,
+    read_shard,
     rows_schema,
+    shard_bytes,
     shard_token,
+    swap_shards,
+    write_shard,
     write_shards,
 )
 from pdf_etl_ocr_inference_spark.operators.similarity import (
     ivf_assign,
     ivf_cell,
+    ivf_cell_numpy,
 )
 
 
@@ -204,11 +217,35 @@ def refresh_ivf_serving_index(
     id_col: str = "vec_id",
     embedding_col: str = "embedding",
 ) -> list[int]:
-    """Fold one change-feed commit into the IVF layout.  The shard
-    function is the centroid argmax, so an update that moves a vector
-    between cells touches BOTH (preimage rows carry the old
-    embedding); same atomic swap + version watermark as the other
-    families."""
+    """Fold one change-feed commit into the IVF layout and return the
+    touched cells.  The shard function is the centroid argmax, so an
+    update that moves a vector between cells touches BOTH (preimage
+    rows carry the old embedding); the version watermark makes a
+    re-delivered commit a no-op.
+
+    A commit whose change rows (Catalyst's estimate) and touched
+    cells (on-disk bytes) fit the pin budget is folded in the driver:
+    one Arrow job collects the rows, :func:`_ivf_fold` assigns their
+    cells in numpy and rewrites each touched cell with pyarrow.  A
+    larger commit, or one with a null id or embedding or a vector of
+    the wrong dimension, rebuilds the touched cells with Spark
+    (``graph_ann.refresh_sharded_graph``).  Both paths publish through
+    ``shard_server.swap_shards`` and write the same rows."""
+    meta = read_meta(path, "ivf")
+    if version <= meta.get("last_version", 0):
+        return []  # already folded (idempotent on driver retry)
+    est = frame_bytes(changes)
+    if est <= WORKER_CACHE.budget:
+        rows = changes.select(
+            F.col(id_col).cast("long").alias("vec_id"),
+            F.col(embedding_col).cast("array<double>").alias("embedding"),
+            "_change_type",
+        ).toArrow()
+        fold = _ivf_fold(rows, meta["centroids"], path)
+        if fold is not None:
+            touched, stage = fold
+            if est + shard_bytes(path, "ivf", touched) <= WORKER_CACHE.budget:
+                return swap_shards(path, "ivf", meta, version, touched, stage)
 
     def _rebuild(members, tmp, meta):
         build_ivf_serving_index(
@@ -219,6 +256,56 @@ def refresh_ivf_serving_index(
         spark, path, "ivf", changes, version, id_col, embedding_col,
         _rebuild, shard_col=_ivf_cell,
     )
+
+
+_IVF_SCHEMA = pa.schema(
+    [("vec_id", pa.int64()), ("embedding", pa.list_(pa.float64()))]
+)
+_ADDS = ["insert", "update_postimage"]
+_REMOVES = ["delete", "update_preimage"]
+
+
+def _ivf_fold(rows: pa.Table, centroids: list, path: str):
+    """``(touched cells, stage(tmp))`` of the change ``rows``
+    ``(vec_id, embedding, _change_type)``, or ``None`` when a row has
+    a null id or embedding or a vector of the wrong dimension (the
+    Spark path keeps its own handling of those).  ``stage`` writes
+    each touched cell of the index at ``path`` under ``tmp`` with the
+    members ``refresh_sharded_graph`` gives it: its current rows minus
+    every id the commit removes or adds (upsert: the add wins), plus
+    the adds that the centroid argmax places in it."""
+    cents = np.asarray(centroids, dtype="float64")
+    dim = cents.shape[1]
+    ids = rows["vec_id"].combine_chunks()
+    emb = rows["embedding"].combine_chunks()
+    flat = emb.flatten()
+    if ids.null_count or emb.null_count or flat.null_count:
+        return None
+    if (pc.list_value_length(emb).to_numpy() != dim).any():
+        return None
+    cells = ivf_cell_numpy(flat.to_numpy().reshape(len(emb), dim), cents)
+    kinds = rows["_change_type"].combine_chunks()
+    add, live = (
+        pc.is_in(kinds, pa.array(types)).to_numpy(zero_copy_only=False)
+        for types in (_ADDS, _ADDS + _REMOVES)
+    )
+    touched = sorted(set(cells[live].tolist()))
+    gone = pa.array(ids.to_numpy()[live])
+    adds = pa.table({"vec_id": ids, "embedding": emb}).cast(_IVF_SCHEMA)
+
+    def stage(tmp):
+        for sh in touched:
+            cur = read_shard(path, sh, "ivf")
+            parts = [adds.filter(pa.array(add & (cells == sh)))]
+            if cur is not None:
+                keep = pc.invert(pc.is_in(cur["vec_id"], gone))
+                cur = cur.select(_IVF_SCHEMA.names).cast(_IVF_SCHEMA)
+                parts.insert(0, cur.filter(keep))
+            members = pa.concat_tables(parts)
+            if members.num_rows:
+                write_shard(members, f"{tmp}/shard={sh}")
+
+    return touched, stage
 
 
 def build_ivfpq_serving_index(

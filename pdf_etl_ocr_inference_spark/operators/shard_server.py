@@ -39,8 +39,19 @@ publishes ``last_version`` 0 and a fresh ``build_id``
 (:func:`publish_build`).  :func:`unit_rows` is the one row
 normalisation: graph builds, the loader and the oracle replay
 (``plans/graph_sql.py``) all use it, so a graph is walked on the
-vectors it was built on.  Builds and refreshes stay batch jobs in
-``serving``, ``search``, ``graph_ann`` and ``hnsw``.
+vectors it was built on.
+
+A refresh publishes here too.  :func:`swap_shards` moves the staged
+shards of a vector index into place (two renames per shard) and
+publishes the meta last; :func:`publish_version` moves a staged
+postings append to ``v=<version>`` with one rename, then publishes the
+meta.  Builds stay batch jobs in ``serving``, ``search``, ``graph_ann``
+and ``hnsw``.  A refresh whose change rows and touched shards fit the
+pin budget (:func:`frame_bytes`, :func:`shard_bytes`) is folded in the
+driver: the IVF and postings refreshes collect the change rows with one
+Arrow job and write each staged shard with :func:`write_shard`
+(pyarrow).  A larger commit, and every other kind, rebuilds its shards
+with Spark.
 """
 
 from __future__ import annotations
@@ -48,6 +59,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import shutil
 import threading
 import uuid
 from collections import OrderedDict
@@ -57,6 +69,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -126,6 +139,104 @@ def write_shards(df: DataFrame, path: str, kind: str, meta: dict) -> str:
 def shard_token(meta: dict) -> str:
     """Cache token of the published index state (see module doc)."""
     return f"{meta.get('build_id', '')}:{meta.get('last_version', 0)}"
+
+
+def write_shard(tbl: pa.Table, directory: str) -> None:
+    """Write ``tbl`` as one parquet file in ``directory``: a shard
+    folded in the driver.  Lists use Spark's element name, so a Spark
+    scan and :func:`read_shard` see the same rows as in a file Spark
+    wrote."""
+    os.makedirs(directory, exist_ok=True)
+    pq.write_table(
+        tbl,
+        os.path.join(directory, f"part-{uuid.uuid4().hex}.parquet"),
+        use_compliant_nested_type=True,
+    )
+
+
+def swap_shards(
+    path: str, kind: str, meta: dict, version: int, touched: list, stage
+) -> list:
+    """Publish a refresh of the shards ``touched`` of the index at
+    ``path``: ``stage(tmp)`` writes their new contents as ``shard=N``
+    directories under ``tmp`` (a shard it leaves out ends empty); each
+    is moved into place; then ``meta`` is published with
+    ``last_version`` = ``version``.  Returns ``touched``.
+
+    Each move is two renames: the live shard is parked under
+    ``_old_shard_<n>`` (the underscore hides it from Spark's listing)
+    before the new one lands, so no crash leaves a shard missing for
+    good.  The meta publish is last, so a crash before it leaves the
+    version unfolded; the retry of that version first restores any
+    parked shard whose new copy had not landed, then stages again from
+    the restored state.  The Spark rebuild and the driver fold both
+    publish through here."""
+    for sh in touched:
+        dst = f"{path}/shard={sh}"
+        old = f"{path}/_old_shard_{sh}"
+        if os.path.exists(old) and not os.path.exists(dst):
+            os.replace(old, dst)
+    tmp = path + "_refresh_tmp"
+    shutil.rmtree(tmp, ignore_errors=True)
+    try:
+        if touched:
+            stage(tmp)
+        for sh in touched:
+            src = f"{tmp}/shard={sh}"
+            dst = f"{path}/shard={sh}"
+            old = f"{path}/_old_shard_{sh}"
+            shutil.rmtree(old, ignore_errors=True)
+            if os.path.exists(dst):
+                os.replace(dst, old)
+            if os.path.exists(src):
+                os.replace(src, dst)
+        meta["last_version"] = version
+        publish_meta(path, kind, meta)
+        for sh in touched:  # all swapped, version durable
+            shutil.rmtree(f"{path}/_old_shard_{sh}", ignore_errors=True)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return touched
+
+
+def publish_version(
+    path: str, kind: str, meta: dict, version: int, stage
+) -> None:
+    """Publish an append to the index at ``path``: ``stage(staged)``
+    writes it under ``_v=<version>_staged`` (hidden from Spark's
+    listing and from the ``v=*`` glob), one rename moves it to
+    ``v=<version>``, then ``meta`` is published with ``last_version``
+    = ``version``.  A crashed attempt's ``v=<version>`` is removed
+    first: its rows are not in the published meta, so a retry never
+    counts them twice."""
+    staged = os.path.join(path, f"_v={version}_staged")
+    dst = os.path.join(path, f"v={version}")
+    shutil.rmtree(staged, ignore_errors=True)
+    try:
+        stage(staged)
+        shutil.rmtree(dst, ignore_errors=True)
+        if os.path.exists(staged):
+            os.replace(staged, dst)
+        meta["last_version"] = version
+        publish_meta(path, kind, meta)
+    finally:
+        shutil.rmtree(staged, ignore_errors=True)
+
+
+def frame_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate of ``df`` (no job).  A relation of
+    unknown size estimates ``spark.sql.defaultSizeInBytes``, so it
+    never fits the pin."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def shard_bytes(path: str, kind: str, shards) -> int:
+    """On-disk bytes of the files that hold ``shards``."""
+    return sum(
+        os.path.getsize(f)
+        for sh in shards
+        for f in _shard_files(path, sh, kind)
+    )
 
 
 # ------------------------------------------------------------------
@@ -357,6 +468,13 @@ def _shard_files(path: str, shard: int, kind: str) -> list:
     return glob.glob(glob.escape(path) + pattern)
 
 
+def read_shard(path: str, shard: int, kind: str):
+    """One shard's rows as an Arrow table, or ``None`` when it has no
+    files."""
+    files = _shard_files(path, shard, kind)
+    return ds.dataset(files, format="parquet").to_table() if files else None
+
+
 def _load_shard(path: str, shard: int, kind: str, token: str):
     """This process's parsed state for one shard, or ``None`` when the
     shard holds no rows (an empty cell or bucket)."""
@@ -364,8 +482,7 @@ def _load_shard(path: str, shard: int, kind: str, token: str):
     state = WORKER_CACHE.get(key, token)
     if state is not MISS:
         return state
-    files = _shard_files(path, shard, kind)
-    tbl = ds.dataset(files, format="parquet").to_table() if files else None
+    tbl = read_shard(path, shard, kind)
     state = None
     if tbl is not None and tbl.num_rows:
         state = _PARSE[kind](tbl, path, int(shard), kind)

@@ -25,6 +25,7 @@ from __future__ import annotations
 import itertools
 import math
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -592,6 +593,18 @@ def ivf_cell(embedding: Column | str, centroids: list[list[float]]) -> Column:
     place a row with it."""
     dots = F.array(*[dot_product(embedding, _as_vec_lit(c)) for c in centroids])
     return (F.array_position(dots, F.array_max(dots)) - 1).cast("int")
+
+
+def ivf_cell_numpy(emb: np.ndarray, centroids: np.ndarray) -> np.ndarray:
+    """:func:`ivf_cell` of the rows of the float64 matrix ``emb``, bit
+    for bit.  ``dot_product`` sums its products left to right from
+    0.0, so the dots are accumulated one dimension at a time (a BLAS
+    ``emb @ centroids.T`` sums in another order and can flip a near
+    tie); ``argmax`` takes the lowest cell on a tie."""
+    dots = np.zeros((len(emb), len(centroids)))
+    for j in range(emb.shape[1]):
+        dots += emb[:, j, None] * centroids[None, :, j]
+    return np.argmax(dots, axis=1)
 
 
 def topk_ivf(

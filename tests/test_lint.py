@@ -229,11 +229,13 @@ def test_one_lru_implementation():
 
 # ---------------------------------------------------------------------------
 # One index format.  ``shard_server`` owns the on-disk layout of every
-# served index: it mints build ids (``new_build_id()``) and writes the
-# ``shard=N`` directories (``<writer>.partitionBy("shard")``).  A build
-# elsewhere goes through ``shard_server.write_shards`` /
-# ``publish_build``.  ``Window.partitionBy("shard")`` is not a write and
-# is allowed.
+# served index: it mints build ids (``new_build_id()``), writes the
+# ``shard=N`` directories (``<writer>.partitionBy("shard")``) and writes
+# every parquet file from the driver (pyarrow's ``write_table``).  A
+# build elsewhere goes through ``shard_server.write_shards`` /
+# ``publish_build``, a refresh folded in the driver through
+# ``shard_server.write_shard``.  ``Window.partitionBy("shard")`` is not
+# a write and is allowed.
 # ---------------------------------------------------------------------------
 
 
@@ -257,7 +259,7 @@ def _index_format_sites(path: pathlib.Path) -> list[str]:
         if not isinstance(node, ast.Call):
             continue
         name = _call_name(node)
-        if name == "new_build_id" or (
+        if name in ("new_build_id", "write_table") or (
             name == "partitionBy"
             and isinstance(node.func, ast.Attribute)
             and _on_writer(node.func.value)
@@ -278,8 +280,9 @@ def test_one_index_format_owner():
         for s in _index_format_sites(p)
     ]
     assert not sites, (
-        "index build id or shard directory written outside shard_server "
-        "— use shard_server.write_shards / publish_build:\n"
+        "index build id, shard directory or pyarrow parquet file written "
+        "outside shard_server — use shard_server.write_shards / "
+        "publish_build / write_shard:\n"
         + "\n".join(sites)
     )
 
