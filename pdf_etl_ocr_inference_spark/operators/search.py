@@ -29,14 +29,13 @@ so engines that differ in the last float ulp still rank identically.
 
 from __future__ import annotations
 
-import re
 import struct
-from collections import Counter
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -448,11 +447,12 @@ def refresh_postings_index(
     watermark skips re-applied commits, and a retry replaces its own
     crashed ``v=<version>``, so nothing is counted twice.
 
-    A batch that fits the pin budget (Catalyst's estimate) is folded in
-    the driver: one Arrow job collects ``(id, text)`` and
-    :func:`_postings_fold` builds the postings and the stats with the
-    tokenisation of :func:`_postings_rows`.  A larger batch, or a text
-    column that is not a string, is written by Spark."""
+    A batch that fits the pin budget (``shard_server.frame_bytes``:
+    the bytes its scan reads) is folded in the driver: one Arrow job
+    collects ``(id, text)`` and :func:`_postings_fold` builds the
+    postings and the stats with Arrow kernels and the tokenisation of
+    :func:`_postings_rows`.  A larger batch, a text column that is
+    not a string, or ids that are not integers are written by Spark."""
     meta = read_meta(path, "postings")
     if version <= meta["last_version"]:
         return
@@ -461,6 +461,7 @@ def refresh_postings_index(
     if (
         rows is not None
         and rows["id"].null_count == 0
+        and pa.types.is_integer(rows.schema.field("id").type)
         and pa.types.is_string(rows.schema.field("text").type)
     ):
         # what a null text adds to Σdl: Spark's size(null) is null
@@ -497,37 +498,53 @@ def refresh_postings_index(
     publish_version(path, "postings", meta, version, stage)
 
 
-# Java's ``\s`` (the split in :func:`_postings_rows`); Spark's ``trim``
-# strips only U+0020
-_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
-
-
 def _postings_fold(rows: pa.Table, null_dl: int):
     """``({bucket: postings table}, n_docs, sum_dl)`` of the ``(id,
-    text)`` rows, equal to :func:`_postings_rows` and the stats job of
-    the Spark path: ``split(trim(text), '\\s+')``, tf per ``(term, id,
-    dl)``.  A null text yields no postings, counts in ``n_docs`` and
-    adds ``null_dl`` to ``sum_dl``: 0 where Spark's ``size(null)`` is
-    null, -1 where it is -1."""
-    tf: Counter = Counter()
-    sum_dl = 0
-    for i, text in zip(rows["id"].to_pylist(), rows["text"].to_pylist()):
-        if text is None:
-            sum_dl += null_dl
-            continue
-        toks = _JAVA_WS.split(text.strip(" "))
-        sum_dl += len(toks)
-        for t in toks:
-            tf[(t, i, len(toks))] += 1
-    keys = sorted(tf, key=lambda key: key[:2])
-    terms = [t for t, _, _ in keys]
-    post = pa.Table.from_pydict(
-        {
-            "term": terms,
-            "id": [i for _, i, _ in keys],
-            "dl": [dl for _, _, dl in keys],
-            "tf": [tf[key] for key in keys],
-        },
+    text)`` rows (integer ids), equal to :func:`_postings_rows` and
+    the stats job of the Spark path: ``split(trim(text), '\\s+')``, tf
+    per ``(term, id, dl)``, rows in ``(term, id)`` order.  Spark's
+    ``trim`` strips only U+0020, and Arrow's ASCII whitespace is
+    Java's ``\\s``, ``[ \\t\\n\\x0B\\f\\r]``.  A null text yields no
+    postings, counts in ``n_docs`` and adds ``null_dl`` to ``sum_dl``:
+    0 where Spark's ``size(null)`` is null, -1 where it is -1."""
+    toks = pc.ascii_split_whitespace(
+        pc.utf8_trim(rows["text"].combine_chunks(), characters=" ")
+    )
+    dl = pc.list_value_length(toks)
+    flat = pc.list_flatten(toks)
+    terms = pc.unique(flat)
+    bucket = np.array([_term_bucket(t) for t in terms.to_pylist()], "int64")
+    # the distinct terms in layout order, (bucket, term); rank[c] is
+    # the place of term c in it
+    by_term = pc.sort_indices(terms).to_numpy()
+    order = by_term[np.argsort(bucket[by_term], kind="stable")]
+    rank = np.empty(len(order), "int64")
+    rank[order] = np.arange(len(order))
+    # each row's (id, dl), numbered in sorted order; one int64 key per
+    # token then sorts and counts as (term, id, dl)
+    pairs, doc = np.unique(
+        np.stack(
+            [
+                rows["id"].combine_chunks().to_numpy().astype("int64"),
+                dl.fill_null(0).to_numpy().astype("int64"),
+            ],
+            axis=1,
+        ),
+        axis=0,
+        return_inverse=True,
+    )
+    key = rank[pc.index_in(flat, value_set=terms).to_numpy()] * len(pairs)
+    key += doc[pc.list_parent_indices(toks).to_numpy()]
+    key, tf = np.unique(key, return_counts=True)
+    code = order[key // max(len(pairs), 1)]
+    pairs = pairs[key % max(len(pairs), 1)]
+    post = pa.Table.from_arrays(
+        [
+            terms.take(code),
+            pa.array(pairs[:, 0], rows.schema.field("id").type),
+            pa.array(pairs[:, 1], pa.int32()),
+            pa.array(tf, pa.int64()),
+        ],
         schema=pa.schema(
             [
                 pa.field("term", pa.string(), nullable=False),
@@ -537,9 +554,13 @@ def _postings_fold(rows: pa.Table, null_dl: int):
             ]
         ),
     )
-    bucket = {t: _term_bucket(t) for t in set(terms)}
-    pbs = np.array([bucket[t] for t in terms], dtype="int64")
-    buckets = {int(pb): post.filter(pbs == pb) for pb in np.unique(pbs)}
+    pbs = bucket[code]
+    starts = np.flatnonzero(np.diff(pbs, prepend=-1))
+    ends = np.r_[starts[1:], len(pbs)]
+    buckets = {
+        int(pbs[a]): post.slice(a, b - a) for a, b in zip(starts, ends)
+    }
+    sum_dl = (pc.sum(dl).as_py() or 0) + dl.null_count * null_dl
     return buckets, rows.num_rows, sum_dl
 
 

@@ -223,8 +223,9 @@ def refresh_ivf_serving_index(
     rows carry the old embedding); the version watermark makes a
     re-delivered commit a no-op.
 
-    A commit whose change rows (Catalyst's estimate) and touched
-    cells (on-disk bytes) fit the pin budget is folded in the driver:
+    A commit whose change rows (``shard_server.frame_bytes``: the
+    bytes its scan reads) and touched cells (on-disk bytes) fit the
+    pin budget is folded in the driver:
     one Arrow job collects the rows, :func:`_ivf_fold` assigns their
     cells in numpy and rewrites each touched cell with pyarrow.  A
     larger commit, or one with a null id or embedding or a vector of

@@ -203,13 +203,17 @@ def publish_version(
     path: str, kind: str, meta: dict, version: int, stage
 ) -> None:
     """Publish an append to the index at ``path``: ``stage(staged)``
-    writes it under ``_v=<version>_staged`` (hidden from Spark's
-    listing and from the ``v=*`` glob), one rename moves it to
+    writes it under ``_staged_v<version>``, one rename moves it to
     ``v=<version>``, then ``meta`` is published with ``last_version``
     = ``version``.  A crashed attempt's ``v=<version>`` is removed
     first: its rows are not in the published meta, so a retry never
-    counts them twice."""
-    staged = os.path.join(path, f"_v={version}_staged")
+    counts them twice.
+
+    The staged name starts with an underscore and holds no ``=``:
+    Spark's file listing skips such a directory (one WITH an ``=`` is
+    read as a partition), and the ``v=*`` glob does not match it, so
+    no reader sees a staged or crashed append."""
+    staged = os.path.join(path, f"_staged_v{version}")
     dst = os.path.join(path, f"v={version}")
     shutil.rmtree(staged, ignore_errors=True)
     try:
@@ -224,10 +228,23 @@ def publish_version(
 
 
 def frame_bytes(df: DataFrame) -> int:
-    """Catalyst's size estimate of ``df`` (no job).  A relation of
-    unknown size estimates ``spark.sql.defaultSizeInBytes``, so it
-    never fits the pin."""
-    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    """What collecting ``df`` reads, with no job: Catalyst's size
+    estimate, capped by the bytes of the files its scans select when
+    every leaf of its plan is a file scan.  Catalyst's estimate of a
+    path-based relation does not prune partitions, so one ``v=<N>``
+    commit of a change feed would size as the whole feed; the physical
+    scan's selected files are the pruned ones.  A relation of unknown
+    size estimates ``spark.sql.defaultSizeInBytes``, so it never fits
+    the pin."""
+    qe = df._jdf.queryExecution()
+    est = int(qe.optimizedPlan().stats().sizeInBytes())
+    leaves = qe.sparkPlan().collectLeaves()
+    scans = [leaves.apply(i) for i in range(leaves.size())]
+    if scans and all(
+        s.getClass().getSimpleName() == "FileSourceScanExec" for s in scans
+    ):
+        est = min(est, sum(s.selectedPartitions().totalFileSize() for s in scans))
+    return est
 
 
 def shard_bytes(path: str, kind: str, shards) -> int:
@@ -502,7 +519,7 @@ def _plan_bytes(path: str, kind: str, token: str, plan: dict) -> int:
         if hit is not None and hit[0] == token:
             total += hit[2]
         else:
-            total += sum(map(os.path.getsize, _shard_files(path, shard, kind)))
+            total += shard_bytes(path, kind, [shard])
     return total
 
 

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from pdf_etl_ocr_inference_spark.operators import search, serving
 from pdf_etl_ocr_inference_spark.operators.search import (
+    bm25_topk_indexed,
     build_postings_index,
     refresh_postings_index,
     serve_bm25,
@@ -30,6 +31,7 @@ from pdf_etl_ocr_inference_spark.operators.serving import (
 from pdf_etl_ocr_inference_spark.operators.shard_server import (
     META_FILES,
     WORKER_CACHE,
+    frame_bytes,
 )
 from pdf_etl_ocr_inference_spark.streaming.changefeed import (
     commit_changes,
@@ -66,6 +68,7 @@ TEXTS = [
     "non\u00a0breaking space",
     "",
     None,
+    "spark spark  vector spark",
 ]
 
 
@@ -207,7 +210,8 @@ def test_fold_equals_spark_refresh(spark, tmp_path, monkeypatch):
     assert {("tab", 1000), ("separated", 1000), ("non\u00a0breaking", 1003),
             ("", 1004), ("", 8), ("leading", 8), ("", 1010)} <= got
     assert ("", 1002) not in got and 1005 not in {i for _, i in got}
-    assert meta["n_docs"] == 40 + 7 + 2
+    assert ("spark", 1006, 4, 3) in {r[:4] for r in rows}  # tf counts repeats
+    assert meta["n_docs"] == 40 + 8 + 2
 
 
 def test_small_commit_folds_with_one_job_per_refresh(spark, tmp_path):
@@ -220,6 +224,83 @@ def test_small_commit_folds_with_one_job_per_refresh(spark, tmp_path):
     with _jobs(spark) as n_post:
         refresh_postings_index(spark, post, docs, 1, text_col="text", id_col="doc_id")
     assert (n_ivf, n_post) == ([1], [1])
+
+
+def test_small_commit_of_a_feed_over_the_budget_folds(
+    spark, tmp_path, monkeypatch
+):
+    """The rule sizes the commit the refresh reads, not the feed: with
+    an earlier commit far over the (shrunk) pin budget, a small commit
+    read with ``since_version`` still folds in the driver."""
+    ivf, post = _build(spark, tmp_path)
+    feed = str(tmp_path / "feed")
+    big = spark.range(20000).select(
+        (F.col("id") + 5000).alias("doc_id"),
+        F.array(*[F.rand(seed=j) for j in range(4)]).alias("embedding"),
+        F.repeat(F.lit("filler "), 40).alias("text"),
+        F.lit("insert").alias("_change_type"),
+    )
+    commit_changes(big, feed, 1)
+    commit_changes(spark.createDataFrame(_commits()[1], FEED_SCHEMA), feed, 2)
+    budget = 64 << 10
+    ivf_changes, docs = _changes(spark, feed, 2)
+    whole = read_changes(spark, feed, since_version=1)
+    # Catalyst's own estimate of the pruned read is the whole feed
+    catalyst = whole._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert int(catalyst) > budget >= frame_bytes(whole)
+    with monkeypatch.context() as m:
+        _no_spark_rebuild(m)
+        m.setattr(WORKER_CACHE, "budget", budget)
+        assert refresh_ivf_serving_index(spark, ivf, ivf_changes, 2) == [0, 2]
+        refresh_postings_index(spark, post, docs, 2, text_col="text", id_col="doc_id")
+    assert _meta(post, "postings", "n_docs", "last_version") == {
+        "n_docs": 42, "last_version": 2
+    }
+
+
+def test_staged_postings_are_hidden_from_spark_readers(
+    spark, tmp_path, monkeypatch
+):
+    """A fold killed after staging (no cleanup runs) leaves
+    ``_staged_v<N>`` in the index.  Spark's reads of the index, as
+    ``bm25_topk_indexed`` makes them, do not see it, and the retry
+    publishes the version as a clean fold does."""
+    _, post = _build(spark, tmp_path / "base")
+    feed = str(tmp_path / "feed")
+    commit_changes(spark.createDataFrame(_commits()[0], FEED_SCHEMA), feed, 1)
+    _, docs = _changes(spark, feed, 1)
+
+    def refresh(path):
+        refresh_postings_index(spark, path, docs, 1, text_col="text", id_col="doc_id")
+
+    clean = _copy(post, tmp_path / "clean")
+    refresh(clean)
+    terms = ["spark", "tab", "words", "vector"]
+
+    def read(path):
+        df = spark.read.parquet(path)
+        top = bm25_topk_indexed(spark, path, terms, k=5).collect()
+        return df.schema.simpleString(), df.count(), [tuple(r) for r in top]
+
+    before = read(post)
+    real_rmtree = shutil.rmtree
+    with monkeypatch.context() as m:
+        _renames_under(m, tmp_path / "base", crash_at=1)  # the v=1 rename
+        m.setattr(
+            shutil, "rmtree",
+            lambda p, *a, **k: None
+            if "staged" in os.path.basename(p)
+            else real_rmtree(p, *a, **k),
+        )
+        with pytest.raises(_Crash):
+            refresh(post)
+    staged = glob.glob(f"{post}/_*staged*")
+    assert len(staged) == 1 and os.listdir(staged[0])
+    assert read(post) == before
+    refresh(post)
+    assert not os.path.exists(staged[0])
+    assert _postings(spark, post) == _postings(spark, clean)
+    assert read(post) == read(clean)
 
 
 def test_null_text_sums_as_spark_sizes_it_without_ansi(
@@ -334,6 +415,6 @@ def test_fold_crash_at_each_publish_step_heals_on_retry(
                 ), (step, k, c)
         fold(path)
         assert state(path) == want, (step, k)
-        assert not glob.glob(f"{path}*/_*staged") and not os.path.exists(
+        assert not glob.glob(f"{path}*/_*staged*") and not os.path.exists(
             path + "_refresh_tmp"
         )
