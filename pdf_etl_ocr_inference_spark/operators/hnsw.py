@@ -63,9 +63,10 @@ HNSW_SCHEMA = T.StructType(
 _MAX_LEVEL = 16  # ~M^16 nodes before this caps anything — plenty
 
 
-def _xxh64(x: int) -> int:
-    """Minimal deterministic 64-bit mix (xxhash64 finalizer avalanche
-    over the id) — stdlib-only so executors need no extra deps."""
+def _fmix64(x: int) -> int:
+    """MurmurHash3's 64-bit finalizer (``fmix64``) over the id: a
+    deterministic avalanche mix, stdlib-only so executors need no
+    extra deps.  Not XXH64 (that is ``search._xxhash64``)."""
     x &= 0xFFFFFFFFFFFFFFFF
     x ^= x >> 33
     x = (x * 0xFF51AFD7ED558CCD) & 0xFFFFFFFFFFFFFFFF
@@ -79,7 +80,7 @@ def node_level(vec_id: int, m_neighbors: int) -> int:
     """Deterministic HNSW layer assignment: the standard geometric
     distribution ``floor(-ln(u)·mL)``, with u a pure function of the
     id (top 53 hash bits → (0,1]) instead of an RNG draw."""
-    u = ((_xxh64(vec_id) >> 11) + 1) / float(1 << 53)
+    u = ((_fmix64(vec_id) >> 11) + 1) / float(1 << 53)
     ml = 1.0 / math.log(m_neighbors)
     return min(int(-math.log(u) * ml), _MAX_LEVEL)
 

@@ -24,9 +24,9 @@ from pyspark.sql import types as T
 
 from pdf_etl_ocr_inference_spark.operators.shard_server import (
     MISS,
-    WORKER_CACHE,
     PinCache,
-    dispatch,
+    lookup,
+    pinned,
 )
 
 
@@ -268,7 +268,7 @@ def load_or_refresh_file_stats(
         merged = _footer_stats(spark, current, cols)
     # chunked sidecar (r8): ~1024 covered files per chunk parquet —
     # a single coalesce(1) chunk at 10⁶ files would be one giant
-    # file that ONE executor-pin task must parse; bounded chunks
+    # file that ONE probe task must parse; bounded chunks
     # parallelize both the pinned probes and their first parse.
     # Publication is swap-by-pointer (r11): the chunk set lands in a
     # fresh version subdir and the stats_dir pointer flips — a
@@ -702,8 +702,9 @@ def stamp_manifest_verified(path: str, live_before: dict):
     return _write_manifest_docs(path, probe, live_now)
 
 
-# Every driver pin of O(files) state (the inventory doc, a layout's
-# live map, its stats rows and Bloom bit arrays) gets this budget.
+# The budget of each driver pin of O(files) file-map state: the
+# inventory doc and a layout's live map.  Sidecar chunks are pinned in
+# ``shard_server.WORKER_CACHE`` under its one budget instead.
 _DRIVER_PIN_BYTES = 64 << 20
 # path -> summary doc under the directory probe; the docs are ~100
 # bytes, so this cache counts entries
@@ -899,8 +900,8 @@ def scan_with_skipping(
     probe-verified inventory manifest and the ``stats`` marker carry
     the same digest and the marker's column set covers the queried
     box, the persisted ``_stats`` sidecar provably covers exactly
-    the live files, so the executor-pinned chunk probe returns ONLY
-    the passing (file, col) rows — O(keep·cols) driver rows, no
+    the live files, so the sidecar chunk probe returns ONLY the
+    passing (file, col) rows — O(keep·cols) driver rows, no
     O(files) listing, no O(files) fingerprint collect.  A cold or
     mutated directory refreshes the persisted sidecar
     (:func:`load_or_refresh_file_stats` — cost ∝ NEW files, widened
@@ -969,11 +970,7 @@ def scan_with_skipping(
                 # of failing the query on a sidecar it never needed
                 stats = collect_file_stats(spark, path, list(ranges))
         if fast is not None:
-            files, total = fast
-            if not files:
-                empty = spark.read.parquet(path).limit(0)
-                return empty, 0, total
-            return spark.read.parquet(*files), len(files), total
+            return _kept_scan(spark, path, *fast)
         # refresh lost its stamp race (directory changed mid-build) or
         # the dataset is read-only: reconcile the just-built stats DF
         # the conservative way
@@ -1010,11 +1007,19 @@ def scan_with_skipping(
             r["file"] for r in stats.select("file").distinct().collect()
         }
     files = sorted(((kept & covered) | (current - covered)) & current)
-    total = len(current)
+    return _kept_scan(spark, path, files, len(current))
+
+
+def _kept_scan(spark, path: str, files: list, total: int):
+    """``(rows of the kept files, files read, total)`` with the columns
+    of ``spark.read.parquet(path)`` whether or not a file is kept: the
+    ``basePath`` option keeps hive partition columns (``part=0/``) on a
+    read of leaf files, and an empty keep-list reads the root with no
+    rows."""
+    reader = spark.read.option("basePath", path)
     if not files:
-        empty = spark.read.parquet(path).limit(0)
-        return empty, 0, total
-    return spark.read.parquet(*files), len(files), total
+        return reader.parquet(path).limit(0), 0, total
+    return reader.parquet(*files), len(files), total
 
 
 def _splitmix64(x):
@@ -1132,7 +1137,7 @@ def build_file_bloom(spark, path: str, col: str) -> str:
         "fsize long, fmtime_ns long",
     )
     # ~256 bit arrays per chunk (they are MBs each at 1% fpp on big
-    # files): bounds per-chunk parse cost for the executor pins; one
+    # files): bounds per-chunk parse cost for the chunk pins; one
     # chunk at local fixture sizes, many at 10⁶ files.  Publication
     # is swap-by-pointer (r11, shared with the stats sidecar): a
     # REBUILD over a live table must not delete the chunk files a
@@ -1162,12 +1167,12 @@ def scan_point_lookup(
     Bloom filter (``build_file_bloom``) might contain ANY of
     ``values``, then re-apply the exact IN predicate row-wise.
 
-    The membership probe runs ON EXECUTORS (r8): the driver collects
-    only ``(file, fingerprint, hit)`` rows — file-count-sized scalar
-    control data — never the bit arrays, whose total size is
-    rows-proportional (~1.2 MB per 10 M-row file at 1% fpp; the
-    pre-r8 ``side_df.collect()`` was a GB-scale driver transfer at
-    10⁶ files, mislabeled as bounded).  False positives cost one
+    The membership test runs where ``shard_server.lookup`` answers the
+    sidecar's chunks (:func:`_bloom_chunk_probe`): in the driver when
+    they fit the pin budget, else in one Spark job over the Python
+    workers' pins, so the driver collects ``(file, fingerprint, hit)``
+    rows, never the bit arrays, whose total size is rows-proportional
+    (~1.2 MB per 10 M-row file at 1% fpp).  False positives cost one
     extra file read, never a wrong row — correctness is carried
     entirely by the re-applied predicate, and files the sidecar does
     not cover — added after the build, or replaced same-name since
@@ -1183,91 +1188,61 @@ def scan_point_lookup(
     probe-verified inventory manifest and the ``bloom_{col}`` marker
     carry the same digest, the sidecar provably covers exactly the
     live files with fresh fingerprints, so no listing runs and no
-    reconciliation is needed — the worker-pinned chunk probe returns
-    ONLY the hit files (O(hits) driver rows, sidecar parsed once per
-    worker per version).  Any append/delete/replace flips the
-    O(dirs) probe and falls through to the full path below; the
-    in-place-edit class is documented at the manifest section
-    header.
+    reconciliation is needed — the probe returns ONLY the hit files
+    (O(hits) driver rows, each chunk parsed once per process per
+    version).  Any append/delete/replace flips the O(dirs) probe and
+    falls through to the full path below; the in-place-edit class is
+    documented at the manifest section header.
     """
-    import pandas as _pd
-
     from pyspark.sql import functions as F
 
     probe_vals = sorted(set(int(v) for v in values))
     doc = fresh_manifest_summary(path)  # constant-size: never the
     # O(files) file map — the fast path must stay flat in file count
     bloom_phys = _sidecar_phys_dir(path, f"_bloom_{col}")
-    if doc is not None and bloom_phys is not None:
-        marker = _read_manifest_doc(path, f"bloom_{col}")
-        if marker is not None and marker.get("digest") == doc["digest"]:
-            found = _bloom_chunk_probe(
-                spark,
-                bloom_phys,
-                f"manifest:{doc['digest']}",
-                probe_vals,
-                hits_only=True,
+    marker = _read_manifest_doc(path, f"bloom_{col}") or {}
+    token = f"manifest:{marker.get('digest')}"
+    found = None
+    if (
+        doc is not None
+        and bloom_phys is not None
+        and marker.get("digest") == doc["digest"]
+    ):
+        found = _bloom_chunk_probe(
+            spark, bloom_phys, token, probe_vals, hits_only=True
+        )
+    # found is None when the sidecar has no chunks (marker outlived
+    # its parquet): the slow path below then fails loud instead of
+    # giving a silent zero-row answer
+    if found is not None:
+        files, total = sorted(found["file"]), int(doc["n_files"])
+    else:
+        side = None
+        if bloom_phys is not None:
+            side = _bloom_chunk_probe(
+                spark, bloom_phys, token, probe_vals, hits_only=False
             )
-            # found is None when the sidecar has no chunks (marker
-            # outlived its parquet) — fall through to the slow
-            # path's loud read instead of a silent zero-row answer
-            if found is not None:
-                files = sorted(found[0])
-                total = int(doc["n_files"])
-                if not files:
-                    empty = spark.read.parquet(path).limit(0)
-                    return empty, 0, total
-                df = spark.read.parquet(*files).filter(
-                    F.col(col).isin(probe_vals)
-                )
-                return df, len(files), total
-    side_df = spark.read.parquet(bloom_phys or f"{path}/_bloom_{col}")
-    has_fp = "fsize" in side_df.columns
-    if not has_fp:  # legacy sidecar format: no reconciliation columns
-        side_df = side_df.withColumn(
-            "fsize", F.lit(-1).cast("long")
-        ).withColumn("fmtime_ns", F.lit(-1).cast("long"))
-
-    def _probe(batches):
-        import numpy as _np
-
-        probe = _np.asarray(probe_vals, dtype="int64")
-        for pdf in batches:
-            hits = [
-                _bloom_may_hold(bits, m, k, probe)
-                for m, k, bits in zip(pdf["m"], pdf["k"], pdf["bits"])
-            ]
-            yield _pd.DataFrame(
-                {
-                    "file": pdf["file"],
-                    "fsize": pdf["fsize"],
-                    "fmtime_ns": pdf["fmtime_ns"],
-                    "hit": hits,
-                }
+        if side is None:
+            raise FileNotFoundError(
+                f"no Bloom sidecar on {col!r} under {path!r}: "
+                "build it with build_file_bloom"
             )
-
-    side = side_df.mapInPandas(
-        _probe,
-        schema="file string, fsize long, fmtime_ns long, hit boolean",
-    ).collect()
-    live = manifest_stat_map(path)
-    keep, covered = set(), set()
-    for r in side:
-        if has_fp and live.get(r["file"]) != (r["fsize"], r["fmtime_ns"]):
-            continue  # stale bloom row: treat its file as uncovered
-        covered.add(r["file"])
-        if r["hit"]:
-            keep.add(r["file"])
-    current = set(live)
-    files = sorted((keep | (current - covered)) & current)
-    total = len(current)
-    if not files:
-        empty = spark.read.parquet(path).limit(0)
-        return empty, 0, total
-    df = spark.read.parquet(*files).filter(
-        F.col(col).isin([int(v) for v in values])
-    )
-    return df, len(files), total
+        live = manifest_stat_map(path)
+        keep, covered = set(), set()
+        for f, size, mtime, hit in side.itertuples(index=False):
+            # a row whose fingerprint no longer matches its live file
+            # is stale, so that file counts as uncovered (-1: a
+            # sidecar written before fingerprints covers by name)
+            if size >= 0 and live.get(f) != (size, mtime):
+                continue
+            covered.add(f)
+            if hit:
+                keep.add(f)
+        current = set(live)
+        files = sorted((keep | (current - covered)) & current)
+        total = len(current)
+    df, n_read, total = _kept_scan(spark, path, files, total)
+    return df.filter(F.col(col).isin(probe_vals)), n_read, total
 
 
 def zorder_key(cols, bits: int = 12):
@@ -1777,24 +1752,28 @@ def refresh_clustered_layout(spark, source_path: str, catalog=None):
 
 
 # ------------------------------------------------------------------
-# Driver-pinned sidecar serving: repeated queries skip the re-read
+# Sidecar serving: every probe is a ``shard_server.lookup``
 # ------------------------------------------------------------------
+#
+# Each chunk parquet of a published sidecar version is one shard of
+# the ``stats`` or ``bloom`` kind: ``_PARSE`` loads it once per Python
+# process into ``shard_server.WORKER_CACHE`` as numpy/Arrow columns,
+# keyed by the chunk under the caller's token (the layout fingerprint
+# :func:`_inventory_fp`, or the manifest digest of the sidecar
+# marker).  A refresh publishes new chunks and changes the token, so a
+# stale chunk is never served.  ``lookup`` answers the probe in the
+# driver when the planned chunks fit the one pin budget
+# (``WORKER_CACHE.budget``, shared with the vector and postings
+# shards), else in one Spark job whose tasks answer from the Python
+# workers' pins; the driver then sees file names and fingerprints,
+# never sidecar payload bytes.  :func:`_stats_answer` and
+# :func:`_bloom_answer` are the one keep rule of each sidecar, for
+# every caller: the manifest fast paths, the optimizer's skipping
+# rewrite (:func:`stats_keep_files`, :func:`bloom_keep_files`) and
+# the fingerprint-reconciled point lookup.
 
-# Driver pins keyed by layout path under the layout fingerprint
-# (:func:`_inventory_fp`, which the optimizer rule already verified
-# fresh) — the same pinned-store shape as the ANN/BM25 served paths.
-# A refresh/rebuild changes the fingerprint, so a stale hit is
-# impossible by construction.  Each pin is a ``shard_server.PinCache``
-# with a BYTE budget (verdict-r5 #5: rows ∝ files × cols is MBs at
-# 100k files but driver heap again at the ~10⁶ files of a 100 TB
-# table).  Bloom BIT ARRAYS are rows-per-file-sized (~1.2 MB per
-# 10 M-row file at 1% fpp), so they hit the budget first.  A sidecar
-# that does not fit is probed DISTRIBUTED (next section: executors
-# evaluate range/membership, the driver collects only file names) —
-# the cold path never materializes sidecar payloads driver-side.
-_SIDECAR_CACHE = PinCache(_DRIVER_PIN_BYTES)  # path -> stats rows
-_BLOOM_CACHE = PinCache(_DRIVER_PIN_BYTES)  # (path, col) -> bit arrays
-_LIVEMAP_CACHE = PinCache(_DRIVER_PIN_BYTES)  # path -> live-file map
+# path -> live-file map of a registered layout
+_LIVEMAP_CACHE = PinCache(_DRIVER_PIN_BYTES)
 
 
 def _inventory_fp(meta: dict) -> str:
@@ -1802,23 +1781,12 @@ def _inventory_fp(meta: dict) -> str:
     (pre-digest metas fall back to digesting their inventory in
     place — still O(files) once, never a ~100 MB JSON string) plus
     the per-build nonce — a re-register over an UNCHANGED source
-    still rewrites the layout's own files, and every driver pin must
-    drop with it (pre-r7 the sidecar pins keyed on the inventory
-    alone and could serve a previous build's rows)."""
+    still rewrites the layout's own files, and every pin must drop
+    with it."""
     fp = meta.get("inventory_digest")
     if fp is None:
         fp = _inventory_digest(meta["inventory"])
     return f"{fp}:{meta.get('layout_build', '')}"
-
-
-def _parquet_bytes(side_dir: str) -> int:
-    import os as _os
-
-    return sum(
-        e.stat().st_size
-        for e in _os.scandir(side_dir)
-        if e.name.endswith(".parquet")
-    )
 
 
 def cached_live_stat_map(meta: dict) -> dict:
@@ -1827,8 +1795,7 @@ def cached_live_stat_map(meta: dict) -> dict:
     digest, so a stale hit is impossible through the engine's own
     APIs (layout files are engine-owned derived data — nothing else
     writes them).  Turns the remaining per-routed-query listing walk
-    into an O(1) dict hit; same byte-budgeted LRU as the sidecar
-    pins."""
+    into an O(1) dict hit."""
     key = meta["layout_path"]
     if meta.get("layout_build") is None:
         return _live_stat_map(key)  # pre-nonce meta: never pin
@@ -1840,88 +1807,6 @@ def cached_live_stat_map(meta: dict) -> dict:
     return live
 
 
-def cached_stats_rows(spark, meta: dict):
-    """Driver-pinned copy of the min/max sidecar: one row per
-    (file, col), read once per layout VERSION instead of once per
-    query — under the same byte-budgeted LRU as the Bloom pin.
-    Returns ``None`` when the sidecar exceeds the budget; callers
-    fall through to :func:`_stats_keep_executor_pinned` (never
-    collect the rows themselves)."""
-    global DRIVER_SIDECAR_READS
-    key = meta["layout_path"]
-    fp = _inventory_fp(meta)
-    rows = _SIDECAR_CACHE.get(key, fp)
-    if rows is not MISS:
-        return rows
-    stats = load_or_refresh_file_stats(spark, key, meta["cols"])
-    side_dir = _stats_phys_dir(key) or f"{key}/_stats"
-    if _parquet_bytes(side_dir) > _SIDECAR_CACHE.budget:
-        # over budget: serve distributed, pin nothing — no payload
-        # rows reached the driver, so the contract counter must NOT
-        # move (the warm executor-pinned path asserts it stays 0)
-        return None
-    DRIVER_SIDECAR_READS += 1  # payload rows actually collected below
-    rows = [
-        (r["file"], r["col"], r["vmin"], r["vmax"])
-        for r in stats.collect()
-    ]
-    # python-side footprint: two interned-ish strings + two doubles
-    # per row, tuple overhead folded into the per-row constant
-    _SIDECAR_CACHE.put(
-        key, fp, rows, sum(len(r[0]) + len(r[1]) + 96 for r in rows)
-    )
-    return rows
-
-
-def cached_bloom_rows(spark, meta: dict, col: str):
-    """Bloom sidecar rows ``(file, m, k, bits)`` from the byte-capped
-    LRU pin, or ``None`` when the sidecar exceeds the budget — callers
-    must then use :func:`_bloom_keep_executor_pinned` (never collect
-    bits themselves)."""
-    global DRIVER_SIDECAR_READS
-    key = (meta["layout_path"], col)
-    fp = _inventory_fp(meta)
-    rows = _BLOOM_CACHE.get(key, fp)
-    if rows is not MISS:
-        return rows
-    side_dir = (
-        _sidecar_phys_dir(meta["layout_path"], f"_bloom_{col}")
-        or f"{meta['layout_path']}/_bloom_{col}"
-    )
-    if _parquet_bytes(side_dir) > _BLOOM_CACHE.budget:
-        # over budget: no payload reached the driver — counter must
-        # NOT move (see cached_stats_rows)
-        return None
-    DRIVER_SIDECAR_READS += 1  # bit arrays actually collected below
-    rows = [
-        (r["file"], int(r["m"]), int(r["k"]), r["bits"])
-        for r in spark.read.parquet(side_dir).collect()
-    ]
-    _BLOOM_CACHE.put(key, fp, rows, sum(len(r[3]) for r in rows))
-    return rows
-
-
-# ------------------------------------------------------------------
-# Executor-pinned sidecar serving (r8): the scale path for sidecars
-# ABOVE the driver pin budget.  A per-query sidecar re-scan would be
-# the control-plane cost this module exists to avoid at 10⁶ files, so
-# each probe is one ``shard_server.dispatch`` job over the sorted
-# chunk list (one sidecar parquet file per chunk), and each task
-# parses its chunks ONCE per layout version into
-# ``shard_server.WORKER_CACHE`` — the same worker pin that holds the
-# served ANN/BM25 shards, keyed ``(kind, chunk)`` under the layout
-# fingerprint.  Worker reuse (spark.python.worker.reuse, default on)
-# keeps the pin across queries; a refresh/rebuild changes the
-# fingerprint, so the next probe drops the stale chunk instead of
-# serving it.  Driver traffic is file names in BOTH directions — the
-# driver never touches sidecar payload bytes on this path, cold or
-# warm.
-# ------------------------------------------------------------------
-
-# Bench/test observability: driver-side sidecar PAYLOAD reads (pin
-# loads).  The executor-pinned probes never increment it.
-DRIVER_SIDECAR_READS = 0
-
 _STATS_ROWS = T.StructType(
     [
         T.StructField("file", T.StringType()),
@@ -1932,56 +1817,11 @@ _STATS_ROWS = T.StructType(
 _BLOOM_ROWS = T.StructType(
     [
         T.StructField("file", T.StringType()),
+        T.StructField("fsize", T.LongType()),
+        T.StructField("fmtime_ns", T.LongType()),
         T.StructField("hit", T.BooleanType()),
     ]
 )
-
-
-def _load_stats_chunk(chunk_path: str, fp: str) -> dict:
-    """``{file: {col: (vmin, vmax)}}`` parsed from ONE stats-sidecar
-    parquet chunk, pinned under the layout fingerprint in this
-    worker process."""
-    import pyarrow.parquet as _pq
-
-    key = ("stats", chunk_path)
-    per_file = WORKER_CACHE.get(key, fp)
-    if per_file is MISS:
-        t = _pq.read_table(
-            chunk_path, columns=["file", "col", "vmin", "vmax"]
-        )
-        per_file = {}
-        for f, c, lo, hi in zip(
-            t["file"].to_pylist(),
-            t["col"].to_pylist(),
-            t["vmin"].to_pylist(),
-            t["vmax"].to_pylist(),
-        ):
-            per_file.setdefault(f, {})[c] = (lo, hi)
-        WORKER_CACHE.put(key, fp, per_file, t.nbytes)
-    return per_file
-
-
-def _load_bloom_chunk(chunk_path: str, fp: str) -> list:
-    """``[(file, m, k, packed bits)]`` from ONE Bloom sidecar chunk,
-    pinned under the layout fingerprint in this worker.  Bits stay
-    PACKED (8× smaller pin; :func:`_bloom_may_hold` indexes them
-    directly)."""
-    import pyarrow.parquet as _pq
-
-    key = ("bloom", chunk_path)
-    rows = WORKER_CACHE.get(key, fp)
-    if rows is MISS:
-        t = _pq.read_table(chunk_path, columns=["file", "m", "k", "bits"])
-        rows = list(
-            zip(
-                t["file"].to_pylist(),
-                t["m"].to_pylist(),
-                t["k"].to_pylist(),
-                t["bits"].to_pylist(),
-            )
-        )
-        WORKER_CACHE.put(key, fp, rows, t.nbytes)
-    return rows
 
 
 def _sidecar_chunks(side_dir: str) -> list:
@@ -1996,171 +1836,142 @@ def _sidecar_chunks(side_dir: str) -> list:
     )
 
 
-def _chunk_dispatch(spark, chunks: list, answer, schema):
-    """Run ``answer(i, chunk slice)`` over the sorted chunk list in one
-    ``shard_server.dispatch`` job and return its rows as pandas.
+def _chunk_names(side_dir: str) -> list:
+    """The sidecar's chunks as ``shard_server`` shards: file names."""
+    return [c.rsplit("/", 1)[1] for c in _sidecar_chunks(side_dir)]
 
-    One task per contiguous slice, up to the cluster's parallelism: a
-    probe over 10⁶ files is ~4k chunks, and 4k near-no-op Python
-    tasks is pure scheduling overhead (measured 4 s at 64k files
-    locally).  Contiguous slices of the SORTED list make the
-    chunk → task assignment deterministic with no shuffle stage."""
-    n = max(1, min(len(chunks), spark.sparkContext.defaultParallelism))
-    plan = {
-        i: chunks[i * len(chunks) // n : (i + 1) * len(chunks) // n]
-        for i in range(n)
-    }
-    return dispatch(spark, plan, answer, schema)
+
+def _stats_answer(state, box: dict, hits_only: bool) -> list:
+    """The stats sidecar's keep rule over one chunk: ``(file, col,
+    hit)`` for each row of a box column, ``hit`` when its ``[vmin,
+    vmax]`` overlaps the box.  ``hits_only`` drops the rows that miss,
+    for callers that proved the sidecar holds a row for every box
+    column of every live file."""
+    import numpy as _np
+    import pyarrow.compute as _pc
+
+    if state is None:
+        return []
+    files, cols, vmin, vmax = state
+    rows = []
+    for c, (lo, hi) in box.items():
+        idx = _np.flatnonzero(_pc.equal(cols, c).to_numpy(zero_copy_only=False))
+        hit = (vmax[idx] >= lo) & (vmin[idx] <= hi)
+        if hits_only:
+            idx, hit = idx[hit], hit[hit]
+        rows += zip(files.take(idx).to_pylist(), [c] * len(idx), hit.tolist())
+    return rows
 
 
 def _stats_chunk_probe(
-    spark, side_dir: str, fp: str, ranges: dict, hits_only: bool
+    spark, side_dir: str, token: str, ranges: dict, hits_only: bool
 ):
-    """``(keep, covered)`` file sets for a range box from the
-    worker-pinned stats chunks, or ``None`` (NOT empty sets) when the
-    sidecar has no chunks: a marker that outlived its parquet files —
-    deletions inside the ``_``-prefixed sidecar dir don't bump the
-    root probe — must fall through to the slow path's loud read, not
-    become a silent zero-row answer (r9 review).
+    """``(keep, covered)`` file sets for a range box from the stats
+    sidecar's chunks, or ``None`` (NOT empty sets) when the sidecar has
+    no chunks: a marker that outlived its parquet files — deletions
+    inside the ``_``-prefixed sidecar dir don't bump the root probe —
+    must fall through to the slow path's loud read, not become a
+    silent zero-row answer.
 
-    A file is kept iff EVERY queried column has a sidecar row whose
-    [vmin, vmax] intersects the box — a missing or out-of-range
-    column drops it, exactly the driver-pinned path's rule.  Tasks
-    emit one (file, col, hit) row per queried column a chunk holds
-    for a file, and the rule is applied DRIVER-side over all chunks
-    (r9, advice): a sidecar that splits or duplicates a file's rows
-    across chunks can only err CONSERVATIVE (duplicates are OR-kept:
-    extra reads, never lost rows).  ``hits_only`` drops the failing
-    rows EXECUTOR-side, for callers that proved (by manifest-digest
-    equality against the ``stats`` marker) the sidecar covers exactly
-    the live files with a row for every queried column: the driver
-    collect is then O(passing (file, col) rows), never O(files), and
-    ``covered`` is meaningless."""
-    rng = {c: (float(lo), float(hi)) for c, (lo, hi) in ranges.items()}
-    chunks = _sidecar_chunks(side_dir)
+    A file is kept when every box column has a row and every such row
+    overlaps the box (:func:`_stats_answer`).  The rule is finished in
+    the driver over all chunks, so a sidecar that splits or duplicates
+    a file's rows across chunks can only err conservative: duplicate
+    rows are OR-kept.  With ``hits_only`` ``covered`` is meaningless."""
+    box = {c: (float(lo), float(hi)) for c, (lo, hi) in ranges.items()}
+    chunks = _chunk_names(side_dir)
     if not chunks:
         return None
-
-    def answer(_, part):
-        rows = []
-        for chunk in part:
-            for fname, stats in _load_stats_chunk(chunk, fp).items():
-                for c, (lo, hi) in rng.items():
-                    st = stats.get(c)
-                    if st is None:
-                        continue  # col not in this chunk's rows
-                    hit = not (st[1] < lo or st[0] > hi)
-                    if hit or not hits_only:
-                        rows.append((fname, c, hit))
-        return rows
-
-    out = _chunk_dispatch(spark, chunks, answer, _STATS_ROWS)
-    per_file: dict = {}
-    for f, c, hit in zip(out["file"], out["col"], out["hit"]):
-        seen = per_file.setdefault(f, {})
-        seen[c] = seen.get(c, False) or bool(hit)
-    keep = {
-        f
-        for f, seen in per_file.items()
-        if seen.keys() == rng.keys() and all(seen.values())
-    }
-    return keep, set(per_file)
+    out = lookup(
+        spark, side_dir, "stats", token, dict.fromkeys(chunks, box),
+        lambda state, b: _stats_answer(state, b, hits_only), _STATS_ROWS,
+    )
+    per_col = out.groupby(["file", "col"])["hit"].any()
+    per_file = per_col.groupby(level="file").agg(["size", "all"])
+    ok = (per_file["size"] == len(box)) & per_file["all"]
+    return set(per_file.index[ok]), set(per_file.index)
 
 
-def _stats_keep_executor_pinned(spark, meta: dict, ranges: dict):
-    """Range ``(keep, covered)`` against EXECUTOR-pinned sidecar
-    chunks: the driver ships (chunk paths, the range box) and
-    collects file names; payload parse happens once per worker per
-    layout version, not once per query."""
-    phys = _stats_phys_dir(meta["layout_path"])
-    found = None
-    if phys is not None:
-        found = _stats_chunk_probe(
-            spark, phys, _inventory_fp(meta), ranges, hits_only=False
+def _bloom_answer(state, probe, hits_only: bool) -> list:
+    """The Bloom sidecar's keep rule over one chunk: ``(file, fsize,
+    fmtime_ns, hit)`` per data file, ``hit`` when its filter may hold
+    a value of ``probe`` (:func:`_bloom_may_hold`).  ``hits_only``
+    drops the misses."""
+    import numpy as _np
+
+    if state is None:
+        return []
+    files, bits, m, k, fsize, fmtime = state
+    hit = _np.array(
+        [
+            _bloom_may_hold(bits[i].as_buffer(), m[i], k[i], probe)
+            for i in range(len(m))
+        ],
+        dtype=bool,
+    )
+    idx = _np.flatnonzero(hit) if hits_only else _np.arange(len(hit))
+    return list(
+        zip(
+            files.take(idx).to_pylist(),
+            fsize[idx].tolist(),
+            fmtime[idx].tolist(),
+            hit[idx].tolist(),
         )
-    return (set(), set()) if found is None else found
+    )
 
 
 def _bloom_chunk_probe(
-    spark, side_dir: str, fp: str, values: list, hits_only: bool
+    spark, side_dir: str, token: str, values: list, hits_only: bool
 ):
-    """``(keep, covered)`` file sets from the worker-pinned Bloom chunk
-    probe, or ``None`` when the sidecar has no chunks (see
-    :func:`_stats_chunk_probe`).  ``hits_only`` drops non-hit rows
-    EXECUTOR-side so the driver transfer is O(hits), not O(files) —
-    the manifest fast path's collect."""
-    probe_vals = sorted(set(int(v) for v in values))
-    chunks = _sidecar_chunks(side_dir)
+    """The Bloom sidecar's ``(file, fsize, fmtime_ns, hit)`` rows for
+    an IN-list, as pandas, or ``None`` when the sidecar has no chunks
+    (see :func:`_stats_chunk_probe`).  ``hits_only`` keeps the driver
+    transfer O(hits), not O(files) — the manifest fast path's probe."""
+    import numpy as _np
+
+    probe = _np.asarray(sorted(set(int(v) for v in values)), dtype="int64")
+    chunks = _chunk_names(side_dir)
     if not chunks:
         return None
-
-    def answer(_, part):
-        import numpy as _np
-
-        probe = _np.asarray(probe_vals, dtype="int64")
-        rows = []
-        for chunk in part:
-            for fname, m, k, bits in _load_bloom_chunk(chunk, fp):
-                hit = _bloom_may_hold(bits, m, k, probe)
-                if hit or not hits_only:
-                    rows.append((fname, hit))
-        return rows
-
-    out = _chunk_dispatch(spark, chunks, answer, _BLOOM_ROWS)
-    keep = {f for f, hit in zip(out["file"], out["hit"]) if hit}
-    return keep, set(out["file"])
-
-
-def _bloom_keep_executor_pinned(spark, meta: dict, col: str, values: list):
-    """Membership ``(keep, covered)`` against EXECUTOR-pinned Bloom
-    chunks — same shape as :func:`_stats_keep_executor_pinned`."""
-    phys = _sidecar_phys_dir(meta["layout_path"], f"_bloom_{col}")
-    found = None
-    if phys is not None:
-        found = _bloom_chunk_probe(
-            spark, phys, _inventory_fp(meta), values, hits_only=False
-        )
-    return (set(), set()) if found is None else found
+    return lookup(
+        spark, side_dir, "bloom", token, dict.fromkeys(chunks, probe),
+        lambda state, p: _bloom_answer(state, p, hits_only), _BLOOM_ROWS,
+    )
 
 
 def stats_keep_files(spark, meta: dict, ranges: dict):
-    """``(keep, covered)`` file sets for a range box, from the pinned
-    min/max sidecar — pure driver Python over cached rows, zero Spark
-    jobs — or the EXECUTOR-pinned chunk probe when the sidecar
-    exceeds the driver pin budget.  Exposed separately from the scan so the optimizer rule
+    """``(keep, covered)`` file sets for a range box from the layout's
+    stats sidecar (:func:`_stats_chunk_probe` under the layout
+    fingerprint).  A cold call, whose chunks are not all pinned in the
+    driver under that fingerprint, first refreshes the sidecar
+    (:func:`load_or_refresh_file_stats`); a warm one reads nothing but
+    the pin.  Exposed separately from the scan so the optimizer rule
     can INTERSECT this keep-list with per-column Bloom keep-lists
     before scheduling a single file."""
-    rows = cached_stats_rows(spark, meta)
-    if rows is None:
-        return _stats_keep_executor_pinned(spark, meta, ranges)
-    per_file: dict = {}
-    for fname, col, vmin, vmax in rows:
-        per_file.setdefault(fname, {})[col] = (vmin, vmax)
-    keep = set()
-    for fname, stats in per_file.items():
-        ok = True
-        for col, (lo, hi) in ranges.items():
-            st = stats.get(col)
-            if st is None or st[1] < lo or st[0] > hi:
-                ok = False
-                break
-        if ok:
-            keep.add(fname)
-    return keep, set(per_file)
+    path, fp = meta["layout_path"], _inventory_fp(meta)
+    phys = _stats_phys_dir(path)
+    if phys is None or not pinned(phys, "stats", fp, _chunk_names(phys)):
+        load_or_refresh_file_stats(spark, path, meta["cols"])
+        phys = _stats_phys_dir(path)
+    found = None
+    if phys is not None:
+        found = _stats_chunk_probe(spark, phys, fp, ranges, hits_only=False)
+    return (set(), set()) if found is None else found
 
 
 def bloom_keep_files(spark, meta: dict, col: str, values: list):
-    """``(keep, covered)`` file sets for an IN-list probe: pinned bit
-    arrays when the sidecar fits the LRU byte budget, else the
-    distributed executor-side probe."""
-    import numpy as _np
-
-    rows = cached_bloom_rows(spark, meta, col)
-    if rows is None:
-        return _bloom_keep_executor_pinned(spark, meta, col, values)
-    probe = _np.asarray(sorted(set(int(v) for v in values)), dtype="int64")
-    keep = {f for f, m, k, bits in rows if _bloom_may_hold(bits, m, k, probe)}
-    return keep, {r[0] for r in rows}
+    """``(keep, covered)`` file sets for an IN-list probe of the
+    layout's Bloom sidecar on ``col`` (:func:`_bloom_chunk_probe`
+    under the layout fingerprint); no sidecar covers nothing."""
+    phys = _sidecar_phys_dir(meta["layout_path"], f"_bloom_{col}")
+    out = None
+    if phys is not None:
+        out = _bloom_chunk_probe(
+            spark, phys, _inventory_fp(meta), values, hits_only=False
+        )
+    if out is None:
+        return set(), set()
+    return set(out["file"][out["hit"]]), set(out["file"])
 
 
 def _pruned_scan(spark, meta: dict, files: list, total: int):
@@ -2181,9 +1992,8 @@ def _pruned_scan(spark, meta: dict, files: list, total: int):
 
 def served_scan_with_skipping(spark, meta: dict, ranges: dict):
     """scan_with_skipping through the pinned sidecar: the keep-list
-    is computed in pure driver Python from cached rows — ZERO Spark
-    jobs before the final pruned scan (vs two sidecar jobs per query
-    on the cold path).  Uncovered layout files are kept
+    comes from :func:`stats_keep_files` — ZERO Spark jobs before the
+    final pruned scan while its chunks fit the driver's pin.  Uncovered layout files are kept
     conservatively.  The live-file set comes from the
     fingerprint-keyed pin (cached_live_stat_map): layout files are
     ENGINE-OWNED (every engine write re-stamps the fingerprint), so
@@ -2197,9 +2007,8 @@ def served_scan_with_skipping(spark, meta: dict, ranges: dict):
 
 
 def served_point_lookup(spark, meta: dict, col: str, values: list):
-    """scan_point_lookup through the budgeted Bloom pin (or the
-    executor-pinned chunk probe when the sidecar exceeds the driver
-    pin budget).  Live-file set semantics as in
+    """scan_point_lookup through the layout's Bloom sidecar
+    (:func:`bloom_keep_files`).  Live-file set semantics as in
     :func:`served_scan_with_skipping` (engine-owned layout files,
     fingerprint-keyed pin)."""
     from pyspark.sql import functions as F

@@ -1,34 +1,44 @@
 """One shard server behind every pinned index.
 
-Every online lookup — ``serving.serve_topk`` over the five vector
-kinds (nsw, hnsw, pq, ivf, ivfpq) and ``search.serve_bm25`` over the
-BM25 postings — runs the same three steps, all of them here, through
-:func:`lookup`:
+Every online lookup runs the same steps, all of them here, through
+:func:`lookup`.  The shard kinds are:
+
+- the five vector kinds (nsw, hnsw, pq, ivf, ivfpq) of
+  ``serving.serve_topk``, one ``shard=N`` directory per shard;
+- ``postings``, the BM25 buckets of ``search.serve_bm25``;
+- ``stats`` and ``bloom``, ``layout``'s data-skipping sidecars.  A
+  sidecar shard is one chunk parquet of the sidecar's published
+  version directory (the ``path``), named by its file name.  Stats
+  chunks hold ``(file, col, vmin, vmax)`` rows, Bloom chunks one
+  packed bit array per data file.
 
 1. **Load.**  :func:`_load_shard` parses one shard's parquet into
-   numpy state once per Python process and pins it in
-   :data:`WORKER_CACHE`, keyed ``(path, shard, kind)`` under a token.
-   The token is ``"<build_id>:<last_version>"`` from the index meta: a
-   refresh bumps the version and a rebuild at the same path draws a
-   new build id, so either one misses, and the miss drops the stale
-   state.  ``layout``'s sidecar chunks share the same cache.
+   numpy/Arrow state once per Python process and pins it in
+   :data:`WORKER_CACHE`, keyed ``(path, shard, kind)`` under a token
+   and charged the Arrow table's bytes.  For an index the token is
+   ``"<build_id>:<last_version>"`` from its meta: a refresh bumps the
+   version and a rebuild at the same path draws a new build id, so
+   either one misses, and the miss drops the stale state.  A sidecar
+   probe passes the layout fingerprint or the manifest digest.
 2. **Answer** (driver, or one Spark job).  When the planned shards fit
    the pin budget, the driver loads them into its own copy of the
    cache and answers in-process: a warm lookup runs no Spark job and
    never touches parquet.  Otherwise :func:`dispatch` runs
    ``spark.range(n, numSlices=n)`` → ``mapInPandas`` → Arrow
-   ``toPandas()``: one task per shard, no scan, no shuffle, each task
-   loading into its Python worker's copy of the cache (Spark reuses
-   Python workers across jobs, ``spark.python.worker.reuse``, on by
-   default).  Either way the caller's ``answer(state, todo)`` holds
-   all per-kind logic.
+   ``toPandas()``: at most ``defaultParallelism`` tasks over
+   contiguous runs of the sorted shards, no scan, no shuffle, each
+   task loading into its Python worker's copy of the cache (Spark
+   reuses Python workers across jobs, ``spark.python.worker.reuse``,
+   on by default).  Either way the caller's ``answer(state, todo)``
+   holds all per-kind logic.
 3. **Merge** (driver).  :func:`merge_topk` ranks the candidate rows
    per query with numpy and returns them as a local relation, so
-   collecting the result runs no job.
+   collecting the result runs no job.  A sidecar probe merges its own
+   rows into keep/covered file sets.
 
 :class:`PinCache` is the one LRU cache in the package: the shard cache
-above, and every driver-side pin (``layout``'s sidecar, live map and
-manifest caches).
+above, and every driver-side pin (``layout``'s live map, keep-verdict
+and manifest caches).
 
 This module also owns the on-disk index format.  A vector index is
 one ``shard=N`` parquet directory per shard, written by
@@ -322,7 +332,7 @@ class PinCache:
 
 
 # State pinned per Python process: shards of every served index and
-# layout's sidecar chunks, each sized by the Arrow table it was parsed
+# of layout's sidecars, each sized by the Arrow table it was parsed
 # from.  The driver's copy serves the lookups :func:`lookup` answers
 # in-process; each Python worker's copy serves the dispatched ones.
 WORKER_PIN_BYTES = 256 << 20
@@ -464,6 +474,36 @@ def _postings_state(tbl, path, shard, kind):
     }
 
 
+def _stats_state(tbl, path, shard, kind):
+    """A stats-sidecar chunk's rows as columns: ``file`` and ``col``
+    (Arrow strings), ``vmin`` and ``vmax`` (numpy doubles)."""
+    return (
+        tbl["file"].combine_chunks(),
+        tbl["col"].combine_chunks(),
+        tbl["vmin"].to_numpy(),
+        tbl["vmax"].to_numpy(),
+    )
+
+
+def _bloom_state(tbl, path, shard, kind):
+    """A Bloom-sidecar chunk's rows as columns: ``file`` and the packed
+    ``bits`` (Arrow), ``m``, ``k`` and the data file's ``fsize`` /
+    ``fmtime_ns`` fingerprint (numpy; -1 in a sidecar written before
+    fingerprints)."""
+    n = tbl.num_rows
+    fp = [
+        tbl[c].to_numpy() if c in tbl.column_names else np.full(n, -1)
+        for c in ("fsize", "fmtime_ns")
+    ]
+    return (
+        tbl["file"].combine_chunks(),
+        tbl["bits"].combine_chunks(),
+        tbl["m"].to_numpy(),
+        tbl["k"].to_numpy(),
+        *fp,
+    )
+
+
 _PARSE = {
     "nsw": _nsw_state,
     "hnsw": _hnsw_state,
@@ -471,40 +511,61 @@ _PARSE = {
     "ivf": _ivf_state,
     "ivfpq": _adc_state,
     "postings": _postings_state,
+    "stats": _stats_state,
+    "bloom": _bloom_state,
 }
 
 # a vector shard is one ``shard=N`` directory; a postings bucket is one
-# ``_pb=N`` directory under every ``v=<version>`` append
+# ``_pb=N`` directory under every ``v=<version>`` append; a sidecar
+# shard is one chunk file, named by its file name
 _FILES = dict.fromkeys(_PARSE, "/shard={shard}/*.parquet")
 _FILES["postings"] = "/v=*/_pb={shard}/*.parquet"
+_FILES["stats"] = _FILES["bloom"] = "/{shard}"
 
 
-def _shard_files(path: str, shard: int, kind: str) -> list:
+def _shard_files(path: str, shard, kind: str) -> list:
     """The parquet files that hold one shard of the index at ``path``."""
-    pattern = _FILES[kind].format(shard=int(shard))
+    pattern = _FILES[kind].format(shard=glob.escape(str(shard)))
     return glob.glob(glob.escape(path) + pattern)
 
 
-def read_shard(path: str, shard: int, kind: str):
+def read_shard(path: str, shard, kind: str):
     """One shard's rows as an Arrow table, or ``None`` when it has no
     files."""
     files = _shard_files(path, shard, kind)
     return ds.dataset(files, format="parquet").to_table() if files else None
 
 
-def _load_shard(path: str, shard: int, kind: str, token: str):
+def _load_shard(path: str, shard, kind: str, token: str):
     """This process's parsed state for one shard, or ``None`` when the
-    shard holds no rows (an empty cell or bucket)."""
-    key = (path, int(shard), kind)
+    shard holds no rows (an empty cell, bucket or chunk)."""
+    key = (path, shard, kind)
     state = WORKER_CACHE.get(key, token)
     if state is not MISS:
         return state
     tbl = read_shard(path, shard, kind)
     state = None
     if tbl is not None and tbl.num_rows:
-        state = _PARSE[kind](tbl, path, int(shard), kind)
+        state = _PARSE[kind](tbl, path, shard, kind)
     WORKER_CACHE.put(key, token, state, 0 if tbl is None else tbl.nbytes)
     return state
+
+
+def _pinned_bytes(path: str, kind: str, token: str, shard):
+    """The bytes one shard holds in this process's pin under ``token``,
+    or ``None`` when it is not pinned there.  A peek, not a get: it
+    must not reorder the LRU; one dict read is atomic, and a stale read
+    only moves the answer."""
+    hit = WORKER_CACHE.entries.get((path, shard, kind))
+    return hit[2] if hit is not None and hit[0] == token else None
+
+
+def pinned(path: str, kind: str, token: str, shards) -> bool:
+    """Whether every shard of ``shards`` is pinned in this process
+    under ``token``: a lookup of them would answer from the pin."""
+    return all(
+        _pinned_bytes(path, kind, token, sh) is not None for sh in shards
+    )
 
 
 def _plan_bytes(path: str, kind: str, token: str, plan: dict) -> int:
@@ -513,13 +574,8 @@ def _plan_bytes(path: str, kind: str, token: str, plan: dict) -> int:
     the files :func:`_load_shard` would read."""
     total = 0
     for shard in plan:
-        # a peek, not a get: sizing the plan must not reorder the LRU;
-        # one dict read is atomic, and a stale read only moves the sum
-        hit = WORKER_CACHE.entries.get((path, int(shard), kind))
-        if hit is not None and hit[0] == token:
-            total += hit[2]
-        else:
-            total += shard_bytes(path, kind, [shard])
+        hit = _pinned_bytes(path, kind, token, shard)
+        total += shard_bytes(path, kind, [shard]) if hit is None else hit
     return total
 
 
@@ -540,7 +596,8 @@ def rows_schema(id_col: str) -> T.StructType:
     )
 
 
-_DTYPES = {"long": "int64", "double": "float64"}
+_DTYPES = {"long": "int64", "double": "float64", "string": "object",
+           "boolean": "bool"}
 
 
 def lookup(
@@ -559,8 +616,8 @@ def lookup(
     When the planned shards fit the pin budget (:func:`_plan_bytes`)
     the driver answers them in-process from its own pin, with no Spark
     job; otherwise :func:`dispatch` answers them in one job.  Both
-    return rows of ``schema`` (long and double columns), typed even
-    when empty."""
+    return rows of ``schema`` (long, double, string and boolean
+    columns), typed even when empty."""
 
     def run(shard, todo):
         return answer(_load_shard(path, shard, kind, token), todo)
@@ -579,22 +636,28 @@ def dispatch(
     """Run ``answer(shard, plan[shard])`` for every shard of ``plan`` in
     one Spark job and return the rows it produced.
 
+    The sorted shards are cut into ``n`` contiguous runs, at most
+    ``defaultParallelism``: a probe of thousands of sidecar chunks
+    would otherwise pay thousands of near-empty Python tasks.
     ``range(n)`` split into n partitions puts row i in partition i, so
-    each task owns one shard with no shuffle; the job is one Python
-    stage and its rows come back through Arrow.  ``answer`` runs in
-    the worker and returns rows of ``schema``."""
+    task i owns run i with no shuffle; the job is one Python stage and
+    its rows come back through Arrow.  ``answer`` runs in the worker
+    and returns rows of ``schema``."""
     shards = sorted(plan)
+    n = min(len(shards), spark.sparkContext.defaultParallelism)
+    runs = [shards[i * len(shards) // n : (i + 1) * len(shards) // n]
+            for i in range(n)]
     cols = schema.fieldNames()
 
     def _tasks(batches):
         for pdf in batches:
-            for idx in pdf["shard"]:
-                sh = shards[int(idx)]
-                yield pd.DataFrame(answer(sh, plan[sh]), columns=cols)
+            for t in pdf["task"]:
+                for sh in runs[int(t)]:
+                    yield pd.DataFrame(answer(sh, plan[sh]), columns=cols)
 
     return (
-        spark.range(0, len(shards), 1, max(len(shards), 1))
-        .select(F.col("id").cast("int").alias("shard"))
+        spark.range(0, n, 1, max(n, 1))
+        .select(F.col("id").cast("int").alias("task"))
         .mapInPandas(_tasks, schema)
         .toPandas()
     )

@@ -370,16 +370,14 @@ def test_one_near_pair_kernel():
 # ---------------------------------------------------------------------------
 # One seam for online lookups.  ``shard_server.lookup`` loads each probed
 # shard and decides whether the driver answers it or one Spark job does;
-# ``serving`` and ``search`` call ``lookup``.  So in package code
-# ``_load_shard(`` is called only inside ``shard_server``, and
-# ``dispatch(`` only from ``shard_server`` and from ``layout`` (its
-# sidecar probes take the executor-pinned path only after the sidecar
-# has failed the driver budget).
+# ``serving``, ``search`` and ``layout``'s sidecar probes call ``lookup``.
+# So in package code ``_load_shard`` and ``dispatch`` are called, and
+# imported, only inside ``shard_server``.
 # ---------------------------------------------------------------------------
 
 SEAM_CALLERS = {
     "_load_shard": {"operators/shard_server.py"},
-    "dispatch": {"operators/shard_server.py", "operators/layout.py"},
+    "dispatch": {"operators/shard_server.py"},
 }
 
 
@@ -391,6 +389,14 @@ def _seam_sites(path: pathlib.Path) -> list[str]:
         for node in ast.walk(tree)
         if isinstance(node, ast.Call)
         and rel not in SEAM_CALLERS.get(_call_name(node), {rel})
+    ]
+    out += [
+        (node.lineno, f"{rel}:{node.lineno} (imports {alias.name})")
+        for node in ast.walk(tree)
+        if isinstance(node, ast.ImportFrom)
+        and (node.module or "").endswith("shard_server")
+        for alias in node.names
+        if rel not in SEAM_CALLERS.get(alias.name, {rel})
     ]
     return [site for _, site in sorted(out)]
 

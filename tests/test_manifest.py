@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -236,11 +237,12 @@ def _write_ranged(spark, n, d, parts=4):
 def test_warm_range_scan_never_sweeps_files(spark, tmp_path):
     """The r10 twin of the point-lookup contract: a warm
     scan_with_skipping must not list/stat data files on the driver,
-    must not parse the O(files) manifest doc, and must not collect
-    sidecar payload rows — the keep-list comes from the
-    manifest-verified executor-pinned chunk probe (O(keep·cols)
-    driver rows)."""
+    must not parse the O(files) manifest doc, and must not read
+    sidecar payload again — the keep-list comes from the
+    manifest-verified chunk probe over the pinned sidecar chunks
+    (O(keep·cols) driver rows)."""
     import pdf_etl_ocr_inference_spark.operators.layout as L
+    import pdf_etl_ocr_inference_spark.operators.shard_server as S
 
     d = str(tmp_path / "tbl")
     _write_ranged(spark, 1000, d, parts=4)
@@ -251,13 +253,14 @@ def test_warm_range_scan_never_sweeps_files(spark, tmp_path):
     assert n_total == 4 and 0 < n_read < 4
     assert df.filter(F.col("id") <= 10).count() == 11
 
-    reads_before = L.DRIVER_SIDECAR_READS
     orig_live, orig_doc = L._live_stat_map, L.fresh_manifest_doc
+    orig_read = S.read_shard
     boom = lambda *a, **k: (_ for _ in ()).throw(  # noqa: E731
         AssertionError("warm range scan must stay O(dirs)+O(keep)")
     )
     L._live_stat_map = boom
     L.fresh_manifest_doc = boom
+    S.read_shard = boom  # the sidecar chunks stay pinned
     try:
         df, n_read, n_total = L.scan_with_skipping(spark, d, box)
         assert n_total == 4 and 0 < n_read < 4
@@ -273,7 +276,7 @@ def test_warm_range_scan_never_sweeps_files(spark, tmp_path):
     finally:
         L._live_stat_map = orig_live
         L.fresh_manifest_doc = orig_doc
-    assert L.DRIVER_SIDECAR_READS == reads_before
+        S.read_shard = orig_read
 
 
 def test_range_scan_mutation_falls_back_then_rewarms(spark, tmp_path):
@@ -769,3 +772,37 @@ def test_pointer_lost_fallback_prefers_unsuperseded_generation(
     # lose the pointer doc -> resolver must still pick gen2
     _os.unlink(f"{d}/_manifest/stats_dir.json")
     assert L._stats_phys_dir(d) == gen2
+
+
+@pytest.mark.parametrize("scan", ["range", "point"])
+def test_hive_partitioned_scan_keeps_partition_columns(spark, tmp_path, scan):
+    """On a hive-partitioned directory the skipping scans return the
+    columns of ``spark.read.parquet(d)`` — partition column included —
+    whether one file or no file survives, and the rows a probe keeps
+    are the rows the full read holds."""
+    import pdf_etl_ocr_inference_spark.operators.layout as L
+
+    d = str(tmp_path / "tbl")
+    spark.range(100).select(
+        F.col("id"), (F.col("id") >= 50).cast("int").alias("part")
+    ).repartitionByRange(2, "id").write.partitionBy("part").parquet(d)
+    full = spark.read.parquet(d)
+    assert full.columns == ["id", "part"]
+    if scan == "point":
+        L.build_file_bloom(spark, d, "id")
+    for lo, hi in ((10, 20), (-100, -50)):
+        if scan == "range":
+            df, n_read, total = L.scan_with_skipping(
+                spark, d, {"id": (float(lo), float(hi))}
+            )
+        else:
+            df, n_read, total = L.scan_point_lookup(
+                spark, d, "id", list(range(lo, hi + 1))
+            )
+        assert total == 2
+        assert n_read == (1 if lo >= 0 else 0)
+        assert df.columns == full.columns
+        box = F.col("id").between(lo, hi)
+        got = sorted(tuple(r) for r in df.filter(box).collect())
+        want = sorted(tuple(r) for r in full.filter(box).collect())
+        assert got == want

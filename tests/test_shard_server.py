@@ -73,9 +73,10 @@ def _cell_corpus(spark):
 
 
 @contextmanager
-def _jobs(spark):
+def _jobs(spark, tasks=None):
     """Count the Spark jobs run inside the block (appended to the
-    yielded list on exit)."""
+    yielded list on exit); with ``tasks``, append their task count
+    there too."""
     sc = spark.sparkContext
     group = f"jobs-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
@@ -87,7 +88,17 @@ def _jobs(spark):
                     "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    out.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    st = sc.statusTracker()
+    ids = st.getJobIdsForGroup(group)
+    out.append(len(ids))
+    if tasks is not None:
+        tasks.append(
+            sum(
+                st.getStageInfo(s).numTasks
+                for j in ids
+                for s in st.getJobInfo(j).stageIds
+            )
+        )
 
 
 def test_serve_ivf_rebuild_same_path_invalidates(spark, tmp_path):
@@ -250,6 +261,39 @@ def test_lookup_over_the_pin_budget_runs_one_job_per_round(
     with _jobs(spark) as n:
         got = serve().collect()
     assert n == [jobs]
+    assert got == local
+
+
+def test_dispatch_runs_at_most_parallelism_tasks(spark, tmp_path, monkeypatch):
+    """A dispatched lookup over more shards than ``defaultParallelism``
+    cuts the sorted shards into contiguous runs: one job of at most
+    ``defaultParallelism`` tasks, answering as the driver does."""
+    par = spark.sparkContext.defaultParallelism
+    dim = par + 3
+    axes = np.eye(dim)
+    rows = [
+        (10 * c + i, (axes[c] + 0.01 * (i + 1) * axes[(c + 1) % dim]).tolist())
+        for c in range(dim)
+        for i in range(2)
+    ]
+    path = str(tmp_path / "ivf")
+    build_ivf_serving_index(spark, _vecs(spark, rows), path, axes.tolist())
+    # equidistant from every centroid: the plan holds all dim cells
+    q = [(0, [1.0] * dim)]
+
+    def serve():
+        return serve_topk(
+            spark, path, q, k=2 * dim, kind="ivf", n_probe=dim
+        ).collect()
+
+    local = serve()
+    assert len(local) == 2 * dim
+    monkeypatch.setattr(WORKER_CACHE, "budget", 1)
+    tasks: list[int] = []
+    with _jobs(spark, tasks) as n:
+        got = serve()
+    assert n == [1]
+    assert 1 <= tasks[0] <= par
     assert got == local
 
 

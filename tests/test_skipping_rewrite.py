@@ -51,6 +51,20 @@ SPECS = [
 ]
 
 
+def _pins(kind):
+    """``{(sidecar dir, chunk): token}`` of the driver's pinned
+    ``kind`` (``"stats"`` or ``"bloom"``) sidecar chunks."""
+    from pdf_etl_ocr_inference_spark.operators.shard_server import (
+        WORKER_CACHE,
+    )
+
+    return {
+        k[:2]: v[0]
+        for k, v in list(WORKER_CACHE.entries.items())
+        if isinstance(k, tuple) and k[2:] == (kind,)
+    }
+
+
 def _box():
     return (
         F.col("o_custkey").between(100, 299)
@@ -339,25 +353,28 @@ def test_layout_advisor_closes_the_loop(spark, src_dir):
 
 def test_served_sidecar_pinning(spark, src_dir):
     """Repeated rewritten queries serve the keep-list from the
-    driver-pinned sidecar (no sidecar re-read), and a refresh
-    invalidates the pin via the inventory fingerprint."""
+    sidecar chunks pinned in the driver (no sidecar re-read), and a
+    refresh invalidates the pins via the inventory fingerprint."""
     from pdf_etl_ocr_inference_spark.operators import layout as L
     from pdf_etl_ocr_inference_spark.operators.layout import (
         refresh_clustered_layout,
         register_clustered_layout,
     )
-    from pdf_etl_ocr_inference_spark.optimizer import rewrite_skipping_scan
+    from pdf_etl_ocr_inference_spark.operators.shard_server import (
+        WORKER_CACHE,
+    )
 
     register_clustered_layout(
         spark, src_dir, SPECS, n_files=16, bloom_cols=["o_orderkey"]
     )
-    L._SIDECAR_CACHE.clear()
-    L._BLOOM_CACHE.clear()
+    WORKER_CACHE.clear()
 
     df = spark.read.parquet(src_dir).filter(_box())
     first = _rw(df)
-    assert first is not df and len(L._SIDECAR_CACHE.entries) == 1
-    fp0 = next(iter(L._SIDECAR_CACHE.entries.values()))[0]
+    pins = _pins("stats")
+    assert first is not df and pins
+    assert len(set(pins.values())) == 1  # one layout version
+    fp0 = next(iter(pins.values()))
 
     # second query: cache object unchanged (same fingerprint), and
     # a poisoned loader proves the sidecar is NOT re-read
@@ -371,6 +388,7 @@ def test_served_sidecar_pinning(spark, src_dir):
         assert _keys(second) == _keys(first)
     finally:
         L.load_or_refresh_file_stats = orig
+    assert _pins("stats") == pins  # pinned once per layout version
 
     # bloom path pins too
     probe = [
@@ -380,7 +398,7 @@ def test_served_sidecar_pinning(spark, src_dir):
     ]
     dfb = spark.read.parquet(src_dir).filter(F.col("o_orderkey").isin(probe))
     ob = _rw(dfb)
-    assert ob is not dfb and len(L._BLOOM_CACHE.entries) == 1
+    assert ob is not dfb and _pins("bloom")
     assert _keys(ob) == sorted(probe)
 
     # append + refresh -> new inventory -> pin invalidated, results fresh
@@ -395,7 +413,9 @@ def test_served_sidecar_pinning(spark, src_dir):
     o3 = _rw(df3)
     assert o3 is not df3
     assert _keys(o3) == _keys(df3)
-    assert next(iter(L._SIDECAR_CACHE.entries.values()))[0] != fp0
+    # re-pinned: the refreshed sidecar's chunks, under a new token
+    new = {k: t for k, t in _pins("stats").items() if k not in pins}
+    assert new and fp0 not in new.values()
 
 
 def test_cost_gate_declines_small_tables_by_default(
@@ -527,14 +547,16 @@ def test_bloom_and_range_keep_lists_intersect(spark, src_dir):
 
 
 def test_bloom_pin_budget_bounded(spark, src_dir, monkeypatch):
-    """The driver Bloom pin is an LRU with a byte budget: under a
-    tiny budget the pinned bytes stay bounded (the probe serves via
-    the DISTRIBUTED executor-side path instead) and results are
-    identical."""
+    """Bloom chunks pin in the driver under the one pin budget: under
+    a tiny budget the driver pins no chunk (the probe is dispatched
+    to the Python workers' pins instead) and results are identical."""
     from pdf_etl_ocr_inference_spark.operators import layout as L
     from pdf_etl_ocr_inference_spark.operators.layout import (
         layout_key,
         register_clustered_layout,
+    )
+    from pdf_etl_ocr_inference_spark.operators.shard_server import (
+        WORKER_CACHE,
     )
     from pdf_etl_ocr_inference_spark.optimizer import IndexCatalog
 
@@ -547,18 +569,18 @@ def test_bloom_pin_budget_bounded(spark, src_dir, monkeypatch):
         for r in spark.read.parquet(src_dir)
         .select("o_orderkey").orderBy("o_orderkey").limit(3).collect()
     ]
-    L._BLOOM_CACHE.clear()
+    WORKER_CACHE.clear()
     keep_full, cov_full = L.bloom_keep_files(
         spark, meta, "o_orderkey", probe
     )
-    assert L._BLOOM_CACHE.nbytes > 0  # normally pins
+    assert _pins("bloom")  # normally pins
 
-    monkeypatch.setattr(L._BLOOM_CACHE, "budget", 1)
-    L._BLOOM_CACHE.clear()
+    monkeypatch.setattr(WORKER_CACHE, "budget", 1)
+    WORKER_CACHE.clear()
     keep_dist, cov_dist = L.bloom_keep_files(
         spark, meta, "o_orderkey", probe
     )
-    assert L._BLOOM_CACHE.nbytes <= 1  # nothing pinned over budget
+    assert not _pins("bloom")  # nothing pinned over budget
     assert (keep_dist, cov_dist) == (keep_full, cov_full)
 
     # end to end: the point lookup still answers correctly unpinned
@@ -571,13 +593,16 @@ def test_bloom_pin_budget_bounded(spark, src_dir, monkeypatch):
 
 
 def test_stats_pin_budget_bounded(spark, src_dir, registered, monkeypatch):
-    """verdict-r5 #5: the driver min/max pin is ALSO a byte-budgeted
-    LRU (r5 pinned it unbounded — rows ∝ files × cols is driver heap
-    again at ~10⁶ files): under a tiny budget nothing pins, the range
-    keep-list serves via the DISTRIBUTED executor-side sidecar probe,
-    and (keep, covered) are identical to the pinned path's."""
+    """The min/max chunks pin in the driver under the one byte
+    budget (rows ∝ files × cols is driver heap again at ~10⁶ files):
+    under a tiny budget nothing pins in the driver, the range
+    keep-list is dispatched to the Python workers' pins, and (keep,
+    covered) are identical to the driver's."""
     from pdf_etl_ocr_inference_spark.operators import layout as L
     from pdf_etl_ocr_inference_spark.operators.layout import layout_key
+    from pdf_etl_ocr_inference_spark.operators.shard_server import (
+        WORKER_CACHE,
+    )
     from pdf_etl_ocr_inference_spark.optimizer import IndexCatalog
 
     meta = IndexCatalog().lookup(layout_key(src_dir))
@@ -588,15 +613,15 @@ def test_stats_pin_budget_bounded(spark, src_dir, registered, monkeypatch):
             (1998 - 1970) * 365.2425 * 86400,  # prune SOME, keep SOME
         ),
     }
-    L._SIDECAR_CACHE.clear()
+    WORKER_CACHE.clear()
     keep_full, cov_full = L.stats_keep_files(spark, meta, ranges)
-    assert L._SIDECAR_CACHE.nbytes > 0  # normally pins
+    assert _pins("stats")  # normally pins
     assert keep_full and keep_full < cov_full  # box really prunes
 
-    monkeypatch.setattr(L._SIDECAR_CACHE, "budget", 1)
-    L._SIDECAR_CACHE.clear()
+    monkeypatch.setattr(WORKER_CACHE, "budget", 1)
+    WORKER_CACHE.clear()
     keep_dist, cov_dist = L.stats_keep_files(spark, meta, ranges)
-    assert L._SIDECAR_CACHE.nbytes <= 1  # nothing pinned over budget
+    assert not _pins("stats")  # nothing pinned over budget
     assert (keep_dist, cov_dist) == (keep_full, cov_full)
 
     # end to end under the tiny budget: the served range scan still
@@ -960,17 +985,19 @@ def test_pins_invalidate_on_rebuild_with_unchanged_source(
 
 
 def test_executor_pinned_keep_matches_driver_pinned(
-    spark, src_dir, registered
+    spark, src_dir, registered, monkeypatch
 ):
-    """r8: the over-budget fallback is EXECUTOR-pinned (worker-process
-    chunk LRU), replacing the stateless per-query sidecar re-scan.
-    Its keep/covered sets must equal the driver-pinned path's on the
-    same layout and predicates, and it must never touch sidecar
-    payloads driver-side (DRIVER_SIDECAR_READS stays flat)."""
+    """Over the pin budget a sidecar probe is dispatched, and each
+    Python worker pins the chunks it answers.  Its keep/covered sets
+    must equal the driver's on the same layout and predicates, warm
+    or cold, and the driver must pin no sidecar chunk for it."""
     from pdf_etl_ocr_inference_spark.operators import layout as L
     from pdf_etl_ocr_inference_spark.operators.layout import (
         layout_key,
         register_clustered_layout,
+    )
+    from pdf_etl_ocr_inference_spark.operators.shard_server import (
+        WORKER_CACHE,
     )
     from pdf_etl_ocr_inference_spark.optimizer import IndexCatalog
 
@@ -979,53 +1006,47 @@ def test_executor_pinned_keep_matches_driver_pinned(
     )
     meta = IndexCatalog().lookup(layout_key(src_dir))
     ranges = {"o_custkey": (100.0, 299.0)}
-
-    L._SIDECAR_CACHE.clear()
-    keep_drv, cov_drv = L.stats_keep_files(spark, meta, ranges)
-    before = L.DRIVER_SIDECAR_READS
-    keep_exe, cov_exe = L._stats_keep_executor_pinned(spark, meta, ranges)
-    assert (keep_exe, cov_exe) == (keep_drv, cov_drv)
-    # warm second run (worker chunk caches) — still identical, still
-    # zero driver-side payload reads
-    keep_exe2, cov_exe2 = L._stats_keep_executor_pinned(
-        spark, meta, ranges
-    )
-    assert (keep_exe2, cov_exe2) == (keep_drv, cov_drv)
-    assert L.DRIVER_SIDECAR_READS == before
-
     probe = [
         r["o_orderkey"]
         for r in spark.read.parquet(src_dir)
         .select("o_orderkey").orderBy("o_orderkey").limit(3).collect()
     ]
-    L._BLOOM_CACHE.clear()
+    WORKER_CACHE.clear()
+    keep_drv, cov_drv = L.stats_keep_files(spark, meta, ranges)
     bkeep_drv, bcov_drv = L.bloom_keep_files(
         spark, meta, "o_orderkey", probe
     )
-    before = L.DRIVER_SIDECAR_READS
-    bkeep_exe, bcov_exe = L._bloom_keep_executor_pinned(
-        spark, meta, "o_orderkey", probe
-    )
-    assert (bkeep_exe, bcov_exe) == (bkeep_drv, bcov_drv)
-    assert L.DRIVER_SIDECAR_READS == before
+    neg_drv, _ = L.bloom_keep_files(spark, meta, "o_orderkey", [10**15])
+
+    monkeypatch.setattr(WORKER_CACHE, "budget", 1)
+    WORKER_CACHE.clear()
+    # cold, then warm (worker chunk pins): identical both times
+    for _ in range(2):
+        assert L.stats_keep_files(spark, meta, ranges) == (keep_drv, cov_drv)
+        assert L.bloom_keep_files(spark, meta, "o_orderkey", probe) == (
+            bkeep_drv,
+            bcov_drv,
+        )
     # negative probe: a value outside the domain keeps (almost) no
     # file on both paths
-    neg_drv, _ = L.bloom_keep_files(
-        spark, meta, "o_orderkey", [10**15]
-    )
-    neg_exe, _ = L._bloom_keep_executor_pinned(
-        spark, meta, "o_orderkey", [10**15]
-    )
+    neg_exe, _ = L.bloom_keep_files(spark, meta, "o_orderkey", [10**15])
     assert neg_exe == neg_drv
+    assert not _pins("stats") and not _pins("bloom")
 
 
-def test_executor_pinned_invalidates_on_rebuild(spark, tmp_path):
-    """A re-register bumps the layout fingerprint, so the executor
+def test_executor_pinned_invalidates_on_rebuild(
+    spark, tmp_path, monkeypatch
+):
+    """A re-register bumps the layout fingerprint, so the worker
     chunk pins (keyed on it) cannot serve the previous build: the
-    probe against the new meta reflects the NEW sidecar contents."""
+    dispatched probe against the new meta reflects the NEW sidecar
+    contents."""
     from pdf_etl_ocr_inference_spark.operators import layout as L
     from pdf_etl_ocr_inference_spark.operators.layout import (
         register_clustered_layout,
+    )
+    from pdf_etl_ocr_inference_spark.operators.shard_server import (
+        WORKER_CACHE,
     )
 
     src = str(tmp_path / "orders")
@@ -1036,14 +1057,17 @@ def test_executor_pinned_invalidates_on_rebuild(spark, tmp_path):
         .parquet(src)
     )
     ranges = {"o_custkey": (100.0, 299.0)}
+    budget = WORKER_CACHE.budget
+    monkeypatch.setattr(WORKER_CACHE, "budget", 1)  # dispatch probes
     meta1 = register_clustered_layout(spark, src, SPECS, n_files=4)
-    keep1, cov1 = L._stats_keep_executor_pinned(spark, meta1, ranges)
+    keep1, cov1 = L.stats_keep_files(spark, meta1, ranges)
     assert cov1  # sidecar covered the build-1 files
 
     meta2 = register_clustered_layout(spark, src, SPECS, n_files=8)
-    keep2, cov2 = L._stats_keep_executor_pinned(spark, meta2, ranges)
+    keep2, cov2 = L.stats_keep_files(spark, meta2, ranges)
     # build 2 rewrote the layout files: the covered set must be the
     # NEW files (8-way split), not the pinned build-1 chunks
     assert cov2 != cov1 or len(cov2) != len(cov1)
+    monkeypatch.setattr(WORKER_CACHE, "budget", budget)
     drv_keep2, drv_cov2 = L.stats_keep_files(spark, meta2, ranges)
     assert (keep2, cov2) == (drv_keep2, drv_cov2)
