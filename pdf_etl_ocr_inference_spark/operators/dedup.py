@@ -44,15 +44,9 @@ Scale notes (100 TB):
 - SimHash: 64-bit fingerprint per doc; near-dup = identical fingerprint
   per rotated band table (Manku et al. WWW'07 style), bucketed the
   same way — with the same collapse applied on the fingerprint value.
-- Both candidate generators take an optional ``bucket_cap``:
-  adversarial buckets (many DISTINCT values sharing one bucket)
-  truncate to the cap's lowest members with the dropped-row count
-  LOGGED (never silent).
 """
 
 from __future__ import annotations
-
-import logging
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -66,8 +60,6 @@ from pdf_etl_ocr_inference_spark.operators.layout import (
     ensure_min_parallelism,
     truncate_lineage,
 )
-
-log = logging.getLogger(__name__)
 
 # MinHash shape: every caller used 32 hashes in 8 bands of 4 rows over
 # word 3-gram shingles, so they are constants, not options.
@@ -190,7 +182,6 @@ def bucket_pairs(
     rows: DataFrame,
     keys: list[str],
     member: Column | str,
-    bucket_cap: int | None = None,
     a: str = "id_a",
     b: str = "id_b",
 ) -> DataFrame:
@@ -201,16 +192,11 @@ def bucket_pairs(
     repeated in one bucket never pairs with itself.  A pair comes out
     once per bucket it shares; callers ``distinct`` or count.
 
-    ``bucket_cap`` keeps each bucket's ``cap`` LOWEST members (the
-    survivors of the old windowed rank) and logs how many it dropped
-    — one extra job; recall, not correctness, is affected.
-
     Memory bound: a bucket's member list is ONE aggregation buffer.
     Sort-based aggregation falls back to spilling rows BETWEEN
     groups, never within one, so the largest bucket's list must fit
-    in one task's heap (about 8 bytes per id member); ``bucket_cap``
-    bounds the pairs, not that buffer.  The member-id lists of the
-    collapse groups (:func:`shingle_clique_groups`,
+    in one task's heap (about 8 bytes per id member).  The member-id
+    lists of the collapse groups (:func:`shingle_clique_groups`,
     :func:`hamming_near_pairs`) carry the same bound.
     """
     buckets = (
@@ -222,21 +208,6 @@ def bucket_pairs(
         )
         .filter(F.size("_ids") >= 2)
     )
-    if bucket_cap is not None:
-        dropped = buckets.agg(
-            F.sum(
-                F.greatest(F.size("_ids") - bucket_cap, F.lit(0))
-            ).alias("_d")
-        ).first()["_d"]
-        if dropped:
-            log.warning(
-                "bucket_cap=%d dropped %d bucket member(s) from "
-                "candidate generation (recall, not correctness, is "
-                "affected)",
-                bucket_cap,
-                int(dropped),
-            )
-        buckets = buckets.withColumn("_ids", F.slice("_ids", 1, bucket_cap))
     return ordered_pairs(buckets, "_ids", a, b)
 
 
@@ -370,7 +341,6 @@ def minhash_lsh_candidates(
     sigs: DataFrame,
     id_col: str,
     num_bands: int = 8,
-    bucket_cap: int | None = None,
     hash_family: str = "xxhash64",
 ) -> DataFrame:
     """Band the signatures and pair up each (band, band-hash) bucket.
@@ -384,11 +354,6 @@ def minhash_lsh_candidates(
     side (two full 32-min-agg passes) and shuffled both sides on the
     bucket key; this is ONE pass and ONE bucket shuffle, measured 21%
     faster on the candidate stage at sf0.1 with bit-identical output.
-
-    ``bucket_cap`` (logged truncation to each bucket's lowest ids) is
-    the backstop against adversarial near-collisions among DISTINCT
-    signatures; callers that collapse exact-dup cliques first
-    (``minhash_dedup_pairs``) rarely need it.
     """
     banded = sigs.select(
         id_col,
@@ -397,7 +362,7 @@ def minhash_lsh_candidates(
         ).alias("band", "bucket"),
     )
     return (
-        bucket_pairs(banded, ["band", "bucket"], id_col, bucket_cap)
+        bucket_pairs(banded, ["band", "bucket"], id_col)
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("n_bands"))
     )
@@ -461,7 +426,6 @@ def minhash_rep_pairs(
     text_col: str,
     id_col: str,
     jaccard_threshold: float = 0.5,
-    bucket_cap: int | None = None,
     hash_family: str = "xxhash64",
 ) -> tuple[DataFrame, DataFrame]:
     """The near-dedup pipeline UP TO clique expansion: returns
@@ -484,11 +448,7 @@ def minhash_rep_pairs(
     # once, in the group frame)
     sigs = shingle_signatures(reps, [id_col], F.col("shingles"), hash_family)
     cands = minhash_lsh_candidates(
-        sigs,
-        id_col,
-        NUM_BANDS,
-        bucket_cap=bucket_cap,
-        hash_family=hash_family,
+        sigs, id_col, NUM_BANDS, hash_family=hash_family
     )
     # verify attaches each side's shingle set AND member-id array in
     # one join per side (one row per distinct set), so downstream
@@ -518,7 +478,6 @@ def minhash_dedup_pairs(
     text_col: str,
     id_col: str,
     jaccard_threshold: float = 0.5,
-    bucket_cap: int | None = None,
     hash_family: str = "xxhash64",
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline → verified duplicate pairs.
@@ -540,17 +499,14 @@ def minhash_dedup_pairs(
     member emits its internal pairs at jaccard 1.0 — exactly the pair
     set the uncollapsed pipeline produced (expansion cost ∝ output
     size, which is irreducible for pair output).  Output: ``id_a,
-    id_b, jaccard`` for pairs ≥ threshold.  ``bucket_cap``
-    additionally bounds adversarial buckets among DISTINCT sets
-    (logged truncation).  Runs the clique-group checkpoint job when
-    called and leaves no cached frame.
+    id_b, jaccard`` for pairs ≥ threshold.  Runs the clique-group
+    checkpoint job when called and leaves no cached frame.
     """
     grp, vrep = minhash_rep_pairs(
         df,
         text_col,
         id_col,
         jaccard_threshold=jaccard_threshold,
-        bucket_cap=bucket_cap,
         hash_family=hash_family,
     )
     pairs = expand_groups(vrep, grp, "jaccard", F.lit(1.0))
@@ -671,7 +627,6 @@ def hamming_near_pairs(
     id_col: str,
     max_hamming: int = 3,
     num_blocks: int = 4,
-    bucket_cap: int | None = None,
 ) -> DataFrame:
     """Near pairs among 64-bit fingerprints by hamming ≤ max_hamming.
 
@@ -698,8 +653,6 @@ def hamming_near_pairs(
     rejected otherwise instead of silently losing recall.  Wider radii
     → more, narrower blocks (e.g. 8 blocks of 8 bits for radius ≤ 7),
     which also widens the candidate buckets — the usual LSH trade.
-    ``bucket_cap`` bounds adversarial buckets (many DISTINCT values
-    sharing one block value) with logged truncation.
     """
     if max_hamming >= num_blocks:
         raise ValueError(
@@ -754,7 +707,6 @@ def hamming_near_pairs(
             blocked,
             ["block_idx", "block_val"],
             F.struct("_keep", "_fpv"),
-            bucket_cap,
             "_a",
             "_b",
         )

@@ -36,9 +36,6 @@ shingles); its meta records only the hash family.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -55,7 +52,7 @@ from pdf_etl_ocr_inference_spark.operators.layout import (
     ensure_min_parallelism,
     truncate_lineage,
 )
-from pdf_etl_ocr_inference_spark.optimizer import IndexCatalog, _index_dir
+from pdf_etl_ocr_inference_spark.optimizer import IndexCatalog
 
 MINHASH_INDEX_FORMAT = 3
 _PARTITION_BUCKETS = 256
@@ -115,9 +112,7 @@ def build_minhash_index(
     accumulated tombstones away.  One corpus scan; band hashing is
     the same seeded pipeline as the batch dedup op."""
     cat = catalog or IndexCatalog()
-    d = _index_dir(cat.root, table_key)
-    data_path = os.path.join(d, "data")
-    shutil.rmtree(data_path, ignore_errors=True)
+    data_path = cat.data_path(table_key)
     rows = _band_rows(
         corpus.withColumn("_deleted", F.lit(False)),
         text_col, id_col, version=0, hash_family=hash_family,
@@ -125,8 +120,7 @@ def build_minhash_index(
     (
         rows.repartition("_pb")
         .sortWithinPartitions("_pb", "band", "bucket")
-        .write.mode("overwrite")
-        .partitionBy("_pb")
+        .write.partitionBy("_pb")
         .parquet(data_path)
     )
     cat.register(

@@ -583,21 +583,19 @@ def _dir_probe(path: str) -> list:
 
 
 def _write_manifest_doc(path: str, name: str, doc: dict) -> None:
-    """Atomic write of ``{path}/_manifest/{name}.json``.  The tmp
-    file and the replace both live INSIDE ``_manifest``, so the data
-    directory's mtime — the probe — is untouched (only the first
-    ``mkdir`` of ``_manifest`` bumps it, which is why probes are
-    always taken after ``makedirs``)."""
-    import json as _json
+    """Atomic write of ``{path}/_manifest/{name}.json``
+    (``scratch.atomic_write_json``).  The temp file and the rename both
+    live INSIDE ``_manifest``, so the data directory's mtime — the
+    probe — is untouched (only the first ``mkdir`` of ``_manifest``
+    bumps it, which is why probes are always taken after
+    ``makedirs``)."""
     import os as _os
-    import uuid as _uuid
+
+    from pdf_etl_ocr_inference_spark.scratch import atomic_write_json
 
     mdir = _manifest_dir(path)
     _os.makedirs(mdir, exist_ok=True)
-    tmp = f"{mdir}/.{name}.{_uuid.uuid4().hex[:8]}.tmp"
-    with open(tmp, "w") as f:
-        _json.dump(doc, f, separators=(",", ":"))
-    _os.replace(tmp, f"{mdir}/{name}.json")
+    atomic_write_json(f"{mdir}/{name}.json", doc)
 
 
 def _read_manifest_doc(path: str, name: str):
@@ -1648,15 +1646,13 @@ def register_clustered_layout(
     return meta
 
 
-def _inventory_sidecar(meta: dict) -> str:
-    return f"{meta['layout_path']}/_source_inventory.json"
-
-
 def _stamp_inventory(meta: dict, source_path: str) -> None:
     """Record the source inventory's DIGEST and cheap probe in meta —
     the two constant-size fields every per-query freshness check
-    reads — and write the full per-file rows to a sidecar JSON that
-    ONLY :func:`refresh_clustered_layout` loads for its append diff.
+    reads — and write the full per-file rows to the layout's
+    ``_manifest/source_inventory.json`` (:func:`_write_manifest_doc`,
+    so the layout directory's probe is untouched), which ONLY
+    :func:`refresh_clustered_layout` loads for its append diff.
     Keeping the O(files) list out of meta.json matters at scale: the
     optimizer parses meta on every routed query, and a 10⁶-file
     inventory is ~100 MB of JSON (verdict-r6 #2, last layer).
@@ -1664,8 +1660,6 @@ def _stamp_inventory(meta: dict, source_path: str) -> None:
     layout's OWN files change on every rebuild even when the source
     digest does not (re-register with new specs), so driver pins
     keyed on it can never serve a previous build's file map."""
-    import json as _json
-    import os as _os
     import uuid as _uuid
 
     inv = _source_inventory(source_path)
@@ -1673,22 +1667,16 @@ def _stamp_inventory(meta: dict, source_path: str) -> None:
     meta["inventory_digest"] = _inventory_digest(inv)
     meta["probe"] = _source_probe(source_path)
     meta["layout_build"] = _uuid.uuid4().hex
-    _os.makedirs(meta["layout_path"], exist_ok=True)
-    with open(_inventory_sidecar(meta), "w") as f:
-        _json.dump(inv, f)
+    _write_manifest_doc(meta["layout_path"], "source_inventory", inv)
 
 
 def _stamped_inventory(meta: dict) -> list[list]:
     """The per-file inventory recorded at register/refresh time: the
-    sidecar where _stamp_inventory wrote it, or the legacy in-meta
-    copy for pre-r7 registrations."""
-    import json as _json
-    import os as _os
-
-    path = _inventory_sidecar(meta)
-    if _os.path.exists(path):
-        with open(path) as f:
-            return _json.load(f)
+    manifest doc _stamp_inventory wrote, or the legacy in-meta copy
+    for pre-r7 registrations."""
+    inv = _read_manifest_doc(meta["layout_path"], "source_inventory")
+    if inv is not None:
+        return inv
     return [list(r) for r in meta.get("inventory", [])]
 
 

@@ -38,12 +38,16 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
 from pdf_etl_ocr_inference_spark.operators.result_cache import (
     plan_fingerprint,
+)
+from pdf_etl_ocr_inference_spark.scratch import (
+    atomic_write_json,
+    replace_dir,
+    restore_dir,
 )
 
 
@@ -55,20 +59,27 @@ def _mv_root(root: str | None) -> str:
     return os.path.join(scratch_root(), "matview")
 
 
-def _publish(entry: str, df: DataFrame, meta: dict) -> None:
-    import uuid
+# The view's meta lives inside its data directory (hidden from Spark
+# by its leading ``_``), so one ``replace_dir`` publishes rows and meta
+# together: a crash leaves the old view or the new, and a refresh
+# retried after one folds its change once.
+_META = "_meta.json"
 
-    nonce = uuid.uuid4().hex[:8]  # racing publishers stage independently
-    data = os.path.join(entry, "data")
-    tmp = os.path.join(entry, f"_tmp_{nonce}")
-    os.makedirs(entry, exist_ok=True)
-    df.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(data, ignore_errors=True)
-    os.replace(tmp, data)
-    mtmp = os.path.join(entry, f"meta.json.tmp_{nonce}")
-    with open(mtmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(mtmp, os.path.join(entry, "meta.json"))  # publish LAST
+
+def _data(entry: str) -> str:
+    return os.path.join(entry, "data")
+
+
+def _meta_path(entry: str) -> str:
+    return os.path.join(_data(entry), _META)
+
+
+def _publish(entry: str, df: DataFrame, meta: dict) -> None:
+    def stage(tmp):
+        df.write.parquet(tmp)
+        atomic_write_json(os.path.join(tmp, _META), meta)
+
+    replace_dir(_data(entry), stage)
 
 
 def create_materialized_view(
@@ -113,20 +124,18 @@ def refresh_materialized_view(
     )
 
     entry = os.path.join(_mv_root(root), key)
-    meta_path = os.path.join(entry, "meta.json")
-    if not os.path.exists(meta_path):
+    restore_dir(_data(entry))
+    if not os.path.exists(_meta_path(entry)):
         raise ValueError(f"no materialized view at {entry!r}")
-    with open(meta_path) as f:
+    with open(_meta_path(entry)) as f:
         meta = json.load(f)
-    base = spark.read.parquet(os.path.join(entry, "data"))
+    base = spark.read.parquet(_data(entry))
     delta = agg_delta(changes, keys=keys, sum_cols=sum_cols, count_col=count_col)
     merged = merge_delta(
         base, delta, keys=keys, value_cols=list(sum_cols), count_col=count_col
     ).select(*meta["columns"])
-    # collect-free publish: merged reads the CURRENT data dir, so it
-    # must land in tmp before the swap (it does — _publish writes tmp
-    # first, and the write materializes merged before data is
-    # replaced)
+    # merged reads the current data dir; _publish writes it to the
+    # staged copy before the swap
     meta["fingerprint"] = plan_fingerprint(defining_df)
     _publish(entry, merged, meta)
     return entry
@@ -152,14 +161,12 @@ def matview_rewrite(
     except Exception:
         return df
     for key in sorted(os.listdir(mv_root)):
-        meta_path = os.path.join(mv_root, key, "meta.json")
-        if not os.path.exists(meta_path):
+        entry = os.path.join(mv_root, key)
+        if not os.path.exists(_meta_path(entry)):
             continue
-        with open(meta_path) as f:
+        with open(_meta_path(entry)) as f:
             meta = json.load(f)
         if meta.get("fingerprint") == fp:
-            served = df.sparkSession.read.parquet(
-                os.path.join(mv_root, key, "data")
-            )
+            served = df.sparkSession.read.parquet(_data(entry))
             return served.toDF(*df.columns)
     return df

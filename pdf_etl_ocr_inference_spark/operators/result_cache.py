@@ -16,17 +16,18 @@ A result is keyed by a **semantic fingerprint** of the query:
   here with file metadata because plain parquet has no version.
 
 Storage: ``{root}/result_cache/{fingerprint}/`` holding the result
-parquet plus a ``_manifest.json`` written tmp-then-``os.replace``
-LAST (the repo-wide atomic-publish discipline — a crash mid-write
-leaves a missing manifest, i.e. a cache MISS, never a torn entry).
+parquet (``data``, published with ``scratch.replace_dir``) plus a
+``_manifest.json`` published LAST with ``scratch.atomic_write_json``.
+A hit needs the manifest, so a crash at any step leaves a cache MISS,
+never a torn entry, and the miss recomputes and replaces ``data``.
 
 Scale shape: the fingerprint is driver-side metadata work (hashing
 ~100k file entries at 100 TB is milliseconds); hit serving is one
 parquet scan of the RESULT (small for aggregates — the case result
 caches exist for); the cache directory is shared control data, safe
 for concurrent writers because distinct queries land in distinct
-fingerprint dirs and identical concurrent queries race benignly to
-publish identical bytes.
+fingerprint dirs and identical concurrent queries stage apart and
+publish identical bytes (a swap that loses the race may raise).
 
 No counterpart in the reference (its notebooks re-run every cell);
 this generalizes the materialized-view family (``streaming/ivm.py``)
@@ -36,11 +37,12 @@ to ad-hoc queries.
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame
+
+from pdf_etl_ocr_inference_spark.scratch import atomic_write_json, replace_dir
 
 
 def _canon_file_url(p: str) -> str:
@@ -150,20 +152,11 @@ def cached_result(
     if os.path.exists(manifest):
         return spark.read.parquet(data), True
 
-    import uuid
-
     os.makedirs(entry, exist_ok=True)
-    # unique tmp: two racing computations of the SAME query (threads,
-    # or non-PID-keyed roots) stage independently; last publish wins
-    # with identical bytes
-    tmp = os.path.join(entry, f"_data_tmp_{uuid.uuid4().hex[:8]}")
-    df.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(data, ignore_errors=True)
-    os.replace(tmp, data)
-    mtmp = manifest + f".tmp_{uuid.uuid4().hex[:8]}"
-    with open(mtmp, "w") as f:
-        json.dump({"fingerprint": fp, "schema": df.schema.jsonValue()}, f)
-    os.replace(mtmp, manifest)
+    replace_dir(data, df.write.parquet)
+    atomic_write_json(
+        manifest, {"fingerprint": fp, "schema": df.schema.jsonValue()}
+    )
     return spark.read.parquet(data), False
 
 

@@ -51,12 +51,13 @@ normalisation: graph builds, the loader and the oracle replay
 (``plans/graph_sql.py``) all use it, so a graph is walked on the
 vectors it was built on.
 
-A refresh publishes here too.  :func:`swap_shards` moves the staged
-shards of a vector index into place (two renames per shard) and
-publishes the meta last; :func:`publish_version` moves a staged
-postings append to ``v=<version>`` with one rename, then publishes the
-meta.  Builds stay batch jobs in ``serving``, ``search``, ``graph_ann``
-and ``hnsw``.  A refresh whose change rows and touched shards fit the
+A refresh publishes here too, through ``scratch``'s publish
+protocol.  :func:`swap_shards` moves the staged shards of a vector
+index into place (``swap_dir`` per shard) and publishes the meta last;
+:func:`publish_version` moves a staged postings append to
+``v=<version>`` (``replace_dir``), then publishes the meta.  Builds
+stay batch jobs in ``serving``, ``search``, ``graph_ann`` and
+``hnsw``.  A refresh whose change rows and touched shards fit the
 pin budget (:func:`frame_bytes`, :func:`shard_bytes`) is folded in the
 driver: the IVF and postings refreshes collect the change rows with one
 Arrow job and write each staged shard with :func:`write_shard`
@@ -69,7 +70,6 @@ from __future__ import annotations
 import glob
 import json
 import os
-import shutil
 import threading
 import uuid
 from collections import OrderedDict
@@ -84,7 +84,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pdf_etl_ocr_inference_spark.scratch import atomic_write_json
+from pdf_etl_ocr_inference_spark.scratch import (
+    atomic_write_json,
+    replace_dir,
+    restore_dir,
+    staging,
+    swap_dir,
+)
 
 # ------------------------------------------------------------------
 # Index format: meta files, build ids, shard directories
@@ -170,42 +176,24 @@ def swap_shards(
     """Publish a refresh of the shards ``touched`` of the index at
     ``path``: ``stage(tmp)`` writes their new contents as ``shard=N``
     directories under ``tmp`` (a shard it leaves out ends empty); each
-    is moved into place; then ``meta`` is published with
-    ``last_version`` = ``version``.  Returns ``touched``.
+    is moved into place with ``scratch.swap_dir``; then ``meta`` is
+    published with ``last_version`` = ``version``.  Returns ``touched``.
 
-    Each move is two renames: the live shard is parked under
-    ``_old_shard_<n>`` (the underscore hides it from Spark's listing)
-    before the new one lands, so no crash leaves a shard missing for
-    good.  The meta publish is last, so a crash before it leaves the
-    version unfolded; the retry of that version first restores any
-    parked shard whose new copy had not landed, then stages again from
-    the restored state.  The Spark rebuild and the driver fold both
-    publish through here."""
+    Any shard a killed attempt left parked is restored before
+    ``stage`` runs, since ``stage`` reads the live shards.  The meta
+    publish is last, so a crash before it leaves the version unfolded,
+    and its retry stages again: a fold applied twice to a shard gives
+    the shard a single fold gives.  The Spark rebuild and the driver
+    fold both publish through here."""
     for sh in touched:
-        dst = f"{path}/shard={sh}"
-        old = f"{path}/_old_shard_{sh}"
-        if os.path.exists(old) and not os.path.exists(dst):
-            os.replace(old, dst)
-    tmp = path + "_refresh_tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    try:
-        if touched:
+        restore_dir(f"{path}/shard={sh}")
+    if touched:
+        with staging(path) as tmp:
             stage(tmp)
-        for sh in touched:
-            src = f"{tmp}/shard={sh}"
-            dst = f"{path}/shard={sh}"
-            old = f"{path}/_old_shard_{sh}"
-            shutil.rmtree(old, ignore_errors=True)
-            if os.path.exists(dst):
-                os.replace(dst, old)
-            if os.path.exists(src):
-                os.replace(src, dst)
-        meta["last_version"] = version
-        publish_meta(path, kind, meta)
-        for sh in touched:  # all swapped, version durable
-            shutil.rmtree(f"{path}/_old_shard_{sh}", ignore_errors=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+            for sh in touched:
+                swap_dir(f"{tmp}/shard={sh}", f"{path}/shard={sh}")
+    meta["last_version"] = version
+    publish_meta(path, kind, meta)
     return touched
 
 
@@ -213,28 +201,14 @@ def publish_version(
     path: str, kind: str, meta: dict, version: int, stage
 ) -> None:
     """Publish an append to the index at ``path``: ``stage(staged)``
-    writes it under ``_staged_v<version>``, one rename moves it to
-    ``v=<version>``, then ``meta`` is published with ``last_version``
-    = ``version``.  A crashed attempt's ``v=<version>`` is removed
-    first: its rows are not in the published meta, so a retry never
-    counts them twice.
-
-    The staged name starts with an underscore and holds no ``=``:
-    Spark's file listing skips such a directory (one WITH an ``=`` is
-    read as a partition), and the ``v=*`` glob does not match it, so
-    no reader sees a staged or crashed append."""
-    staged = os.path.join(path, f"_staged_v{version}")
-    dst = os.path.join(path, f"v={version}")
-    shutil.rmtree(staged, ignore_errors=True)
-    try:
-        stage(staged)
-        shutil.rmtree(dst, ignore_errors=True)
-        if os.path.exists(staged):
-            os.replace(staged, dst)
-        meta["last_version"] = version
-        publish_meta(path, kind, meta)
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
+    writes it, ``scratch.replace_dir`` moves it to ``v=<version>``,
+    then ``meta`` is published with ``last_version`` = ``version``.  A
+    crashed attempt's ``v=<version>`` is replaced: its rows are not in
+    the published meta, so a retry never counts them twice.  Readers
+    match ``v=*``, and the staged copy's name does not."""
+    replace_dir(os.path.join(path, f"v={version}"), stage)
+    meta["last_version"] = version
+    publish_meta(path, kind, meta)
 
 
 def frame_bytes(df: DataFrame) -> int:

@@ -33,8 +33,7 @@ Scale notes (100 TB):
 - pathological grams ("the the the ..." across millions of docs) make
   the *output* large, not the shuffle skewed; ``max_doc_freq`` drops
   grams above a document-frequency ceiling with a LOGGED count
-  (no-silent-caps), mirroring the bucket_cap escape hatch in
-  ``operators/dedup.py``.
+  (no-silent-caps).
 
 Reference anchor: the reference corpus prep dedups at document
 granularity only (``02-ocr-tesseract.py:96-101`` drops exact path

@@ -44,6 +44,8 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -94,14 +96,27 @@ class IndexCatalog:
         with open(meta_path) as f:
             return json.load(f)
 
+    def data_path(self, table_key: str) -> str:
+        """A new data directory for a (re)build of ``table_key``'s
+        index.  The meta is the pointer: the old data keeps answering
+        under the old meta until :meth:`register` publishes the new
+        one, so a rebuild that fails at any step changes nothing."""
+        return os.path.join(
+            _index_dir(self.root, table_key), f"data-{uuid.uuid4().hex[:8]}"
+        )
+
     def register(self, table_key: str, meta: dict) -> None:
+        """Publish ``meta``, then remove the data directories it no
+        longer points at (a rebuild's old data, a failed build's)."""
         d = _index_dir(self.root, table_key)
         os.makedirs(d, exist_ok=True)
         atomic_write_json(os.path.join(d, "meta.json"), meta)
+        keep = os.path.basename(meta.get("data_path", ""))
+        for e in os.scandir(d):
+            if e.is_dir() and e.name != keep:
+                shutil.rmtree(e.path, ignore_errors=True)
 
     def drop(self, table_key: str) -> None:
-        import shutil
-
         shutil.rmtree(_index_dir(self.root, table_key), ignore_errors=True)
 
 
@@ -148,11 +163,7 @@ def build_lsh_index(
     dim = len(
         corpus.select(embedding_col).first()[embedding_col]
     )
-    d = _index_dir(cat.root, table_key)
-    data_path = os.path.join(d, "data")
-    import shutil
-
-    shutil.rmtree(data_path, ignore_errors=True)  # full rebuild
+    data_path = cat.data_path(table_key)
     rows = _index_rows(
         corpus, id_col, embedding_col, dim, n_planes, seed, n_tables,
         version=0, deleted=False,
@@ -170,8 +181,7 @@ def build_lsh_index(
     (
         rows.repartition("_table", "_pb")
         .sortWithinPartitions("_table", "_pb", "_sig")
-        .write.mode("overwrite")
-        .partitionBy("_table", "_pb")
+        .write.partitionBy("_table", "_pb")
         .parquet(data_path)
     )
     cat.register(

@@ -161,7 +161,7 @@ def op20_derive_filename(spark: SparkSession, sf: str) -> DataFrame:
     "sizes. file:// fetcher copies staged text files, so filesize = "
     "n_chars (ASCII) — fully oracle-checkable despite the side "
     "effects. Fixture staging is itself a distributed mapInPandas "
-    "write (atomic rename per blob ⇒ retry-safe) — the query contains "
+    "write, committed by a marker file written after it — the query contains "
     "no data collect().",
 )
 def op06_fetch_pipeline(spark: SparkSession, sf: str) -> DataFrame:
@@ -196,10 +196,8 @@ def op06_fetch_pipeline(spark: SparkSession, sf: str) -> DataFrame:
             for pdf in batches:
                 for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                     path = _os.path.join(src_dir, f"{int(doc_id):06d}.txt")
-                    tmp = f"{path}.tmp.{_os.getpid()}"
-                    with open(tmp, "w") as f:
+                    with open(path, "w") as f:
                         f.write(text)
-                    _os.replace(tmp, path)  # atomic ⇒ task-retry safe
                     n += 1
             yield pd.DataFrame({"n_staged": [n]})
 

@@ -78,15 +78,12 @@ def _documents_change_feed(spark: SparkSession, sf: str, tag: str) -> str:
     "aggregate — matching proves served state ≡ recompute.",
 )
 def op97_matview_rewrite(spark: SparkSession, sf: str) -> DataFrame:
-    import os
-    import shutil
-
     from pdf_etl_ocr_inference_spark.operators.matview import (
         create_materialized_view,
         matview_rewrite,
         refresh_materialized_view,
     )
-    from pdf_etl_ocr_inference_spark.scratch import scratch_dir
+    from pdf_etl_ocr_inference_spark.scratch import replace_dir, scratch_dir
     from pdf_etl_ocr_inference_spark.streaming.changefeed import (
         diff_snapshots,
     )
@@ -122,10 +119,7 @@ def op97_matview_rewrite(spark: SparkSession, sf: str) -> DataFrame:
     diff_snapshots(before, after, "doc_id").write.mode(
         "overwrite"
     ).parquet(changes_dir)
-    new_base = f"{scratch}/base_v1"
-    after.write.mode("overwrite").parquet(new_base)
-    shutil.rmtree(base_dir)
-    os.replace(new_base, base_dir)
+    replace_dir(base_dir, after.write.parquet)
 
     refresh_materialized_view(
         spark,

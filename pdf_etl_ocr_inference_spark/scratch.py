@@ -1,4 +1,4 @@
-"""Per-process scratch-dir management for fixtures, feeds, indexes.
+"""Per-process scratch dirs, and the one publish protocol on disk.
 
 Catalog fixtures (change feeds, streaming checkpoints, ANN indexes)
 need on-disk scratch.  A FIXED path wiped on entry races when two
@@ -12,14 +12,30 @@ Stale roots from crashed/finished processes are garbage-collected
 opportunistically (any ``spark_graft_scratch*`` sibling untouched
 for 2 h), so repeated gate/benchmark runs do not accumulate /tmp
 debris.
+
+This module is also the one publish protocol on disk, and the only
+module that renames.  Every JSON meta file goes through
+:func:`atomic_write_json`; every directory the engine replaces (index
+shard, change-feed commit, compacted table, view, cached result)
+through :func:`replace_dir`, which stages a copy and moves it in with
+:func:`swap_dir` (park the live copy, rename the new one in, drop the
+parked one).  Staged, parked and temp names start with ``_`` and hold
+no ``=``, so Spark's file listing skips them.  A swap that fails puts
+the parked copy back; one killed between its renames leaves the
+destination missing until :func:`restore_dir`, which each publish of
+it runs first.  One destination has one publisher at a time.
 """
 
 from __future__ import annotations
 
+import contextlib
+import json
 import os
 import shutil
 import tempfile
+import threading
 import time
+import uuid
 
 SCRATCH_ROOT = os.path.join(
     tempfile.gettempdir(), f"spark_graft_scratch_{os.getpid()}"
@@ -65,18 +81,22 @@ def scratch_dir(tag: str, wipe: bool = True) -> str:
     return d
 
 
-def atomic_write_json(path: str, obj) -> None:
-    """Crash-safe JSON publish: write to a sibling temp file, fsync,
-    then ``os.replace`` over the target — a reader never sees
-    truncated JSON (ADVICE r3: in-place meta rewrites could strand an
-    index behind unparseable metadata until manual repair).  Same
-    pattern as ``compact_parquet`` / the JSONL sink manifest."""
-    import json
+def _hidden(path: str, tag: str) -> str:
+    """The ``tag`` sibling of ``path``: hidden from Spark's listing
+    (leading ``_``, no ``=``)."""
+    head, name = os.path.split(path.rstrip("/"))
+    return os.path.join(head, f"_{tag}.{name.replace('=', '-')}")
 
-    tmp = f"{path}.tmp.{os.getpid()}"
+
+def atomic_write_json(path: str, obj) -> None:
+    """Write ``obj`` to a temp sibling unique to this call, fsync, then
+    rename it over ``path``: a reader sees the old JSON or the new,
+    never a torn one, and concurrent writers of one path never share a
+    temp file."""
+    tmp = _hidden(path, f"tmp.{uuid.uuid4().hex}")
     try:
         with open(tmp, "w") as f:
-            json.dump(obj, f)
+            json.dump(obj, f, separators=(",", ":"))
             f.flush()
             os.fsync(f.fileno())
         os.replace(tmp, path)
@@ -85,3 +105,52 @@ def atomic_write_json(path: str, obj) -> None:
             os.remove(tmp)
         raise
 
+
+def restore_dir(dst: str) -> None:
+    """Put back the parked copy of ``dst`` when ``dst`` is missing: a
+    crash between the two renames of :func:`swap_dir`."""
+    parked = _hidden(dst, "parked")
+    if os.path.exists(parked) and not os.path.exists(dst):
+        os.replace(parked, dst)
+
+
+def swap_dir(src: str, dst: str) -> None:
+    """Move ``src`` into place as ``dst``: park the live ``dst``,
+    rename ``src`` in, drop the parked copy.  A missing ``src`` leaves
+    ``dst`` absent.  If the rename fails, the parked copy goes back."""
+    restore_dir(dst)
+    parked = _hidden(dst, "parked")
+    shutil.rmtree(parked, ignore_errors=True)
+    if os.path.exists(dst):
+        os.replace(dst, parked)
+    try:
+        if os.path.exists(src):
+            os.replace(src, dst)
+    except BaseException:
+        restore_dir(dst)
+        raise
+    shutil.rmtree(parked, ignore_errors=True)
+
+
+@contextlib.contextmanager
+def staging(dst: str):
+    """A hidden sibling of ``dst`` to stage its replacement in, removed
+    on exit.  The name is this thread's own, so concurrent publishers
+    never share one, and a retry in the thread clears what a killed
+    attempt left."""
+    tmp = _hidden(dst, f"staged.{os.getpid()}.{threading.get_ident()}")
+    shutil.rmtree(tmp, ignore_errors=True)
+    try:
+        yield tmp
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def replace_dir(dst: str, stage) -> None:
+    """Replace the directory ``dst`` by what ``stage(tmp)`` writes to a
+    hidden sibling ``tmp``.  ``dst`` is restored first, so ``stage``
+    may read it; the staged copy is removed if anything fails."""
+    restore_dir(dst)
+    with staging(dst) as tmp:
+        stage(tmp)
+        swap_dir(tmp, dst)

@@ -171,17 +171,15 @@ class JsonlSinkWriter(DataSourceWriter):
         return _FileCommit(filename=name, n_rows=n)
 
     def commit(self, messages):
-        import json
         import os
+
+        from pdf_etl_ocr_inference_spark.scratch import atomic_write_json
 
         manifest = {
             "files": sorted(m.filename for m in messages),
             "n_rows": sum(m.n_rows for m in messages),
         }
-        tmp = os.path.join(self.path, "_MANIFEST.tmp")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, os.path.join(self.path, "_MANIFEST.json"))
+        atomic_write_json(os.path.join(self.path, "_MANIFEST.json"), manifest)
         if self.overwrite:
             # the manifest swap above is the atomic publish; stale
             # generations' data files are no longer referenced, so

@@ -86,29 +86,20 @@ def compact_parquet(
     cost + scheduler pressure + broken row-group statistics);
     streaming sinks and fine-grained incremental refreshes produce
     them constantly, so compaction is scheduled maintenance, not an
-    anomaly.  The rewrite goes to a sibling directory first and swaps
-    in with the park-old/rename-new dance (reader sees whole-old or
-    whole-new, never a mix; the parked copy survives a crash)."""
+    anomaly.  The rewrite is staged and swapped in with
+    ``scratch.replace_dir``: a reader sees whole-old or whole-new,
+    never a mix, and a table a crash left parked is restored before it
+    is read."""
     import math
-    import os
-    import shutil
 
-    old = path.rstrip("/") + "_precompact"
-    if not os.path.exists(path) and os.path.exists(old):
-        # a previous attempt died between the two swap renames: the
-        # parked copy IS the table — restore it before proceeding
-        os.replace(old, path)
+    from pdf_etl_ocr_inference_spark.scratch import replace_dir, restore_dir
+
+    restore_dir(path)
     df = spark.read.parquet(path)
     n = df.count()
     n_files = max(1, math.ceil(n / target_rows_per_file))
     out = df.repartition(n_files)
     if sort_cols:
         out = out.sortWithinPartitions(*sort_cols)
-    tmp = path.rstrip("/") + "_compacting"
-    shutil.rmtree(tmp, ignore_errors=True)
-    out.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(old, ignore_errors=True)
-    os.replace(path, old)
-    os.replace(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
+    replace_dir(path, lambda tmp: out.write.parquet(tmp))
     return n_files

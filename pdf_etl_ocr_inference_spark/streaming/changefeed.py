@@ -22,12 +22,20 @@ Scale: commits are append-only directory writes (no rewrite of
 history); ``read_changes(since)`` cost ∝ new data only; ``snapshot``
 shuffles once on the key; ``compact`` folds ``v<=N`` into a base
 snapshot so reconstruction cost stops growing with history.
+
+Every commit and base lands whole, through ``scratch.replace_dir``: a
+reader sees a ``v=N`` directory only once all its files are written.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from pdf_etl_ocr_inference_spark.scratch import replace_dir, restore_dir
 
 CHANGE_TYPES = (
     "insert",
@@ -49,7 +57,7 @@ def commit_changes(changes: DataFrame, path: str, version: int) -> None:
             "change-feed tables cannot have a data column named 'v': "
             "it collides with the v=N commit partition column"
         )
-    changes.write.mode("overwrite").parquet(f"{path}/v={version}")
+    replace_dir(f"{path}/v={version}", changes.write.parquet)
 
 
 def diff_snapshots(
@@ -92,14 +100,23 @@ def diff_snapshots(
 def read_changes(
     spark: SparkSession, path: str, since_version: int = -1
 ) -> DataFrame:
-    """Change rows with ``_commit_version > since_version``.
+    """Change rows with ``_commit_version > since_version``, from the
+    newest compaction base on.
 
     ``v=N`` is a partition column → the filter prunes directories, so
-    an incremental consumer reads only commits it hasn't seen.
+    an incremental consumer reads only commits it hasn't seen.  A
+    commit older than the newest base is folded into it; one that a
+    crashed ``compact`` left behind is not read.
     """
+    bases = [
+        v
+        for v in list_versions(path)
+        if os.path.exists(_base_marker(os.path.join(path, f"v={v}")))
+    ]
+    start = max([since_version + 1, *bases])
     df = spark.read.option("basePath", path).parquet(path)
     df = df.withColumnRenamed("v", "_commit_version") if "v" in df.columns else df
-    return df.filter(F.col("_commit_version") > since_version)
+    return df.filter(F.col("_commit_version") >= start)
 
 
 def snapshot(
@@ -133,8 +150,6 @@ def snapshot(
 
 def list_versions(path: str) -> list[int]:
     """Commit versions present on disk (sorted ascending)."""
-    import os
-
     if not os.path.isdir(path):
         return []
     out = []
@@ -165,29 +180,39 @@ def compact(
     - time travel below the horizon is gone by construction.
 
     Cost ∝ current snapshot size + history ≤ N being folded, NOT the
-    total feed history; later commits are untouched.  The final
-    multi-directory swap is not transactional on a plain filesystem —
-    a production deployment fronts it with a manifest/log commit (the
-    role Delta's transaction log plays); at this engine's layer the
-    base is staged to a temp dir and moved into place last so a crash
-    mid-compaction loses no committed data (the stale v<=N dirs are
-    still present and a re-run is safe).
-    """
-    import os
-    import shutil
+    total feed history; later commits are untouched.
 
+    Order: the base, marked as one, replaces ``v=N``
+    (``scratch.replace_dir``); only then are the ``v<N`` directories
+    removed.  From the moment the base lands, readers start at it
+    (:func:`read_changes`), so a crash at any step loses no commit and
+    revives no deleted key: before the swap the feed is as it was;
+    after it, a leftover ``v<N`` is never read, and a re-run folds the
+    same base and removes the leftovers.
+    """
+    live = os.path.join(path, f"v={through_version}")
+    restore_dir(live)
     versions = list_versions(path)
     to_fold = [v for v in versions if v <= through_version]
     if not to_fold:
         return
     base = snapshot(spark, path, key, as_of_version=through_version)
     base = base.withColumn("_change_type", F.lit("insert"))
-    tmp = os.path.join(path, f"_compact_tmp_v{through_version}")
-    shutil.rmtree(tmp, ignore_errors=True)
-    base.write.mode("overwrite").parquet(tmp)  # materialize BEFORE rm
+
+    def stage(tmp):
+        base.write.parquet(tmp)
+        open(_base_marker(tmp), "w").close()
+
+    replace_dir(live, stage)
     for v in to_fold:
-        shutil.rmtree(os.path.join(path, f"v={v}"), ignore_errors=True)
-    os.replace(tmp, os.path.join(path, f"v={through_version}"))
+        if v != through_version:
+            shutil.rmtree(os.path.join(path, f"v={v}"), ignore_errors=True)
+
+
+def _base_marker(commit_dir: str) -> str:
+    """The file that marks a commit directory as a compaction base
+    (hidden from Spark's listing by its leading ``_``)."""
+    return os.path.join(commit_dir, "_base")
 
 
 def maybe_compact(

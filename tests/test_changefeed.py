@@ -101,8 +101,8 @@ def test_full_compaction_through_latest(spark, feed):
     compact(spark, feed, key="k", through_version=2)
     assert list_versions(feed) == [2]
     assert _state(snapshot(spark, feed, "k")) == FINAL
-    # no temp staging dirs left behind
-    assert not [d for d in os.listdir(feed) if d.startswith("_compact")]
+    # no staged or parked copy left behind
+    assert not [d for d in os.listdir(feed) if d.startswith("_")]
 
 
 def test_maybe_compact_policy(spark, tmp_path):

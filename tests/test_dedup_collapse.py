@@ -9,9 +9,7 @@ mass-duplicate fixture:
    duplication grows 8×;
 2. the emitted pair set still equals brute-force ground truth
    (collapse + re-expansion is semantics-preserving);
-3. the same properties for ``hamming_near_pairs`` (SimHash/dHash);
-4. ``bucket_cap`` truncates adversarial DISTINCT-value buckets with
-   a logged, non-silent drop.
+3. the same properties for ``hamming_near_pairs`` (SimHash/dHash).
 """
 
 from __future__ import annotations
@@ -22,7 +20,6 @@ from pyspark.sql import functions as F
 from pdf_etl_ocr_inference_spark.operators.dedup import (
     hamming_near_pairs,
     minhash_dedup_pairs,
-    minhash_lsh_candidates,
     ngram_jaccard_pairs,
     shingle_clique_groups,
     simhash_near_pairs,
@@ -116,49 +113,6 @@ def test_hamming_pairs_match_bruteforce_with_mass_dups(spark):
         if a < b and bin(fps[a] ^ fps[b]).count("1") <= 3
     }
     assert got == brute
-
-
-def test_bucket_cap_truncates_and_logs(spark, caplog):
-    import logging
-
-    # 40 DISTINCT fingerprints sharing block 0 (low 16 bits equal):
-    # an adversarial hot bucket that the value-collapse cannot help
-    rows = [(i, (i << 32) | 0x1234) for i in range(40)]
-    df = spark.createDataFrame(rows, "id long, h long")
-    with caplog.at_level(
-        logging.WARNING, logger="pdf_etl_ocr_inference_spark.operators.dedup"
-    ):
-        capped = hamming_near_pairs(
-            df, "h", "id", max_hamming=3, num_blocks=4, bucket_cap=10
-        ).collect()
-    assert any("bucket_cap" in r.message for r in caplog.records)
-    # capped output is a subset of the uncapped one
-    uncapped = {
-        (r["id_a"], r["id_b"])
-        for r in hamming_near_pairs(
-            df, "h", "id", max_hamming=3, num_blocks=4
-        ).collect()
-    }
-    assert {(r["id_a"], r["id_b"]) for r in capped} <= uncapped
-
-
-def test_minhash_bucket_cap_logged(spark, caplog):
-    import logging
-
-    # distinct docs that still share band buckets is improbable to
-    # plant textually; cap the *signature* band join directly
-    rows = [(i, list(range(32))) for i in range(30)]  # identical sigs,
-    # distinct ids: every band bucket holds 30 members
-    sigs = spark.createDataFrame(rows, "doc_id long, sig array<long>")
-    with caplog.at_level(
-        logging.WARNING, logger="pdf_etl_ocr_inference_spark.operators.dedup"
-    ):
-        out = minhash_lsh_candidates(
-            sigs, "doc_id", num_bands=8, bucket_cap=5
-        )
-        n = out.count()
-    assert any("bucket_cap" in r.message for r in caplog.records)
-    assert n == 10  # C(5,2) pairs survive the cap (deduped over bands)
 
 
 def test_rep_graph_cc_matches_expanded_cc(spark):

@@ -407,3 +407,71 @@ def test_one_lookup_seam():
         "shard loaded or dispatched outside the lookup seam — call "
         "shard_server.lookup:\n" + "\n".join(sites)
     )
+
+
+# ---------------------------------------------------------------------------
+# One publish protocol.  ``scratch`` is the only module that renames on
+# disk or writes JSON with ``json.dump``: every directory the engine
+# replaces goes through ``scratch.replace_dir`` / ``swap_dir`` and every
+# meta file through ``scratch.atomic_write_json``.  Two renames stay
+# outside it, each keyed by its enclosing function.
+# ---------------------------------------------------------------------------
+
+PUBLISH_CALLS = {("os", "replace"), ("os", "rename"), ("json", "dump")}
+PUBLISH_EXCEPTIONS = {
+    # an executor streams a downloaded blob to a temp file and renames
+    # it into place, so a killed task never leaves a truncated blob that
+    # the fetcher's exists-check would take for a complete one
+    ("operators/ingest.py", "_write_atomic"),
+    # a sidecar version directory is only ever added under a fresh name
+    # and found through a pointer doc, never replaced; the sidecar GC
+    # recognises its temp names
+    ("operators/layout.py", "_publish_sidecar_version"),
+}
+
+
+def _publish_sites(path: pathlib.Path) -> list[str]:
+    tree = ast.parse(path.read_text(), filename=str(path))
+    rel = path.relative_to(PKG).as_posix()
+    out = []
+
+    def visit(node: ast.AST, fn: str | None) -> None:
+        for child in ast.iter_child_nodes(node):
+            inner = (
+                child.name
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
+                else fn
+            )
+            if (rel, fn) not in PUBLISH_EXCEPTIONS:
+                if (
+                    isinstance(child, ast.Call)
+                    and isinstance(child.func, ast.Attribute)
+                    and isinstance(child.func.value, ast.Name)
+                    and (child.func.value.id.lstrip("_"), child.func.attr)
+                    in PUBLISH_CALLS
+                ):
+                    out.append((child.lineno, f"{rel}:{child.lineno} "
+                                f"({child.func.value.id}.{child.func.attr})"))
+                if isinstance(child, ast.ImportFrom) and any(
+                    ((child.module or "").lstrip("_"), a.name) in PUBLISH_CALLS
+                    for a in child.names
+                ):
+                    out.append((child.lineno, f"{rel}:{child.lineno} (import)"))
+            visit(child, inner)
+
+    visit(tree, None)
+    return [site for _, site in sorted(out)]
+
+
+def test_one_publish_protocol():
+    sites = [
+        s
+        for p in sorted(PKG.rglob("*.py"))
+        if p.relative_to(PKG).as_posix() != "scratch.py"
+        for s in _publish_sites(p)
+    ]
+    assert not sites, (
+        "rename or json.dump outside scratch — publish with "
+        "scratch.replace_dir / swap_dir / atomic_write_json:\n"
+        + "\n".join(sites)
+    )

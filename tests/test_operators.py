@@ -385,6 +385,7 @@ def test_asof_forward_and_tolerance(spark):
 
 def test_compact_parquet_collapses_files_losslessly(spark, tmp_path):
     import glob
+    import os
 
     from pdf_etl_ocr_inference_spark.sources.writers import compact_parquet
 
@@ -401,26 +402,25 @@ def test_compact_parquet_collapses_files_losslessly(spark, tmp_path):
     back = spark.read.parquet(path)
     assert back.count() == 10_000
     assert back.agg(F.sum("id")).first()[0] == 10_000 * 9_999 // 2
-    # crash debris cleaned up
-    assert not glob.glob(f"{path}_precompact") and not glob.glob(
-        f"{path}_compacting"
-    )
+    # no staged or parked copy left beside the table
+    assert os.listdir(tmp_path) == ["frag"]
 
 
 def test_compact_parquet_heals_interrupted_swap(spark, tmp_path):
-    """Crash between the two swap renames leaves only _precompact;
+    """Crash between the two swap renames leaves only the parked copy;
     the next compaction restores it before proceeding."""
-    import glob
     import os
 
+    from pdf_etl_ocr_inference_spark.scratch import _hidden
     from pdf_etl_ocr_inference_spark.sources.writers import compact_parquet
 
     path = str(tmp_path / "t")
     spark.range(0, 1000).write.parquet(path)
     # simulate the crash window: table parked, new copy never moved in
-    os.replace(path, path + "_precompact")
+    parked = _hidden(path, "parked")
+    os.replace(path, parked)
     assert not os.path.exists(path)
     compact_parquet(spark, path, target_rows_per_file=1000)
     back = spark.read.parquet(path)
     assert back.count() == 1000
-    assert not glob.glob(f"{path}_precompact")
+    assert not os.path.exists(parked)

@@ -89,30 +89,6 @@ def test_lsh_candidates_match_self_join_reference(spark):
         assert got == ref, (seed, got ^ ref)
 
 
-def test_lsh_candidates_bucket_cap_keeps_lowest_ids(spark):
-    """Under a cap, survivors per bucket are the CAP lowest ids —
-    exactly the old windowed-rank semantics — and pairs never involve
-    a dropped member at a band where it was dropped."""
-    from pdf_etl_ocr_inference_spark.operators.dedup import (
-        minhash_lsh_candidates,
-    )
-
-    # 6 identical signatures -> one bucket of 6 per band
-    sigs = spark.createDataFrame(
-        [(i, [7] * 8) for i in range(6)],
-        "doc_id long, sig array<long>",
-    )
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in minhash_lsh_candidates(
-            sigs, "doc_id", 2, bucket_cap=3,
-            hash_family="md5",
-        ).collect()
-    }
-    # cap=3 keeps ids {0,1,2}: exactly their 3 pairs survive
-    assert got == {(0, 1), (0, 2), (1, 2)}, got
-
-
 def test_hamming_pairs_match_brute_force(spark):
     from pdf_etl_ocr_inference_spark.operators.dedup import (
         hamming_near_pairs,

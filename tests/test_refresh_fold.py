@@ -33,6 +33,7 @@ from pdf_etl_ocr_inference_spark.operators.shard_server import (
     WORKER_CACHE,
     frame_bytes,
 )
+from pdf_etl_ocr_inference_spark.scratch import _hidden
 from pdf_etl_ocr_inference_spark.streaming.changefeed import (
     commit_changes,
     read_changes,
@@ -334,16 +335,21 @@ class _Crash(Exception):
     pass
 
 
-def _renames_under(monkeypatch, root, crash_at=None):
-    """Count the ``os.replace`` calls on paths under ``root``; raise
-    :class:`_Crash` instead of the ``crash_at``-th one."""
+def _renames_under(monkeypatch, root, crash_at=None, kill=False):
+    """Count the ``os.replace`` calls from or to a path under ``root``;
+    raise :class:`_Crash` instead of the ``crash_at``-th one and, with
+    ``kill``, instead of every later one too: a killed process renames
+    nothing more, so a swap cannot put its parked copy back."""
     real = os.replace
     calls = []
 
     def replace(src, dst, *a, **k):
-        if str(src).startswith(str(root)):
+        if str(src).startswith(str(root)) or str(dst).startswith(str(root)):
             calls.append(src)
-            if len(calls) == crash_at:
+            n = len(calls)
+            if crash_at is not None and (
+                n == crash_at or (kill and n > crash_at)
+            ):
                 raise _Crash(src)
         return real(src, dst, *a, **k)
 
@@ -362,7 +368,8 @@ def test_fold_crash_at_each_publish_step_heals_on_retry(
 ):
     """A fold that dies at any rename of its publish (after staging;
     between a cell's two renames; after the swaps, at the meta publish;
-    for postings before and after the ``v=1`` rename) or while staging
+    for postings before and after the ``v=1`` rename), also when no
+    rename runs after it (``kill``: a cell stays parked), or while staging
     leaves the version unpublished and no cell lost; the retry of that
     version gives the index a clean fold gives."""
     ivf, post = _build(spark, tmp_path / "base")
@@ -387,13 +394,17 @@ def test_fold_crash_at_each_publish_step_heals_on_retry(
     # ivf: two per touched cell and the meta; postings: v=1 and the meta
     assert len(renames) >= 3 if kind == "ivf" else len(renames) == 2
 
-    crashes = [("rename", k) for k in range(1, len(renames) + 1)]
+    crashes = [
+        (step, k)
+        for k in range(1, len(renames) + 1)
+        for step in ("rename", "kill")
+    ]
     crashes.append(("stage", 2 if kind == "ivf" else 1))
     for step, k in crashes:
         path = _copy(base, tmp_path / f"{step}{k}")
         with monkeypatch.context() as m:
-            if step == "rename":
-                _renames_under(m, path, crash_at=k)
+            if step != "stage":
+                _renames_under(m, path, crash_at=k, kill=step == "kill")
             else:
                 real, calls = (serving if kind == "ivf" else search).write_shard, []
 
@@ -410,11 +421,12 @@ def test_fold_crash_at_each_publish_step_heals_on_retry(
         assert meta == {"last_version": 0}, (step, k)
         if kind == "ivf":  # every cell is live or parked, none lost
             for c in _cells(base)[0]:
-                assert os.path.isdir(f"{path}/shard={c}") or os.path.isdir(
-                    f"{path}/_old_shard_{c}"
+                cell = f"{path}/shard={c}"
+                assert os.path.isdir(cell) or os.path.isdir(
+                    _hidden(cell, "parked")
                 ), (step, k, c)
         fold(path)
         assert state(path) == want, (step, k)
-        assert not glob.glob(f"{path}*/_*staged*") and not os.path.exists(
-            path + "_refresh_tmp"
-        )
+        # no staged or parked copy is left in the index or beside it
+        assert sorted(os.listdir(path)) == sorted(os.listdir(clean)), (step, k)
+        assert not [n for n in os.listdir(tmp_path) if n.startswith("_")]
