@@ -28,6 +28,7 @@ from pdf_etl_ocr_inference_spark.operators.shard_server import (
     lookup,
     pinned,
 )
+from pdf_etl_ocr_inference_spark.sources.readers import read_parquet
 
 
 def ensure_min_parallelism(
@@ -230,12 +231,12 @@ def load_or_refresh_file_stats(
     ):
         doc = fresh_manifest_summary(path)  # constant-size check
         if doc is not None and doc["digest"] == marker.get("digest"):
-            return spark.read.parquet(phys)
+            return read_parquet(spark, phys)
     live = _live_stat_map(path)
     current = sorted(live)
     have = None
     if phys is not None:
-        have = spark.read.parquet(phys)
+        have = read_parquet(spark, phys)
         if "fsize" not in have.columns:
             have = None  # pre-fingerprint sidecar format: full rebuild
         else:
@@ -281,7 +282,7 @@ def load_or_refresh_file_stats(
     # is unchanged by the hidden sidecar write, so `live` is still
     # the right map
     _stamp_stats_manifest(path, live, cols)
-    return spark.read.parquet(new_dir)
+    return read_parquet(spark, new_dir)
 
 
 def _stamp_stats_manifest(path: str, live: dict, cols) -> None:

@@ -40,8 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pdf_etl_ocr_inference_spark.operators.shard_server import (
-    WORKER_CACHE,
-    frame_bytes,
+    frame_rows,
     lookup,
     merge_topk,
     publish_build,
@@ -448,16 +447,20 @@ def refresh_postings_index(
     crashed ``v=<version>``, so nothing is counted twice.
 
     A batch that fits the pin budget (``shard_server.frame_bytes``:
-    the bytes its scan reads) is folded in the driver: one Arrow job
-    collects ``(id, text)`` and :func:`_postings_fold` builds the
-    postings and the stats with Arrow kernels and the tokenisation of
-    :func:`_postings_rows`.  A larger batch, a text column that is
-    not a string, or ids that are not integers are written by Spark."""
+    the bytes its scan reads) is folded in the driver:
+    ``shard_server.frame_rows`` collects ``(id, text)`` (a pyarrow read
+    of the commit's files when ``batch`` only selects and renames
+    columns of a change-feed read, else one Arrow job) and
+    :func:`_postings_fold` builds the postings and the stats with
+    Arrow kernels and the tokenisation of :func:`_postings_rows`.  A
+    larger batch, a text column that is not a string, or ids that are
+    not integers are written by Spark."""
     meta = read_meta(path, "postings")
     if version <= meta["last_version"]:
         return
-    docs = batch.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
-    rows = docs.toArrow() if frame_bytes(docs) <= WORKER_CACHE.budget else None
+    rows = frame_rows(
+        batch.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
+    )
     if (
         rows is not None
         and rows["id"].null_count == 0

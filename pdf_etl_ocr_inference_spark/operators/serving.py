@@ -27,9 +27,10 @@ rows; collecting it runs no job.
 
 Builds are batch jobs, and so are refreshes of every kind but IVF.
 An IVF refresh whose commit fits the pin budget is folded in the
-driver (one Arrow job collects the change rows; numpy assigns their
-cells and pyarrow rewrites the touched cells); a larger commit is
-rebuilt by Spark.  Every meta carries a ``build_id`` and a
+driver (``shard_server.frame_rows`` reads the change rows, with no
+job for a plain change-feed read; numpy assigns their cells and
+pyarrow rewrites the touched cells); a larger commit is rebuilt by
+Spark.  Every meta carries a ``build_id`` and a
 ``last_version`` that a refresh bumps; together they key the shard
 cache, so a refresh or a rebuild at the same path is never answered
 from stale pinned state.
@@ -54,6 +55,7 @@ from pdf_etl_ocr_inference_spark.operators.graph_ann import (
 from pdf_etl_ocr_inference_spark.operators.shard_server import (
     WORKER_CACHE,
     frame_bytes,
+    frame_rows,
     lookup,
     merge_topk,
     read_meta,
@@ -226,27 +228,30 @@ def refresh_ivf_serving_index(
     A commit whose change rows (``shard_server.frame_bytes``: the
     bytes its scan reads) and touched cells (on-disk bytes) fit the
     pin budget is folded in the driver:
-    one Arrow job collects the rows, :func:`_ivf_fold` assigns their
-    cells in numpy and rewrites each touched cell with pyarrow.  A
-    larger commit, or one with a null id or embedding or a vector of
-    the wrong dimension, rebuilds the touched cells with Spark
+    ``shard_server.frame_rows`` collects the rows (a pyarrow read of
+    the commit's files when ``changes`` only selects and renames
+    columns of a change-feed read, else one Arrow job),
+    :func:`_ivf_fold` assigns their cells in numpy and rewrites each
+    touched cell with pyarrow.  A larger commit, or one with a null or
+    non-integer id, a null or non-numeric embedding or a vector of the
+    wrong dimension, rebuilds the touched cells with Spark
     (``graph_ann.refresh_sharded_graph``).  Both paths publish through
     ``shard_server.swap_shards`` and write the same rows."""
     meta = read_meta(path, "ivf")
     if version <= meta.get("last_version", 0):
         return []  # already folded (idempotent on driver retry)
-    est = frame_bytes(changes)
-    if est <= WORKER_CACHE.budget:
-        rows = changes.select(
-            F.col(id_col).cast("long").alias("vec_id"),
-            F.col(embedding_col).cast("array<double>").alias("embedding"),
-            "_change_type",
-        ).toArrow()
-        fold = _ivf_fold(rows, meta["centroids"], path)
-        if fold is not None:
-            touched, stage = fold
-            if est + shard_bytes(path, "ivf", touched) <= WORKER_CACHE.budget:
-                return swap_shards(path, "ivf", meta, version, touched, stage)
+    cols = changes.select(
+        F.col(id_col).alias("vec_id"),
+        F.col(embedding_col).alias("embedding"),
+        "_change_type",
+    )
+    rows = frame_rows(cols)
+    fold = None if rows is None else _ivf_fold(rows, meta["centroids"], path)
+    if fold is not None:
+        touched, stage = fold
+        est = frame_bytes(cols) + shard_bytes(path, "ivf", touched)
+        if est <= WORKER_CACHE.budget:
+            return swap_shards(path, "ivf", meta, version, touched, stage)
 
     def _rebuild(members, tmp, meta):
         build_ivf_serving_index(
@@ -268,17 +273,30 @@ _REMOVES = ["delete", "update_preimage"]
 
 def _ivf_fold(rows: pa.Table, centroids: list, path: str):
     """``(touched cells, stage(tmp))`` of the change ``rows``
-    ``(vec_id, embedding, _change_type)``, or ``None`` when a row has
-    a null id or embedding or a vector of the wrong dimension (the
-    Spark path keeps its own handling of those).  ``stage`` writes
+    ``(vec_id, embedding, _change_type)``, or ``None`` when an id is
+    null or not an integer, an embedding is null or not a list of
+    numbers, or a vector has the wrong dimension (the Spark path keeps
+    its own handling of those).  Ids are cast to int64 and embeddings
+    to float64 lists, as the Spark path's casts do.  ``stage`` writes
     each touched cell of the index at ``path`` under ``tmp`` with the
     members ``refresh_sharded_graph`` gives it: its current rows minus
     every id the commit removes or adds (upsert: the add wins), plus
     the adds that the centroid argmax places in it."""
+    id_type = rows.schema.field("vec_id").type
+    emb_type = rows.schema.field("embedding").type
+    if not (
+        pa.types.is_integer(id_type)
+        and (pa.types.is_list(emb_type) or pa.types.is_large_list(emb_type))
+        and (
+            pa.types.is_integer(emb_type.value_type)
+            or pa.types.is_floating(emb_type.value_type)
+        )
+    ):
+        return None
     cents = np.asarray(centroids, dtype="float64")
     dim = cents.shape[1]
-    ids = rows["vec_id"].combine_chunks()
-    emb = rows["embedding"].combine_chunks()
+    ids = rows["vec_id"].combine_chunks().cast(pa.int64())
+    emb = rows["embedding"].combine_chunks().cast(_IVF_SCHEMA.field("embedding").type)
     flat = emb.flatten()
     if ids.null_count or emb.null_count or flat.null_count:
         return None

@@ -59,10 +59,12 @@ index into place (``swap_dir`` per shard) and publishes the meta last;
 stay batch jobs in ``serving``, ``search``, ``graph_ann`` and
 ``hnsw``.  A refresh whose change rows and touched shards fit the
 pin budget (:func:`frame_bytes`, :func:`shard_bytes`) is folded in the
-driver: the IVF and postings refreshes collect the change rows with one
-Arrow job and write each staged shard with :func:`write_shard`
-(pyarrow).  A larger commit, and every other kind, rebuilds its shards
-with Spark.
+driver: the IVF and postings refreshes collect the change rows with
+:func:`frame_rows`, a pyarrow read of the commit's files in the driver
+when the frame only selects and renames columns of a change-feed read
+(one Arrow job otherwise), and write each staged shard with
+:func:`write_shard` (pyarrow).  A larger commit, and every other kind,
+rebuilds its shards with Spark.
 """
 
 from __future__ import annotations
@@ -229,6 +231,104 @@ def frame_bytes(df: DataFrame) -> int:
     ):
         est = min(est, sum(s.selectedPartitions().totalFileSize() for s in scans))
     return est
+
+
+def frame_rows(df: DataFrame) -> pa.Table | None:
+    """``df``'s rows as an Arrow table of ``df.schema``'s Arrow form,
+    or ``None`` when :func:`frame_bytes` puts them over the pin budget
+    (the caller then takes its Spark path).
+
+    When the plan is a projection of plain columns, renamed or not,
+    over a parquet scan filtered only on partition columns, the scan's
+    selected files are read with pyarrow in the driver and no job
+    runs; partition columns take their directory's value.  Any other
+    plan is collected with one ``toArrow()`` job.  Row order may
+    differ from ``toArrow()``'s; the refresh folds that read these
+    rows do not depend on it."""
+    if frame_bytes(df) > WORKER_CACHE.budget:
+        return None
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    target = to_arrow_schema(
+        df.schema,
+        error_on_duplicated_field_names_in_struct=True,
+        prefers_large_types=df.sparkSession._jconf.arrowUseLargeVarTypes(),
+    )
+    rows = _scan_rows(df, target)
+    return df.toArrow() if rows is None else rows
+
+
+# partition value types :func:`_scan_rows` fills in from a directory
+_PARTITION_TYPES = {"byte", "short", "integer", "long", "float", "double",
+                    "boolean", "string", "date"}
+
+
+def _scan_rows(df: DataFrame, target: pa.Schema) -> pa.Table | None:
+    """The driver read of :func:`frame_rows`, or ``None`` when the
+    plan is not a plain projection over a local parquet scan with only
+    partition filters."""
+    plan = df._jdf.queryExecution().sparkPlan()
+    exprs = None
+    if plan.getClass().getSimpleName() == "ProjectExec":
+        exprs = plan.projectList()
+        plan = plan.child()
+    if (
+        plan.getClass().getSimpleName() != "FileSourceScanExec"
+        or not plan.dataFilters().isEmpty()
+        or plan.relation().fileFormat().getClass().getSimpleName()
+        != "ParquetFileFormat"
+    ):
+        return None
+    if exprs is None:
+        exprs = plan.output()
+    sources = []  # the scan column each output column reads
+    for i in range(exprs.size()):
+        e = exprs.apply(i)
+        if e.getClass().getSimpleName() == "Alias":
+            e = e.child()
+        if e.getClass().getSimpleName() != "AttributeReference":
+            return None
+        sources.append(e.name())
+    parts = plan.relation().partitionSchema()
+    pnames = list(parts.fieldNames())
+    if any(
+        parts.apply(c).dataType().typeName() not in _PARTITION_TYPES
+        for c in set(sources) & set(pnames)
+    ):
+        return None
+    data = [c for c in dict.fromkeys(sources) if c not in pnames]
+    tables = []
+    it = plan.selectedPartitions().filePartitionIterator()
+    while it.hasNext():
+        part = it.next()
+        files, fit = [], part.files()
+        while fit.hasNext():
+            uri = fit.next().getPath().toUri()
+            if uri.getScheme() not in (None, "file"):
+                return None
+            files.append(uri.getPath())
+        if not files:
+            continue
+        dset = ds.dataset(files, format="parquet")
+        if not set(data) <= set(dset.schema.names):
+            return None
+        tbl = dset.to_table(columns=data)
+        values = part.values()
+        cols = []
+        for c, field in zip(sources, target):
+            if c not in pnames:
+                cols.append(tbl[c])
+                continue
+            j = pnames.index(c)
+            v = None if values.isNullAt(j) else values.get(
+                j, parts.apply(c).dataType()
+            )
+            v = v if v is None or isinstance(v, (bool, int, float)) else str(v)
+            cols.append(pa.array([v] * tbl.num_rows, field.type))
+        tables.append(pa.Table.from_arrays(cols, names=target.names))
+    if not tables:
+        return target.empty_table()
+    return pa.concat_tables([t.cast(target) for t in tables])
 
 
 def shard_bytes(path: str, kind: str, shards) -> int:

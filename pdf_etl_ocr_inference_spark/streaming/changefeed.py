@@ -13,8 +13,10 @@ provides the same *capability* on plain parquet:
   change rows — typically a key-join diff against the previous
   snapshot, see ``diff_snapshots``);
 - ``read_changes``    : all change rows with ``_commit_version >
-  since`` — partition pruning on ``v=`` does the "incremental" part
-  (a consumer at version N reads only new directories);
+  since`` — it reads only the new ``v=`` directories, as explicit
+  paths, with the schema from a commit's parquet footer, so planning
+  the read runs no Spark job (a consumer at version N lists and reads
+  only what it hasn't seen);
 - ``snapshot``        : reconstruct the current state (latest
   post-image per key, deletes dropped) — one window per key.
 
@@ -36,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pdf_etl_ocr_inference_spark.scratch import replace_dir, restore_dir
+from pdf_etl_ocr_inference_spark.sources.readers import read_parquet
 
 CHANGE_TYPES = (
     "insert",
@@ -103,18 +106,27 @@ def read_changes(
     """Change rows with ``_commit_version > since_version``, from the
     newest compaction base on.
 
-    ``v=N`` is a partition column → the filter prunes directories, so
-    an incremental consumer reads only commits it hasn't seen.  A
-    commit older than the newest base is folded into it; one that a
-    crashed ``compact`` left behind is not read.
+    Only the commit directories it returns are read, as explicit
+    ``v=N`` paths under ``basePath`` (``sources.readers.read_parquet``,
+    schema from a footer): planning the read lists those directories
+    and runs no job, so an incremental consumer pays for the commits
+    it hasn't seen, not for the feed's history.  ``v=N`` is a
+    partition column, and the version filter stays on the frame.
+    With no commit to return, the newest commit is read under the
+    same filter: an empty frame with the feed's schema.  A commit
+    older than the newest base is folded into it; one that a crashed
+    ``compact`` left behind is not read.
     """
+    versions = list_versions(path)
     bases = [
-        v
-        for v in list_versions(path)
+        v for v in versions
         if os.path.exists(_base_marker(os.path.join(path, f"v={v}")))
     ]
     start = max([since_version + 1, *bases])
-    df = spark.read.option("basePath", path).parquet(path)
+    dirs = [os.path.join(path, f"v={v}") for v in versions if v >= start]
+    if not dirs:
+        dirs = [os.path.join(path, f"v={v}") for v in versions[-1:]] or [path]
+    df = read_parquet(spark, dirs, base_path=path)
     df = df.withColumnRenamed("v", "_commit_version") if "v" in df.columns else df
     return df.filter(F.col("_commit_version") >= start)
 

@@ -5,6 +5,7 @@ re-run safety."""
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,6 +18,8 @@ from pdf_etl_ocr_inference_spark.streaming.changefeed import (
     read_changes,
     snapshot,
 )
+
+from .test_shard_server import _jobs
 
 
 @pytest.fixture()
@@ -133,3 +136,64 @@ def test_maybe_compact_policy(spark, tmp_path):
     assert list_versions(path) == [4, 5, 6]
     assert _state(snapshot(spark, path, "k")) == before
     assert not maybe_compact(spark, path, "k", max_commits=4, keep_recent=2)
+
+
+def _whole_feed_read(spark, path, since):
+    """``read_changes`` as a read of the whole feed, pruned by the
+    version filter: the frame the explicit-path read must equal."""
+    bases = [
+        v for v in list_versions(path)
+        if os.path.exists(os.path.join(path, f"v={v}", "_base"))
+    ]
+    start = max([since + 1, *bases])
+    df = spark.read.option("basePath", path).parquet(path)
+    df = df.withColumnRenamed("v", "_commit_version")
+    return df.filter(F.col("_commit_version") >= start)
+
+
+def _reads_only_new_commits(spark, path, since):
+    """``read_changes`` plans with no job and returns the rows and the
+    schema of the whole-feed read."""
+    with _jobs(spark) as n:
+        got = read_changes(spark, path, since_version=since)
+        got.schema
+    assert n == [0]
+    want = _whole_feed_read(spark, path, since)
+    assert got.schema == want.schema
+    key = repr
+    assert sorted(map(tuple, got.collect()), key=key) == sorted(
+        map(tuple, want.collect()), key=key
+    )
+    return got
+
+
+def test_read_past_the_last_commit_is_empty_with_the_feed_schema(spark, feed):
+    for since in (2, 5):
+        got = _reads_only_new_commits(spark, feed, since)
+    assert got.count() == 0
+    assert got.columns == ["k", "val", "_change_type", "_commit_version"]
+
+
+def test_read_after_compact_skips_a_leftover_commit(spark, feed, tmp_path):
+    """A ``v<N`` directory left beside the base (a crashed ``compact``
+    leaves one) is neither listed nor read."""
+    keep = str(tmp_path / "v0")
+    shutil.copytree(os.path.join(feed, "v=0"), keep)
+    compact(spark, feed, key="k", through_version=1)
+    shutil.copytree(keep, os.path.join(feed, "v=0"))
+    for since in (-1, 0, 1):
+        _reads_only_new_commits(spark, feed, since)
+    assert _state(snapshot(spark, feed, "k")) == FINAL
+
+
+def test_read_of_a_feed_longer_than_the_listing_threshold(spark, tmp_path):
+    """40 commits: more paths than Spark lists without a job."""
+    path = str(tmp_path / "feed")
+    rows = spark.range(40).select(
+        "id", F.lit("insert").alias("_change_type")
+    )
+    for v in range(40):
+        commit_changes(rows.filter(F.col("id") == v), path, v)
+    for since in (-1, 10, 38):
+        got = _reads_only_new_commits(spark, path, since)
+    assert [r["id"] for r in got.collect()] == [39]

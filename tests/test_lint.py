@@ -475,3 +475,34 @@ def test_one_publish_protocol():
         "scratch.replace_dir / swap_dir / atomic_write_json:\n"
         + "\n".join(sites)
     )
+
+
+# ---------------------------------------------------------------------------
+# One driver collect.  ``shard_server.frame_rows`` brings a frame's rows
+# into the driver: it reads the files of a plain change-feed scan with
+# pyarrow, with no job, and collects any other plan with ``toArrow()``.
+# So in package code ``toArrow`` is used only inside ``shard_server``.
+# ---------------------------------------------------------------------------
+
+
+def _to_arrow_sites(path: pathlib.Path) -> list[str]:
+    tree = ast.parse(path.read_text(), filename=str(path))
+    rel = path.relative_to(PKG).as_posix()
+    return [
+        f"{rel}:{node.lineno}"
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Attribute) and node.attr == "toArrow"
+    ]
+
+
+def test_one_driver_collect():
+    sites = [
+        s
+        for p in sorted(PKG.rglob("*.py"))
+        if p.relative_to(PKG).as_posix() != "operators/shard_server.py"
+        for s in _to_arrow_sites(p)
+    ]
+    assert not sites, (
+        "toArrow() outside shard_server — collect with "
+        "shard_server.frame_rows:\n" + "\n".join(sites)
+    )

@@ -216,6 +216,10 @@ def test_fold_equals_spark_refresh(spark, tmp_path, monkeypatch):
 
 
 def test_small_commit_folds_with_one_job_per_refresh(spark, tmp_path):
+    """The IVF frame only renames columns of the change-feed read, so
+    its rows are read from the commit's files with no job; the
+    postings frame filters on ``_change_type``, a data column, so it
+    is collected with one job."""
     ivf, post = _build(spark, tmp_path)
     feed = str(tmp_path / "feed")
     commit_changes(spark.createDataFrame(_commits()[0], FEED_SCHEMA), feed, 1)
@@ -224,7 +228,32 @@ def test_small_commit_folds_with_one_job_per_refresh(spark, tmp_path):
         refresh_ivf_serving_index(spark, ivf, ivf_changes, 1)
     with _jobs(spark) as n_post:
         refresh_postings_index(spark, post, docs, 1, text_col="text", id_col="doc_id")
-    assert (n_ivf, n_post) == ([1], [1])
+    assert (n_ivf, n_post) == ([0], [1])
+
+
+def test_change_feed_cycle_runs_only_the_commit_job(spark, tmp_path):
+    """A commit, its read and both refreshes, called as the search_serve
+    benchmark calls them, run one Spark job: the commit's write.  Both
+    indexes then serve the commit."""
+    ivf, post = _build(spark, tmp_path)
+    feed = str(tmp_path / "feed")
+    rows = spark.createDataFrame(_commits()[1], FEED_SCHEMA)
+    with _jobs(spark) as n:
+        commit_changes(rows, feed, 1)
+        changes = read_changes(spark, feed, since_version=0)
+        refresh_ivf_serving_index(
+            spark, ivf,
+            changes.select(F.col("doc_id").alias("vec_id"), "embedding", "_change_type"),
+            1,
+        )
+        refresh_postings_index(
+            spark, post, changes.select("doc_id", "text"), 1,
+            text_col="text", id_col="doc_id",
+        )
+    assert n == [1]
+    q = [(0, [0.2, 0.2, 0.2, 0.2])]
+    assert serve_topk(spark, ivf, q, k=1, kind="ivf", n_probe=4).collect()[0][1] == 1010
+    assert {r["id"] for r in serve_bm25(spark, post, [(0, ["trailing"])], k=5).collect()} == {1010}
 
 
 def test_small_commit_of_a_feed_over_the_budget_folds(
@@ -232,7 +261,9 @@ def test_small_commit_of_a_feed_over_the_budget_folds(
 ):
     """The rule sizes the commit the refresh reads, not the feed: with
     an earlier commit far over the (shrunk) pin budget, a small commit
-    read with ``since_version`` still folds in the driver."""
+    read with ``since_version`` still folds in the driver.  Catalyst
+    sizes a partition-filtered read of the whole feed as the whole
+    feed; ``frame_bytes`` caps it by the files the scan selects."""
     ivf, post = _build(spark, tmp_path)
     feed = str(tmp_path / "feed")
     big = spark.range(20000).select(
@@ -245,7 +276,7 @@ def test_small_commit_of_a_feed_over_the_budget_folds(
     commit_changes(spark.createDataFrame(_commits()[1], FEED_SCHEMA), feed, 2)
     budget = 64 << 10
     ivf_changes, docs = _changes(spark, feed, 2)
-    whole = read_changes(spark, feed, since_version=1)
+    whole = spark.read.option("basePath", feed).parquet(feed).filter(F.col("v") >= 2)
     # Catalyst's own estimate of the pruned read is the whole feed
     catalyst = whole._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     assert int(catalyst) > budget >= frame_bytes(whole)

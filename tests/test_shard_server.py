@@ -33,11 +33,16 @@ from pdf_etl_ocr_inference_spark.operators.serving import (
     serve_topk,
 )
 from pdf_etl_ocr_inference_spark.operators import serving
+from pdf_etl_ocr_inference_spark.streaming.changefeed import (
+    commit_changes,
+    read_changes,
+)
 from pdf_etl_ocr_inference_spark.operators.shard_server import (
     META_FILES,
     WORKER_CACHE,
     _load_shard,
     _plan_bytes,
+    frame_rows,
     read_meta,
     round_half_up,
     shard_token,
@@ -558,3 +563,81 @@ def test_missing_meta_is_one_clear_error(spark, tmp_path, kind):
     with pytest.raises(ValueError, match="build") as err:
         refresh(spark, path, None, 1)
     assert kind in str(err.value).lower() and path in str(err.value)
+
+
+# ------------------------------------------------------------------
+# frame_rows: the driver collect of a refresh
+# ------------------------------------------------------------------
+
+
+def _feed(spark, tmp_path):
+    """A change feed of two commits, v=1 (ids 0..2) and v=2 (ids
+    10..13, one null text)."""
+    path = str(tmp_path / "feed")
+    schema = "doc_id long, embedding array<double>, text string, _change_type string"
+    for v, ids in ((1, range(3)), (2, range(10, 14))):
+        rows = [(i, [float(i), 0.5], None if i == 11 else f"t{i}", "insert")
+                for i in ids]
+        commit_changes(spark.createDataFrame(rows, schema), path, v)
+    return path
+
+
+def _collects_as_to_arrow(spark, df, jobs):
+    """``frame_rows(df)`` runs ``jobs`` jobs and gives ``toArrow()``'s
+    schema and rows (in any order)."""
+    with _jobs(spark) as n:
+        got = frame_rows(df)
+    assert n == [jobs]
+    want = df.toArrow()
+    assert got.schema.equals(want.schema)
+    assert sorted(got.to_pylist(), key=repr) == sorted(want.to_pylist(), key=repr)
+    return got
+
+
+def test_frame_rows_reads_a_projection_of_a_feed_read_with_no_job(spark, tmp_path):
+    feed = _feed(spark, tmp_path)
+    changes = read_changes(spark, feed, since_version=0)
+    got = _collects_as_to_arrow(spark, changes.select("doc_id", "text"), 0)
+    assert got.num_rows == 7
+    _collects_as_to_arrow(spark, changes, 0)  # with the partition column
+
+
+def test_frame_rows_reads_a_renamed_projection_with_no_job(spark, tmp_path):
+    changes = read_changes(spark, _feed(spark, tmp_path), since_version=1)
+    renamed = changes.select(
+        F.col("doc_id").alias("vec_id"),
+        F.col("embedding").alias("emb"),
+        "_change_type",
+        F.col("_commit_version").alias("v"),
+    )
+    got = _collects_as_to_arrow(spark, renamed, 0)
+    assert sorted(got["vec_id"].to_pylist()) == [10, 11, 12, 13]
+
+
+def test_frame_rows_reads_only_the_pruned_partitions(spark, tmp_path):
+    feed = _feed(spark, tmp_path)
+    whole = spark.read.option("basePath", feed).parquet(feed)
+    got = _collects_as_to_arrow(
+        spark, whole.filter(F.col("v") == 2).select("doc_id", "v"), 0
+    )
+    assert sorted(got.to_pylist(), key=repr) == [
+        {"doc_id": i, "v": 2} for i in range(10, 14)
+    ]
+    none = _collects_as_to_arrow(spark, whole.filter(F.col("v") == 7), 0)
+    assert none.num_rows == 0
+
+
+def test_frame_rows_collects_other_plans_with_one_job(spark, tmp_path):
+    changes = read_changes(spark, _feed(spark, tmp_path), since_version=0)
+    filtered = changes.filter(F.col("text").isNotNull()).select("doc_id", "text")
+    assert _collects_as_to_arrow(spark, filtered, 1).num_rows == 6
+    computed = changes.select((F.col("doc_id") + 1).alias("next_id"), "text")
+    _collects_as_to_arrow(spark, computed, 1)
+
+
+def test_frame_rows_over_the_budget_returns_no_rows(spark, tmp_path, monkeypatch):
+    changes = read_changes(spark, _feed(spark, tmp_path), since_version=0)
+    monkeypatch.setattr(WORKER_CACHE, "budget", 1)
+    with _jobs(spark) as n:
+        assert frame_rows(changes.select("doc_id", "text")) is None
+    assert n == [0]

@@ -1071,3 +1071,39 @@ def test_executor_pinned_invalidates_on_rebuild(
     monkeypatch.setattr(WORKER_CACHE, "budget", budget)
     drv_keep2, drv_cov2 = L.stats_keep_files(spark, meta2, ranges)
     assert (keep2, cov2) == (drv_keep2, drv_cov2)
+
+
+def test_warm_stats_probe_over_budget_runs_only_the_dispatch(
+    spark, tmp_path, monkeypatch
+):
+    """Over the pin budget the driver pins no chunk, so every range
+    probe refreshes the stats sidecar first.  A warm refresh returns
+    the sidecar read through ``sources.readers.read_parquet``, which
+    takes the schema from a footer instead of an inference job: the
+    probe's one dispatched job is all that runs."""
+    from pdf_etl_ocr_inference_spark.operators import layout as L
+    from pdf_etl_ocr_inference_spark.operators.layout import (
+        register_clustered_layout,
+    )
+    from pdf_etl_ocr_inference_spark.operators.shard_server import (
+        WORKER_CACHE,
+    )
+
+    from .test_shard_server import _jobs
+
+    src = str(tmp_path / "orders")
+    (
+        spark.read.parquet(f"{SF0001}/orders.parquet")
+        .repartition(4)
+        .write.mode("overwrite")
+        .parquet(src)
+    )
+    meta = register_clustered_layout(spark, src, SPECS, n_files=64)
+    ranges = {"o_custkey": (100.0, 299.0)}
+    monkeypatch.setattr(WORKER_CACHE, "budget", 1)
+    cold = L.stats_keep_files(spark, meta, ranges)
+    assert len(cold[1]) == 64
+    for _ in range(2):
+        with _jobs(spark) as n:
+            assert L.stats_keep_files(spark, meta, ranges) == cold
+        assert n == [1]
